@@ -3,17 +3,19 @@
 
     python3 perfbench/run.py --workload etl_daily --seed 1 --seconds 1 --trace 0
 
-Builds the engine with the harness (once per source state), generates the
-input tables (once per generator version), runs one workload in a fresh JVM
-on local[nproc], replays every called gate's oracle SQL in DuckDB over the
-same tables, and prints the metrics. The last stdout line is one JSON object
-with `correct`, `attempted`, `failed` and `metrics`: the end-to-end metrics
-with `--trace 0`, the per-layer metrics with `--trace 1`. See README.md.
+Builds the engine with the harness and records a class archive for the JVM
+(once per source state), generates the input tables (once per generator
+version), runs one workload in a fresh JVM on local[nproc], checks every
+called gate's output against its DuckDB oracle with tools/check.py, and
+prints the metrics. The last stdout line is one JSON object with `correct`,
+`attempted`, `failed` and `metrics`: the end-to-end metrics with
+`--trace 0`, the per-layer metrics with `--trace 1`. See README.md.
 """
 import argparse
 import hashlib
 import json
 import os
+import re
 import shutil
 import signal
 import statistics
@@ -23,45 +25,46 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 ENGINE_SRC = os.path.join(ROOT, "src", "main", "scala")
+CHECK = os.path.join(ROOT, "tools", "check.py")
 TARGET = os.path.join(HERE, "target")
 WORK = os.path.join(HERE, "work")
 HEAP = "-Xmx4g"
-# C1 only, compiling early: with the default tiered C2 the etl_daily round
-# time still falls at round 7 (21.8 -> 13.5 s), so a one-minute run would
-# time the JIT; with these flags it is flat from the second round on.
-# (-UsePerfData: no hsperfdata file outside the checkout.)
+# C1 only, compiling early. With the default tiered C2 the analytics_llm
+# round time still falls over the first minutes (12.9, 13.0, 11.6, 10.4 s
+# for every other round after set-up), so a one-minute run would time the
+# JIT; under these flags it is flat from the first timed round. README.md
+# gives the per-span C1/C2 ratios. (-UsePerfData: no hsperfdata file
+# outside the checkout.)
 JVM_FLAGS = ["-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=512m",
              "-XX:Tier3InvocationThreshold=20", "-XX:Tier3MinInvocationThreshold=10",
              "-XX:Tier3CompileThreshold=200", "-XX:Tier3BackEdgeThreshold=6000",
              "-XX:-UsePerfData"]
 JVM_TIMEOUT_S = 160
+TRAIN_TIMEOUT_S = 600
 BUILD_TIMEOUT_S = 600
+CHECK_TIMEOUT_S = 60
 
-# workload -> (timed rounds, calls of one round as (module, gate)); the span
-# is module.gate. Round counts size each timed region to 15-25 s of work.
+# workload -> calls of one round, as (module, gate); the span is module.gate.
+# A run is budgeted at about one minute, most of it set-up: JVM start, JIT
+# and the one-time mart and index builds. That leaves one timed round per
+# run; a traced run times three (untraced, traced, untraced), and its
+# untraced pair gives the trend check.
 ETL = [("pipeline", "pipeline_e2e"), ("pipeline", "pipeline_incremental"),
        ("quality", "q_mart_quality")]
 QUERIES = [("analytics", g) for g in ("q1_monthly_revenue", "q2_customer_segmentation",
                                       "q3_product_rank", "q4_cohort_retention",
                                       "q5_daily_anomaly")]
-CORPUS = [("pipeline", "pipeline_corpus"), ("pipeline", "pipeline_corpus_lm")]
-ANN = [("llm", "sim_graph_serve"), ("llm", "sim_ivfadc")]
-WORKLOADS = {
-    "etl_daily": (1, ETL),
-    "analytics_mix": (4, QUERIES),
-    "llm_corpus_ann": (1, CORPUS + ANN),
-    "analytics_ann": (3, QUERIES + [("llm", "sim_ivfadc")]),
-}
+LLM = [("pipeline", "pipeline_corpus_lm"), ("llm", "sim_graph_serve")]
+WORKLOADS = {"etl_daily": ETL, "analytics_llm": QUERIES + LLM}
 # workload-specific end-to-end figures: name -> gates summed per round
 NAMED = {
     "etl_daily": {"daily_run_s": ["pipeline_e2e"],
                   "incremental_run_s": ["pipeline_incremental"],
                   "audit_s": ["q_mart_quality"]},
-    "llm_corpus_ann": {"curate_s": ["pipeline_corpus", "pipeline_corpus_lm"],
-                       "ann_serve_s": ["sim_graph_serve", "sim_ivfadc"]},
-    "analytics_ann": {"ann_serve_s": ["sim_ivfadc"]},
+    "analytics_llm": {"curate_s": ["pipeline_corpus_lm"],
+                      "ann_serve_s": ["sim_graph_serve"]},
 }
-SPANS = [f"{m}.{g}" for m, g in ETL + QUERIES + CORPUS + ANN]
+SPANS = [f"{m}.{g}" for m, g in ETL + QUERIES + LLM]
 SPAN_METRICS = ["wall_ms", "jobs", "tasks", "sql_execs", "catalyst_ms",
                 "driver_gap_ms", "task_run_ms", "shuffle_bytes", "output_bytes"]
 SPARK_METRICS = ["gc_ms", "sched_delay_ms", "spill_bytes", "failed_tasks"]
@@ -70,8 +73,6 @@ UNITS = {"wall_ms": "ms", "jobs": "count", "tasks": "count", "sql_execs": "count
          "catalyst_ms": "ms", "driver_gap_ms": "ms", "task_run_ms": "ms",
          "shuffle_bytes": "B", "output_bytes": "B.count", "gc_ms": "ms",
          "sched_delay_ms": "ms", "spill_bytes": "B", "failed_tasks": "count"}
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 JDK_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
              "java.net", "java.nio", "java.util", "java.util.concurrent",
              "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
@@ -132,6 +133,54 @@ def build():
     return lines[-1]
 
 
+def harness(cp, jvm, run, workload, rounds, calls, data, seed, seconds, trace, timeout):
+    """Runs one workload in a fresh JVM with an emptied run directory (its
+    own marts, watermarks and MartCache markers); returns the raw report."""
+    shutil.rmtree(run, ignore_errors=True)
+    for d in ("check", "tmp", "spark-local", "scratch"):
+        os.makedirs(os.path.join(run, d))
+    report = os.path.join(run, "report.json")
+    cmd = (["java"] + [x for p in JDK_OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
+           + [HEAP, *jvm, f"-Djava.io.tmpdir={run}/tmp", f"-Dspark.local.dir={run}/spark-local",
+              f"-Dgraft.scratch.dir={run}/scratch", "-cp", cp, "perfbench.Main",
+              "--workload", workload, "--rounds", str(rounds),
+              "--calls", ",".join(f"{m}.{g}" for m, g in calls),
+              "--data", data, "--seed", str(seed), "--seconds", str(seconds),
+              "--trace", str(trace), "--report", report, "--check", os.path.join(run, "check")])
+    with open(os.path.join(run, "jvm.log"), "w") as log:
+        try:
+            rc = subprocess.run(cmd, cwd=run, stdout=log, stderr=subprocess.STDOUT,
+                                timeout=timeout).returncode
+        except subprocess.TimeoutExpired:
+            fail(f"harness exceeded {timeout} s, see {run}/jvm.log")
+    if rc != 0 or not os.path.exists(report):
+        fail(f"harness failed (exit {rc}), see {run}/jvm.log")
+    return json.load(open(report))
+
+
+def class_archive(cp, data):
+    """The JVM's class-data-sharing archive of the classpath classes the
+    workloads load, recorded once per build by a JVM that runs the set-up
+    round of every workload. Each measured JVM then maps these classes
+    instead of loading and verifying them again: a standard JDK start-up
+    feature that leaves the compiled code alone. Measured on a 4-vCPU host: session start
+    5.5 -> 2.3 s, etl_daily set-up round 23.7 -> 20.5 s."""
+    jsa, stamp = os.path.join(TARGET, "classes.jsa"), os.path.join(TARGET, "classes.jsa.stamp")
+    sig = read(os.path.join(TARGET, "perfbench.stamp"))
+    if read(stamp) == sig and os.path.exists(jsa):
+        return jsa
+    if os.path.exists(jsa):
+        os.remove(jsa)
+    harness(cp, [*JVM_FLAGS, f"-XX:ArchiveClassesAtExit={jsa}"], os.path.join(WORK, "train"),
+            "train", 0, [c for calls in WORKLOADS.values() for c in calls], data, 0, 0, 0,
+            TRAIN_TIMEOUT_S)
+    if not os.path.exists(jsa):
+        fail(f"no class archive written, see {WORK}/train/jvm.log")
+    with open(stamp, "w") as f:
+        f.write(sig)
+    return jsa
+
+
 def tables():
     """Input tables, generated once per version of datagen.py."""
     data = os.path.join(WORK, "data")
@@ -146,42 +195,20 @@ def tables():
 
 
 def check_outputs(data, check_dir, gates):
-    """Replay each gate's oracle SQL in DuckDB and compare with the engine's
-    output: columns sorted by name, values compared exactly, row order kept.
-    Returns {gate: reason} for every mismatch."""
-    import duckdb
-    import numpy as np
-    import pandas as pd
-
-    def canon(df):
-        df = df.reindex(sorted(df.columns), axis=1)
-
-        def cell(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return "NULL"
-            if isinstance(v, float):
-                return repr(v)
-            if isinstance(v, (list, np.ndarray)):
-                return str(list(v))
-            return str(v)
-        return [[cell(v) for v in row] for row in df.itertuples(index=False)]
-
-    oracle = json.load(open(os.path.join(check_dir, "oracle_sql.json")))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{data}/{t}.parquet')")
-    bad = {}
-    for g in gates:
-        out = os.path.join(check_dir, g)
-        if not oracle.get(g):
-            bad[g] = "no oracle SQL"
-        elif not os.path.isdir(out):
-            bad[g] = "no engine output"
-        else:
-            a = canon(pd.read_parquet(out))
-            b = canon(con.execute(oracle[g]).df())
-            if a != b:
-                bad[g] = f"engine {len(a)} rows != oracle {len(b)} rows or values differ"
+    """Run the repository's correctness check (tools/check.py: DuckDB replays
+    each gate's oracle SQL over the same tables and compares exactly) on the
+    set-up round's output. Returns {gate: reason} for every gate it fails;
+    every gate fails if the check itself does not finish."""
+    try:
+        p = subprocess.run([sys.executable, CHECK, data, check_dir], capture_output=True,
+                           text=True, timeout=CHECK_TIMEOUT_S)
+        out, why = p.stdout, f"tools/check.py exit {p.returncode}: {p.stderr.strip()[-200:]}"
+    except subprocess.TimeoutExpired:
+        out, why = "", f"tools/check.py exceeded {CHECK_TIMEOUT_S} s"
+    bad = dict(re.findall(r"^\s+FAIL (\S+): (.*)$", out, re.M))
+    passed = re.search(r"^PASS (\d+)", out, re.M)
+    if not passed or int(passed[1]) + len(bad) != len(gates):
+        return {g: why for g in gates}
     return bad
 
 
@@ -189,7 +216,7 @@ def median(xs):
     return statistics.median(xs) if xs else 0.0
 
 
-def reduce(rep, mismatches, trace):
+def reduce(rep, mismatches, trace, jvm):
     """Report lines and the metrics object from the harness's raw samples."""
     w = rep["workload"]
     plain = [r["calls"] for r in rep["timed"] if not r["traced"]]
@@ -209,7 +236,7 @@ def reduce(rep, mismatches, trace):
     cycle_cpu = sum(per_gate(plain, "cpu_s").values())
     calls = [c["s"] for r in plain for c in r]
     lines = [f"workload {w}  nproc {rep['nproc']:.0f}  master {rep['master']}"
-             f"  heap {rep['heap']}  jvm {' '.join(JVM_FLAGS)}",
+             f"  heap {rep['heap']}  jvm {' '.join(jvm)}",
              f"setup_s {rep['setup_s']:.3f} s  (session start {rep['session_start_s']:.3f} s"
              f" + set-up round {sum(c['s'] for c in rep['setup'][0]['calls']):.3f} s)",
              f"cycle_cpu_s {cycle_cpu:.3f} s  (process CPU of one round, sum of per-call medians"
@@ -236,7 +263,8 @@ def reduce(rep, mismatches, trace):
     lines += [f"output check failed {g}: {e}" for g, e in sorted(mismatches.items())]
 
     if not trace:
-        metrics = {"setup_s": (rep["setup_s"], "s"), "cycle_cpu_s": (cycle_cpu, "s")}
+        metrics = {"setup_s": (rep["setup_s"], "s"), "cycle_s": (cycle, "s"),
+                   "cycle_cpu_s": (cycle_cpu, "s")}
     else:
         metrics = {}
         for span in SPANS:
@@ -278,37 +306,19 @@ def main():
     a = ap.parse_args()
     # on SIGTERM, unwind through subprocess.run, which kills and reaps the JVM
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
-    if not os.path.isdir(os.path.join(ENGINE_SRC, "graft")):
-        fail(f"engine sources not found under {ENGINE_SRC}", 2)
+    if not os.path.isdir(os.path.join(ENGINE_SRC, "graft")) or not os.path.isfile(CHECK):
+        fail(f"engine sources ({ENGINE_SRC}) or output check ({CHECK}) not found", 2)
 
     cp = build()
     data = tables()
+    jvm = [*JVM_FLAGS, f"-XX:SharedArchiveFile={class_archive(cp, data)}"]
     run = os.path.join(WORK, "run")
-    shutil.rmtree(run, ignore_errors=True)
-    for d in ("check", "tmp", "spark-local", "scratch"):
-        os.makedirs(os.path.join(run, d))
-    report = os.path.join(run, "report.json")
-    cmd = (["java"] + [x for p in JDK_OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
-           + [HEAP, *JVM_FLAGS, f"-Djava.io.tmpdir={run}/tmp", f"-Dspark.local.dir={run}/spark-local",
-              f"-Dgraft.scratch.dir={run}/scratch", "-cp", cp, "perfbench.Main",
-              "--workload", a.workload,
-              "--rounds", str(WORKLOADS[a.workload][0]),
-              "--calls", ",".join(f"{m}.{g}" for m, g in WORKLOADS[a.workload][1]),
-              "--data", data, "--seed", str(a.seed),
-              "--seconds", str(a.seconds), "--trace", str(a.trace),
-              "--report", report, "--check", os.path.join(run, "check")])
-    with open(os.path.join(run, "jvm.log"), "w") as log:
-        try:
-            rc = subprocess.run(cmd, cwd=run, stdout=log, stderr=subprocess.STDOUT,
-                                timeout=JVM_TIMEOUT_S).returncode
-        except subprocess.TimeoutExpired:
-            fail(f"harness exceeded {JVM_TIMEOUT_S} s, see {run}/jvm.log")
-    if rc != 0 or not os.path.exists(report):
-        fail(f"harness failed (exit {rc}), see {run}/jvm.log")
-    rep = json.load(open(report))
-    gates = [g for _, g in WORKLOADS[a.workload][1]]
+    calls = WORKLOADS[a.workload]
+    rep = harness(cp, jvm, run, a.workload, 1, calls, data, a.seed, a.seconds, a.trace,
+                  JVM_TIMEOUT_S)
+    gates = [g for _, g in calls]
     mismatches = check_outputs(data, os.path.join(run, "check"), gates)
-    lines, metrics, attempted, failed = reduce(rep, mismatches, a.trace == 1)
+    lines, metrics, attempted, failed = reduce(rep, mismatches, a.trace == 1, jvm)
     if a.trace:
         spans_file(rep, os.path.join(run, "spans.jsonl"))
     for line in lines:

@@ -28,9 +28,9 @@ final case class Sample(call: Call, seconds: Double, cpuSeconds: Double,
   *
   * Phases: session start; one set-up round (the first call of every gate:
   * JIT, one-time mart/memo/index builds; each result is also written to
-  * `--check` for the oracle replay); then at least `--rounds` timed rounds,
-  * more while `--seconds` have not passed. The seed shuffles the call order
-  * of every round. */
+  * `--check` for the oracle replay); then timed rounds while `--seconds`
+  * have not passed, at least R (three when traced). The seed shuffles the
+  * call order of every round. */
 object Main {
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -42,7 +42,7 @@ object Main {
     val check = opt("check")
     val seconds = opt("seconds").toDouble
     val traced = opt("trace") == "1"
-    val minRounds = opt("rounds").toInt max (if (traced) 2 else 1)
+    val minRounds = if (traced) 3 else opt("rounds").toInt
     val rng = new Random(opt("seed").toLong)
     val nproc = Runtime.getRuntime.availableProcessors
     val master = s"local[$nproc]"
@@ -117,8 +117,8 @@ object Main {
     val setupS =
       (System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
 
-    // timed rounds; a traced run alternates untraced and traced rounds so
-    // the tracing overhead is measured within one process
+    // timed rounds; a traced run alternates untraced and traced rounds, so
+    // the tracing overhead and the trend check come from one process
     val timed = Seq.newBuilder[(Boolean, Seq[Sample])]
     val tEnd = System.nanoTime() + (seconds * 1e9).toLong
     var i = 0
