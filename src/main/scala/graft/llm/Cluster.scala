@@ -116,32 +116,24 @@ object Cluster {
     * `b_id`): returns (id, label) with label = min doc_id reachable from
     * id. Nodes are the edge endpoints (isolated docs need no clustering).
     *
-    * Round shape (r22, guide §2.4 — the rounds dominated every `d_entity_*`
-    * gate at ~1 s each, almost all of it per-stage overhead): the edge set
-    * is augmented ONCE with a self-edge per node, so a single join + one
-    * partial-aggregated min computes least(own label, min neighbor label)
-    * for every node — the self row both injects the node's own label into
-    * the min and doubles as the old-label carrier for the convergence
-    * count (was: a second left join against the previous labels, persisted
-    * per round). The pointer-jump self-join's two sides share the
-    * aggregation's exchange via ReuseExchange, so the join+partial-agg run
-    * once per round. Round 1 skips the identity-label join outright:
-    * min(src) per dst over the self-edged frame IS the first propagation.
-    * Per round the driver still runs exactly ONE action — the changed
-    * count that also materializes the round's labels. Zero changes IS the
-    * fixpoint (labels only ever decrease). The round's labels are lazily
-    * localCheckpoint'ed: the self-join doubles the LOGICAL plan every
-    * round, and the checkpoint truncates it to a LogicalRDD leaf inside
-    * the same action. (On a real cluster swap for reliable checkpoint()
-    * if executor loss matters — local checkpoint trades fault-tolerance
-    * for speed.) */
+    * Round shape (guide §2.4 — per-stage overhead dominates the rounds of
+    * every `d_entity_*` gate): the edge set is augmented ONCE with a
+    * self-edge per node, so a single join + one partial-aggregated min
+    * computes least(own label, min neighbor label) for every node — the
+    * self row both injects the node's own label into the min and carries
+    * the old label out for the convergence count. The pointer-jump
+    * self-join's two sides share the aggregation's exchange via
+    * ReuseExchange, so the join+partial-agg run once per round. Round 0
+    * skips the identity-label join outright: min(src) per dst over the
+    * self-edged frame IS the first propagation. Per round the driver runs
+    * exactly ONE action — the changed count that also materializes the
+    * round's labels. Zero changes IS the fixpoint (labels only ever
+    * decrease). The round's labels are lazily localCheckpoint'ed: the
+    * self-join doubles the LOGICAL plan every round, and the checkpoint
+    * truncates it to a LogicalRDD leaf inside the same action. (On a real
+    * cluster swap for reliable checkpoint() if executor loss matters —
+    * local checkpoint trades fault-tolerance for speed.) */
   def components(edges: DataFrame, maxIters: Int = 30, maxDepth: Int = 3): DataFrame = {
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(what: String): Unit = if (debug) {
-      System.err.println(f"[components] $what: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
     // und is re-read every round: checkpoint it so each round's plan holds
     // a leaf, not the whole edge-generation tree (6 parquet scans deep)
     val und = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
@@ -153,18 +145,15 @@ object Cluster {
     val undS = und.unionAll(und.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
       .repartition(col("src")).persist()
-    if (debug) { undS.count(); mark("edges+und materialize") }
-    // identity labels, lazy: round 1 never reads them (shortcut below);
+    // identity labels, lazy: round 0 never reads them (shortcut below);
     // they only seed the contraction fallback if maxIters bottoms out at 0
-    var labels = und.select(col("src").as("id")).distinct()
+    val identity = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
+    val res = Fixpoint.run(identity, maxIters, Fixpoint.release) { (labels, r) =>
       // least(own, min-neighbor) per node in ONE join + agg: the self-edge
       // row contributes the node's own label to the min AND carries it out
       // as old_label (every dst has exactly one self row)
-      val g = (if (iter == 0)
+      val g = (if (r == 0)
         undS.groupBy(col("dst"))
           .agg(min(col("src")).as("label"))
           .select(col("dst").as("id"), col("label"), col("dst").as("old_label"))
@@ -186,25 +175,21 @@ object Cluster {
           coalesce(col("plabel"), col("x.label")).as("label"))
       // lazy checkpoint: materializes inside the SAME action as the
       // convergence count, truncating plan AND lineage without an extra job
-      Similarity.dumpPlan(s"componentsRound$iter", jumped)
       val next = jumped.localCheckpoint(false)
       val changed = next
         .agg(count(when(col("label") =!= col("old_label"), lit(1))).as("c"))
         .head().getLong(0)
-      labels.unpersist()
-      labels = next
-      if (changed == 0L) done = true
-      mark(s"round $iter (changed=$changed)")
-      iter += 1
+      (next, Fixpoint.Changed(changed))
     }
-    if (!done) {
-      // CONTRACTION FALLBACK instead of the old hard failure (maxDepth = 0
-      // restores strict mode): bank the propagation progress by contracting
-      // each partial cluster to its label, then run large-star/small-star
-      // to a guaranteed fixpoint on the contracted graph and compose the
-      // two mappings. Min-label propagation alone can need O(diameter)-ish
-      // budgets on adversarial id layouts; the star contraction's round
-      // bound is O(log² n) REGARDLESS of ids, so this path always lands.
+    val labels = res.state
+    if (!res.converged) {
+      // CONTRACTION FALLBACK (maxDepth = 0 is strict mode): bank the
+      // propagation progress by contracting each partial cluster to its
+      // label, then run large-star/small-star to a guaranteed fixpoint on
+      // the contracted graph and compose the two mappings. Min-label
+      // propagation alone can need O(diameter)-ish budgets on adversarial
+      // id layouts; the star contraction's round bound is O(log² n)
+      // REGARDLESS of ids, so this path always lands.
       require(maxDepth > 0,
         s"components did not converge in $maxIters rounds at max contraction depth")
       val byId = labels.select(col("id"), col("label"))
@@ -228,7 +213,6 @@ object Cluster {
       composed.count()
       und.unpersist()
       undS.unpersist()
-      mark("star-contraction fallback")
       return composed
     }
     und.unpersist()
@@ -243,18 +227,15 @@ object Cluster {
     * rounds on ANY graph shape — the guarantee min-label propagation lacks
     * when ids are laid out adversarially along long chains. Fixpoint is a
     * star forest whose centers are the component minima. Per round the
-    * driver sees one (count, checksum) row; plans are truncated by the
-    * same lazy localCheckpoint discipline as the propagation loop. */
+    * driver sees one signature row; plans are truncated by the same lazy
+    * localCheckpoint discipline as the propagation loop. */
   private[graft] def starContraction(edges0: DataFrame, maxRounds: Int = 64): DataFrame = {
     val asEdge = edges0.select(
       greatest(col("a_id"), col("b_id")).as("u"),
       least(col("a_id"), col("b_id")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    var e = asEdge.localCheckpoint(false)
-    var prevSig: (Long, Long) = null
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
+      .localCheckpoint(false)
+    val res = Fixpoint.run(asEdge, maxRounds, Fixpoint.release) { (e, _) =>
       // LARGE-STAR: every node attaches its strictly-larger neighbors to
       // the minimum of its closed neighborhood
       val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -277,24 +258,20 @@ object Cluster {
         .filter(col("u") =!= col("v"))
         .distinct()
       val next = afterSmall.localCheckpoint(false)
-      // one driver row: materializes the round AND decides convergence —
-      // count + murmur3 sum identify the edge set (the round function is
-      // deterministic, so set-equality with the previous round ⇒ fixpoint)
-      val sig = next.agg(count(lit(1)), sum(hash(col("u"), col("v")).cast(LongType))).head()
-      val sigT = (sig.getLong(0), if (sig.isNullAt(1)) 0L else sig.getLong(1))
-      e.unpersist()
-      e = next
-      if (sigT == prevSig) done = true
-      prevSig = sigT
-      round += 1
+      // one driver row: materializes the round AND decides convergence
+      // (the round function is deterministic, so set-equality with the
+      // previous round ⇒ fixpoint)
+      (next, Fixpoint.frameSig(next, "u", "v"))
     }
-    require(done, s"star contraction did not converge in $maxRounds rounds")
+    Fixpoint.release(asEdge)
+    require(res.converged, s"star contraction did not converge in $maxRounds rounds")
     // star forest → labels: children point at their center; centers (and
     // only they) never appear as a child
     val nodes = edges0.select(col("a_id").as("id"))
       .unionAll(edges0.select(col("b_id").as("id"))).distinct()
     nodes
-      .join(e.groupBy(col("u").as("id")).agg(min(col("v")).as("parent")), Seq("id"), "left")
+      .join(res.state.groupBy(col("u").as("id")).agg(min(col("v")).as("parent")),
+        Seq("id"), "left")
       .select(col("id"), coalesce(col("parent"), col("id")).as("label"))
   }
 
@@ -342,10 +319,7 @@ object Cluster {
             FROM cc GROUP BY canonical_id) s USING (canonical_id)
       ORDER BY doc_id
     """)) { (spark, dir) =>
-    val t0 = System.nanoTime()
     val labels = clusterLabels(spark, dir)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(f"[ddCluster] labels mart: ${(System.nanoTime() - t0) / 1e9}%.2fs")
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("id").as("doc_id"), col("label").as("canonical_id"),

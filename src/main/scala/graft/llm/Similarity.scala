@@ -73,16 +73,6 @@ object Similarity {
     * so the scan predicate — and the warn spam — never materializes. */
   private def entryNode0: Column = when(col("qid").isNotNull, lit(0L))
 
-  /** Env-gated physical-plan dump (`SPARK_GRAFT_EXPLAIN=1`) of the LAZY
-    * frame right before it is checkpointed — the only way to see the real
-    * per-round/per-step plan of the iterative kernels, whose gate-level
-    * Explain output is a checkpoint leaf. Diagnostic only: Bench/Verify
-    * never set the variable. */
-  private[llm] def dumpPlan(tag: String, df: DataFrame): Unit =
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-      System.err.println(s"===== plan:$tag =====\n" + df.queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode))
-
   /** The suite's embedding dimensionality. Every fixed-width kernel —
     * [[dotSql]]'s unrolled range, the MMR gate's driver-side fold — derives
     * from THIS constant, so a corpus with a different width fails loudly at
@@ -386,10 +376,11 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** sim6 — per-label MEAN VECTOR (the k-means/IVF TRAINING step that
-    * [[simIvfProbe]]'s fixed seed centroids stand in for): element-wise
-    * average of every label's vectors, computed DISTRIBUTED-EXACT.
-    * Cross-row float summation is evaluation-order-dependent, so each
+  /** The 1e-7 fixed-point element sums (keys…, pos, s, n) of the vectors
+    * in `vec` behind every centroid mean — sim6's per-label MEAN VECTOR
+    * (the k-means/IVF TRAINING step that [[simIvfProbe]]'s fixed seed
+    * centroids stand in for) and every Lloyd recompute: element-wise
+    * averages computed DISTRIBUTED-EXACT. Cross-row float summation is evaluation-order-dependent, so each
     * element is first quantized to a 1e-7 fixed-point BIGINT (`floor(v ·
     * 1e7)` — the float→double widening and the multiply are exact IEEE on
     * both engines, so the integer is bit-deterministic); the integer sums
@@ -397,34 +388,36 @@ object Similarity {
     * divide reconstructs the mean in double. Quantization error 1e-7 is
     * at float-ulp scale — the price of a result that is bit-identical on
     * 1 core or 1000 executors. Shape: `posexplode` fans each vector into
-    * (label, pos, v) rows — dim× the row count but a fraction of the
-    * bytes per row — one partial+final aggregate on (label, pos), then a
-    * dim-bounded ordered reassembly per label. Nothing collects beyond
-    * 64-element lists. */
-  /** Per-element fixed-point mean rows (label, pos, c, n) — the shared core
-    * of [[simCentroids]] and [[centroidVectors]]. */
-  private def centroidElems(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("label", "pos")
+    * (key, pos, v) rows — dim× the row count but a fraction of the bytes
+    * per row — one partial+final aggregate on (key, pos), then
+    * [[fixedMean]]'s dim-bounded ordered reassembly per key. Nothing
+    * collects beyond 64-element lists. */
+  private[llm] def fixedSums(rows: DataFrame, vec: String, keys: String*): DataFrame =
+    rows.select(keys.map(col) :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
       .agg(
         sum(floor(col("v").cast(DoubleType) * 10000000.0).cast(LongType)).as("s"),
         count(lit(1)).as("n"))
-      .select(col("label"), col("pos"),
-        (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"),
-        col("n"))
+
+  /** THE fixed-point centroid mean: per-key (keys…, cv, n) from the
+    * (keys…, pos, s, n) sums of [[fixedSums]] — one divide per element,
+    * the vector reassembled in pos order, n the member count. */
+  private[llm] def fixedMean(sums: DataFrame, keys: String*): DataFrame =
+    sums.select(keys.map(col) :+ col("pos") :+ col("n") :+
+        (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(
+        transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
+          .as("cv"),
+        max(col("n")).as("n"))
 
   /** Array-shaped centroids (label, centroid, n_vectors) — the internal
     * training artifact, checked element-wise by BehaviorSpec. The GATED
     * query emits the exploded scalar form instead: the oracle comparator
     * hashes scalar cells and cannot sort a raw `array<double>` column. */
   private[graft] def centroidVectors(spark: SparkSession, dir: String): DataFrame =
-    centroidElems(spark, dir)
-      .groupBy("label")
-      .agg(
-        transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
-          .as("centroid"),
-        max(col("n")).as("n_vectors"))
+    fixedMean(fixedSums(emb(spark, dir), "embedding", "label"), "label")
+      .select(col("label"), col("cv").as("centroid"), col("n").as("n_vectors"))
       .orderBy("label")
 
   val simCentroids: QueryDef = QueryDef(
@@ -445,9 +438,11 @@ object Similarity {
              CAST(n AS BIGINT) AS n_vectors
       FROM per ORDER BY label, pos
     """)) { (spark, dir) =>
-    centroidElems(spark, dir)
+    fixedMean(fixedSums(emb(spark, dir), "embedding", "label"), "label")
+      .select(col("label"), col("n").as("n_vectors"),
+        posexplode(col("cv")).as(Seq("pos", "c")))
       .select(col("label"), col("pos").cast(LongType).as("pos"),
-        round(col("c"), 6).as("c_r"), col("n").as("n_vectors"))
+        round(col("c"), 6).as("c_r"), col("n_vectors"))
       .orderBy("label", "pos")
   }
 
@@ -505,36 +500,12 @@ object Similarity {
       ORDER BY cluster_id, pos
     """)) { (spark, dir) =>
     val e = emb(spark, dir).select(col("vec_id"), col("embedding"))
-    // one argmin assignment pass: centroids (with their norms) fold into a
-    // single broadcast row; ties broken toward the lower cent_id by the
-    // same 1e-12 bias the oracle applies
-    def assign(cents: DataFrame): DataFrame = {
-      val packed = cents
-        .withColumn("cc", dot(col("cv"), col("cv")))
-        .agg(collect_list(struct(col("cent_id"), col("cv"), col("cc"))).as("cents"))
-      val best = array_min(transform(col("cents"), c => struct(
-        (c("cc") - lit(2.0) * dot(col("embedding"), c("cv"))
-          + lit(1e-12) * c("cent_id")).as("score"),
-        c("cent_id").as("cent_id"))))
-      e.crossJoin(broadcast(packed))
-        .select(col("vec_id"), col("embedding"), best("cent_id").as("cell"))
-    }
     val cents0 = e.filter(col("vec_id") < 8)
       .select(col("vec_id").cast(IntegerType).as("cent_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("cv"))
-    // exact fixed-point recompute (see simCentroids) keyed by cell
-    val cents1 = assign(cents0)
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("cell", "pos")
-      .agg(
-        sum(floor(col("v").cast(DoubleType) * 10000000.0).cast(LongType)).as("s"),
-        count(lit(1)).as("n"))
-      .select(col("cell"), col("pos"),
-        (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"))
-      .groupBy(col("cell").as("cent_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
-        .as("cv"))
-    val sizes = assign(cents1).groupBy(col("cell")).agg(count(lit(1)).as("n_members"))
+    val cents1 = fixedMean(fixedSums(kmAssign(e, cents0), "embedding", "cell"), "cell")
+      .select(col("cell").as("cent_id"), col("cv"))
+    val sizes = kmAssign(e, cents1).groupBy(col("cell")).agg(count(lit(1)).as("n_members"))
     // gated shape: exploded (cluster_id, pos, rounded value) scalar rows —
     // the oracle comparator cannot sort a raw array<double> centroid column
     cents1.join(sizes, col("cent_id") === col("cell"), "left")
@@ -577,13 +548,12 @@ object Similarity {
         FROM ${p}per$r GROUP BY cell)"""
   }
 
-  /** One broadcast-argmin Lloyd assignment of `e`(vec_id, embedding)
-    * against a (cent_id, cv) centroid frame — min ‖x−c‖² via the
-    * ‖c‖²−2x·c expansion (centroids travel with their norms in ONE
-    * broadcast row), 1e-12·cent_id tie bias, plus the 1e-7-quantized
-    * squared distance of the chosen centroid (bias included on both
-    * engines, so the doubles are identical). Shared by
-    * [[simKmeansConverged]] and [[simIvfCells]]. */
+  /** THE nearest-centroid assignment: one broadcast-argmin Lloyd pass of
+    * `e`(vec_id, embedding) against a (cent_id, cv) centroid frame —
+    * min ‖x−c‖² via the ‖c‖²−2x·c expansion (centroids travel with their
+    * norms in ONE broadcast row), 1e-12·cent_id tie bias, plus the
+    * 1e-7-quantized squared distance of the chosen centroid (bias
+    * included on both engines, so the doubles are identical). */
   private def kmAssign(e: DataFrame, cents: DataFrame): DataFrame = {
     val packed = cents
       .withColumn("cc", dot(col("cv"), col("cv")))
@@ -600,73 +570,33 @@ object Similarity {
           * lit(10000000.0)).cast(LongType).as("dist_q"))
   }
 
-  /** The budgeted Lloyd training loop (factored out of
-    * [[simKmeansConverged]] when [[simIvfCells]] needed a second
-    * quantizer size, r15): seeds = the first `k` vectors, then exactly
-    * `rounds` fixed-point recomputes — the oracle's own unroll — chained
-    * as ONE LAZY PLAN materialized by a single checkpoint (r22, guide
-    * §2.4). The old loop paid TWO driver actions per round (an
-    * assignment-signature job for fixpoint early exit, then the eager
-    * recompute checkpoint) — up to 16 actions at [[CellRounds]] = 8 —
-    * but the early exit only ever skipped provable NO-OP rounds (an
-    * unchanged assignment reproduces the same centroids bit-for-bit), so
-    * running the full pinned budget lazily yields the identical centroid
-    * frame by the same argument, in one job. The chain is linear (each
-    * round's tiny centroid aggregate feeds the next round's broadcast-
-    * argmin pass once), so the plan grows linearly in `rounds`.
-    * `seedFilter` overrides the default first-k-ids seed pick for
-    * sources whose ids are not dense from 0 ([[simIndexAppend]]'s
-    * base-only training). */
+  /** The budgeted Lloyd training loop: seeds = the first `k` vectors,
+    * then at most `rounds` assignment passes, each one action (its
+    * signature job, which also computes the previous round's lazy
+    * recompute). An unchanged assignment makes every remaining recompute
+    * a bit-identical no-op, so the early exit equals the oracle's pinned
+    * unroll. (A fully lazy `rounds`-deep chain was tried and reverted: it
+    * always pays the whole budget, and the trainers here converge early.)
+    * Returns the checkpointed centroids. `seedFilter` overrides the
+    * default first-k-ids seed pick for sources whose ids are not dense
+    * from 0 ([[simIndexAppend]]'s base-only training). */
   private def lloydCells(e: DataFrame, k: Int, rounds: Int,
       seedFilter: Column = null): DataFrame = {
-    def recompute(assigned: DataFrame): DataFrame = assigned
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("cell", "pos")
-      .agg(
-        sum(floor(col("v").cast(DoubleType) * 10000000.0).cast(LongType)).as("s"),
-        count(lit(1)).as("n"))
-      .select(col("cell"), col("pos"),
-        (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"))
-      .groupBy(col("cell").as("cent_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
-        .as("cv"))
-    var cents = e.filter(Option(seedFilter).getOrElse(col("vec_id") < k))
+    val seeds = e.filter(Option(seedFilter).getOrElse(col("vec_id") < k))
       .select(col("vec_id").cast(IntegerType).as("cent_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("cv"))
-    // ONE action per round (r22): the signature job that materializes this
-    // round's assignment ALSO computes the previous round's lazy recompute
-    // (the centroid aggregate stays lazy and folds into the next
-    // assignment's plan) — the old shape paid a second eager checkpoint
-    // job per round. Early exit at the assignment fixpoint is kept: an
-    // unchanged assignment makes every remaining recompute a bit-identical
-    // no-op, so stopping early equals the oracle's full pinned unroll.
-    // (A fully lazy `rounds`-deep chain was tried and reverted: it always
-    // pays the whole budget, and the trainers here converge early.)
-    var prevSig: (Long, Long, Long) = null
-    var prevA: DataFrame = null
-    var iters = 0
-    var fixed = false
-    while (iters < rounds && !fixed) {
-      val a = kmAssign(e, cents).localCheckpoint(false)
-      val row = a.agg(count(lit(1)),
-        sum(hash(col("vec_id"), col("cell")).cast(LongType)),
-        call_function("bit_xor", xxhash64(col("vec_id"), col("cell")))).head()
-      def at(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-      val sig = (row.getLong(0), at(1), at(2))
-      if (sig == prevSig) { fixed = true; a.unpersist(false) }
-      else {
-        cents = recompute(a) // lazy — reads a's cached blocks next round
-        if (prevA != null) prevA.unpersist(false)
-        prevA = a
-        prevSig = sig
-        iters += 1
-      }
-    }
-    dumpPlan("lloydRound", cents)
+    // state: (centroids, the assignment checkpoint they are a lazy mean of)
+    val (cents, a) = Fixpoint.run((seeds, null: DataFrame), rounds,
+        (st: (DataFrame, DataFrame)) => Fixpoint.release(st._2)) { case ((c, _), _) =>
+      val a = kmAssign(e, c).localCheckpoint(false)
+      val sig = Fixpoint.frameSig(a, "vec_id", "cell")
+      ((fixedMean(fixedSums(a, "embedding", "cell"), "cell")
+        .select(col("cell").as("cent_id"), col("cv")), a), sig)
+    }.state
     // one checkpoint for the (possibly many) downstream consumers; only
-    // then release the last assignment's blocks its lineage reads
+    // then release the assignment its lineage reads
     val out = cents.localCheckpoint(true)
-    if (prevA != null) prevA.unpersist(false)
+    Fixpoint.release(a)
     out
   }
 
@@ -690,8 +620,8 @@ object Similarity {
     * round is a no-op, so stopping early yields the identical result the
     * pinned unroll does. Per-round cost at 100 TB: one broadcast-argmin
     * map pass over the vectors plus one (cell, pos) partial-aggregated
-    * recompute — no shuffle ever carries a vector; the tiny centroid frame
-    * is localCheckpoint'ed each round so the lineage doesn't grow with
+    * recompute — no shuffle ever carries a vector; each round's
+    * assignment is localCheckpoint'ed so the lineage doesn't grow with
     * the round count. Inertia is the standard convergence metric a real
     * training job logs: per-vector squared distance quantized to 1e-7
     * fixed point (identical IEEE chain on both engines), summed as exact
@@ -1181,12 +1111,8 @@ object Similarity {
     * the [[simCentroids]] discipline). ≤ M·[[PqK]] rows: folds into one
     * broadcast row for encode and LUT passes. */
   private[graft] def pqTrainedBook(spark: SparkSession, dir: String): DataFrame =
-    pqTrainedElems(spark, dir)
-      .select(col("m"), col("cell").as("code"), col("pos"),
-        (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"))
-      .groupBy("m", "code")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
-        .as("cv"))
+    fixedMean(pqTrainedElems(spark, dir), "m", "cell")
+      .select(col("m"), col("cell").as("code"), col("cv"))
 
   // -------------------------------------------------------------------
   // Convergence-budgeted PQ training (round-12 queue #1): the one-round
@@ -1235,20 +1161,6 @@ object Similarity {
     rounds.mkString(",\n      ")
   }
 
-  /** Convergence-budgeted per-subspace Lloyd training over an arbitrary
-    * (vec_id, m, sv) subvector stream and (m, code, cv DOUBLE) seed book:
-    * assign → exact fixed-point recompute for up to [[PqTrainRounds]]
-    * recomputes, exiting early when the (vec_id, m, cell) assignment
-    * signature (count + commutative murmur3 sum + xxhash64 XOR — the
-    * [[simKmeansConverged]] triple) repeats. Early exit is sound because
-    * an unchanged assignment makes the recompute reproduce the same
-    * codewords bit-for-bit, so the pinned-budget oracle and this loop
-    * land on identical books. Returns the final per-(m, code) records —
-    * codeword values, member count, 1e-7-quantized inertia — collected to
-    * the driver (≤ M·[[PqK]] rows, a value, not a plan). Per-round cost at
-    * 100 TB: one broadcast-argmin map pass over (vec, subspace) rows plus
-    * one (m, cell, pos) integer-partial recompute; no vector in any
-    * shuffle; superseded book checkpoints released in-loop. */
   /** THE best-codeword argmin over a folded `book` array column of
     * struct(bm, code, cv), against the row's (m, sv) subvector: squared-L2
     * sequential fold (exact IEEE, index order) + the suite's 1e-12·code
@@ -1273,55 +1185,29 @@ object Similarity {
   private def pqBookRow(book: DataFrame): DataFrame = book
     .agg(collect_list(struct(col("m").as("bm"), col("code"), col("cv"))).as("book"))
 
+  /** Convergence-budgeted per-subspace Lloyd training over an arbitrary
+    * (vec_id, m, sv) subvector stream and (m, code, cv DOUBLE) seed book:
+    * assign → exact fixed-point recompute for up to [[PqTrainRounds]]
+    * recomputes, exiting early when the (vec_id, m, cell) assignment
+    * signature ([[Fixpoint.frameSig]]) repeats. Early exit is sound because
+    * an unchanged assignment makes the recompute reproduce the same
+    * codewords bit-for-bit, so the pinned-budget oracle and this loop
+    * land on identical books. Returns the final per-(m, code) records —
+    * codeword values, member count, 1e-7-quantized inertia — collected to
+    * the driver (≤ M·[[PqK]] rows, a value, not a plan). Per-round cost at
+    * 100 TB: one broadcast-argmin map pass over (vec, subspace) rows plus
+    * one (m, cell, pos) integer-partial recompute; no vector in any
+    * shuffle; superseded book checkpoints released in-loop. */
   private def trainSubspaceBook(spark: SparkSession, sub0: DataFrame,
       seed: DataFrame): Seq[(Int, Long, Seq[Double], Long, Long)] = {
     val sub = sub0.localCheckpoint(true)
-    def assign(book: DataFrame): DataFrame = sub
-      .crossJoin(broadcast(pqBookRow(book)))
-      .withColumn("b", pqBookBest)
-      .select(col("vec_id"), col("m"), col("sv"),
-        col("b")("code").as("cell"), col("b")("d").as("d"))
-    def recompute(a: DataFrame): DataFrame = a
-      .select(col("m"), col("cell"), posexplode(col("sv")).as(Seq("pos", "v")))
-      .groupBy("m", "cell", "pos")
-      .agg(sum(floor(col("v").cast(DoubleType) * 10000000.0).cast(LongType)).as("s"),
-        count(lit(1)).as("n"))
-      .select(col("m"), col("cell"), col("pos"),
-        (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"))
-      .groupBy(col("m"), col("cell").as("code"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
-        .as("cv"))
-    var book = seed
-    var prevSig: (Long, Long, Long) = null
-    var prevCkpt: DataFrame = null
-    var iters = 0
-    // the assignment of the FINAL book, when the loop already computed it
-    // (fixpoint exit): reused for the membership/inertia ledger so the
-    // broadcast-argmin corpus pass is never run twice for the same book
-    var finAssign: DataFrame = null
-    while (iters < PqTrainRounds && finAssign == null) {
-      // lazy checkpoint: the signature action below materializes `a` once;
-      // the recompute then reads the cached rows instead of re-running the
-      // whole broadcast-argmin pass (the round-13 review finding)
-      val a = assign(book).localCheckpoint(false)
-      val row = a.agg(count(lit(1)),
-        sum(hash(col("vec_id"), col("m"), col("cell")).cast(LongType)),
-        call_function("bit_xor", xxhash64(col("vec_id"), col("m"), col("cell")))).head()
-      def at(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-      val sig = (row.getLong(0), at(1), at(2))
-      if (sig == prevSig) finAssign = a
-      else {
-        val next = recompute(a).localCheckpoint(true)
-        if (prevCkpt != null) prevCkpt.unpersist(false)
-        prevCkpt = next
-        book = next
-        prevSig = sig
-        iters += 1
-        a.unpersist(false)
-      }
-    }
-    val finA = if (finAssign != null) finAssign
-      else assign(book).localCheckpoint(false)
+    val (book, finA) = lloydBook(seed, PqTrainRounds, Seq("vec_id", "m", "cell"))(
+      book => sub.crossJoin(broadcast(pqBookRow(book)))
+        .withColumn("b", pqBookBest)
+        .select(col("vec_id"), col("m"), col("sv"),
+          col("b")("code").as("cell"), col("b")("d").as("d")),
+      a => fixedMean(fixedSums(a, "sv", "m", "cell"), "m", "cell")
+        .select(col("m"), col("cell").as("code"), col("cv")))
     val fin = finA
       .select(col("m"), col("cell"),
         floor(col("d") * 10000000.0).cast(LongType).as("dist_q"))
@@ -1336,10 +1222,36 @@ object Similarity {
         r.getAs[scala.collection.Seq[Double]]("cv").toSeq,
         r.getAs[Long]("n_members"), r.getAs[Long]("inertia_q")))
       .toSeq.sortBy(r => (r._1, r._2))
-    finA.unpersist(false)
-    sub.unpersist(false)
-    if (prevCkpt != null) prevCkpt.unpersist(false)
+    Seq(finA, sub, book).foreach(Fixpoint.release)
     out
+  }
+
+  /** Lloyd training whose recompute is checkpointed eagerly each round —
+    * the loop of [[trainSubspaceBook]] and [[simIvfSplit]]: from `seed`,
+    * up to `rounds` (assignment signature, recompute) pairs; the round
+    * whose `sigCols` signature repeats stops before recomputing (the
+    * recompute would reproduce the same book bit-for-bit). Returns the
+    * final book and its lazily checkpointed assignment — the one the loop
+    * already computed at a fixpoint, so the broadcast-argmin pass never
+    * runs twice for one book. The caller releases both. */
+  private def lloydBook(seed: DataFrame, rounds: Int, sigCols: Seq[String])(
+      assign: DataFrame => DataFrame,
+      recompute: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    type St = (DataFrame, DataFrame) // (book, its assignment)
+    // lazy: the signature job materializes the assignment once, and the
+    // recompute reads its blocks instead of re-running the argmin pass
+    def at(book: DataFrame): St = (book, assign(book).localCheckpoint(false))
+    def advance(st: St): St = at(recompute(st._2).localCheckpoint(true))
+    def release(st: St): Unit = {
+      if (st._1 ne seed) Fixpoint.release(st._1) // the seed is the caller's
+      Fixpoint.release(st._2)
+    }
+    val res = Fixpoint.run((seed, null: DataFrame), rounds, release) { (st, r) =>
+      val next = if (r == 0) at(st._1) else advance(st)
+      (next, Fixpoint.frameSig(next._2, sigCols: _*))
+    }
+    if (res.converged) res.state
+    else { val fin = advance(res.state); release(res.state); fin }
   }
 
   /** Total 1e-6-quantized encode distortion of an arbitrary (m, code, cv)
@@ -2647,67 +2559,22 @@ object Similarity {
       // the unit of maintenance work: ONE cell's members
       val mem = assigned.filter(col("cell") === hot)
         .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-      def assign(cents: DataFrame): DataFrame = {
-        val packed = cents
-          .withColumn("cc", dot(col("cv"), col("cv")))
-          .agg(collect_list(struct(col("cent_id"), col("cv"), col("cc"))).as("cents"))
-        val bestC = array_min(transform(col("cents"), c => struct(
-          (c("cc") - lit(2.0) * dot(col("embedding"), c("cv"))
-            + lit(1e-12) * c("cent_id")).as("score"),
-          c("cent_id").as("cent_id"))))
-        mem.crossJoin(broadcast(packed))
-          .select(col("vec_id"), col("embedding"), bestC("cent_id").as("sub"))
-      }
-      def recompute(a: DataFrame): DataFrame = a
-        .select(col("sub"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("sub", "pos")
-        .agg(sum(floor(col("v").cast(DoubleType) * 10000000.0).cast(LongType)).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("sub"), col("pos"),
-          (col("s").cast(DoubleType) / col("n").cast(DoubleType) / 10000000.0).as("c"))
-        .groupBy(col("sub").as("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))), s => s("c"))
-          .as("cv"))
       // seeds: the two lowest-id members (2-row frame → the id window is
       // bounded by construction)
       val seedCkpt = mem.orderBy("vec_id").limit(2).localCheckpoint(true)
-      var cents = seedCkpt
+      val seed = seedCkpt
         .withColumn("cent_id",
           (row_number().over(Window.orderBy("vec_id")) - 1).cast(IntegerType))
         .select(col("cent_id"), col("embedding").cast(ArrayType(DoubleType)).as("cv"))
-      var prevSig: (Long, Long, Long) = null
-      var prevCkpt: DataFrame = null
-      var finAssign: DataFrame = null
-      var iters = 0
-      while (iters < IvfSplitRounds && finAssign == null) {
-        val a = assign(cents).localCheckpoint(false)
-        val row = a.agg(count(lit(1)),
-          sum(hash(col("vec_id"), col("sub")).cast(LongType)),
-          call_function("bit_xor", xxhash64(col("vec_id"), col("sub")))).head()
-        def at(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-        val sig = (row.getLong(0), at(1), at(2))
-        if (sig == prevSig) finAssign = a
-        else {
-          val next = recompute(a).localCheckpoint(true)
-          if (prevCkpt != null) prevCkpt.unpersist(false)
-          prevCkpt = next
-          cents = next
-          prevSig = sig
-          iters += 1
-          a.unpersist(false)
-        }
-      }
-      val finA = if (finAssign != null) finAssign else assign(cents)
-      val finCounts = finA.groupBy("sub").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getAs[Int]("sub"), r.getAs[Long]("n")))
-      // release every checkpoint taken above, [[trainSubspaceBook]]'s
-      // discipline — the driver-side collects are done, so nothing may
-      // accumulate until releaseSessionState (the r13 ADVICE leak finding)
-      if (finAssign != null) finAssign.unpersist(false)
-      if (prevCkpt != null) prevCkpt.unpersist(false)
-      seedCkpt.unpersist(false)
-      mem.unpersist(false)
-      assigned.unpersist(false)
+      val (cents, finA) = lloydBook(seed, IvfSplitRounds, Seq("vec_id", "cell"))(
+        cents => kmAssign(mem, cents).select(col("vec_id"), col("embedding"), col("cell")),
+        a => fixedMean(fixedSums(a, "embedding", "cell"), "cell")
+          .select(col("cell").as("cent_id"), col("cv")))
+      val finCounts = finA.groupBy("cell").agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n")))
+      // the driver-side collects are done: release every checkpoint taken
+      // above, so nothing accumulates until releaseSessionState
+      Seq(finA, cents, seedCkpt, mem, assigned).foreach(Fixpoint.release)
       val rows =
         statRows.filter(_._1 != hot).map { case (c, n) => (c.toString, n) } ++
           finCounts.map { case (sub, n) =>
@@ -5199,9 +5066,7 @@ object Similarity {
     // hash(s) exchange that serves three consumers at once: the (s, t)
     // dedup (clustering on s covers grouping on (s, t)), the distinct
     // candidate-volume count (`is_cand` survives the dedup as a max), and
-    // nnTopK's per-s window (same clustering — no second exchange). The
-    // old shape paid three exchanges per round: cand.distinct by (s, t),
-    // union.distinct by (s, t), then the window's hash(s).
+    // nnTopK's per-s window (same clustering — no second exchange).
     val cand = und.join(und2, col("s") === col("u2") && col("t") =!= col("q"))
       .select(col("t").as("s"), col("q").as("t"))
     val tagged = pairs.select(col("s"), col("t"), lit(0).as("is_cand"))
@@ -5209,9 +5074,8 @@ object Similarity {
       .repartition(col("s"))
       .groupBy("s", "t").agg(max("is_cand").as("is_cand"))
       .localCheckpoint(true)
-    // distinct candidate pairs — same value the old eager cand.count()
-    // priced (a proposal already in the kept list still counts: is_cand
-    // is a max over the union, not an anti-join)
+    // distinct candidate pairs (a proposal already in the kept list still
+    // counts: is_cand is a max over the union, not an anti-join)
     val candDistinct = tagged.filter(col("is_cand") === 1).select("s", "t")
     val next = nnTopK(e, NndK)(tagged.select("s", "t")).localCheckpoint(true)
     (candDistinct, tagged, next)
@@ -5227,24 +5091,20 @@ object Similarity {
     * are already marted. Returns the checkpointed next kept list. */
   private def nnStepNext(e: DataFrame, cur: DataFrame): DataFrame = {
     val pairs = cur.select("s", "t")
-    // und stays LAZY (r22): `cur` is already a checkpointed leaf, so the
+    // und stays LAZY: `cur` is already a checkpointed leaf, so the
     // symmetrize+distinct plan is shallow, and its (s, t)-hash exchange is
     // an identical subtree on both sides of the co-neighbor self-join —
-    // ReuseExchange computes it once. The old eager checkpoint here was a
-    // whole extra job per round just to materialize what the round's one
-    // real action computes anyway.
+    // ReuseExchange computes it once, inside the round's one action.
     val und = pairs.unionByName(pairs.select(col("t").as("s"), col("s").as("t")))
       .distinct()
     val und2 = und.toDF("u2", "q")
     // raw candidates into ONE hash(s) exchange shared by the (s, t) dedup
-    // and nnTopK's per-s window (see [[nnStep]] — the counting variant);
-    // the old shape paid three exchanges per round
+    // and nnTopK's per-s window (see [[nnStep]] — the counting variant)
     val cand = und.join(und2, col("s") === col("u2") && col("t") =!= col("q"))
       .select(col("t").as("s"), col("q").as("t"))
-    val lazyNext = nnTopK(e, NndK)(
+    nnTopK(e, NndK)(
       pairs.unionByName(cand).repartition(col("s")).dropDuplicates("s", "t"))
-    dumpPlan("nnStepNext", lazyNext)
-    lazyNext.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** One NN-descent BUILD per corpus snapshot, the
@@ -5265,43 +5125,34 @@ object Similarity {
     graft.pipeline.ModelDef("mart_nn_rounds", Nil, mart = true) { (s, d, _) =>
       val (e, n) = nnEmb(s, d)
       val init = nnInit(s, d, e, n)
-      var cur = init
-      val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      var out = nnTopK(e, NndK)(init)
-        .select(lit(0L).as("round"), col("s"), col("t"), col("rk"),
-          lit(0L).as("cand_pairs"))
-      // pinned-budget loop with fixpoint early exit (the suite's
-      // convention): the oracle unrolls exactly NndRounds rounds; once a
-      // round's kept list matches the previous round's (count +
-      // commutative hash sum + xxhash XOR signature over (s, t)), every
-      // remaining round is a provable no-op — candidates are a function
-      // of the list (c_{r+1} = f(l_r) = f(l_{r-1}) = c_r), so the
-      // remaining mart rows replicate this round's list and candidate
-      // count bit-for-bit instead of re-running the join
-      var prevSig: (Long, Long, Long) = null
-      var done = false
-      for (r <- 1 to NndRounds if !done) {
-        val (cand, candBacking, next) = nnStep(e, cur)
-        val nc = cand.count()
-        candBacking.unpersist(false)
-        val row = next.agg(count(lit(1)),
-          sum(hash(col("s"), col("t")).cast(LongType)),
-          call_function("bit_xor", xxhash64(col("s"), col("t")))).head()
-        def at(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-        val sig = (row.getLong(0), at(1), at(2))
-        val last = if (sig == prevSig) NndRounds else r
-        for (rr <- r to last)
-          out = out.unionByName(next.select(lit(rr.toLong).as("round"), col("s"),
-            col("t"), col("rk"), lit(nc).as("cand_pairs")))
-        done = sig == prevSig
-        prevSig = sig
-        kept += next
-        cur = next
+      def tagged(list: DataFrame, round: Int, nc: Long): DataFrame =
+        list.select(lit(round.toLong).as("round"), col("s"), col("t"), col("rk"),
+          lit(nc).as("cand_pairs"))
+      // pinned-budget loop with fixpoint early exit: the oracle unrolls
+      // exactly NndRounds rounds; once a round's kept list matches the
+      // previous round's, every remaining round is a provable no-op —
+      // candidates are a function of the list (c_{r+1} = f(l_r) =
+      // f(l_{r-1}) = c_r), so the remaining mart rows replicate this
+      // round's list and candidate count bit-for-bit instead of re-running
+      // the join. State: (kept list, its candidate count, mart rows so far,
+      // every kept checkpoint). Superseded lists stay cached — the mart
+      // rows read them — until the union is materialized.
+      val res = Fixpoint.run(
+          (init, 0L, tagged(nnTopK(e, NndK)(init), 0, 0L), List.empty[DataFrame]),
+          NndRounds, (_: (DataFrame, Long, DataFrame, List[DataFrame])) => ()) {
+        case ((cur, _, out, kept), r) =>
+          val (cand, candBacking, next) = nnStep(e, cur)
+          val nc = cand.count()
+          candBacking.unpersist(false)
+          ((next, nc, out.unionByName(tagged(next, r + 1, nc)), next :: kept),
+            Fixpoint.frameSig(next, "s", "t"))
       }
-      val mat = out.localCheckpoint(true)
-      init.unpersist(false)
-      kept.foreach(_.unpersist(false))
-      e.unpersist(false)
+      val (last, nc, rows, kept) = res.state
+      val mat = (res.rounds + 1 to NndRounds)
+        .foldLeft(rows)((out, r) => out.unionByName(tagged(last, r, nc)))
+        .localCheckpoint(true)
+      kept.foreach(Fixpoint.release)
+      Seq(init, e).foreach(_.unpersist(false))
       mat
     }))
 
@@ -5578,10 +5429,7 @@ object Similarity {
     // graph and the score table ride BROADCAST joins: g is the bounded
     // serve core (n×serve-degree id pairs; sharded serving RAM at
     // 100 TB), the score table is the 8-query evaluation artifact (the
-    // [[simGraphServe]] pricing convention). Beam selection, expansion
-    // order and the visited fixpoint are value-identical to the old
-    // topVisited-based step — same (score DESC, t) tie-break, same
-    // top-10 beam, same union semantics.
+    // [[simGraphServe]] pricing convention).
     // both broadcast sides ride the session cache for the walk's duration
     // (r22, guide §5/§6): every step's action rebuilds its broadcast
     // relations, and without the persist each rebuild re-scanned the
@@ -5592,31 +5440,26 @@ object Similarity {
       .repartition(pcols: _*).dropDuplicates(part :+ "t")
       .withColumn("rn", row_number().over(
         Window.partitionBy(pcols: _*).orderBy(col("score").desc, col("t"))))
-    var vis = ranked(v0.join(broadcast(scores), Seq("qid", "t"))
-        .select(pcols :+ col("t") :+ col("score"): _*))
-      .localCheckpoint(true)
-    var prev = vis.count()
-    var fixed = false
     // NOTE (r22, measured): unrolling TWO steps per checkpoint action was
     // tried and REVERTED — the visited set appears twice per unrolled
     // step (beam + union), so the pair plan re-runs the inner window and
     // adds a no-op step at odd-step fixpoints; the walk-gate subset
     // measured 35.4 s paired vs 25.4 s single-step (baseline 27.8 s —
     // the win kept below is the persisted broadcast sides).
-    for (_ <- 1 to steps if !fixed) {
-      val beam = vis.filter(col("rn") <= 10)
-      val fresh = beam.join(broadcast(gp), cond)
-        .select(pcols :+ col("gt").as("t"): _*)
-        .join(broadcast(scores), Seq("qid", "t"))
-        .select(pcols :+ col("t") :+ col("score"): _*)
-      val lazyNv = ranked(
-        vis.select(pcols :+ col("t") :+ col("score"): _*).unionByName(fresh))
-      dumpPlan("greedyWalkStep", lazyNv)
-      val nv = lazyNv.localCheckpoint(true)
-      val c = nv.count()
-      if (c == prev) { fixed = true; nv.unpersist(false) }
-      else { vis.unpersist(false); vis = nv; prev = c }
-    }
+    // Round 0 ranks the entry set; round r expands step r.
+    val entry = v0.join(broadcast(scores), Seq("qid", "t"))
+      .select(pcols :+ col("t") :+ col("score"): _*)
+    val vis = Fixpoint.run(entry, steps + 1, Fixpoint.release) { (cur, r) =>
+      val grown = if (r == 0) cur else {
+        val fresh = cur.filter(col("rn") <= 10).join(broadcast(gp), cond)
+          .select(pcols :+ col("gt").as("t"): _*)
+          .join(broadcast(scores), Seq("qid", "t"))
+          .select(pcols :+ col("t") :+ col("score"): _*)
+        cur.select(pcols :+ col("t") :+ col("score"): _*).unionByName(fresh)
+      }
+      val nv = ranked(grown).localCheckpoint(true)
+      (nv, Fixpoint.Sig(nv.count()))
+    }.state
     scores.unpersist(false)
     gp.unpersist(false)
     vis.select(pcols :+ col("t"): _*)
@@ -6003,24 +5846,15 @@ object Similarity {
         .select(col("s"), (expr("r div 4") * 5 + col("r") % 4).as("t"))
       val init = bincell.unionByName(bring).distinct().localCheckpoint(true)
       // pinned budget + fixpoint exit (the nnDag loop)
-      var cur: DataFrame = init
-      val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      var prevSig: (Long, Long, Long) = null
-      var fixed = false
-      for (_ <- 1 to NndRounds if !fixed) {
+      val last = Fixpoint.run(init, NndRounds, Fixpoint.release) { (cur, _) =>
         val next = nnStepNext(eB, cur)
-        val row = next.agg(count(lit(1)),
-          sum(hash(col("s"), col("t")).cast(LongType)),
-          call_function("bit_xor", xxhash64(col("s"), col("t")))).head()
-        def at(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-        val sig = (row.getLong(0), at(1), at(2))
-        if (sig == prevSig) { next.unpersist(false); fixed = true }
-        else { kept += next; cur = next; prevSig = sig }
-      }
-      // mat is materialized BEFORE the kept checkpoints release (cur is
-      // the last kept entry — truncated lineage can't recompute)
-      val mat = cur.select("s", "t", "rk").localCheckpoint(true)
-      (kept :+ init :+ e).foreach(_.unpersist(false))
+        (next, Fixpoint.frameSig(next, "s", "t"))
+      }.state
+      // mat is materialized BEFORE the last kept list releases (truncated
+      // lineage can't recompute)
+      val mat = last.select("s", "t", "rk").localCheckpoint(true)
+      Fixpoint.release(last)
+      Seq(init, e).foreach(_.unpersist(false))
       mat
     }))
 
@@ -7910,7 +7744,6 @@ object Similarity {
           .select(col("v"),
             (lit(PrBase) + expr(s"($PrNum * coalesce(sm, 0L)) div $PrDen")).as("m"))
       }
-      dumpPlan("prChain", pr)
       pr = pr.localCheckpoint(true)
       val stages = scala.collection.mutable.ArrayBuffer(pr)
       // conservation + floor, enforced on the final ledger

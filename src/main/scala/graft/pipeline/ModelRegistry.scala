@@ -82,15 +82,18 @@ object MartCache {
   // so a regenerated corpus lands on a NEW path and a fresh handle). The
   // map stores only the DataFrame plan — a scan node, no data — so the
   // bench's releaseSessionState has nothing to evict, and the weak session
-  // key lets dead sessions fall out with GC. Only ensure-then-read marts
-  // go through here (never append-materialized tables, whose file sets
-  // grow after the first read).
+  // key lets dead sessions fall out with GC. An append-materialized
+  // table's file set grows after the first read, so a memoized handle
+  // would list stale files forever: `read` rejects any registry holding
+  // an append model.
   private val handles = new java.util.WeakHashMap[
     SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
 
   def read(spark: SparkSession, dir: String, dag: ModelRegistry,
       prefixTag: String, viewPrefix: String, sigSources: Seq[String],
       names: String*): Seq[org.apache.spark.sql.DataFrame] = {
+    require(!dag.hasAppend,
+      s"MartCache.read memoizes file listings; append models must be read directly ($prefixTag)")
     val prefix = s"${prefixTag}_${graft.core.sourceSig(spark, dir, sigSources: _*)}"
     ensure(spark, dir, dag, prefix, viewPrefix)
     names.map { n =>
@@ -111,6 +114,9 @@ final class ModelRegistry(models: Seq[ModelDef]) {
     require(dup.isEmpty, s"duplicate model names: ${dup.mkString(", ")}")
     models.map(m => m.name -> m).toMap
   }
+
+  /** Whether any model appends to its table on every run. */
+  val hasAppend: Boolean = models.exists(_.append)
   locally {
     val missing = for (m <- models; d <- m.deps if !byName.contains(d))
       yield s"${m.name} -> $d"

@@ -76,4 +76,19 @@ class ClusterSpec extends SparkSpec {
       }
     }
   }
+
+  // Job counts measured on the kernels before they moved onto
+  // llm.Fixpoint; an extra action per round adds at least one job per round.
+  test("components runs a fixed number of jobs on the path graph") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("a_id", "b_id")
+    assert(jobsOf(Cluster.components(edges))._2 === 7)
+  }
+
+  test("star contraction runs a fixed number of jobs on the reversed chain") {
+    val chain = (0L until 40L).map(i => (100L - i, 100L - i - 1L))
+    val extra = Seq((7L, 3L), (7L, 4L), (7L, 5L), (200L, 201L))
+    val edges = (chain ++ extra).toDF("a_id", "b_id")
+    assert(jobsOf(Cluster.starContraction(edges))._2 === 31)
+  }
 }

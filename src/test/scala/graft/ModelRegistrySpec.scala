@@ -55,6 +55,18 @@ class ModelRegistrySpec extends SparkSpec {
     assert(built("mart_probe").head().getLong(0) === 5L)
   }
 
+  test("MartCache.read rejects a registry holding an append mart") {
+    val reg = new ModelRegistry(Seq(
+      ModelDef("mart_appended", Nil, mart = true, append = true) { (s, _, _) =>
+        s.range(3).toDF("k")
+      }))
+    val ex = intercept[IllegalArgumentException] {
+      pipeline.MartCache.read(spark, sfDir, reg, "append_probe", "graft_append_probe_",
+        Seq("documents"), "mart_appended")
+    }
+    assert(ex.getMessage.contains("append"))
+  }
+
   test("the corpus DAG topo-orders its stages and packs consistent shard offsets") {
     val order = pipeline.Pipeline.corpusDag.topoOrder
     val stages = Seq("stg_corpus_raw", "stg_corpus_norm", "stg_corpus_kept",

@@ -30,4 +30,34 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  /** `body`'s value and the number of Spark jobs it started, counted by a
+    * listener on a job group of its own (broadcast jobs inherit the
+    * group). AQE is off while `body` runs: its re-planning makes the count
+    * depend on the order in which stages finish (the path graph of
+    * ClusterSpec ran 23 or 24 jobs with it on), while a static plan runs
+    * the same jobs every time. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val out = body
+      org.apache.spark.graftspec.BusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
