@@ -103,21 +103,37 @@ object core {
     buildLedgerM.synchronized { buildLedgerM.toSeq }
 
   /** Driver-side overlap pool for independent Spark actions (guide §2.6).
-    * The gates previously parked blocking actions on
-    * `ExecutionContext.Implicits.global`, whose fork-join pool is sized to
-    * the core count — enough concurrent gates (or futures also waiting on
-    * MartCache's build lock) could occupy every worker with PARKED threads
-    * and serialize the overlap (r21 ADVICE). A cached DAEMON pool never
-    * starves on blocked threads: a driver action is an I/O-shaped wait,
-    * 2–6 in flight is the normal case, and idle threads are reclaimed
-    * after 60 s. */
-  implicit lazy val actionEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-action")
-        t.setDaemon(true)
-        t
-      }))
+    * A cached DAEMON pool never starves on blocked threads: a driver
+    * action is an I/O-shaped wait, 2–6 in flight is the normal case, and
+    * idle threads are reclaimed after 60 s. Only [[concurrently]] submits
+    * to it. */
+  private lazy val actionEc: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool(r => {
+      val t = new Thread(r, "graft-action")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Runs independent driver actions (the legs) concurrently and returns
+    * their results in input order. Every leg finishes before this returns
+    * or throws: a failed leg never leaves a sibling submitting jobs
+    * against frames the caller is about to release. The first failure in
+    * input order is rethrown, later ones attached as suppressed. A leg may
+    * itself call `concurrently` (the pool grows instead of starving). */
+  def concurrently[T](legs: Seq[() => T]): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    val tasks = legs.map(leg => (() => leg()): java.util.concurrent.Callable[T])
+    val done = actionEc.invokeAll(tasks.asJava).asScala.toSeq
+    val failures = done.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+      throw first
+    }
+    done.map(_.get())
+  }
 
   /** Scratch dir for landing zones / stage handoffs, keyed by the input dir
     * so different scale factors never collide. Rooted at the process working
@@ -249,6 +265,20 @@ object core {
     * Oracle: `CAST(strftime(d, '%Y%m%d') AS INTEGER)`. */
   def dateKey(c: Column): Column =
     date_format(c, "yyyyMMdd").cast(IntegerType)
+
+  /** Drops a dead frame's blocks mid-query. A localCheckpoint is a
+    * LogicalRDD leaf over a persisted RDD the cache manager never sees, so
+    * `Dataset.unpersist` alone leaves its blocks cached until the RDD is
+    * garbage-collected or [[releaseSessionState]] runs; this unpersists
+    * the RDD itself. Any other frame goes through `Dataset.unpersist`,
+    * which only drops a `cache()`/`persist()` entry. A checkpoint has no
+    * lineage: reading one after its release fails the job, so release
+    * only what nothing will read again. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case ckpt: org.apache.spark.sql.execution.LogicalRDD =>
+      ckpt.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(false)
+  }
 
   /** Release every block a query may have left in session memory: the
     * catalog cache AND raw RDD-level persists. `localCheckpoint` blocks

@@ -213,8 +213,8 @@ object Bpe {
     * vocabulary explode+shuffle into one filtered explode over the
     * touched words (typically a small fraction once the common pairs are
     * merged) plus the selection aggregate over the maintained
-    * pair table. Superseded checkpoints are released in-loop (the
-    * [[Similarity.simKmeansConverged]] discipline). */
+    * pair table. Each superseded checkpoint is released as soon as its
+    * successor is materialized, the last ones before returning. */
   private[graft] def trainMergesBatched(spark: SparkSession, dir: String,
       rounds: Int, batch: Int, auditMaintenance: Boolean = false): Seq[(Int, String, String, Long)] = {
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -265,14 +265,12 @@ object Bpe {
         require(diff == 0L,
           s"incremental pair counts diverged from recount at round ${round + 1}: $diff keys")
       }
-      vocab.unpersist(false)
-      pairCounts.unpersist(false)
+      Seq(vocab, pairCounts).foreach(core.release)
       vocab = next
       pairCounts = nextPairs
       round += 1
     }
-    vocab.unpersist(false)
-    pairCounts.unpersist(false)
+    Seq(vocab, pairCounts).foreach(core.release)
     merges.result()
   }
 
@@ -303,11 +301,11 @@ object Bpe {
       val next = vocab.withColumn("syms",
         replace(col("syms"), lit(s"<$pa><$pb>"), lit(s"<$pa$pb>")))
         .localCheckpoint(true)
-      vocab.unpersist(false)
+      core.release(vocab)
       vocab = next
       round += 1
     }
-    vocab.unpersist(false)
+    core.release(vocab)
     merges.result()
   }
 

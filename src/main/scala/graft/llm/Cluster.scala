@@ -149,7 +149,7 @@ object Cluster {
     // they only seed the contraction fallback if maxIters bottoms out at 0
     val identity = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-    val res = Fixpoint.run(identity, maxIters, Fixpoint.release) { (labels, r) =>
+    val res = Fixpoint.run(identity, maxIters, core.release) { (labels, r) =>
       // least(own, min-neighbor) per node in ONE join + agg: the self-edge
       // row contributes the node's own label to the min AND carries it out
       // as old_label (every dst has exactly one self row)
@@ -211,11 +211,11 @@ object Cluster {
       // contracted, and a lazily-checkpointed plan can't recompute from
       // dropped blocks
       composed.count()
-      und.unpersist()
+      core.release(und)
       undS.unpersist()
       return composed
     }
-    und.unpersist()
+    core.release(und)
     undS.unpersist()
     labels.select(col("id"), col("label"))
   }
@@ -235,7 +235,7 @@ object Cluster {
       least(col("a_id"), col("b_id")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
       .localCheckpoint(false)
-    val res = Fixpoint.run(asEdge, maxRounds, Fixpoint.release) { (e, _) =>
+    val res = Fixpoint.run(asEdge, maxRounds, core.release) { (e, _) =>
       // LARGE-STAR: every node attaches its strictly-larger neighbors to
       // the minimum of its closed neighborhood
       val und = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -263,7 +263,7 @@ object Cluster {
       // previous round ⇒ fixpoint)
       (next, Fixpoint.frameSig(next, "u", "v"))
     }
-    Fixpoint.release(asEdge)
+    core.release(asEdge)
     require(res.converged, s"star contraction did not converge in $maxRounds rounds")
     // star forest → labels: children point at their center; centers (and
     // only they) never appear as a child

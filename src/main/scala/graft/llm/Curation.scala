@@ -310,7 +310,6 @@ object Curation {
         (estJ * estU).as("est_inter"))
       .orderBy("source_a", "source_b")
     val rows = out.collect()
-    dd.unpersist(false)
     // law 1: a pair whose merged sketch holds < k values is EXACT — the
     // sketches are the full sets, so union, Jaccard, AND intersection
     // all reproduce the exact side bit-for-bit
@@ -794,7 +793,6 @@ object Curation {
     val freshN = docs.filter(col("doc_id") % 7 === 6).count()
     val addedN = rows.map(_.getAs[Long]("docs_added")).sum
     require(addedN == freshN, s"corpus-diff lost rows: added $addedN != fresh $freshN")
-    docs.unpersist(false)
     val schema = out.schema
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }

@@ -377,7 +377,7 @@ object Dedup {
         r.getLong(0) >= 600000L && r.getLong(1) == r.getLong(0) - 600000L)
       require(flaggedPlanted == plantedAbove,
         s"fuzzy-decontam missed planted contamination: $flaggedPlanted of $plantedAbove above-threshold pairs")
-      tsh.unpersist(); esh.unpersist(); cands.unpersist(false)
+      tsh.unpersist(); esh.unpersist()
       val schema = out.schema
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     }

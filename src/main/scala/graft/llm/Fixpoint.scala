@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -52,16 +51,6 @@ private[graft] object Fixpoint {
       prev = report
     }
     Result(state, r, converged = false)
-  }
-
-  /** Drops a round state's blocks. A localCheckpoint is a LogicalRDD leaf
-    * over a persisted RDD the cache manager never sees, so
-    * `Dataset.unpersist` alone leaves its blocks cached until the RDD is
-    * garbage-collected; a frame derived from a checkpoint only leaves the
-    * cache manager, never its source's blocks. */
-  def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case ckpt: LogicalRDD => ckpt.rdd.unpersist(blocking = false)
-    case _ => df.unpersist(false)
   }
 
   /** THE assignment signature: row count, murmur3 sum and xxhash64 XOR

@@ -587,7 +587,7 @@ object Similarity {
         col("embedding").cast(ArrayType(DoubleType)).as("cv"))
     // state: (centroids, the assignment checkpoint they are a lazy mean of)
     val (cents, a) = Fixpoint.run((seeds, null: DataFrame), rounds,
-        (st: (DataFrame, DataFrame)) => Fixpoint.release(st._2)) { case ((c, _), _) =>
+        (st: (DataFrame, DataFrame)) => core.release(st._2)) { case ((c, _), _) =>
       val a = kmAssign(e, c).localCheckpoint(false)
       val sig = Fixpoint.frameSig(a, "vec_id", "cell")
       ((fixedMean(fixedSums(a, "embedding", "cell"), "cell")
@@ -596,7 +596,7 @@ object Similarity {
     // one checkpoint for the (possibly many) downstream consumers; only
     // then release the assignment its lineage reads
     val out = cents.localCheckpoint(true)
-    Fixpoint.release(a)
+    core.release(a)
     out
   }
 
@@ -1222,7 +1222,7 @@ object Similarity {
         r.getAs[scala.collection.Seq[Double]]("cv").toSeq,
         r.getAs[Long]("n_members"), r.getAs[Long]("inertia_q")))
       .toSeq.sortBy(r => (r._1, r._2))
-    Seq(finA, sub, book).foreach(Fixpoint.release)
+    Seq(finA, sub, book).foreach(core.release)
     out
   }
 
@@ -1243,8 +1243,8 @@ object Similarity {
     def at(book: DataFrame): St = (book, assign(book).localCheckpoint(false))
     def advance(st: St): St = at(recompute(st._2).localCheckpoint(true))
     def release(st: St): Unit = {
-      if (st._1 ne seed) Fixpoint.release(st._1) // the seed is the caller's
-      Fixpoint.release(st._2)
+      if (st._1 ne seed) core.release(st._1) // the seed is the caller's
+      core.release(st._2)
     }
     val res = Fixpoint.run((seed, null: DataFrame), rounds, release) { (st, r) =>
       val next = if (r == 0) at(st._1) else advance(st)
@@ -1341,7 +1341,7 @@ object Similarity {
           explode(array(subs: _*)).as("x"))
         .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv"))
       val out = trainSubspaceBook(spark, rsub, seed)
-      res.unpersist(false)
+      core.release(res)
       out
     }
 
@@ -1635,7 +1635,7 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("adc"))
     val beamSchema = beamFrame.schema
     val beamRows = beamFrame.collect()
-    scores.unpersist(false)
+    core.release(scores)
     val beam = spark.createDataFrame(
       java.util.Arrays.asList(beamRows: _*), beamSchema)
     val q = emb(spark, dir).filter(col("vec_id") === Q1)
@@ -2574,7 +2574,7 @@ object Similarity {
         .collect().map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n")))
       // the driver-side collects are done: release every checkpoint taken
       // above, so nothing accumulates until releaseSessionState
-      Seq(finA, cents, seedCkpt, mem, assigned).foreach(Fixpoint.release)
+      Seq(finA, cents, seedCkpt, mem, assigned).foreach(core.release)
       val rows =
         statRows.filter(_._1 != hot).map { case (c, n) => (c.toString, n) } ++
           finCounts.map { case (sub, n) =>
@@ -3264,9 +3264,6 @@ object Similarity {
         .groupBy("rung").agg(sum(col("micro")).as("tm"))
         .collect().map(r => r.getAs[Int]("rung") -> r.getAs[Long]("tm")).toMap
       val rows = rungs.map { case (label, _, r) => (label, n, perRung(r)) }
-      subAll.unpersist(false)
-      mixed.unpersist(false)
-      qz.unpersist(false)
       rows.toDF("variant", "n_vectors", "total_micro")
         .select(col("variant"), col("n_vectors"), col("total_micro"),
           round(col("total_micro").cast(DoubleType) / col("n_vectors").cast(DoubleType)
@@ -3388,7 +3385,7 @@ object Similarity {
       import org.apache.spark.sql.expressions.Window
       val wq = Window.partitionBy("qid")
       // one (vec_id, m, sv) stream feeds every seed/train/encode/distortion
-      // pass across all three sizes — checkpoint once, release at the end
+      // pass across all three sizes — checkpoint once
       val sub = rawSub(spark, dir).localCheckpoint(true)
       val n = emb(spark, dir).count()
       val qs = emb(spark, dir).filter(col("vec_id") >= QLo && col("vec_id") < QHi)
@@ -3402,10 +3399,7 @@ object Similarity {
       // stream and the memoized books (training runs outside the memo
       // lock) — run them concurrently so the per-rung action chains
       // back-fill the executors (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
-      def rung(k: Int): Future[(Long, Long, Long, Long)] = Future {
+      def rung(k: Int): (Long, Long, Long, Long) = {
         val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
           slice(col("embedding"), m * PqSub + 1, PqSub).as("sv")))
         val seed = emb(spark, dir).filter(col("vec_id") < k)
@@ -3449,10 +3443,7 @@ object Similarity {
           .count()
         (k.toLong, seedMicro, trainedMicro, hits)
       }
-      val rows = Await.result(
-        Future.sequence(Seq(rung(8), rung(32), rung(64))), Duration.Inf)
-      sub.unpersist(false)
-      ex.unpersist(false)
+      val rows = concurrently(Seq(8, 32, 64).map(k => () => rung(k)))
       // the two structural laws (see Scaladoc)
       require(rows.map(_._2) == rows.map(_._2).sorted.reverse,
         s"seeded distortion not monotone in k*: ${rows.map(_._2)}")
@@ -3593,8 +3584,7 @@ object Similarity {
   /** Shared Spark frames for the recall harness: checkpointed corpus,
     * held-out queries, and the EXACT top-10 as (xq, xt) — the referee
     * now read from the standing [[serveHarnessDag]] mart instead of
-    * being rebuilt per gate; callers' `ex.unpersist` calls are no-ops on
-    * the parquet-backed frame. Guards n ≥ 24: the harness
+    * being rebuilt per gate. Guards n ≥ 24: the harness
     * hardcodes the [[QLo]]..[[QHi]]-1 window and fixed recall denominators, and a
     * smaller corpus would emit a silently meaningless (or empty-query)
     * metric (the [[simGraphServe]] guard convention). */
@@ -3607,6 +3597,18 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val ex = serveExqMart(spark, dir)
     (e, qs, ex, n)
+  }
+
+  /** THE held-out audit stat: a (qid, vec_id) pool's row count and how
+    * many of its rows the exact top-10 `ex`(xq, xt) holds, in ONE
+    * aggregation job. The referee is key-unique, so the left join cannot
+    * multiply pool rows; the hit sum is NULL over an empty pool and reads
+    * as 0. */
+  private[graft] def refereeHits(df: DataFrame, ex: DataFrame): (Long, Long) = {
+    val r = df.join(broadcast(ex.select(col("xq"), col("xt"), lit(1L).as("hit"))),
+        col("qid") === col("xq") && col("vec_id") === col("xt"), "left")
+      .agg(count(lit(1)), sum(coalesce(col("hit"), lit(0L)))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
   /** Per-query cell ranks of `qs`(qid, qv) against a (cent_id, cv)
@@ -3626,8 +3628,8 @@ object Similarity {
   }
 
   /** Shared Spark twin of [[trainedChainSql]]: Lloyd to the
-    * [[CellRounds]] budget, checkpointed corpus assignment (caller
-    * unpersists), per-query cell ranks. */
+    * [[CellRounds]] budget, checkpointed corpus assignment, per-query
+    * cell ranks. */
   private def trainedCellRank(e: DataFrame, qs: DataFrame, k: Int): (DataFrame, DataFrame) = {
     val cents = lloydCells(e, k, CellRounds)
     val av = kmAssign(e, cents).select(col("vec_id"), col("cell")).localCheckpoint(true)
@@ -3733,7 +3735,7 @@ object Similarity {
           explode(array(subs: _*)).as("x"))
         .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv"))
       val out = trainSubspaceBook(spark, rsub, seed)
-      res.unpersist(false)
+      core.release(res)
       out
     }
 
@@ -3763,8 +3765,7 @@ object Similarity {
       // is released BEFORE the registry's write (no leaked blocks)
       val rows = cents.collect()
       val schema = cents.schema
-      cents.unpersist(false)
-      e.unpersist(false)
+      Seq(cents, e).foreach(core.release)
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     },
     graft.pipeline.ModelDef("mart_ann_assign32", Seq("mart_ann_cents32"),
@@ -3955,7 +3956,7 @@ object Similarity {
           explode(array(subs: _*)).as("x"))
         .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv"))
       val out = trainSubspaceBook(spark, rsub, seed)
-      res.unpersist(false)
+      core.release(res)
       out
     }
 
@@ -3977,8 +3978,7 @@ object Similarity {
         col("vec_id") < 40)
       val rows = cents.collect()
       val schema = cents.schema
-      cents.unpersist(false)
-      e.unpersist(false)
+      Seq(cents, e).foreach(core.release)
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     },
     graft.pipeline.ModelDef("mart_annb_assign", Seq("mart_annb_cents32"),
@@ -4054,33 +4054,23 @@ object Similarity {
         .select(col("qid"), col("c.cent_id").as("cell"),
           (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("sc"))
         .withColumn("rn", row_number().over(wq.orderBy(col("sc").desc)))
-      // scanned + hits in ONE aggregation job per sweep point (the exact
-      // referee is key-unique, so a left join cannot multiply pool rows),
-      // and the six independent points run concurrently over the shared
-      // checkpointed assignments (guide §2.6). The k=8 Lloyd training is
-      // itself a future so the seeded-8 and served-32 points overlap it.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
-      val t8F = Future(trainedCellRank(e, qs, 8))
+      // scanned + hits in ONE aggregation job per sweep point
+      // ([[refereeHits]]), and the six independent points run concurrently
+      // over the shared checkpointed assignments (guide §2.6). The k=8
+      // Lloyd training is itself a leg so the seeded-8 and served-32
+      // points overlap it.
       val (t32a, t32r) = servedCellRank32(spark, dir, qs)
-      def point(name: String, k: Int, av: DataFrame, rk: DataFrame, pr: Int): Future[(String, Long, Long, Long, Long)] = Future {
-        val r = av.join(broadcast(rk.filter(col("rn") <= pr)
-          .select(col("qid"), col("cell").as("pcell"))), col("cell") === col("pcell"))
-          .join(broadcast(ex.select(col("xq"), col("xt"), lit(1L).as("hit"))),
-            col("qid") === col("xq") && col("vec_id") === col("xt"), "left")
-          .agg(count(lit(1)), sum(coalesce(col("hit"), lit(0L)))).head()
-        (name, k.toLong, pr.toLong, r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      val rows = Await.result(Future.sequence(Seq(
-        point("k8_seeded", 8, s8a, s8r, 1), point("k8_seeded", 8, s8a, s8r, 3),
-        t8F.flatMap { case (t8a, t8r) => point("k8_trained", 8, t8a, t8r, 1) },
-        t8F.flatMap { case (t8a, t8r) => point("k8_trained", 8, t8a, t8r, 3) },
-        point("k32_trained", 32, t32a, t32r, 4), point("k32_trained", 32, t32a, t32r, 12))),
-        Duration.Inf)
-      val (t8a, _) = Await.result(t8F, Duration.Inf)
-      Seq(s8a, t8a, t32a, ex, e).foreach(_.unpersist(false))
+      def points(name: String, k: Int, av: DataFrame, rk: DataFrame, prs: Int*) =
+        prs.map(pr => () => {
+          val (scanned, hits) = refereeHits(av.join(broadcast(rk.filter(col("rn") <= pr)
+            .select(col("qid"), col("cell").as("pcell"))), col("cell") === col("pcell")), ex)
+          Seq((name, k.toLong, pr.toLong, scanned, hits))
+        })
+      val rows = concurrently(points("k8_seeded", 8, s8a, s8r, 1, 3) ++
+        points("k32_trained", 32, t32a, t32r, 4, 12) :+ (() => {
+          val (t8a, t8r) = trainedCellRank(e, qs, 8)
+          concurrently(points("k8_trained", 8, t8a, t8r, 1, 3)).flatten
+        })).flatten
       // probe monotonicity per quantizer: pools NEST in the probe count,
       // so hits cannot decrease — exactly structural
       rows.groupBy(_._1).foreach { case (v, rs) =>
@@ -4210,7 +4200,6 @@ object Similarity {
         .orderBy("qid")
       val schema = out.schema
       val rows = out.collect()
-      Seq(cand, beam, av, ex, e).foreach(_.unpersist(false))
       // the structural beam law: beam ⊆ pool and at least min(pool, floor)
       rows.foreach { r =>
         val (p, b) = (r.getAs[Long]("pool_rows"), r.getAs[Long]("beam_rows"))
@@ -4431,36 +4420,17 @@ object Similarity {
     val adcOpq = adcSum(encOpq, lutOpq, Seq("qid", "cell", "m", "code"))
       .localCheckpoint(false)
     val bwq = beamWidths(cand)
-    // beam size + hits in ONE aggregation job (the referee join is
-    // key-unique, so a left join cannot multiply beam rows), and the three
-    // independent coding legs run concurrently — each leg materializes its
-    // own lazily-checkpointed ADC ranking on its first action and the two
-    // beam widths then share it (guide §2.6: back-fill the executors)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import graft.core.actionEc
-    def beamStat(adc: DataFrame, mult: Int): (Long, Long) = {
-      val r = derivedBeam(adc, bwq, mult)
-        .join(broadcast(ex.select(col("xq"), col("xt"), lit(1L).as("hit"))),
-          col("qid") === col("xq") && col("vec_id") === col("xt"), "left")
-        .agg(count(lit(1)), sum(coalesce(col("hit"), lit(0L)))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    val rawF = Future((beamStat(adcRaw, 1), beamStat(adcRaw, 2)))
-    val resF = Future((beamStat(adcRes, 1), beamStat(adcRes, 2)))
-    val opqF = Future((beamStat(adcOpq, 1), beamStat(adcOpq, 2)))
-    val ceilF = Future {
-      val r = cand
-        .join(broadcast(ex.select(col("xq"), col("xt"), lit(1L).as("hit"))),
-          col("qid") === col("xq") && col("vec_id") === col("xt"), "left")
-        .agg(count(lit(1)), sum(coalesce(col("hit"), lit(0L)))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    val ((b1, h1), (b2, h2)) = Await.result(rawF, Duration.Inf)
-    val ((br, hr), (br2, hr2)) = Await.result(resF, Duration.Inf)
-    val ((bo1, ho1), (bo2, ho2)) = Await.result(opqF, Duration.Inf)
-    val (cn, ch) = Await.result(ceilF, Duration.Inf)
-    Seq(adcRaw, adcRes, adcOpq, resm, cand, ex, e).foreach(_.unpersist(false))
+    // beam size + hits in ONE aggregation job ([[refereeHits]]), and the
+    // three independent coding legs run concurrently — each leg
+    // materializes its own lazily-checkpointed ADC ranking on its first
+    // action and the two beam widths then share it (guide §2.6: back-fill
+    // the executors)
+    def beamStats(adc: DataFrame) = () =>
+      Seq(1, 2).map(mult => refereeHits(derivedBeam(adc, bwq, mult), ex))
+    val Seq(Seq((b1, h1), (b2, h2)), Seq((br, hr), (br2, hr2)),
+        Seq((bo1, ho1), (bo2, ho2)), Seq((cn, ch))) = concurrently(Seq(
+      beamStats(adcRaw), beamStats(adcRes), beamStats(adcOpq),
+      () => Seq(refereeHits(cand, ex))))
     // laws: nested beams are hit-monotone PER CODING; no rung beats its
     // pool ceiling; the matched x1 beam widths are identical across codings
     require(h1 <= h2 && h2 <= ch, s"raw beam nesting broke: $h1 / $h2 / ceiling $ch")
@@ -4576,36 +4546,24 @@ object Similarity {
       // probe re-rank the nested slices (crn rides back in via the join)
       val adc = adcSum(enc, lut, Seq("qid", "cell", "m", "code"))
         .join(cand, Seq("qid", "vec_id")).localCheckpoint(true)
-      // size + referee hits in ONE aggregation job per set (the exact
-      // referee is key-unique, so a left join cannot multiply rows), and
-      // the four independent probe legs run concurrently (guide §2.6) —
-      // was 2 + 2·|mults| sequential actions per probe (32 driver
-      // actions for the 4×3 sweep), now 1 + |mults| per leg with the
-      // legs overlapped
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
-      val exHit = ex.select(col("xq"), col("xt"), lit(1L).as("hit"))
-      def sizeAndHits(df: DataFrame): (Long, Long) = {
-        val r = df.join(broadcast(exHit),
-            col("qid") === col("xq") && col("vec_id") === col("xt"), "left")
-          .agg(count(lit(1)), sum(coalesce(col("hit"), lit(0L)))).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      def stat(p: Int): Future[Seq[(Long, Long, Long, Long, Long, Long)]] = Future {
+      // size + referee hits in ONE aggregation job per set
+      // ([[refereeHits]]), and the four independent probe legs run
+      // concurrently (guide §2.6) — was 2 + 2·|mults| sequential actions
+      // per probe (32 driver actions for the 4×3 sweep), now 1 + |mults|
+      // per leg with the legs overlapped
+      def stat(p: Int): Seq[(Long, Long, Long, Long, Long, Long)] = {
         // one ranking per probe count; the beam multiples slice it
         val pool = adc.filter(col("crn") <= p).localCheckpoint(false)
-        val (scanned, ceil) = sizeAndHits(pool)
+        val (scanned, ceil) = refereeHits(pool, ex)
         val bwq = beamWidths(pool)
         val out = mults.map { m =>
-          val (beamRows, hits) = sizeAndHits(derivedBeam(pool, bwq, m))
+          val (beamRows, hits) = refereeHits(derivedBeam(pool, bwq, m), ex)
           (p.toLong, m.toLong, scanned, beamRows, hits, ceil)
         }
-        pool.unpersist(false)
+        core.release(pool)
         out
       }
-      val rows = Await.result(Future.sequence(probes.map(stat)), Duration.Inf).flatten
-      Seq(adc, cand, ex, e).foreach(_.unpersist(false))
+      val rows = concurrently(probes.map(p => () => stat(p))).flatten
       // nesting laws: pools nest in the probe count, so scanned and the
       // pool ceiling are monotone; beams nest in the multiple, so hits
       // are monotone in mult at fixed p; no beam beats its own ceiling
@@ -4752,7 +4710,6 @@ object Similarity {
         val (k0, h0) = kh(scored.filter(col("rn") <= b && col("lbl") === col("qlbl")))
         (b.toLong, k0, h0)
       }
-      Seq(scored, fx, av, e).foreach(_.unpersist(false))
       // nesting laws: post-filter hits monotone in budget, capped by the
       // in-filter ceiling, and kept never exceeds the fetch budget
       post.sliding(2).foreach { case Seq((b1, _, h1), (b2, _, h2)) =>
@@ -4842,11 +4799,10 @@ object Similarity {
         val scanned = pool.count()
         val hits = pool.join(broadcast(ex),
           col("qid") === col("xq") && col("vec_id") === col("xt")).count()
-        pool.unpersist(false)
+        core.release(pool)
         (name, nr, cu, scanned, hits)
       }
       val rows = Seq(point("appended", avApp, rkB), point("retrained", avR, rkR))
-      Seq(avApp, avR, ex, e).foreach(_.unpersist(false))
       // conservation: both indexes hold every vector exactly once, in
       // at most the 32 trained cells
       rows.foreach { case (v, nr, cu, _, _) =>
@@ -4994,7 +4950,7 @@ object Similarity {
     * (semantic dedup, graph clustering, diversity sampling) actually
     * would. */
   /** Checkpointed (vec_id, embedding) plus n, with the dense-id guard the
-    * ring init depends on. Caller unpersists. */
+    * ring init depends on. */
   private def nnEmb(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val e = emb(spark, dir).select("vec_id", "embedding").localCheckpoint(true)
     val nsRow = e.agg(count(lit(1)).as("n"), max("vec_id").as("mx")).head()
@@ -5054,7 +5010,7 @@ object Similarity {
     * neighbor-of-a-common-neighbor, keep the best [[NndK]]. Returns
     * (distinct-candidates view, its checkpointed backing frame, next
     * list) — the one caller (the [[nnDag]] mart builder) counts the
-    * candidates, then unpersists the backing frame and keeps `next`. */
+    * candidates, then releases the backing frame and keeps `next`. */
   private def nnStep(e: DataFrame, cur: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val pairs = cur.select("s", "t")
     // lazy und — see [[nnStepNext]]: cur is a checkpoint leaf and the
@@ -5143,7 +5099,7 @@ object Similarity {
         case ((cur, _, out, kept), r) =>
           val (cand, candBacking, next) = nnStep(e, cur)
           val nc = cand.count()
-          candBacking.unpersist(false)
+          core.release(candBacking)
           ((next, nc, out.unionByName(tagged(next, r + 1, nc)), next :: kept),
             Fixpoint.frameSig(next, "s", "t"))
       }
@@ -5151,8 +5107,7 @@ object Similarity {
       val mat = (res.rounds + 1 to NndRounds)
         .foldLeft(rows)((out, r) => out.unionByName(tagged(last, r, nc)))
         .localCheckpoint(true)
-      kept.foreach(Fixpoint.release)
-      Seq(init, e).foreach(_.unpersist(false))
+      (init :: e :: kept).foreach(core.release)
       mat
     }))
 
@@ -5260,7 +5215,7 @@ object Similarity {
     * mart (r21 — [[simGraphHier]] and [[simGraphDeployed]] each rebuilt
     * the same (n/16)² pass; one build per corpus snapshot now serves
     * both). (gs, gt) id pairs — integers, exact parquet round-trip. The
-    * Spark twin of [[layer2Sql]]. Callers' unpersist is a no-op. */
+    * Spark twin of [[layer2Sql]]. */
   private val layer2Dag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nn_layer2", Nil, mart = true) { (s, d, _) =>
       import org.apache.spark.sql.expressions.Window
@@ -5360,7 +5315,7 @@ object Similarity {
   /** The pruned serve core off the NN-descent mart (rk ≤
     * [[NndServeDeg]] of round [[NndRounds]]), checkpointed — the Spark
     * twin of [[nnServeCoreSql]], ONE definition for [[simGraphServe]],
-    * [[simGraphHier]] and [[simGraphCentrality]]. Caller unpersists. */
+    * [[simGraphHier]] and [[simGraphCentrality]]. */
   private def serveCore(spark: SparkSession, dir: String): DataFrame =
     nnRoundsMart(spark, dir)
       .filter(col("round") === NndRounds && col("rk") <= NndServeDeg)
@@ -5371,8 +5326,7 @@ object Similarity {
     * and [[simGraphHier]]): held-out queries, plus the 8×n audit score
     * table and the exact top-10 referee read from the standing
     * [[serveHarnessDag]] marts (r21 — five gates were each re-paying the
-    * same cross-join + window + two checkpoints). Callers' unpersist
-    * calls are no-ops on the parquet-backed frames. */
+    * same cross-join + window + two checkpoints). */
   private def nnServeHarness(spark: SparkSession, dir: String,
       e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val qs = e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
@@ -5398,8 +5352,7 @@ object Similarity {
     * ALSO key the graph (the freshness gate's vintage tag, carried in
     * `g` as the "g"-prefixed twin) so one walk can ride a variant
     * dimension — the sets never interact because the graph join is
-    * constrained per key. Returns the checkpointed visited set; caller
-    * unpersists.
+    * constrained per key. Returns the checkpointed visited set.
     *
     * PRECONDITION (r21 ADVICE): the score table `qsc` must cover EVERY
     * (qid, t) pair the walk can visit — entry nodes and all graph
@@ -5449,7 +5402,7 @@ object Similarity {
     // Round 0 ranks the entry set; round r expands step r.
     val entry = v0.join(broadcast(scores), Seq("qid", "t"))
       .select(pcols :+ col("t") :+ col("score"): _*)
-    val vis = Fixpoint.run(entry, steps + 1, Fixpoint.release) { (cur, r) =>
+    val vis = Fixpoint.run(entry, steps + 1, core.release) { (cur, r) =>
       val grown = if (r == 0) cur else {
         val fresh = cur.filter(col("rn") <= 10).join(broadcast(gp), cond)
           .select(pcols :+ col("gt").as("t"): _*)
@@ -5525,12 +5478,6 @@ object Similarity {
       val scannedP = pcell.count()
       val hitsP = topVisited(qsc, pcell, Seq("qid"))
         .join(broadcast(exq), col("qid") === col("xq") && col("t") === col("xt")).count()
-      vis.unpersist(false)
-      pcell.unpersist(false)
-      exq.unpersist(false)
-      qsc.unpersist(false)
-      gcore.unpersist(false)
-      e.unpersist(false)
       (grows :+ (("probe1", scannedP, hitsP)))
         .toDF("variant", "scanned", "hits")
         .select(col("variant"), col("scanned"), col("hits"),
@@ -5658,7 +5605,6 @@ object Similarity {
           (col("l1") + when(col("ev") === 0, lit(0L)).otherwise(lit(wn))).as("scanned"),
           coalesce(col("hits"), lit(0L)).as("hits"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      Seq(w, vh, exq, qsc, gcore, g2c, e).foreach(_.unpersist(false))
       rows
         .toDF("variant", "scanned", "hits")
         .select(col("variant"), col("scanned"), col("hits"),
@@ -5758,15 +5704,11 @@ object Similarity {
       val (e, qs, ex, n) = heldOutHarness(spark, dir)
       require(n >= PqK / 4 * 5,
         s"the frozen book's closed-form seed window needs n >= ${PqK / 4 * 5} (n=$n)")
-      // beam size + hits in ONE aggregation job per arm (key-unique
-      // referee join), and the three independent read arms run
-      // concurrently (guide §2.6) — each arm's pool stays its own
-      // eagerly-checkpointed frame
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
+      // beam size + hits in ONE aggregation job per arm ([[refereeHits]]),
+      // and the three independent read arms run concurrently (guide §2.6)
+      // — each arm's pool stays its own eagerly-checkpointed frame
       def armRead(name: String, cents: DataFrame, assign: DataFrame,
-          codes: DataFrame, book: DataFrame): Future[(String, Long, Long, Long)] = Future {
+          codes: DataFrame, book: DataFrame) = () => {
         val rk = cellRankOf(cents, qs)
         val cand = assign.join(broadcast(rk.filter(col("rn") <= 4)
             .select(col("qid"), col("cell").as("pcell"))), col("cell") === col("pcell"))
@@ -5774,13 +5716,10 @@ object Similarity {
         val enc = cand.join(codes, Seq("vec_id"))
           .select(col("qid"), col("vec_id"), col("cell"), col("m"), col("code"))
         val adc = adcSum(enc, resLut(qs, cents, book), Seq("qid", "cell", "m", "code"))
-        val r = derivedBeam(adc, beamWidths(cand))
-          .join(broadcast(ex.select(col("xq"), col("xt"), lit(1L).as("hit"))),
-            col("qid") === col("xq") && col("vec_id") === col("xt"), "left")
-          .agg(count(lit(1)), sum(coalesce(col("hit"), lit(0L)))).head()
+        val (beamRows, hits) = refereeHits(derivedBeam(adc, beamWidths(cand)), ex)
         val pr = cand.count()
-        cand.unpersist(false)
-        (name, pr, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+        core.release(cand)
+        (name, pr, beamRows, hits)
       }
       val cents32 = annIndexMart(spark, dir, "mart_ann_cents32")
       val assign32 = annIndexMart(spark, dir, "mart_ann_assign32")
@@ -5800,8 +5739,7 @@ object Similarity {
       val a2 = armRead("retrain_coarse", cents32, assign32, codesMid, bookB)
       val a3 = armRead("retrained_both", cents32, assign32,
         annIndexMart(spark, dir, "mart_ann_codes64r"), book32)
-      val rows = Await.result(Future.sequence(Seq(a1, a2, a3)), Duration.Inf)
-      Seq(ex, e).foreach(_.unpersist(false))
+      val rows = concurrently(Seq(a1, a2, a3))
       rows.foreach { case (v, pr, br, h) =>
         require(br <= pr && h <= 80L, s"$v broke the beam/denominator contract: $pr/$br/$h")
       }
@@ -5846,15 +5784,14 @@ object Similarity {
         .select(col("s"), (expr("r div 4") * 5 + col("r") % 4).as("t"))
       val init = bincell.unionByName(bring).distinct().localCheckpoint(true)
       // pinned budget + fixpoint exit (the nnDag loop)
-      val last = Fixpoint.run(init, NndRounds, Fixpoint.release) { (cur, _) =>
+      val last = Fixpoint.run(init, NndRounds, core.release) { (cur, _) =>
         val next = nnStepNext(eB, cur)
         (next, Fixpoint.frameSig(next, "s", "t"))
       }.state
       // mat is materialized BEFORE the last kept list releases (truncated
       // lineage can't recompute)
       val mat = last.select("s", "t", "rk").localCheckpoint(true)
-      Fixpoint.release(last)
-      Seq(init, e).foreach(_.unpersist(false))
+      Seq(last, init, e).foreach(core.release)
       mat
     }))
 
@@ -5906,14 +5843,14 @@ object Similarity {
       val (e, _) = nnEmb(s, d)
       val out = foldSeed(s, d, e, 4L,
         e.select("vec_id").filter(col("vec_id") % 5 < 4)).localCheckpoint(true)
-      e.unpersist(false)
+      core.release(e)
       out
     },
     graft.pipeline.ModelDef("mart_nn_fold1", Seq("mart_nn_seed1"), mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
       val next = nnStepNext(e,
         nnBaseMart(s, d).select("s", "t").unionByName(res("mart_nn_seed1")))
-      e.unpersist(false)
+      core.release(e)
       next.select("s", "t", "rk")
     },
     graft.pipeline.ModelDef("mart_nn_seed2", Nil, mart = true) { (s, d, _) =>
@@ -5922,7 +5859,7 @@ object Similarity {
         e.select("vec_id")
           .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
         .localCheckpoint(true)
-      e.unpersist(false)
+      core.release(e)
       out
     },
     graft.pipeline.ModelDef("mart_nn_fold2", Seq("mart_nn_fold1", "mart_nn_seed2"),
@@ -5930,7 +5867,7 @@ object Similarity {
       val (e, _) = nnEmb(s, d)
       val next = nnStepNext(e,
         res("mart_nn_fold1").select("s", "t").unionByName(res("mart_nn_seed2")))
-      e.unpersist(false)
+      core.release(e)
       next.select("s", "t", "rk")
     },
     // the θ=20 policy's DEPLOYED index artifact: the consolidated graph a
@@ -5942,26 +5879,22 @@ object Similarity {
       mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
       val out = consolidateRounds(e, res("mart_nn_fold2"))
-      e.unpersist(false)
+      core.release(e)
       out
     }))
 
-  /** [[NndAppendRounds]] NN-descent rounds off a fold snapshot, tracking
-    * each round's checkpointed kept list and releasing every intermediate
-    * once the next exists (the nnDag builder's discipline — a foldLeft
-    * that drops references pins round 1's n·K rows for the life of the
-    * session). ONE definition for the consolidation-mart builders in
-    * [[nnFoldDag]] and [[nnPolicyDag]] (r20 review). */
-  private def consolidateRounds(e: DataFrame, start: DataFrame): DataFrame = {
-    val steps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var cur = start
-    for (_ <- 1 to NndAppendRounds) {
-      cur = nnStepNext(e, cur.select("s", "t"))
-      steps += cur
-    }
-    steps.dropRight(1).foreach(_.unpersist(false))
-    cur.select("s", "t", "rk")
-  }
+  /** [[NndAppendRounds]] NN-descent rounds off a fold snapshot,
+    * releasing each intermediate kept list once the next one is
+    * checkpointed (the nnDag builder's discipline: dropping the reference
+    * alone pins round 1's n·K rows until garbage collection). ONE
+    * definition for the consolidation-mart builders in [[nnFoldDag]] and
+    * [[nnPolicyDag]] (r20 review). */
+  private def consolidateRounds(e: DataFrame, start: DataFrame): DataFrame =
+    (1 to NndAppendRounds).foldLeft(start) { (cur, _) =>
+      val next = nnStepNext(e, cur.select("s", "t"))
+      if (cur ne start) core.release(cur) // the snapshot is the caller's
+      next
+    }.select("s", "t", "rk")
 
   /** Materialize-once accessor for the θ=20 consolidated-index mart. */
   private def nnConsolMart(spark: SparkSession, dir: String): DataFrame =
@@ -5997,7 +5930,7 @@ object Similarity {
         e.select("vec_id")
           .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
         .localCheckpoint(true)
-      e.unpersist(false)
+      core.release(e)
       out
     },
     graft.pipeline.ModelDef("mart_nnp_fold2", Seq("mart_nnp_seed2"), mart = true) { (s, d, res) =>
@@ -6005,7 +5938,7 @@ object Similarity {
       val (f1, _, _) = nnFoldMarts(s, d)
       val next = nnStepNext(e,
         f1.select("s", "t").unionByName(res("mart_nnp_seed2")))
-      e.unpersist(false)
+      core.release(e)
       next.select("s", "t", "rk")
     },
     // the θ=20 trigger fires after batch 2 (the sink's proven schedule):
@@ -6013,7 +5946,7 @@ object Similarity {
     graft.pipeline.ModelDef("mart_nnp_consol2", Seq("mart_nnp_fold2"), mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
       val out = consolidateRounds(e, res("mart_nnp_fold2"))
-      e.unpersist(false)
+      core.release(e)
       out
     },
     graft.pipeline.ModelDef("mart_nnp_seed3", Nil, mart = true) { (s, d, _) =>
@@ -6022,7 +5955,7 @@ object Similarity {
         col("vec_id") % 40 === 39,
         e.select("vec_id").filter(!(col("vec_id") % 40 === 39)))
         .localCheckpoint(true)
-      e.unpersist(false)
+      core.release(e)
       out
     },
     graft.pipeline.ModelDef("mart_nnp_fold3", Seq("mart_nnp_consol2", "mart_nnp_seed3"),
@@ -6030,7 +5963,7 @@ object Similarity {
       val (e, _) = nnEmb(s, d)
       val next = nnStepNext(e,
         res("mart_nnp_consol2").select("s", "t").unionByName(res("mart_nnp_seed3")))
-      e.unpersist(false)
+      core.release(e)
       next.select("s", "t", "rk")
     }))
 
@@ -6061,7 +5994,7 @@ object Similarity {
         e.select(col("vec_id").as("s"))
           .crossJoin(broadcast(e.select(col("vec_id").as("t"))))
           .filter(col("s") =!= col("t"))).localCheckpoint(true)
-      e.unpersist(false)
+      core.release(e)
       out
     }))
 
@@ -6075,8 +6008,7 @@ object Similarity {
         m1.select(col("vec_id").as("s"))
           .crossJoin(broadcast(m1.select(col("vec_id").as("t"))))
           .filter(col("s") =!= col("t"))).localCheckpoint(true)
-      m1.unpersist(false)
-      e.unpersist(false)
+      Seq(m1, e).foreach(core.release)
       out
     }))
 
@@ -6093,10 +6025,23 @@ object Similarity {
         pm2.select(col("vec_id").as("s"))
           .crossJoin(broadcast(pm2.select(col("vec_id").as("t"))))
           .filter(col("s") =!= col("t"))).localCheckpoint(true)
-      pm2.unpersist(false)
-      e.unpersist(false)
+      Seq(pm2, e).foreach(core.release)
       out
     }))
+
+  /** THE kNN-graph audit stat: a graph (s, t, rk)'s node count, edge
+    * count and recall@10 hits — edges with rk ≤ 10 that the exact top-10
+    * `referee`(s, t) holds — in ONE aggregation job. The referee is
+    * key-unique, so the left join cannot multiply edges; the hit sum is
+    * NULL over an empty graph and reads as 0. */
+  private[graft] def graphRecall(g: DataFrame, referee: DataFrame): (Long, Long, Long) = {
+    val r = g.join(referee.select(col("s"), col("t"), lit(1L).as("hit")),
+        Seq("s", "t"), "left")
+      .agg(count_distinct(col("s")), count(lit(1)),
+        sum(when(col("rk") <= 10, coalesce(col("hit"), lit(0L))).otherwise(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+  }
 
   /** Exact top-10 over the full corpus, as (s, t) pairs ready for the
     * hit joins. */
@@ -6236,7 +6181,6 @@ object Similarity {
       val (e, n) = nnEmb(spark, dir)
       val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
       val cellB = cellOf.filter(col("vec_id") % 5 < 4)
-      val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
       // the frozen base graph IS a persisted snapshot artifact (the
       // nnBaseMart — built once per corpus snapshot, read back here)
       val baseG = nnBaseMart(spark, dir).select("s", "t")
@@ -6250,36 +6194,23 @@ object Similarity {
       // read from the standing eval mart
       val exactK = nnExactKMart(spark, dir)
       // node/edge/hit counts in ONE aggregation job per audited graph
-      // (the key-unique referee join cannot multiply rows), and each
-      // round's audit overlaps the NEXT round's fold — plus the
-      // independent rebuilt row — via driver threads (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
-      def stat(name: String, lst: DataFrame): Future[(String, Long, Long, Long)] = Future {
-        val r = lst.join(exactK.select(col("s"), col("t"), lit(1L).as("hit")),
-            Seq("s", "t"), "left")
-          .agg(count_distinct(col("s")), count(lit(1)),
-            sum(when(col("rk") <= 10, coalesce(col("hit"), lit(0L))).otherwise(0L)))
-          .head()
-        (name, r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
+      // ([[graphRecall]]); the rebuilt row's audit overlaps the append
+      // rounds, whose own audits run side by side once the folds are done
+      // (guide §2.6)
+      def stat(name: String, g: DataFrame) = () => {
+        val (nn, ed, h) = graphRecall(g, exactK)
+        Seq((name, nn, ed, h))
       }
-      // warm-start append rounds over the union, one stat row per round
-      var ucur: DataFrame = baseG.unionByName(fseed)
-      val statFs = scala.collection.mutable.ArrayBuffer[Future[(String, Long, Long, Long)]]()
-      for (r <- 1 to NndAppendRounds) {
-        val next = nnStepNext(e, ucur)
-        statFs += stat(s"appended_r$r", next)
-        kept += next
-        ucur = next
-      }
-      statFs += stat("rebuilt",
-        nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
-          .select("s", "t", "rk"))
-      val rows = scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long)](
-        Await.result(Future.sequence(statFs.toSeq), Duration.Inf): _*)
-      (kept :+ e).foreach(_.unpersist(false))
+      val rows = concurrently(Seq(
+        () => {
+          // warm-start append rounds over the union, one stat row per round
+          val lists = (1 to NndAppendRounds)
+            .scanLeft(baseG.unionByName(fseed))((cur, _) => nnStepNext(e, cur)).tail
+          concurrently(lists.zipWithIndex.map { case (g, i) =>
+            stat(s"appended_r${i + 1}", g) }).flatten
+        },
+        stat("rebuilt", nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
+          .select("s", "t", "rk")))).flatten
       // conservation + degree cap + append-round monotonicity
       rows.foreach { case (v, nn, ed, _) =>
         require(nn == n, s"$v graph lost nodes: $nn != $n")
@@ -6288,7 +6219,7 @@ object Similarity {
       val appHits = rows.filter(_._1.startsWith("appended")).map(_._4)
       require(appHits == appHits.sorted,
         s"append-round recall not monotone: $appHits")
-      rows.toSeq.toDF("variant", "n_nodes", "edges", "hits")
+      rows.toDF("variant", "n_nodes", "edges", "hits")
         .select(col("variant"), col("n_nodes"), col("edges"), col("hits"),
           lit(n * 10).as("total"),
           round(col("hits").cast(DoubleType) / lit((n * 10).toDouble), 6).as("recall_r"))
@@ -6469,7 +6400,6 @@ object Similarity {
       fs.delete(new org.apache.hadoop.fs.Path(stateDir), true)
       try {
         val schema = spark.read.parquet(landing).schema
-        val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
         var curG: DataFrame = nnBaseMart(spark, dir).select("s", "t")
         var nFolds = 0
         val q = spark.readStream.schema(schema)
@@ -6488,7 +6418,6 @@ object Similarity {
             val next = nnStepNext(e, curG.unionByName(fseed))
             // the fold's persisted index snapshot — what a serve would read
             next.write.mode("overwrite").parquet(s"$stateDir/fold_$bid")
-            kept += next
             curG = next.select("s", "t")
             nFolds += 1
             ()
@@ -6502,29 +6431,20 @@ object Similarity {
           .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4).count()
         val ex1 = nnExactM1Mart(spark, dir)
         val exAll = nnExactKMart(spark, dir)
-        // one aggregation job per fold (three counts share one scan) and
-        // the three independent audits run concurrently (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.core.actionEc
-        def stat(name: String, g: DataFrame, ex: DataFrame, members: Long): Future[(String, Long, Long, Long, Long)] = Future {
-          val r = g.join(ex.select(col("s"), col("t"), lit(1L).as("hit")),
-              Seq("s", "t"), "left")
-            .agg(count_distinct(col("s")), count(lit(1)),
-              sum(when(col("rk") <= 10, coalesce(col("hit"), lit(0L))).otherwise(0L)))
-            .head()
-          (name, r.getLong(0), r.getLong(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2), members * 10)
+        // one aggregation job per fold ([[graphRecall]]) and the three
+        // independent audits run concurrently (guide §2.6)
+        def stat(name: String, g: DataFrame, ex: DataFrame, members: Long) = () => {
+          val (nn, ed, h) = graphRecall(g, ex)
+          (name, nn, ed, h, members * 10)
         }
         val fold0 = spark.read.parquet(s"$stateDir/fold_0")
         val fold1 = spark.read.parquet(s"$stateDir/fold_1")
-        val rows = Await.result(Future.sequence(Seq(
+        val rows = concurrently(Seq(
           stat("batch_1", fold0, ex1, n1),
           stat("batch_2", fold1, exAll, n),
           stat("rebuilt",
             nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
-              .select("s", "t", "rk"), exAll, n))), Duration.Inf)
-        (kept :+ cellOf :+ e).foreach(_.unpersist(false))
+              .select("s", "t", "rk"), exAll, n)))
         // conservation per fold (the graph covers every member present),
         // the degree cap, and the denominator contract
         require(rows(0)._2 == n1, s"batch_1 graph lost members: ${rows(0)._2} != $n1")
@@ -6626,18 +6546,7 @@ object Similarity {
     QueryDef("sim_index_policy", Some(indexPolicySql(NndRounds))) { (spark, dir) =>
       val s2 = spark
       import s2.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
       val (e, n) = nnEmb(spark, dir)
-      val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      def keep(df: DataFrame): Unit = kept.synchronized { kept += df; () }
-      def consolidate(g: DataFrame): DataFrame =
-        (1 to NndAppendRounds).foldLeft(g) { (cur, _) =>
-          val next = nnStepNext(e, cur.select("s", "t"))
-          keep(next)
-          next.select("s", "t", "rk")
-        }
       // the policy law: the trigger rule replayed in exact integers —
       // the executed schedule below MUST be what this accounting says
       // (one aggregate job for all three counter-scale growth stats)
@@ -6674,41 +6583,32 @@ object Similarity {
       // shared fold snapshots — price them concurrently (two driver
       // threads submitting jobs; the scheduler interleaves their stages,
       // exactly as a deployment prices variants side by side)
-      val p2F = Future(consolidate(y2))
-      val i2F = Future {
-        // θ=10: consolidate after batch 1, re-fold batch 2 off the
-        // consolidated graph (the marted seed2 — seeds depend only on the
-        // member set, which consolidation never changes), consolidate
-        val next = nnStepNext(e,
-          consolidate(y1).select("s", "t").unionByName(seed2))
-        keep(next)
-        consolidate(next.select("s", "t", "rk"))
-      }
-      val p2 = Await.result(p2F, Duration.Inf)
-      val i2 = Await.result(i2F, Duration.Inf)
+      val Seq(p2, i2) = concurrently(Seq(
+        () => consolidateRounds(e, y2),
+        () => {
+          // θ=10: consolidate after batch 1, re-fold batch 2 off the
+          // consolidated graph (the marted seed2 — seeds depend only on
+          // the member set, which consolidation never changes), consolidate
+          val next = nnStepNext(e,
+            consolidateRounds(e, y1).select("s", "t").unionByName(seed2))
+          consolidateRounds(e, next)
+        }))
       val exactK = nnExactKMart(spark, dir)
-      def stat(name: String, tpct: Long, consol: Long, g: DataFrame) = Future {
-        // one aggregation job (node/edge/hit counts share a single scan;
-        // the referee join is key-unique so it cannot multiply rows)
-        val r = g.join(exactK.select(col("s"), col("t"), lit(1L).as("hit")),
-            Seq("s", "t"), "left")
-          .agg(count_distinct(col("s")), count(lit(1)),
-            sum(when(col("rk") <= 10, coalesce(col("hit"), lit(0L))).otherwise(0L)))
-          .head()
-        (name, tpct, consol, 2L + consol * NndAppendRounds, r.getLong(0),
-          r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+      // one aggregation job per variant ([[graphRecall]])
+      def stat(name: String, tpct: Long, consol: Long, g: DataFrame) = () => {
+        val (nn, ed, h) = graphRecall(g, exactK)
+        (name, tpct, consol, 2L + consol * NndAppendRounds, nn, ed, h)
       }
-      // audit counts for the four variants run concurrently too — twelve
-      // independent counter jobs, no cross-dependency
-      val rows = Await.result(Future.sequence(Seq(
+      val rebuilt = stat("rebuilt", 0L, 0L,
+        nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
+          .select("s", "t", "rk"))
+      // audit counts for the four variants run concurrently too — no
+      // cross-dependency
+      val rows = concurrently(Seq(
         stat("p10_consolidate_each", 10L, 2L, i2),
         stat("p20_consolidate_end", 20L, 1L, p2),
         stat("p30_fold_only", 30L, 0L, y2),
-        stat("rebuilt", 0L, 0L,
-          nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
-            .select("s", "t", "rk"))
-          .map(_.copy(_4 = NndRounds.toLong)))), Duration.Inf)
-      (kept :+ e).foreach(_.unpersist(false))
+        () => rebuilt().copy(_4 = NndRounds.toLong)))
       rows.take(3).foreach { case (v, tpct, consol, _, _, _, _) =>
         require(consol == expected(tpct).count(identity),
           s"$v executed $consol consolidations, the trigger rule says ${expected(tpct).count(identity)}")
@@ -6898,7 +6798,6 @@ object Similarity {
       }
       require(expectedSched == Seq(false, true, false),
         s"the pinned 3-batch feed must fire θ=20 exactly after batch 2; rule says $expectedSched")
-      val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
       val events = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
       val executed = scala.collection.mutable.ArrayBuffer[Boolean]()
       var curG: DataFrame = nnBaseMart(spark, dir).select("s", "t")
@@ -6928,7 +6827,6 @@ object Similarity {
                 col("cell") === col("tc"))
               .select("s", "t")).select("s", "t")
           val next = nnStepNext(e, curG.unionByName(fseed))
-          kept += next
           events += (s"fold_${bid + 1}" -> next)
           curG = next.select("s", "t")
           // the DEPLOYED policy: consolidate at ≥20% growth, in-stream
@@ -6939,12 +6837,11 @@ object Similarity {
           if (fire) {
             membersAtConsol = members
             growth = 0L
-            curG = (1 to NndAppendRounds).foldLeft(curG) { (g, _) =>
-              val nx = nnStepNext(e, g)
-              kept += nx
-              nx.select("s", "t")
+            val consolidated = (1 to NndAppendRounds).foldLeft(next) { (g, _) =>
+              nnStepNext(e, g.select("s", "t"))
             }
-            events += (s"consolidate_${bid + 1}" -> kept.last)
+            events += (s"consolidate_${bid + 1}" -> consolidated)
+            curG = consolidated.select("s", "t")
           }
           ()
         }
@@ -6965,30 +6862,19 @@ object Similarity {
         "fold_1" -> ((ex1, k1)), "fold_2" -> ((ex2, k2)),
         "consolidate_2" -> ((ex2, k2)), "fold_3" -> ((exAll, n)))
       // ONE aggregation job per event instead of three sequential counts
-      // (node count, edge count, hit count share a single scan of the
-      // checkpointed graph; the referee join is key-unique so it cannot
-      // multiply rows), and the five independent audits run concurrently
-      // (guide §2.6 — driver threads back-fill the executors)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.core.actionEc
-      def stat(name: String, g: DataFrame, ex: DataFrame, mem: Long): Future[(String, Long, Long, Long, Long)] = Future {
-        val r = g.join(ex.select(col("s"), col("t"), lit(1L).as("hit")),
-            Seq("s", "t"), "left")
-          .agg(count_distinct(col("s")), count(lit(1)),
-            sum(when(col("rk") <= 10, coalesce(col("hit"), lit(0L))).otherwise(0L)))
-          .head()
-        (name, r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2), mem * 10)
+      // ([[graphRecall]]), and the five independent audits run
+      // concurrently (guide §2.6 — driver threads back-fill the executors)
+      def stat(name: String, g: DataFrame, ex: DataFrame, mem: Long) = () => {
+        val (nn, ed, h) = graphRecall(g, ex)
+        (name, nn, ed, h, mem * 10)
       }
-      val rows = Await.result(Future.sequence(
+      val rows = concurrently(
         events.map { case (nm, g) =>
           val (ex, mem) = referees(nm)
           stat(nm, g, ex, mem)
         }.toSeq :+ stat("rebuilt",
           nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
-            .select("s", "t", "rk"), exAll, n)), Duration.Inf)
-      (kept :+ cellOf :+ e).foreach(_.unpersist(false))
+            .select("s", "t", "rk"), exAll, n))
       // conservation per event (the graph covers every member present),
       // the degree cap, the denominator contract, and the
       // same-trajectory consolidation law
@@ -7109,8 +6995,7 @@ object Similarity {
     * `midPred` says were PRESENT, the rest against the full exq — and
     * emit (variant, scanned, hits, total, recall_r). The escape law is
     * asserted for every partial vintage: its walk can only reach members
-    * present at its event (edges reach members by graph construction).
-    * Unpersists what it makes; the caller owns e/qsc/exq. */
+    * present at its event (edges reach members by graph construction). */
   private def serveVintages(spark: SparkSession, gate: String,
       qs: DataFrame, qsc: DataFrame, exq: DataFrame,
       graphs: Seq[(String, DataFrame)], midFolds: Seq[String],
@@ -7150,8 +7035,6 @@ object Similarity {
     val rows = scannedBy.join(hitsBy, Seq("fold"), "left")
       .select(col("fold"), col("scanned"), coalesce(col("hits"), lit(0L)).as("hits"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    vis.unpersist(false)
-    Seq(gAll, exm).foreach(_.unpersist(false))
     require(rows.size == folds.size,
       s"$gate: expected ${folds.size} vintages, got ${rows.map(_._1)}")
     rows.foreach { case (v, sc, h) =>
@@ -7176,13 +7059,11 @@ object Similarity {
         .select("s", "t", "rk")
       // fold 1's members are base ∪ batch 1; fold 2's member set is the
       // whole corpus, so its referee is the full exq
-      val out = serveVintages(spark, "sim_serve_freshness", qs, qsc, exq,
+      serveVintages(spark, "sim_serve_freshness", qs, qsc, exq,
         Seq(("consolidated", nnConsolMart(spark, dir)),
           ("fold_1", y1), ("fold_2", y2), ("rebuilt", reb)),
         midFolds = Seq("fold_1"),
         midPred = col("t") % 5 < 4 || col("t") % 10 === 4)
-      Seq(exq, qsc, e).foreach(_.unpersist(false))
-      out
     }
   }
 
@@ -7258,13 +7139,11 @@ object Similarity {
         .select("s", "t", "rk")
       // fold_2/consolidate_2 see everything but batch 3 (pm2); fold_3's
       // member set is the whole corpus, so its referee is the full exq
-      val out = serveVintages(spark, "sim_serve_policy", qs, qsc, exq,
+      serveVintages(spark, "sim_serve_policy", qs, qsc, exq,
         Seq(("consolidate_2", c2), ("fold_2", f2), ("fold_3", f3),
           ("rebuilt", reb)),
         midFolds = Seq("fold_2", "consolidate_2"),
         midPred = !(col("t") % 40 === 39))
-      Seq(exq, qsc, e).foreach(_.unpersist(false))
-      out
     }
   }
 
@@ -7325,12 +7204,9 @@ object Similarity {
     // each artifact family audits in ONE aggregation job (the old shape
     // paid ~20 sequential tiny counts — one per check), and the
     // independent families run concurrently (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import graft.core.actionEc
     def lat(r: org.apache.spark.sql.Row, i: Int): Long =
       if (r.isNullAt(i)) 0L else r.getLong(i)
-    def bookChecks(name: String): Future[Seq[(String, String, Long, Long)]] = Future {
+    def bookChecks(name: String) = () => {
       val r = annIndexMart(spark, dir, name).agg(count(lit(1)),
         sum(when(col("code") < 0 || col("code") >= PqK, 1L).otherwise(0L)),
         sum("n_members")).head()
@@ -7339,7 +7215,7 @@ object Similarity {
         (name, "code_domain", rows, badCode + (if (rows == PqM.toLong * PqK) 0L else 1L)),
         (name, "members_conserve", rows, math.abs(memberSum - PqM.toLong * n)))
     }
-    def codeChecks(name: String): Future[Seq[(String, String, Long, Long)]] = Future {
+    def codeChecks(name: String) = () => {
       val r = annIndexMart(spark, dir, name).agg(count(lit(1)),
         sum(when(col("code") < 0 || col("code") >= PqK, 1L).otherwise(0L)),
         count_distinct(struct(col("vec_id"), col("m")))).head()
@@ -7350,7 +7226,7 @@ object Similarity {
           multi + math.abs(rows - PqM.toLong * n)))
     }
     def graphChecks(name: String, g: DataFrame, nodes: Long,
-        nodeKey: Seq[String], completeCheck: String): Future[Seq[(String, String, Long, Long)]] = Future {
+        nodeKey: Seq[String], completeCheck: String) = () => {
       // one two-level aggregation: per-node degree + bad-rank partials,
       // then the counters — a single shuffle instead of three scans
       val r = g.groupBy(nodeKey.map(col): _*)
@@ -7364,7 +7240,7 @@ object Similarity {
         (name, completeCheck, distinctNodes, math.abs(distinctNodes - nodes)),
         (name, "degree_cap_rk_domain", distinctNodes, overCap + badRk))
     }
-    val centsF = Future {
+    val centsChecks = () => {
       val r = cents.agg(count(lit(1)),
         sum(when(size(col("cv")) =!= 64, 1L).otherwise(0L))).head()
       val (centRows, badDim) = (r.getLong(0), lat(r, 1))
@@ -7372,7 +7248,7 @@ object Similarity {
         ("mart_ann_cents32", "cell_count", centRows, math.abs(centRows - 32L)),
         ("mart_ann_cents32", "dim_64", centRows, badDim))
     }
-    val assignF = Future {
+    val assignChecks = () => {
       val r = assign
         .join(e.withColumn("in_e", lit(1)), Seq("vec_id"), "left")
         .agg(count(lit(1)),
@@ -7384,27 +7260,24 @@ object Similarity {
           math.abs(assignRows - n) + (n - assignedOnce)),
         ("mart_ann_assign32", "cell_domain", assignRows, badCell))
     }
-    val mismatchF = Future {
+    val mismatchCheck = () => {
       val cellMismatch = annIndexMart(spark, dir, "mart_ann_codes64r")
         .select(col("vec_id"), col("cell").as("ccell"))
         .join(assign.select("vec_id", "cell"), Seq("vec_id"))
         .filter(col("ccell") =!= col("cell")).count()
       Seq(("mart_ann_codes64r", "cell_consistent", PqM.toLong * n, cellMismatch))
     }
-    val parts = Seq(
-      centsF, assignF,
+    val rows = concurrently(Seq(
+      centsChecks, assignChecks,
       bookChecks("mart_ann_book64"), bookChecks("mart_ann_book64r"),
       codeChecks("mart_ann_codes64"),
-      codeChecks("mart_ann_codes64r").map(_.filter(_._2 == "code_domain")),
-      mismatchF,
+      () => codeChecks("mart_ann_codes64r")().filter(_._2 == "code_domain"),
+      mismatchCheck,
       graphChecks("mart_nn_base", nnBaseMart(spark, dir), nb, Seq("s"),
         "node_complete"),
       graphChecks("mart_nn_rounds",
         nnRoundsMart(spark, dir).select("round", "s", "t", "rk"),
-        (NndRounds + 1).toLong * n, Seq("round", "s"), "trajectory_complete"))
-    val rows: Seq[(String, String, Long, Long)] =
-      Await.result(Future.sequence(parts), Duration.Inf).flatten
-    e.unpersist(false)
+        (NndRounds + 1).toLong * n, Seq("round", "s"), "trajectory_complete"))).flatten
     rows.toDF("table_name", "check_name", "n_rows", "violations")
       .select(col("table_name"), col("check_name"), col("n_rows"),
         col("violations"), (col("violations") === 0L).as("passed"))
@@ -7564,7 +7437,6 @@ object Similarity {
           (col("l1") + lit(wn)).as("scanned"), col("beam_rows"),
           coalesce(col("hits"), lit(0L)).as("hits"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      Seq(w, vh, bf, exq, qsc, aq, gcore, g2c, e).foreach(_.unpersist(false))
       // laws: the beam (vector touches) never exceeds the code scan, and
       // hits respect the 80-row denominator contract
       rows.foreach { case (v, sc0, br, h) =>
@@ -7652,8 +7524,6 @@ object Similarity {
           round(coalesce(col("hits"), lit(0L)).cast(DoubleType) / 80.0, 6).as("recall_r"))
         .orderBy("dim_d")
       val rows = out.collect()
-      ex.unpersist(false)
-      e.unpersist(false)
       // structural corner: D = 64 is the exact ranking itself
       val full = rows.find(_.getAs[Long]("dim_d") == 64L).get
       require(full.getAs[Long]("hits") == 80L,
@@ -7745,7 +7615,6 @@ object Similarity {
             (lit(PrBase) + expr(s"($PrNum * coalesce(sm, 0L)) div $PrDen")).as("m"))
       }
       pr = pr.localCheckpoint(true)
-      val stages = scala.collection.mutable.ArrayBuffer(pr)
       // conservation + floor, enforced on the final ledger
       val ledger = pr.agg(sum(col("m")), min(col("m"))).head()
       val (total, lo) = (ledger.getLong(0), ledger.getLong(1))
@@ -7761,7 +7630,6 @@ object Similarity {
           coalesce(col("in_deg"), lit(0L)).as("in_deg"))
         .orderBy(col("mass_micro").desc, col("vec_id"))
         .collect()
-      (stages :+ graph :+ nodes :+ gd).foreach(_.unpersist(false))
       val ranked = top.zipWithIndex.map { case (r, i) =>
         org.apache.spark.sql.Row(i + 1L, r.getLong(0), r.getLong(1), r.getLong(2))
       }
@@ -7854,7 +7722,6 @@ object Similarity {
       .orderBy("qid", "neg_rank")
     val schema = out.schema
     val rows = out.collect()
-    sc.unpersist(false)
     // the mining laws: NO query vanishes (a qid with no same-label
     // positive would be silently dropped by the inner join — and the
     // oracle would drop it identically, so only this count catches it),
@@ -8001,7 +7868,6 @@ object Similarity {
       .orderBy("qid")
     val schema = out.schema
     val rows = out.collect()
-    Seq(e, cand, scn, sc).foreach(_.unpersist(false))
     // the mining laws: NO query vanishes (a qid whose pool held zero
     // wrong-label rows would be dropped by the inner joins — invisibly,
     // since the oracle drops it identically), the pool holds enough
@@ -8125,7 +7991,6 @@ object Similarity {
       .orderBy("shard")
     val schema = out.schema
     val rows = out.collect()
-    Seq(g, gl).foreach(_.unpersist(false))
     // the export ledger laws: shards partition the corpus, and a shard
     // can never emit more triplets (or rank-1 agreements) than anchors
     require(rows.map(_.getAs[Long]("n_anchors")).sum == n,

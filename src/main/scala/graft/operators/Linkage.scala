@@ -279,8 +279,6 @@ object Linkage {
     // planted families (2-row counter-scale collect; the frame below is
     // rebuilt from the collected rows so the assertion costs no re-run)
     val rows = rec.collect()
-    keyed.unpersist(false)
-    pairs.unpersist(false)
     rows.foreach { r =>
       require(r.getAs[Long]("rec_union") == r.getAs[Long]("n_planted"),
         s"family ${r.getAs[String]("family")}: union recall " +
@@ -529,9 +527,11 @@ object Linkage {
     * the state invariant (every label is the min member of its cluster)
     * is re-established by each step, which is what makes the fold
     * associative with the full rebuild. The step eagerly checkpoints the
-    * state it returns so the reduced-CC frame (fully consumed by both
-    * outputs) is released before returning — folding N batches must not
-    * pin N reduced graphs. `needLabels=false` (the fold's LAST step)
+    * state it returns, so nothing reads the reduced-CC frame (fully
+    * consumed by both outputs) after the step: it is released when it is
+    * a checkpoint leaf (components' contraction path) and otherwise goes
+    * with its projection at garbage collection — folding N batches never
+    * re-reads N reduced graphs. `needLabels=false` (the fold's LAST step)
     * skips materializing the labels state entirely: only a next step
     * reads it. */
   private def erMergeStep(cAll: DataFrame, cNew: DataFrame,
@@ -558,9 +558,9 @@ object Linkage {
       .select(least(col("ra"), col("rb")).as("a_id"),
         greatest(col("ra"), col("rb")).as("b_id"))
       .distinct()
-    // components() already returns a checkpointed leaf (its convergence
-    // action materialized the final round) — re-checkpointing it eagerly
-    // was one extra no-op job per fold step (r22)
+    // components() already returns a materialized checkpoint (its
+    // convergence action materialized the final round) — re-checkpointing
+    // it eagerly was one extra no-op job per fold step (r22)
     val redCC = graft.llm.Cluster.components(redEdges)
     // final labels for AFFECTED members only: standing members via their
     // cluster label's resolved component, new ids via their own node (or
@@ -585,21 +585,15 @@ object Linkage {
       col("cluster_id") === col("rid"), "left_anti")
     val keptLabels = oldLabels.join(redCC.select(col("id").as("rid")),
       col("label") === col("rid"), "left_anti")
-    // the two state materializations are independent — overlap them from
-    // driver threads (guide §2.6) so the labels job back-fills the golden
-    // job's tail; blocking{} tells the global pool these threads park on
-    // Spark actions (r21 ADVICE)
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import graft.core.actionEc
-    val ngcF = Future(blocking {
-      untouched.unionByName(recomputed).localCheckpoint(true) })
-    val nlcF = if (needLabels) Future(blocking {
-      keptLabels.unionByName(affectedLabels).localCheckpoint(true) }) else null
-    val ngc = Await.result(ngcF, Duration.Inf)
-    val nlc = if (needLabels) Await.result(nlcF, Duration.Inf) else null
-    redCC.unpersist(false)
-    (nlc, ngc)
+    // the two state materializations are independent — overlap them
+    // (guide §2.6) so the labels job back-fills the golden job's tail
+    val states = core.concurrently(
+      Seq(() => untouched.unionByName(recomputed).localCheckpoint(true)) ++
+        (if (needLabels)
+          Seq(() => keptLabels.unionByName(affectedLabels).localCheckpoint(true))
+        else Nil))
+    core.release(redCC)
+    (if (needLabels) states(1) else null, states(0))
   }
 
   /** The batched fold: bootstrap full ER on batch 0, then
@@ -610,7 +604,8 @@ object Linkage {
     * eagerly checkpointed inside [[erMergeStep]] and the previous state
     * released — the fold's working set is the standing (id, label) frame
     * plus the standing golden mart, never the pair history or the
-    * per-step reduced graphs. A batch id outside [0, nBatches) would
+    * per-step reduced graphs; the batch-tagged customer and pair frames
+    * are released once the fold ends. A batch id outside [0, nBatches) would
     * silently drop (or, if negative, mislabel) rows, so it fails loudly
     * up front, the BlockCap convention — and a NULL batch id counts as
     * bad too (a null-yielding batch expression would otherwise slip past
@@ -640,14 +635,12 @@ object Linkage {
       val (nl, ng) = erMergeStep(c.filter(col("b") <= i), c.filter(col("b") === i),
         pairsB.filter(col("pstep") === i).select("a_id", "b_id"),
         labels, golden, needLabels = i < nBatches - 1)
-      labels.unpersist(false)
-      golden.unpersist(false)
+      core.release(labels)
+      core.release(golden)
       labels = nl
       golden = ng
     }
-    if (labels != null) labels.unpersist(false)
-    pairsB.unpersist(false)
-    c.unpersist(false)
+    Seq(labels, pairsB, c).filter(_ != null).foreach(core.release)
     golden.orderBy("cluster_id")
   }
 

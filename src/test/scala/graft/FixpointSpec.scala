@@ -49,15 +49,15 @@ class FixpointSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
     def added = sc.getPersistentRDDs.keySet -- before
     val init = spark.range(1).toDF("id")
-    val conv = Fixpoint.run(init, 10, Fixpoint.release)(growing(2))
+    val conv = Fixpoint.run(init, 10, core.release)(growing(2))
     assert(conv.converged && conv.rounds == 4 && made.size == 4)
     assert(conv.state.count() == 3L)
     assert(added.size == 1, "more than the returned state is cached")
-    Fixpoint.release(conv.state)
+    core.release(conv.state)
     assert(added.isEmpty)
-    val capped = Fixpoint.run(init, 2, Fixpoint.release)(growing(5))
+    val capped = Fixpoint.run(init, 2, core.release)(growing(5))
     assert(!capped.converged && capped.rounds == 2 && capped.state.count() == 2L)
-    Fixpoint.release(capped.state)
+    core.release(capped.state)
     assert(added.isEmpty)
   }
 }
