@@ -122,8 +122,8 @@ object Cluster {
     * computes least(own label, min neighbor label) for every node — the
     * self row both injects the node's own label into the min and carries
     * the old label out for the convergence count. The pointer-jump
-    * self-join's two sides share the aggregation's exchange via
-    * ReuseExchange, so the join+partial-agg run once per round. Round 0
+    * self-join's two sides read one lazily checkpointed aggregate
+    * ([[ccRound]]), so the join+agg run once per round. Round 0
     * skips the identity-label join outright: min(src) per dst over the
     * self-edged frame IS the first propagation. Per round the driver runs
     * exactly ONE action — the changed count that also materializes the
@@ -150,35 +150,14 @@ object Cluster {
     val identity = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     val res = Fixpoint.run(identity, maxIters, core.release) { (labels, r) =>
-      // least(own, min-neighbor) per node in ONE join + agg: the self-edge
-      // row contributes the node's own label to the min AND carries it out
-      // as old_label (every dst has exactly one self row)
-      val g = (if (r == 0)
-        undS.groupBy(col("dst"))
-          .agg(min(col("src")).as("label"))
-          .select(col("dst").as("id"), col("label"), col("dst").as("old_label"))
-      else
-        undS.join(labels, col("src") === col("id"))
-          .groupBy(col("dst"))
-          .agg(min(col("label")).as("label"),
-            min(when(col("src") === col("dst"), col("label"))).as("old_label"))
-          .select(col("dst").as("id"), col("label"), col("old_label")))
-      // pointer jumping: also adopt the label OF the label (labels only
-      // decrease, so label(label) ≤ label) — collapses long chains in
-      // O(log diameter) rounds instead of O(diameter). Both sides of the
-      // self-join contain the identical aggregation exchange, which
-      // ReuseExchange dedups — the propagation join runs once per round.
-      val jumped = g.as("x")
-        .join(g.select(col("id").as("pid"), col("label").as("plabel")),
-          col("x.label") === col("pid"), "left")
-        .select(col("x.id").as("id"), col("x.old_label").as("old_label"),
-          coalesce(col("plabel"), col("x.label")).as("label"))
+      val (g, jumped) = ccRound(undS, labels, r)
       // lazy checkpoint: materializes inside the SAME action as the
       // convergence count, truncating plan AND lineage without an extra job
       val next = jumped.localCheckpoint(false)
       val changed = next
         .agg(count(when(col("label") =!= col("old_label"), lit(1))).as("c"))
         .head().getLong(0)
+      core.release(g)
       (next, Fixpoint.Changed(changed))
     }
     val labels = res.state
@@ -218,6 +197,41 @@ object Cluster {
     core.release(und)
     undS.unpersist()
     labels.select(col("id"), col("label"))
+  }
+
+  /** One propagation round over the self-edged `undS`(src, dst) from
+    * `labels`(id, label): `g` = least(own, min-neighbor) per node in ONE
+    * join + agg — the self-edge row contributes the node's own label to
+    * the min AND carries it out as old_label (every dst has exactly one
+    * self row); round 0 reads no labels (min(src) per dst IS the first
+    * propagation). Then pointer jumping: every node also adopts the label
+    * OF its label (labels only decrease, so label(label) ≤ label), which
+    * collapses long chains in O(log diameter) rounds. The jump reads `g`
+    * on both sides, and the right side needs only (id, label), so column
+    * pruning gives the two sides different aggregates and ReuseExchange
+    * cannot share them — left lazy, the join+aggregate ran twice per
+    * round. `g` is therefore lazily checkpointed: the jump's broadcast
+    * side computes and caches it, the probe side reads the cached blocks
+    * (ClusterSpec pins the plan). Returns (g, jumped); the caller
+    * releases `g` once the jumped labels are materialized. */
+  private[graft] def ccRound(undS: DataFrame, labels: DataFrame, r: Int): (DataFrame, DataFrame) = {
+    val g = (if (r == 0)
+      undS.groupBy(col("dst"))
+        .agg(min(col("src")).as("label"))
+        .select(col("dst").as("id"), col("label"), col("dst").as("old_label"))
+    else
+      undS.join(labels, col("src") === col("id"))
+        .groupBy(col("dst"))
+        .agg(min(col("label")).as("label"),
+          min(when(col("src") === col("dst"), col("label"))).as("old_label"))
+        .select(col("dst").as("id"), col("label"), col("old_label")))
+      .localCheckpoint(false)
+    val jumped = g.as("x")
+      .join(g.select(col("id").as("pid"), col("label").as("plabel")),
+        col("x.label") === col("pid"), "left")
+      .select(col("x.id").as("id"), col("x.old_label").as("old_label"),
+        coalesce(col("plabel"), col("x.label")).as("label"))
+    (g, jumped)
   }
 
   /** Alternating large-star/small-star contraction (Kiveris et al.,

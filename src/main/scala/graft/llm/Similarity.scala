@@ -116,7 +116,7 @@ object Similarity {
     * vectors share every bit, so exact duplicates always bucket together. */
   private def srpSignatures(src: DataFrame): DataFrame = {
     val planes: Column = array((0 until 16).map { j =>
-      array((0 until 64).map { i =>
+      array((0 until EmbDim).map { i =>
         val hex = java.security.MessageDigest.getInstance("MD5")
           .digest(s"$j:$i".getBytes("UTF-8"))
         lit(if ((hex(0) & 0x80) != 0) 1.0 else -1.0)
@@ -172,6 +172,11 @@ object Similarity {
       .agg(collect_list(struct(col("vec_id").as("cent_id"), col("embedding").as("cv")))
         .as("cents"))
 
+  /** The 8 seeded coarse centroids as (cent_id, cv) rows — vec_id < 8. */
+  private def seededCents(spark: SparkSession, dir: String): DataFrame =
+    emb(spark, dir).filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
+
   /** Every vector tagged with its IVF cell (argmax dot over the broadcast
     * centroids, ties toward the lower cent_id via the 1e-12 bias the oracle
     * replays) — shared by [[simIvfProbe]] and [[simIvfMultiprobe]]. */
@@ -218,25 +223,29 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("cell"), round(col("score"), 6).as("score_r"))
   }
 
-  /** ONE broadcast-able row carrying query `vecId`'s vector (`qv`) AND its
-    * top-`nProbe` coarse cells (`qcells`): ascending sort on
-    * struct(-dot + bias, cent_id) == the oracle's `dot - bias DESC` (IEEE
-    * negation is exact), slice takes the best `nProbe`. Shared by
-    * [[simIvfMultiprobe]] and [[simIvfAdc]] — one definition of the probe
-    * geometry, so the two read paths can never drift. */
-  private def probeQuery(spark: SparkSession, dir: String, vecId: Int, nProbe: Int): DataFrame = {
-    val qcells = slice(
-      transform(
-        array_sort(transform(col("cents"), c => struct(
-          (lit(-1.0) * dot(col("qv"), c("cv")) + lit(1e-12) * c("cent_id")).as("score"),
-          c("cent_id").as("cent_id")))),
-        s => s("cent_id")),
-      1, nProbe)
-    emb(spark, dir).filter(col("vec_id") === vecId)
-      .select(col("embedding").as("qv"))
-      .crossJoin(broadcast(ivfCentroids(spark, dir)))
-      .select(col("qv"), qcells.as("qcells"))
+  /** THE seeded-8 probe ranking: every query of `qs`(qid, qv) against
+    * the broadcast [[ivfCentroids]] row — (qid, cell, sc, rn), sc = dot −
+    * 1e-12·cent_id (the bias [[ivfAssigned]] uses, so ties go to the
+    * lower cell), rn by sc descending. Every seeded-layout probe in the
+    * file reads its top-P cells from here. */
+  private def seededCellRank(spark: SparkSession, dir: String, qs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    qs.crossJoin(broadcast(ivfCentroids(spark, dir)))
+      .select(col("qid"), col("qv"), explode(col("cents")).as("c"))
+      .select(col("qid"), col("c.cent_id").as("cell"),
+        (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("sc"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(col("sc").desc)))
   }
+
+  /** The rows of `assigned`(…, cell) inside each query's top-`nProbe`
+    * seeded cells, tagged (qid, qv, pcell) by a broadcast probe frame —
+    * at most P/K of the corpus per query. */
+  private def seededProbe(spark: SparkSession, dir: String, assigned: DataFrame,
+      qs: DataFrame, nProbe: Int): DataFrame =
+    assigned.join(broadcast(seededCellRank(spark, dir, qs).filter(col("rn") <= nProbe)
+        .join(qs, "qid").select(col("qid"), col("qv"), col("cell").as("pcell"))),
+      col("cell") === col("pcell"))
 
   /** sim3b — MULTI-PROBE IVF (round-9 queue #5): single-probe IVF loses any
     * true neighbor whose vector quantized into a different cell than the
@@ -275,9 +284,7 @@ object Similarity {
       ORDER BY ${dotSql("a.embedding", "q.qv")} DESC, a.vec_id
       LIMIT 10
     """)) { (spark, dir) =>
-    val assigned = ivfAssigned(spark, dir)
-    val q = probeQuery(spark, dir, vecId = Q1, nProbe = 3)
-    assigned.join(broadcast(q), array_contains(col("qcells"), col("cell")))
+    seededProbe(spark, dir, ivfAssigned(spark, dir), q1Frame(spark, dir), 3)
       .select(col("vec_id"), col("label"), col("cell"),
         dot(col("embedding"), col("qv")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -716,22 +723,22 @@ object Similarity {
         GROUP BY e.vec_id, e.embedding),
       src AS (
         SELECT vec_id, cell,
-               list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE)) AS v
+               list_transform(range(1, ${EmbDim + 1}), i -> CAST(embedding[i] AS DOUBLE)) AS v
         FROM assigned
         UNION ALL
         SELECT a.vec_id + 500000, a.cell,
-               list_transform(range(1, 65),
+               list_transform(range(1, ${EmbDim + 1}),
                  i -> 0.8 * CAST(a.embedding[i] AS DOUBLE) + 0.2 * CAST(c.cv[i] AS DOUBLE))
         FROM assigned a JOIN cents c ON c.cent_id = a.cell
         WHERE a.vec_id % 5 = 1),
       normed AS (
         SELECT vec_id, cell, v,
-               sqrt(list_reduce(list_transform(range(1, 65), i -> v[i] * v[i]),
+               sqrt(list_reduce(list_transform(range(1, ${EmbDim + 1}), i -> v[i] * v[i]),
                  (x, y) -> x + y)) AS nrm
         FROM src),
       pairs AS (
         SELECT b.vec_id AS dup_id, b.cell AS cell, a.vec_id AS a_id,
-               list_reduce(list_transform(range(1, 65), i -> a.v[i] * b.v[i]),
+               list_reduce(list_transform(range(1, ${EmbDim + 1}), i -> a.v[i] * b.v[i]),
                  (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
         FROM normed a JOIN normed b ON a.cell = b.cell AND a.vec_id < b.vec_id)
       SELECT dup_id, cell, min(a_id) AS keeper_id,
@@ -783,8 +790,8 @@ object Similarity {
   // -------------------------------------------------------------------
 
   /** PQ subspace count × width (M × sub = the 64-dim embedding). */
-  private val PqM = 4
-  private val PqSub = 16
+  private[graft] val PqM = 4
+  private[graft] val PqSub = 16
 
   /** Codewords per subspace of the SERVED product quantizer (6-bit codes).
     * The value is the MEASURED optimum, not a guess: `sim_pq_codebook_size`
@@ -826,9 +833,9 @@ object Similarity {
         (x, y) -> x + y)"""
   }
 
-  /** Sequential-fold squared L2 between two equal-length arrays (the raw
-    * kernel under [[pqSubSq]]; also used directly on pre-sliced
-    * subvectors by [[simPqTrain]]). */
+  /** Sequential-fold squared L2 between two equal-length arrays — THE
+    * Spark subspace distance: [[pqSubSq]], every query LUT ([[pqLut]])
+    * and the dimension-layout audit fold through it. */
   private def pqSq(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => (x.cast(DoubleType) - y.cast(DoubleType)) *
@@ -842,26 +849,80 @@ object Similarity {
            * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))),
         (x, y) -> x + y)"""
 
+  /** Squared L2 over [[PqSub]]-long list slices (CAST-to-double on the
+    * left leg, no-op on double inputs) — the oracle fragment every
+    * ADC/encode CTE shares. */
+  private def sqSubSql(a: String, b: String): String =
+    s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
+           i -> (CAST($a[i] AS DOUBLE) - $b[i]) * (CAST($a[i] AS DOUBLE) - $b[i])),
+           (x, y) -> x + y)"""
+
+  /** [[sqSubSql]] for two legs that are already DOUBLE lists (no CAST) —
+    * the text the residual and query-set oracles replay. */
+  private def sqSubSqlD(a: String, b: String): String =
+    s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
+           i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
+           (x, y) -> x + y)"""
+
+  /** Shared oracle fragment — the wide code table of `src`(vec_id, m, sv)
+    * under `book`(m, code, cv): per subvector the argmin of `dist` (the
+    * distance text over `s.sv` and `b.cv`) + 1e-12·code, pivoted to
+    * (vec_id, code0 … code(M−1)). */
+  private def encWideSql(src: String, book: String, dist: String): String = s"""
+        SELECT vec_id,
+               ${(0 until PqM).map(m => s"max(CASE WHEN m = $m THEN code END) AS code$m").mkString(",\n               ")}
+        FROM (
+          SELECT s.vec_id, s.m,
+                 arg_min(b.code, $dist + 1e-12 * b.code) AS code
+          FROM $src s JOIN $book b ON s.m = b.m
+          GROUP BY s.vec_id, s.m, s.sv)
+        GROUP BY vec_id"""
+
+  /** The oracle's subspace index CTE, rendered from [[PqM]]. */
+  private def msSql: String = s"ms AS (SELECT unnest([${(0 until PqM).mkString(", ")}]) AS m)"
+
+  /** Subspace `m` of an array column: elements m·[[PqSub]] + 1 ..
+    * (m + 1)·[[PqSub]] — THE PQ layout, the one place it is written. */
+  private def pqSub(a: Column, m: Int): Column = slice(a, m * PqSub + 1, PqSub)
+
   /** Spark twin of [[pqSubSqSql]]. */
-  private def pqSubSq(a: Column, b: Column, m: Int): Column =
-    pqSq(slice(a, m * PqSub + 1, PqSub), slice(b, m * PqSub + 1, PqSub))
+  private def pqSubSq(a: Column, b: Column, m: Int): Column = pqSq(pqSub(a, m), pqSub(b, m))
 
-  /** The SEEDED PQ codebook vectors — the first [[PqK]] corpus vectors,
-    * folded into one broadcast row of struct(cent_id, cv) exactly like
-    * [[ivfCentroids]] (which stays 8-row: coarse cells and PQ codewords
-    * are independent knobs; the codebook grew to the measured-best k*
-    * while the cell count is the partitioning choice). */
-  private def pqSeedCentroids(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir).filter(col("vec_id") < PqK)
-      .agg(collect_list(struct(col("vec_id").as("cent_id"), col("embedding").as("cv")))
-        .as("cents"))
+  /** THE PQ subspace split: one row per subspace m of `df`'s array column
+    * `vec` — (every other column of `df`, m, `as` = [[pqSub]](vec, m)).
+    * Every subvector stream, seed book and query split in the file is
+    * this explode. */
+  private def pqSplit(df: DataFrame, vec: String, as: String = "sv"): DataFrame = {
+    val keep = df.columns.toSeq.filterNot(_ == vec).map(col)
+    df.select(keep :+ explode(array((0 until PqM).map(m =>
+        struct(lit(m).as("m"), pqSub(col(vec), m).as(as))): _*)).as("x"): _*)
+      .select(keep ++ Seq(col("x.m").as("m"), col(s"x.$as").as(as)): _*)
+  }
 
-  /** Nearest codeword for subspace `m` over the broadcast `cents` row:
-    * struct(d, code) argmin, ties toward the lower code via the 1e-12
-    * bias the oracle replays verbatim. */
-  private def pqBest(m: Int): Column = array_min(transform(col("cents"), c => struct(
-    (pqSubSq(col("embedding"), c("cv"), m) + lit(1e-12) * c("cent_id")).as("d"),
-    c("cent_id").as("code"))))
+  /** THE per-subspace pivot: one row per `keys` group of an (…, m, …)
+    * frame, column `$name$m` = the group's `value` at subspace m, for
+    * each (value, name) pair — the wide code and distance layout both
+    * engines replay (`max(CASE WHEN m = … END)` in the oracles). */
+  private def pqWide(df: DataFrame, keys: Seq[Column], fields: (Column, String)*): DataFrame = {
+    val aggs = for ((v, name) <- fields; m <- 0 until PqM)
+      yield max(when(col("m") === m, v)).as(s"$name$m")
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The fixed-order sum `$name`0 + … + `$name`(M−1) over a [[pqWide]]
+    * frame — the order both engines add in, so the doubles agree. */
+  private def pqTotal(name: String): Column = (0 until PqM).map(m => col(s"$name$m")).reduce(_ + _)
+
+  /** A seed book from `rows`' array column `vec`: (m, code, cv
+    * ARRAY<DOUBLE>), code = `code` (the row's vec_id by default). */
+  private def pqSeedBook(rows: DataFrame, vec: String, code: Column = col("vec_id")): DataFrame =
+    pqSplit(rows.select(code.cast(LongType).as("code"), col(vec)), vec, "cv")
+      .select(col("m"), col("code"), col("cv").cast(ArrayType(DoubleType)).as("cv"))
+
+  /** The single-query frame (qid, qv) of the ladder query [[Q1]]. */
+  private def q1Frame(spark: SparkSession, dir: String): DataFrame =
+    emb(spark, dir).filter(col("vec_id") === Q1)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
 
   /** sim10 — PRODUCT QUANTIZATION encode (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011 — the standard
@@ -907,13 +968,13 @@ object Similarity {
                round(r0 + r1 + r2 + r3, 6) AS recon_r
         FROM enc ORDER BY vec_id
       """)) { (spark, dir) =>
-      emb(spark, dir).crossJoin(broadcast(pqSeedCentroids(spark, dir)))
-        .select(Seq(col("vec_id"), col("label")) ++
-          (0 until PqM).map(m => pqBest(m).as(s"b$m")): _*)
-        .select(Seq(col("vec_id"), col("label")) ++
-          (0 until PqM).map(m => col(s"b$m")("code").as(s"code$m")) :+
-          round((0 until PqM).map(m => col(s"b$m")("d")).reduce(_ + _), 6)
-            .as("recon_r"): _*)
+      val best = pqSplit(emb(spark, dir).select("vec_id", "label", "embedding"), "embedding")
+        .crossJoin(broadcast(pqBookRow(pqSeedBook(emb(spark, dir).filter(col("vec_id") < PqK),
+          "embedding"))))
+        .select(col("vec_id"), col("label"), col("m"), pqBookBest.as("b"))
+      pqWide(best, Seq(col("vec_id"), col("label")), col("b.code") -> "code", col("b.d") -> "r")
+        .select(Seq(col("vec_id"), col("label")) ++ (0 until PqM).map(m => col(s"code$m")) :+
+          round(pqTotal("r"), 6).as("recon_r"): _*)
         .orderBy("vec_id")
     }
   }
@@ -966,33 +1027,21 @@ object Similarity {
         LIMIT 10
       """)) { (spark, dir) =>
       seededAdcScores(spark, dir)
-        .orderBy(col("adc"), col("vec_id"))
+        .orderBy(col("score"), col("vec_id"))
         .limit(10)
-        .select(col("vec_id"), col("label"), round(col("adc"), 6).as("adc_r"))
+        .select(col("vec_id"), col("label"), round(col("score"), 6).as("adc_r"))
     }
   }
 
   /** The seeded-codebook ADC scan shared by [[simPqSearch]] and
-    * [[simAnnRecall]]: every vector's 4 codes joined against query 17's
-    * 4·[[PqK]]-entry LUT, scored Σ_m lut[m, code_m] in fixed order.
-    * Returns the full (vec_id, label, adc) frame, pre-ranking. */
+    * [[simAnnRecall]]: every vector encoded under the seed book, scored
+    * against query [[Q1]]'s 4·[[PqK]]-entry LUT by [[adcSum]]. Returns
+    * the full (vec_id, label, score) frame, pre-ranking. */
   private def seededAdcScores(spark: SparkSession, dir: String): DataFrame = {
-    val enc = emb(spark, dir).crossJoin(broadcast(pqSeedCentroids(spark, dir)))
-      .select(Seq(col("vec_id"), col("label")) ++
-        (0 until PqM).map(m => pqBest(m)("code").as(s"code$m")): _*)
-    val q = emb(spark, dir).filter(col("vec_id") === Q1)
-      .select(col("embedding").as("qv"))
-    val qd = emb(spark, dir).filter(col("vec_id") < PqK)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      .crossJoin(broadcast(q))
-      .select(Seq(col("cid")) ++
-        (0 until PqM).map(m => pqSubSq(col("qv"), col("cv"), m).as(s"qd$m")): _*)
-    val adc = (0 until PqM).foldLeft(enc) { (df, m) =>
-      df.join(broadcast(qd.select(col("cid").as(s"c$m"), col(s"qd$m"))),
-        col(s"code$m") === col(s"c$m"))
-    }
-    val score = (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _)
-    adc.select(col("vec_id"), col("label"), score.as("adc"))
+    val book = pqSeedBook(emb(spark, dir).filter(col("vec_id") < PqK), "embedding")
+    val enc = pqEncode(
+      pqSplit(emb(spark, dir).select("vec_id", "label", "embedding"), "embedding"), book)
+    adcSum(enc, pqLut(q1Frame(spark, dir).select("qv"), book), Seq("m", "code"))
   }
 
   /** sim12 — PQ codebook TRAINING: one Lloyd round per subspace, the step
@@ -1012,7 +1061,7 @@ object Similarity {
   val simPqTrain: QueryDef = QueryDef(
     "sim_pq_train",
     Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      WITH $msSql,
       sub AS (
         SELECT e.vec_id, ms.m,
                list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
@@ -1060,19 +1109,14 @@ object Similarity {
     * (m, cell, pos) fixed-point integer sums + member counts after one
     * Lloyd assignment round per subspace against the seed codewords. */
   private def pqTrainedElems(spark: SparkSession, dir: String): DataFrame = {
-    val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-      slice(col("embedding"), m * PqSub + 1, PqSub).as("sv")))
-    val sub = emb(spark, dir)
-      .select(col("vec_id"), explode(array(subs: _*)).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
+    val sub = rawSub(spark, dir)
     // m-INDEXED book (books[m+1] = that subspace's [[PqK]] codewords): the
     // old single-list layout re-scanned all M·K structs per row through a
     // filter() lambda — dead allocation that made this gate's wall time
     // track host load ~9x (r19 What's-wrong #1)
-    val cbook = emb(spark, dir).filter(col("vec_id") < PqK)
-      .select(col("vec_id").as("cid"), explode(array(subs: _*)).as("x"))
-      .select(col("cid"), col("x.m").as("cm"), col("x.sv").as("cs"))
-      .groupBy("cm").agg(collect_list(struct(col("cid"), col("cs"))).as("cw"))
+    val cbook = pqSplit(emb(spark, dir).filter(col("vec_id") < PqK)
+        .select(col("vec_id").as("cid"), col("embedding")), "embedding", "cs")
+      .groupBy(col("m").as("cm")).agg(collect_list(struct(col("cid"), col("cs"))).as("cw"))
       .agg(transform(array_sort(collect_list(struct(col("cm"), col("cw")))),
         s => s("cw")).as("books"))
     // named_struct via expr: .as() aliases inside a transform lambda chain
@@ -1128,6 +1172,21 @@ object Similarity {
     * unchanged assignment). */
   private[graft] val PqTrainRounds = 4
 
+  /** Shared oracle fragment — the corpus subvector stream `sub`, the
+    * seed book `pb0` (vec_id < [[PqK]]) and [[PqTrainRounds]] training
+    * rounds: the converged RAW book is `pb$PqTrainRounds`. Requires `ms`. */
+  private def rawBookChainSql: String =
+    s"""sub AS (
+        SELECT e.vec_id, ms.m,
+               list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
+        FROM embeddings e, ms),
+      pb0 AS (
+        SELECT ms.m, CAST(c.vec_id AS BIGINT) AS code,
+               list_transform(list_slice(c.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub),
+                 x -> CAST(x AS DOUBLE)) AS cv
+        FROM embeddings c, ms WHERE c.vec_id < $PqK),
+      ${pqRoundsSql("p", "sub", "pb0")}"""
+
   /** DuckDB CTE chain for [[PqTrainRounds]] subspace-training rounds over
     * a (vec_id, m, sv) CTE named `$sub` seeded by a (m, code, cv) CTE
     * named `$seed` (cv must already be DOUBLE): per round r, `${p}a$r`
@@ -1136,9 +1195,7 @@ object Similarity {
     * non-empty codeword as the 1e-7 fixed-point-exact member mean. The
     * final book CTE is `${p}b$PqTrainRounds`. */
   private def pqRoundsSql(p: String, sub: String, seed: String): String = {
-    val sq = s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> (CAST(s.sv[i] AS DOUBLE) - b.cv[i]) * (CAST(s.sv[i] AS DOUBLE) - b.cv[i])),
-           (x, y) -> x + y)"""
+    val sq = sqSubSql("s.sv", "b.cv")
     val rounds = (1 to PqTrainRounds).map { r =>
       val prev = if (r == 1) seed else s"${p}b${r - 1}"
       s"""${p}a$r AS (
@@ -1184,6 +1241,15 @@ object Similarity {
     * array [[pqBookBest]] scans. */
   private def pqBookRow(book: DataFrame): DataFrame = book
     .agg(collect_list(struct(col("m").as("bm"), col("code"), col("cv"))).as("book"))
+
+  /** THE PQ encoder: every (…, m, sv) subvector row of `sub` to its
+    * nearest `book` codeword by [[pqBookBest]] (ties to the lower code) —
+    * (every other column of `sub`, m, code). */
+  private[graft] def pqEncode(sub: DataFrame, book: DataFrame): DataFrame = {
+    val keep = sub.columns.toSeq.filterNot(Set("m", "sv")).map(col)
+    sub.crossJoin(broadcast(pqBookRow(book)))
+      .select(keep ++ Seq(col("m"), pqBookBest("code").as("code")): _*)
+  }
 
   /** Convergence-budgeted per-subspace Lloyd training over an arbitrary
     * (vec_id, m, sv) subvector stream and (m, code, cv DOUBLE) seed book:
@@ -1298,13 +1364,8 @@ object Similarity {
   }
 
   /** The (vec_id, m, sv) subvector stream of the raw corpus. */
-  private[graft] def rawSub(spark: SparkSession, dir: String): DataFrame = {
-    val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-      slice(col("embedding"), m * PqSub + 1, PqSub).as("sv")))
-    emb(spark, dir)
-      .select(col("vec_id"), explode(array(subs: _*)).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-  }
+  private[graft] def rawSub(spark: SparkSession, dir: String): DataFrame =
+    pqSplit(emb(spark, dir).select("vec_id", "embedding"), "embedding")
 
   /** Converged RAW-vector book records (m, code, cv, n_members,
     * inertia_q); seeds = vec_id < [[PqK]] subvectors — the SERVED
@@ -1313,13 +1374,8 @@ object Similarity {
     * adopted book IS the measured book). */
   private[graft] def convergedRawBook(spark: SparkSession, dir: String): Seq[(Int, Long, Seq[Double], Long, Long)] =
     memoBook(spark, dir, "raw") {
-      val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-        slice(col("embedding"), m * PqSub + 1, PqSub).as("sv")))
-      val seed = emb(spark, dir).filter(col("vec_id") < PqK)
-        .select(col("vec_id").as("code"), explode(array(subs: _*)).as("x"))
-        .select(col("x.m").as("m"), col("code").cast(LongType).as("code"),
-          col("x.sv").cast(ArrayType(DoubleType)).as("cv"))
-      trainSubspaceBook(spark, rawSub(spark, dir), seed)
+      trainSubspaceBook(spark, rawSub(spark, dir),
+        pqSeedBook(emb(spark, dir).filter(col("vec_id") < PqK), "embedding"))
     }
 
   /** Converged RESIDUAL book records; the subvector stream and seeds are
@@ -1331,16 +1387,9 @@ object Similarity {
   private[graft] def convergedResidualBook(spark: SparkSession, dir: String): Seq[(Int, Long, Seq[Double], Long, Long)] =
     memoBook(spark, dir, "res") {
       val res = ivfResiduals(spark, dir).localCheckpoint(true)
-      val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-        slice(col("rv"), m * PqSub + 1, PqSub).as("sv")))
-      val rsub = res
-        .select(col("vec_id"), explode(array(subs: _*)).as("x"))
-        .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-      val seed = res.filter(col("vec_id") >= 8 && col("vec_id") < 8 + PqK)
-        .select((col("vec_id") - 8).cast(LongType).as("code"),
-          explode(array(subs: _*)).as("x"))
-        .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv"))
-      val out = trainSubspaceBook(spark, rsub, seed)
+      val out = trainSubspaceBook(spark, pqSplit(res.select("vec_id", "rv"), "rv"),
+        pqSeedBook(res.filter(col("vec_id") >= 8 && col("vec_id") < 8 + PqK), "rv",
+          col("vec_id") - 8))
       core.release(res)
       out
     }
@@ -1372,17 +1421,8 @@ object Similarity {
   val simPqTrainConverged: QueryDef = QueryDef(
     "sim_pq_train_converged",
     Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
-      sub AS (
-        SELECT e.vec_id, ms.m,
-               list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
-        FROM embeddings e, ms),
-      pb0 AS (
-        SELECT ms.m, CAST(c.vec_id AS BIGINT) AS code,
-               list_transform(list_slice(c.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub),
-                 x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings c, ms WHERE c.vec_id < $PqK),
-      ${pqRoundsSql("p", "sub", "pb0")},
+      WITH $msSql,
+      $rawBookChainSql,
       paf AS (
         SELECT s.vec_id, s.m,
                arg_min(b.code, ${pqSqSql16("s.sv", "b.cv")} + 1e-12 * b.code) AS cell,
@@ -1422,14 +1462,12 @@ object Similarity {
     * volume bound BehaviorSpec asserts (candidates < corpus). Shared by
     * the gate and the spec so the assertion tests the real read path. */
   private[graft] def ivfAdcCandidates(spark: SparkSession, dir: String): DataFrame =
-    ivfAssigned(spark, dir)
-      .join(broadcast(probeQuery(spark, dir, vecId = Q1, nProbe = 3)),
-        array_contains(col("qcells"), col("cell")))
+    seededProbe(spark, dir, ivfAssigned(spark, dir), q1Frame(spark, dir), 3)
 
   /** sim13 — IVFADC: the composed billion-scale ANN read path (Jégou et
     * al. §IV — the round-11 verdict's top item), wiring the three
     * previously-separate gates into one query: the coarse quantizer probes
-    * the query's top-3 IVF cells ([[probeQuery]], the multiprobe
+    * the query's top-3 IVF cells ([[seededProbe]], the multiprobe
     * machinery), candidates are ONLY those cells' members (P/K of the
     * corpus — the inverted-file prune), each candidate is PQ-encoded
     * against the CONVERGED codebook ([[convergedRawBook]] —
@@ -1451,10 +1489,7 @@ object Similarity {
     * `adc(vec_id, label, cell, qd0..qd3)` — [[simIvfAdc]] ranks it
     * directly; [[simAdcRerank]] takes a wide beam and re-ranks exactly. */
   private def ivfAdcArcSql: String = {
-    val sq16 = (a: String, b: String) => s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> (CAST($a[i] AS DOUBLE) - $b[i]) * (CAST($a[i] AS DOUBLE) - $b[i])),
-           (x, y) -> x + y)"""
-    s"""ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+    s"""$msSql,
       cents AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id < 8),
       assigned AS (
         SELECT e.vec_id, e.label, e.embedding,
@@ -1466,16 +1501,7 @@ object Similarity {
         SELECT c.cent_id AS cell FROM cents c, q
         ORDER BY ${dotSql("q.qv", "c.cv")} - 1e-12 * c.cent_id DESC
         LIMIT 3),
-      sub AS (
-        SELECT e.vec_id, ms.m,
-               list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
-        FROM embeddings e, ms),
-      pb0 AS (
-        SELECT ms.m, CAST(c.vec_id AS BIGINT) AS code,
-               list_transform(list_slice(c.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub),
-                 x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings c, ms WHERE c.vec_id < $PqK),
-      ${pqRoundsSql("p", "sub", "pb0")},
+      $rawBookChainSql,
       book AS (SELECT m, code, cv FROM pb$PqTrainRounds),
       lut AS (
         SELECT b.m, b.code,
@@ -1491,15 +1517,12 @@ object Similarity {
         WHERE a.cell IN (SELECT cell FROM qc)),
       enc AS (
         SELECT c.vec_id, c.label, c.cell, c.m,
-               arg_min(b.code, ${sq16("c.sv", "b.cv")} + 1e-12 * b.code) AS code
+               arg_min(b.code, ${sqSubSql("c.sv", "b.cv")} + 1e-12 * b.code) AS code
         FROM cand c JOIN book b ON b.m = c.m
         GROUP BY c.vec_id, c.label, c.cell, c.m, c.sv),
       adc AS (
         SELECT e.vec_id, e.label, e.cell,
-               max(CASE WHEN e.m = 0 THEN l.qd END) AS qd0,
-               max(CASE WHEN e.m = 1 THEN l.qd END) AS qd1,
-               max(CASE WHEN e.m = 2 THEN l.qd END) AS qd2,
-               max(CASE WHEN e.m = 3 THEN l.qd END) AS qd3
+               ${(0 until PqM).map(m => s"max(CASE WHEN e.m = $m THEN l.qd END) AS qd$m").mkString(",\n               ")}
         FROM enc e JOIN lut l ON l.m = e.m AND l.code = e.code
         GROUP BY e.vec_id, e.label, e.cell)"""
   }
@@ -1515,49 +1538,29 @@ object Similarity {
       LIMIT 10
     """)) { (spark, dir) =>
       ivfAdcScores(spark, dir)
-        .orderBy(col("adc"), col("vec_id"))
+        .orderBy(col("score"), col("vec_id"))
         .limit(10)
         .select(col("vec_id"), col("label"), col("cell"),
-          round(col("adc"), 6).as("adc_r"))
+          round(col("score"), 6).as("adc_r"))
     }
   }
 
   /** The composed IVFADC read path's scored candidate frame (vec_id,
-    * label, cell, adc) for query 17 — probe-3 candidates, converged-book
-    * encode, broadcast-LUT ADC, fixed-order qd0+qd1+qd2+qd3 sum. Shared
+    * label, cell, score) for query [[Q1]] — probe-3 candidates,
+    * converged-book encode, [[adcSum]] against the query LUT. Shared
     * by [[simIvfAdc]] (direct rank) and [[simAdcRerank]] (wide beam +
     * exact re-rank). */
   private def ivfAdcScores(spark: SparkSession, dir: String): DataFrame = {
-    val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-      slice(col("embedding"), m * PqSub + 1, PqSub).as("sv")))
-    val cand = ivfAdcCandidates(spark, dir)
-      .select(col("vec_id"), col("label"), col("cell"),
-        explode(array(subs: _*)).as("x"))
-      .select(col("vec_id"), col("label"), col("cell"),
-        col("x.m").as("m"), col("x.sv").as("sv"))
+    val cand = pqSplit(ivfAdcCandidates(spark, dir)
+      .select("vec_id", "label", "cell", "embedding"), "embedding")
     // the CONVERGED codebook (round-12 queue #1): trained once per
     // (session, snapshot) by the fixpoint loop and re-injected here as a
     // ≤ M·PqK-row literal — the encode fold and the LUT below share the
     // same value by construction (the round-12 double-training finding
     // cannot recur: there is no training subtree left in this plan)
     val book = bookDf(spark, convergedRawBook(spark, dir))
-    val enc = cand.crossJoin(broadcast(pqBookRow(book)))
-      .select(col("vec_id"), col("label"), col("cell"), col("m"),
-        pqBookBest("code").as("code"))
-    // the query's 4·PqK-entry LUT: subspace distance to every trained codeword
-    val qRow = emb(spark, dir).filter(col("vec_id") === Q1)
-      .select(col("embedding").as("qv"))
-    val lut = book.crossJoin(broadcast(qRow))
-      .select(col("m"), col("code"),
-        pqSq(slice(col("qv"), col("m") * PqSub + 1, lit(PqSub)), col("cv")).as("qd"))
-    val aggs = (0 until PqM).map(m =>
-      max(when(col("m") === m, col("qd"))).as(s"qd$m"))
-    val adc = enc.join(broadcast(lut), Seq("m", "code"))
-      .groupBy("vec_id", "label", "cell")
-      .agg(aggs.head, aggs.tail: _*)
-    // fixed-order double sum (qd0+qd1+qd2+qd3): bit-identical both engines
-    val score = (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _)
-    adc.select(col("vec_id"), col("label"), col("cell"), score.as("adc"))
+    adcSum(pqEncode(cand, book), pqLut(q1Frame(spark, dir).select("qv"), book),
+      Seq("m", "code"))
   }
 
   /** Re-rank beam FLOOR: the minimum candidates kept from the ADC stage
@@ -1630,16 +1633,15 @@ object Similarity {
     val nCand = scores.count()
     val beamW = rerankBeamWidth(nCand)
     val beamFrame = scores
-      .orderBy(col("adc"), col("vec_id"))
+      .orderBy(col("score"), col("vec_id"))
       .limit(beamW)
-      .select(col("vec_id"), col("label"), col("adc"))
+      .select(col("vec_id"), col("label"), col("score").as("adc"))
     val beamSchema = beamFrame.schema
     val beamRows = beamFrame.collect()
     core.release(scores)
     val beam = spark.createDataFrame(
       java.util.Arrays.asList(beamRows: _*), beamSchema)
-    val q = emb(spark, dir).filter(col("vec_id") === Q1)
-      .select(col("embedding").as("qv"))
+    val q = q1Frame(spark, dir).select("qv")
     // beam side broadcasts (O(k log C) ids) — the corpus is scanned once
     // for the vector fetch, never shuffled
     emb(spark, dir).select(col("vec_id"), col("embedding"))
@@ -1662,8 +1664,8 @@ object Similarity {
     * subtraction per element), so both engines hold identical values. */
   private def ivfResiduals(spark: SparkSession, dir: String): DataFrame =
     ivfAssigned(spark, dir)
-      .join(broadcast(emb(spark, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("rc_id"), col("embedding").as("ccv"))),
+      .join(broadcast(seededCents(spark, dir)
+        .select(col("cent_id").as("rc_id"), col("cv").as("ccv"))),
         col("cell") === col("rc_id"))
       .select(col("vec_id"), col("label"), col("cell"),
         zip_with(col("embedding"), col("ccv"),
@@ -1697,13 +1699,10 @@ object Similarity {
     * [[simIvfAdc]], assignment + encode are the snapshot-time WRITE path,
     * inline here so the oracle replays the whole arc verbatim. */
   val simIvfAdcResidual: QueryDef = {
-    val sq16 = (a: String, b: String) => s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
-           (x, y) -> x + y)"""
     QueryDef(
       "sim_ivfadc_residual",
       Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      WITH $msSql,
       cents AS (SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id < 8),
       assigned AS (
         SELECT e.vec_id, e.label, e.embedding,
@@ -1712,7 +1711,7 @@ object Similarity {
         GROUP BY e.vec_id, e.label, e.embedding),
       res AS (
         SELECT a.vec_id, a.label, a.cell,
-               list_transform(range(1, 65),
+               list_transform(range(1, ${EmbDim + 1}),
                  i -> CAST(a.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE)) AS rv
         FROM assigned a JOIN cents c ON a.cell = c.cent_id),
       rsub AS (
@@ -1735,7 +1734,7 @@ object Similarity {
                     - CAST(qc.cv[i + ms.m * $PqSub] AS DOUBLE)) AS qsv
         FROM qc, q, ms),
       lut AS (
-        SELECT r.cell, r.m, b.code, ${sq16("r.qsv", "b.bv")} AS qd
+        SELECT r.cell, r.m, b.code, ${sqSubSqlD("r.qsv", "b.bv")} AS qd
         FROM qres r JOIN book b ON b.m = r.m),
       cand AS (
         SELECT r.vec_id, r.label, r.cell, ms.m,
@@ -1744,7 +1743,7 @@ object Similarity {
         WHERE r.cell IN (SELECT cell FROM qc)),
       enc AS (
         SELECT c.vec_id, c.label, c.cell, c.m,
-               arg_min(b.code, ${sq16("c.sv", "b.bv")} + 1e-12 * b.code) AS code
+               arg_min(b.code, ${sqSubSqlD("c.sv", "b.bv")} + 1e-12 * b.code) AS code
         FROM cand c JOIN book b ON b.m = c.m
         GROUP BY c.vec_id, c.label, c.cell, c.m, c.sv),
       adc AS (
@@ -1763,51 +1762,18 @@ object Similarity {
       // convergedResidualBook, which checkpoints its own residual frame);
       // res here has ONE consumer — the candidate encode — so no
       // checkpoint (the round-13 review dropped the stale two-consumer one)
-      val res = ivfResiduals(spark, dir)
-      val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-        slice(col("rv"), m * PqSub + 1, PqSub).as("sv")))
       val book = bookDf(spark, convergedResidualBook(spark, dir))
-        .withColumnRenamed("cv", "bv")
-      // per-probed-cell query residual → the 768-row (cell, m, code) LUT
-      val qprobe = probeQuery(spark, dir, vecId = Q1, nProbe = 3)
-      val qres = qprobe
-        .join(broadcast(emb(spark, dir).filter(col("vec_id") < 8)
-          .select(col("vec_id").as("cell"), col("embedding").as("ccv"))),
-          array_contains(col("qcells"), col("cell")))
-        .select(col("cell"), explode(array((0 until PqM).map(m =>
-          struct(lit(m).as("m"),
-            zip_with(slice(col("qv"), m * PqSub + 1, PqSub),
-              slice(col("ccv"), m * PqSub + 1, PqSub),
-              (x, y) => x.cast(DoubleType) - y.cast(DoubleType)).as("qsv"))): _*))
-          .as("x"))
-        .select(col("cell"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-      val lut = qres.join(book, Seq("m"))
-        .select(col("cell"), col("m"), col("code"),
-          aggregate(zip_with(col("qsv"), col("bv"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, v) => acc + v).as("qd"))
-      // candidates: probed cells' members only — then encode + ADC
-      val cand = res
-        .join(broadcast(qprobe.select(col("qcells"))),
-          array_contains(col("qcells"), col("cell")))
-        .select(col("vec_id"), col("label"), col("cell"),
-          explode(array(subs: _*)).as("x"))
-        .select(col("vec_id"), col("label"), col("cell"),
-          col("x.m").as("m"), col("x.sv").as("sv"))
-      val enc = cand.crossJoin(broadcast(pqBookRow(
-          book.withColumnRenamed("bv", "cv"))))
-        .select(col("vec_id"), col("label"), col("cell"), col("m"),
-          pqBookBest("code").as("code"))
-      val aggs = (0 until PqM).map(m =>
-        max(when(col("m") === m, col("qd"))).as(s"qd$m"))
-      val adc = enc.join(broadcast(lut), Seq("cell", "m", "code"))
-        .groupBy("vec_id", "label", "cell")
-        .agg(aggs.head, aggs.tail: _*)
-      val score = (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _)
-      adc.select(col("vec_id"), col("label"), col("cell"), score.as("adc"))
-        .orderBy(col("adc"), col("vec_id"))
+      val q = q1Frame(spark, dir)
+      // the query's residual against each cell → the (cell, m, code) LUT;
+      // only the probed cells' members ever meet it
+      val lut = resLut(q, seededCents(spark, dir), book)
+      val cand = pqSplit(seededProbe(spark, dir, ivfResiduals(spark, dir), q, 3)
+        .select("vec_id", "label", "cell", "rv"), "rv")
+      adcSum(pqEncode(cand, book), lut, Seq("cell", "m", "code"))
+        .orderBy(col("score"), col("vec_id"))
         .limit(10)
         .select(col("vec_id"), col("label"), col("cell"),
-          round(col("adc"), 6).as("adc_r"))
+          round(col("score"), 6).as("adc_r"))
     }
   }
 
@@ -1881,31 +1847,31 @@ object Similarity {
              round(CAST(hits AS DOUBLE) / 10.0, 6) AS recall_r
       FROM r ORDER BY method
     """)) { (spark, dir) =>
-      val q = emb(spark, dir).filter(col("vec_id") === Q1)
-        .select(col("embedding").as("qv"))
-      val ex = emb(spark, dir).crossJoin(broadcast(q))
+      val q = q1Frame(spark, dir)
+      val ex = emb(spark, dir).crossJoin(broadcast(q.select("qv")))
         .select(col("vec_id"), dot(col("embedding"), col("qv")).as("s"))
         .orderBy(col("s").desc, col("vec_id")).limit(10).select("vec_id")
       val assigned = ivfAssigned(spark, dir)
-      def probed(nProbe: Int): DataFrame = assigned
-        .join(broadcast(probeQuery(spark, dir, vecId = Q1, nProbe = nProbe)),
-          array_contains(col("qcells"), col("cell")))
+      def probed(nProbe: Int): DataFrame = seededProbe(spark, dir, assigned, q, nProbe)
         .select(col("vec_id"), dot(col("embedding"), col("qv")).as("s"))
         .orderBy(col("s").desc, col("vec_id")).limit(10).select("vec_id")
       val mp = seededAdcScores(spark, dir)
-        .orderBy(col("adc"), col("vec_id")).limit(10).select("vec_id")
-      def recallOf(name: String, ids: DataFrame): DataFrame =
-        ids.join(ex, Seq("vec_id"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(name).as("method"), lit(10L).as("k"),
-            col("hits"),
-            round(col("hits").cast(DoubleType) / 10.0, 6).as("recall_r"))
-      recallOf("ivf_probe1", probed(1))
-        .unionAll(recallOf("ivf_probe3", probed(3)))
-        .unionAll(recallOf("pq_adc", mp))
+        .orderBy(col("score"), col("vec_id")).limit(10).select("vec_id")
+      recallHits("ivf_probe1", probed(1), ex, Seq("vec_id"))
+        .unionAll(recallHits("ivf_probe3", probed(3), ex, Seq("vec_id")))
+        .unionAll(recallHits("pq_adc", mp, ex, Seq("vec_id")))
+        .select(col("method"), lit(10L).as("k"), col("hits"),
+          round(col("hits").cast(DoubleType) / 10.0, 6).as("recall_r"))
         .orderBy("method")
     }
   }
+
+  /** One recall-ledger row: how many rows of `ids` the exact referee `ex`
+    * holds, matched on `keys` — (method, hits). */
+  private def recallHits(method: String, ids: DataFrame, ex: DataFrame,
+      keys: Seq[String]): DataFrame =
+    ids.join(ex, keys).agg(count(lit(1)).as("hits"))
+      .select(lit(method).as("method"), col("hits"))
 
   /** sim15b — ANN recall harness over a QUERY SET (round-12 queue #3):
     * [[simAnnRecall]] pins one query's ladder; this gate is the real
@@ -1946,25 +1912,10 @@ object Similarity {
     * score) scalars. The exact baseline is one corpus pass against all 8
     * queries — priced per evaluation, not per query. */
   val simAnnRecallSet: QueryDef = {
-    val sq16d = (a: String, b: String) => s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
-           (x, y) -> x + y)"""
-    val encWideSql = (src: String, book: String) => s"""
-        SELECT vec_id,
-               max(CASE WHEN m = 0 THEN code END) AS code0,
-               max(CASE WHEN m = 1 THEN code END) AS code1,
-               max(CASE WHEN m = 2 THEN code END) AS code2,
-               max(CASE WHEN m = 3 THEN code END) AS code3
-        FROM (
-          SELECT s.vec_id, s.m,
-                 arg_min(b.code, ${sq16d("s.sv", "b.cv")} + 1e-12 * b.code) AS code
-          FROM $src s JOIN $book b ON s.m = b.m
-          GROUP BY s.vec_id, s.m, s.sv)
-        GROUP BY vec_id"""
     QueryDef(
       "sim_ann_recall_set",
       Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      WITH $msSql,
       cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
       qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id >= $QLo AND vec_id < $QHi),
       ex AS (
@@ -1997,20 +1948,12 @@ object Similarity {
                    ORDER BY ${dotSql("a.embedding", "p.qv")} DESC, a.vec_id) AS rr
           FROM assigned a JOIN qprobe p ON a.cell = p.cell AND p.rn <= 3)
         WHERE rr <= 10),
-      sub AS (
-        SELECT e.vec_id, ms.m,
-               list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
-        FROM embeddings e, ms),
-      pb0 AS (
-        SELECT ms.m, CAST(c.vec_id AS BIGINT) AS code,
-               list_transform(list_slice(c.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub),
-                 x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings c, ms WHERE c.vec_id < $PqK),
-      ${pqRoundsSql("p", "sub", "pb0")},
-      enc_raw AS (${encWideSql(s"(SELECT vec_id, m, list_transform(sv, x -> CAST(x AS DOUBLE)) AS sv FROM sub)", s"pb$PqTrainRounds")}),
+      $rawBookChainSql,
+      enc_raw AS (${encWideSql(s"(SELECT vec_id, m, list_transform(sv, x -> CAST(x AS DOUBLE)) AS sv FROM sub)",
+        s"pb$PqTrainRounds", sqSubSqlD("s.sv", "b.cv"))}),
       lut_raw AS (
         SELECT q.qid, b.m, b.code,
-               ${sq16d(s"list_transform(list_slice(q.qv, b.m * $PqSub + 1, b.m * $PqSub + $PqSub), x -> CAST(x AS DOUBLE))", "b.cv")} AS qd
+               ${sqSubSqlD(s"list_transform(list_slice(q.qv, b.m * $PqSub + 1, b.m * $PqSub + $PqSub), x -> CAST(x AS DOUBLE))", "b.cv")} AS qd
         FROM qs q, pb$PqTrainRounds b),
       candr AS (
         SELECT p.qid, a.vec_id FROM assigned a JOIN qprobe p ON a.cell = p.cell AND p.rn <= 3),
@@ -2042,7 +1985,7 @@ object Similarity {
         WHERE rr2 <= 10),
       res AS (
         SELECT a.vec_id, a.cell,
-               list_transform(range(1, 65),
+               list_transform(range(1, ${EmbDim + 1}),
                  i -> CAST(a.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE)) AS rv
         FROM assigned a JOIN cents c ON a.cell = c.cid),
       rsub AS (
@@ -2053,10 +1996,10 @@ object Similarity {
                list_slice(r.rv, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS cv
         FROM res r, ms WHERE r.vec_id >= 8 AND r.vec_id < ${8 + PqK}),
       ${pqRoundsSql("r", "rsub", "rb0")},
-      enc_res AS (${encWideSql("rsub", s"rb$PqTrainRounds")}),
+      enc_res AS (${encWideSql("rsub", s"rb$PqTrainRounds", sqSubSqlD("s.sv", "b.cv"))}),
       lut_res AS (
         SELECT p.qid, p.cell, b.m, b.code,
-               ${sq16d(s"list_transform(range(1, ${PqSub + 1}), i -> CAST(p.qv[i + b.m * $PqSub] AS DOUBLE) - CAST(p.cv[i + b.m * $PqSub] AS DOUBLE))", "b.cv")} AS qd
+               ${sqSubSqlD(s"list_transform(range(1, ${PqSub + 1}), i -> CAST(p.qv[i + b.m * $PqSub] AS DOUBLE) - CAST(p.cv[i + b.m * $PqSub] AS DOUBLE))", "b.cv")} AS qd
         FROM qprobe p JOIN rb$PqTrainRounds b ON p.rn <= 3),
       candc AS (
         SELECT p.qid, a.vec_id, a.cell FROM assigned a JOIN qprobe p ON a.cell = p.cell AND p.rn <= 3),
@@ -2089,8 +2032,7 @@ object Similarity {
     """)) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
       val wq = Window.partitionBy("qid")
-      val qs = emb(spark, dir).filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val qs = heldOutQueries(emb(spark, dir), emb(spark, dir).count())
       // 80 (qid, vec_id) rows consumed by all four rungs — the standing
       // exact referee (serveHarnessDag; one corpus pass per snapshot)
       val ex = serveExqMart(spark, dir)
@@ -2101,113 +2043,50 @@ object Similarity {
       // a deployment reads the materialized sim_ivf_layout table here
       // instead of assigning in-query at all)
       val assigned = ivfAssigned(spark, dir).localCheckpoint(false)
-      val qprobe = qs.crossJoin(broadcast(ivfCentroids(spark, dir)))
-        .select(col("qid"), col("qv"), explode(col("cents")).as("c"))
-        .select(col("qid"), col("qv"), col("c.cent_id").as("cell"), col("c.cv").as("ccv"),
-          (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("sc"))
-        .withColumn("rn", row_number().over(wq.orderBy(col("sc").desc)))
-        .localCheckpoint(true)
-      def probedTop(nProbe: Int): DataFrame = assigned
-        .join(broadcast(qprobe.filter(col("rn") <= nProbe)
-          .select(col("qid").as("pqid"), col("qv").as("pqv"), col("cell").as("pcell"))),
-          col("cell") === col("pcell"))
-        .select(col("pqid").as("qid"), col("vec_id"),
-          dot(col("embedding"), col("pqv")).as("s"))
+      def probedTop(nProbe: Int): DataFrame = seededProbe(spark, dir, assigned, qs, nProbe)
+        .select(col("qid"), col("vec_id"), dot(col("embedding"), col("qv")).as("s"))
         .withColumn("rr", row_number().over(wq.orderBy(col("s").desc, col("vec_id"))))
         .filter(col("rr") <= 10).select("qid", "vec_id")
-      def encWide(sub: DataFrame, book: DataFrame): DataFrame = {
-        val aggs = (0 until PqM).map(m =>
-          max(when(col("m") === m, col("code"))).as(s"code$m"))
-        sub.crossJoin(broadcast(pqBookRow(book)))
-          .select(col("vec_id"), col("m"), pqBookBest("code").as("code"))
-          .groupBy("vec_id").agg(aggs.head, aggs.tail: _*)
-      }
-      def adcScored(cand: DataFrame, enc: DataFrame, lut: DataFrame,
-          lutKeys: Seq[String]): DataFrame = {
-        val joined = (0 until PqM).foldLeft(cand.join(enc, "vec_id")) { (df, m) =>
-          val l = lut.filter(col("m") === m)
-            .select(lutKeys.map(k => col(k).as(s"${k}_$m")) :+
-              col("code").as(s"lcode$m") :+ col("qd").as(s"qd$m"): _*)
-          df.join(broadcast(l),
-            lutKeys.map(k => col(k) === col(s"${k}_$m"))
-              .reduce(_ && _) && col(s"code$m") === col(s"lcode$m"))
-        }
-        val score = (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _)
-        joined.select(col("qid"), col("vec_id"), score.as("adc"))
-          .withColumn("rr", row_number().over(wq.orderBy(col("adc"), col("vec_id"))))
-      }
-      def adcTop(cand: DataFrame, enc: DataFrame, lut: DataFrame,
+      // a pool's codes scored against the per-query LUT, ranked per query
+      def adcRanked(cand: DataFrame, enc: DataFrame, lut: DataFrame,
           lutKeys: Seq[String]): DataFrame =
-        adcScored(cand, enc, lut, lutKeys)
-          .filter(col("rr") <= 10).select("qid", "vec_id")
+        adcSum(cand.join(enc, "vec_id"), lut, lutKeys ++ Seq("m", "code"))
+          .withColumn("rr", row_number().over(wq.orderBy(col("score"), col("vec_id"))))
       val rawBook = bookDf(spark, convergedRawBook(spark, dir))
       val resBook = bookDf(spark, convergedResidualBook(spark, dir))
-      val encRaw = encWide(rawSub(spark, dir), rawBook)
-      val qsubRaw = qs.select(col("qid"), explode(array((0 until PqM).map(m =>
-        struct(lit(m).as("m"), slice(col("qv"), m * PqSub + 1, PqSub).as("qsv"))): _*)).as("x"))
-        .select(col("qid"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-      val lutRaw = qsubRaw.join(rawBook, Seq("m"))
-        .select(col("qid"), col("m"), col("code"),
-          aggregate(zip_with(col("qsv"), col("cv"),
-            (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-            lit(0.0), (acc, v) => acc + v).as("qd"))
       // (qid, vec_id, cell) scalars only, read by both ADC rungs
-      val candR = assigned
-        .join(broadcast(qprobe.filter(col("rn") <= 3)
-          .select(col("qid").as("cqid"), col("cell").as("pcell"))),
-          col("cell") === col("pcell"))
-        .select(col("cqid").as("qid"), col("vec_id"), col("cell"))
+      val candR = seededProbe(spark, dir, assigned, qs, 3)
+        .select(col("qid"), col("vec_id"), col("cell"))
         .localCheckpoint(false)
       // the raw-ADC scored frame feeds two rungs (the direct top-10 and
       // the re-rank beam) — lazily checkpoint it once
-      val arS = adcScored(candR.select("qid", "vec_id"), encRaw, lutRaw, Seq("qid"))
+      val arS = adcRanked(candR.select("qid", "vec_id"),
+          pqEncode(rawSub(spark, dir), rawBook), pqLut(qs, rawBook), Seq("qid"))
         .localCheckpoint(false)
       val ar = arS.filter(col("rr") <= 10).select("qid", "vec_id")
       // two-stage rung: the per-qid ADC beam re-scored exactly — the
       // simAdcRerank read path INCLUDING its derived beam rule, applied
-      // per qid (min(C, max(floor, k·bitlen(C))) over that query's
-      // candidate pool; the r14 review's fixed-50 drift finding); its
-      // dominance over ivfadc_raw is structural — the beam holds the ADC
-      // top-10 since bw >= floor >= k
-      val bwq = candR.groupBy("qid").agg(count(lit(1)).as("cq"))
-        .select(col("qid"), least(col("cq"),
-          greatest(lit(RerankBeamFloor.toLong),
-            lit(RerankK.toLong) * length(bin(col("cq"))))).as("bw"))
-      val rkb = arS.join(broadcast(bwq), Seq("qid"))
-        .filter(col("rr") <= col("bw")).select("qid", "vec_id")
+      // per qid (the r14 review's fixed-50 drift finding); its dominance
+      // over ivfadc_raw is structural — the beam holds the ADC top-10
+      // since bw >= floor >= k
+      val rkb = derivedBeam(arS.select("qid", "vec_id", "score"), beamWidths(candR))
         .join(emb(spark, dir).select(col("vec_id"), col("embedding")), "vec_id")
         .join(broadcast(qs), "qid")
         .select(col("qid"), col("vec_id"), dot(col("embedding"), col("qv")).as("s"))
         .withColumn("rr2", row_number().over(wq.orderBy(col("s").desc, col("vec_id"))))
         .filter(col("rr2") <= 10).select("qid", "vec_id")
-      val res = ivfResiduals(spark, dir)
-      val rsub = res.select(col("vec_id"), explode(array((0 until PqM).map(m =>
-        struct(lit(m).as("m"), slice(col("rv"), m * PqSub + 1, PqSub).as("sv"))): _*)).as("x"))
-        .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-      val encRes = encWide(rsub, resBook)
-      val lutRes = qprobe.filter(col("rn") <= 3)
-        .select(col("qid"), col("cell"), explode(array((0 until PqM).map(m =>
-          struct(lit(m).as("m"),
-            zip_with(slice(col("qv"), m * PqSub + 1, PqSub),
-              slice(col("ccv"), m * PqSub + 1, PqSub),
-              (x, y) => x.cast(DoubleType) - y.cast(DoubleType)).as("qsv"))): _*)).as("x"))
-        .select(col("qid"), col("cell"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-        .join(resBook, Seq("m"))
-        .select(col("qid"), col("cell"), col("m"), col("code"),
-          aggregate(zip_with(col("qsv"), col("cv"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, v) => acc + v).as("qd"))
-      val rrTop = adcTop(candR, encRes, lutRes, Seq("qid", "cell"))
-      def recallOf(name: String, ids: DataFrame): DataFrame =
-        ids.join(ex, Seq("qid", "vec_id"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(name).as("method"), lit(8L).as("n_queries"), lit(10L).as("k"),
-            col("hits"),
-            round(col("hits").cast(DoubleType) / 80.0, 6).as("mean_recall_r"))
-      recallOf("ivf_probe1", probedTop(1))
-        .unionAll(recallOf("ivf_probe3", probedTop(3)))
-        .unionAll(recallOf("ivfadc_raw", ar))
-        .unionAll(recallOf("ivfadc_rerank", rkb))
-        .unionAll(recallOf("ivfadc_residual", rrTop))
+      val encRes = pqEncode(pqSplit(ivfResiduals(spark, dir).select("vec_id", "rv"), "rv"),
+        resBook)
+      val rrTop = adcRanked(candR, encRes, resLut(qs, seededCents(spark, dir), resBook),
+          Seq("qid", "cell"))
+        .filter(col("rr") <= 10).select("qid", "vec_id")
+      Seq("ivf_probe1" -> probedTop(1), "ivf_probe3" -> probedTop(3), "ivfadc_raw" -> ar,
+          "ivfadc_rerank" -> rkb, "ivfadc_residual" -> rrTop)
+        .map { case (name, ids) => recallHits(name, ids, ex, Seq("qid", "vec_id")) }
+        .reduce(_ unionAll _)
+        .select(col("method"), lit((QHi - QLo).toLong).as("n_queries"), lit(10L).as("k"),
+          col("hits"),
+          round(col("hits").cast(DoubleType) / (10.0 * (QHi - QLo)), 6).as("mean_recall_r"))
         .orderBy("method")
     }
   }
@@ -2248,13 +2127,10 @@ object Similarity {
     * queries (codes + scalars only, the books/LUTs broadcast); the
     * per-(probes, qid) rank windows carry (id, scalar) rows. */
   val simAnnFrontier: QueryDef = {
-    val sq16d = (a: String, b: String) => s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> ($a[i] - $b[i]) * ($a[i] - $b[i])),
-           (x, y) -> x + y)"""
     QueryDef(
       "sim_ann_frontier",
       Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      WITH $msSql,
       cents AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
       qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id >= $QLo AND vec_id < $QHi),
       ex AS (
@@ -2273,31 +2149,12 @@ object Similarity {
                row_number() OVER (PARTITION BY q.qid
                  ORDER BY ${dotSql("q.qv", "c.cv")} - 1e-12 * c.cid DESC) AS rn
         FROM qs q, cents c),
-      sub AS (
-        SELECT e.vec_id, ms.m,
-               list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
-        FROM embeddings e, ms),
-      pb0 AS (
-        SELECT ms.m, CAST(c.vec_id AS BIGINT) AS code,
-               list_transform(list_slice(c.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub),
-                 x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings c, ms WHERE c.vec_id < $PqK),
-      ${pqRoundsSql("p", "sub", "pb0")},
-      enc_raw AS (
-        SELECT vec_id,
-               max(CASE WHEN m = 0 THEN code END) AS code0,
-               max(CASE WHEN m = 1 THEN code END) AS code1,
-               max(CASE WHEN m = 2 THEN code END) AS code2,
-               max(CASE WHEN m = 3 THEN code END) AS code3
-        FROM (
-          SELECT s.vec_id, s.m,
-                 arg_min(b.code, ${sq16d("list_transform(s.sv, x -> CAST(x AS DOUBLE))", "b.cv")} + 1e-12 * b.code) AS code
-          FROM sub s JOIN pb$PqTrainRounds b ON s.m = b.m
-          GROUP BY s.vec_id, s.m, s.sv)
-        GROUP BY vec_id),
+      $rawBookChainSql,
+      enc_raw AS (${encWideSql("sub", s"pb$PqTrainRounds",
+        sqSubSqlD("list_transform(s.sv, x -> CAST(x AS DOUBLE))", "b.cv"))}),
       lut_raw AS (
         SELECT q.qid, b.m, b.code,
-               ${sq16d(s"list_transform(list_slice(q.qv, b.m * $PqSub + 1, b.m * $PqSub + $PqSub), x -> CAST(x AS DOUBLE))", "b.cv")} AS qd
+               ${sqSubSqlD(s"list_transform(list_slice(q.qv, b.m * $PqSub + 1, b.m * $PqSub + $PqSub), x -> CAST(x AS DOUBLE))", "b.cv")} AS qd
         FROM qs q, pb$PqTrainRounds b),
       sc AS (
         SELECT p.qid, a.vec_id, p.rn AS crank,
@@ -2332,51 +2189,25 @@ object Similarity {
     """)) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
       val wq = Window.partitionBy("qid")
-      val qs = emb(spark, dir).filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val qs = heldOutQueries(emb(spark, dir), emb(spark, dir).count())
       val ex = serveExqMart(spark, dir)
         .select(col("xq"), col("xt").as("xv"))
-      val qprobe = qs.crossJoin(broadcast(ivfCentroids(spark, dir)))
-        .select(col("qid"), col("qv"), explode(col("cents")).as("c"))
-        .select(col("qid"), col("c.cent_id").as("pcell"),
-          (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("scp"))
-        .withColumn("crank", row_number().over(wq.orderBy(col("scp").desc)))
-        .select(col("qid").as("cqid"), col("pcell"), col("crank"))
       val rawBook = bookDf(spark, convergedRawBook(spark, dir))
-      val encRaw = rawSub(spark, dir).crossJoin(broadcast(pqBookRow(rawBook)))
-        .select(col("vec_id"), col("m"), pqBookBest("code").as("code"))
-        .groupBy("vec_id")
-        .agg((0 until PqM).map(m =>
-          max(when(col("m") === m, col("code"))).as(s"code$m")).head,
-          (1 until PqM).map(m =>
-            max(when(col("m") === m, col("code"))).as(s"code$m")): _*)
-      val qsub = qs.select(col("qid"), explode(array((0 until PqM).map(m =>
-          struct(lit(m).as("m"), slice(col("qv"), m * PqSub + 1, PqSub).as("qsv"))): _*)).as("x"))
-        .select(col("qid"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-      val lutRaw = qsub.join(rawBook, Seq("m"))
-        .select(col("qid"), col("m"), col("code"),
-          aggregate(zip_with(col("qsv"), col("cv"),
-            (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-            lit(0.0), (acc, v) => acc + v).as("qd"))
       // every (qid, vec) pair with the vector's cell RANK for that query —
       // the probes-8 row makes this the full corpus ×8, deliberately
       val sc0 = ivfAssigned(spark, dir)
-        .join(broadcast(qprobe), col("cell") === col("pcell"))
-        .select(col("cqid").as("qid"), col("vec_id"), col("crank"))
-      val scored = (0 until PqM).foldLeft(sc0.join(encRaw, "vec_id")) { (df, m) =>
-        val l = lutRaw.filter(col("m") === m)
-          .select(col("qid").as(s"qid_$m"), col("code").as(s"lcode$m"),
-            col("qd").as(s"qd$m"))
-        df.join(broadcast(l),
-          col("qid") === col(s"qid_$m") && col(s"code$m") === col(s"lcode$m"))
-      }.select(col("qid"), col("vec_id"), col("crank"),
-        (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _).as("adc"))
+        .join(broadcast(seededCellRank(spark, dir, qs)
+          .select(col("qid"), col("cell").as("pcell"), col("rn").as("crank"))),
+          col("cell") === col("pcell"))
+        .select(col("qid"), col("vec_id"), col("crank"))
+      val scored = adcSum(sc0.join(pqEncode(rawSub(spark, dir), rawBook), "vec_id"),
+        pqLut(qs, rawBook), Seq("qid", "m", "code"))
       val s2 = spark
       import s2.implicits._
       val pool = scored.crossJoin(broadcast(Seq(1, 2, 4, 8).toDF("p")))
         .filter(col("crank") <= col("p"))
         .withColumn("rk", row_number().over(
-          Window.partitionBy("p", "qid").orderBy(col("adc"), col("vec_id"))))
+          Window.partitionBy("p", "qid").orderBy(col("score"), col("vec_id"))))
       val beams = spark.createDataFrame(
         java.util.Arrays.asList(
           org.apache.spark.sql.Row("b010", Integer.valueOf(10)),
@@ -2596,7 +2427,7 @@ object Similarity {
     * Emits CTEs ve/mstats/varq/ord/alloc plus `$mapName(pos, dim0)`. */
   private def varqAllocSql(vecCol: String, src: String, mapName: String): String =
     s"""ve AS (
-        SELECT unnest(range(0, 64)) AS dim, unnest($vecCol) AS v FROM $src),
+        SELECT unnest(range(0, $EmbDim)) AS dim, unnest($vecCol) AS v FROM $src),
       mstats AS (
         SELECT dim,
                CAST(sum(CAST(floor(CAST(v AS DOUBLE) * 10000000.0) AS BIGINT)) AS BIGINT) AS s1,
@@ -2626,8 +2457,8 @@ object Similarity {
                      list_transform(range(1, ${PqM + 1}), i -> CASE WHEN g.cnts[i] >= $PqSub THEN NULL ELSE g.sums[i] END),
                      list_min(list_transform(range(1, ${PqM + 1}), i -> CASE WHEN g.cnts[i] >= $PqSub THEN NULL ELSE g.sums[i] END))) AS INTEGER) AS b
             FROM g JOIN ord o ON o.rk = g.step
-            WHERE g.step < 64) s)
-        SELECT bins FROM g WHERE step = 64),
+            WHERE g.step < $EmbDim) s)
+        SELECT bins FROM g WHERE step = $EmbDim),
       $mapName AS (
         SELECT row_number() OVER (ORDER BY a.bins[o.rk + 1], o.rk) AS pos, o.dim AS dim0
         FROM ord o, alloc a),"""
@@ -2650,7 +2481,7 @@ object Similarity {
     * a map-side `transform`, the 8-codeword frame broadcasts, and the
     * rollup sums (vec_id, micro) longs — one pass per candidate layout. */
   val simPqDimLayout: QueryDef = {
-    val layouts = Seq(("identity", "i"), ("stride17", "((i * 17 - 17) % 64) + 1"))
+    val layouts = Seq(("identity", "i"), ("stride17", s"((i * 17 - 17) % $EmbDim) + 1"))
     val blocks = layouts.map { case (label, perm) =>
       val dcols = (0 until PqM)
         .map(m => s"${pqSubSqSql("pe.pv", "pc.pv", m)} AS d$m")
@@ -2658,7 +2489,7 @@ object Similarity {
       val mins = (0 until PqM).map(m => s"min(d$m) AS m$m").mkString(", ")
       val tot = (0 until PqM).map(m => s"m$m").mkString(" + ")
       s"""${label}_pe AS (
-        SELECT vec_id, list_transform(range(1, 65), i -> embedding[$perm]) AS pv
+        SELECT vec_id, list_transform(range(1, ${EmbDim + 1}), i -> embedding[$perm]) AS pv
         FROM embeddings),
       ${label}_pc AS (SELECT vec_id, pv FROM ${label}_pe WHERE vec_id < 8),
       ${label}_d AS (
@@ -2682,7 +2513,7 @@ object Similarity {
       ORDER BY layout
     """)) { (spark, dir) =>
       def layoutDist(label: String, perm: Column => Column): DataFrame = {
-        val pv = transform(sequence(lit(1), lit(64)),
+        val pv = transform(sequence(lit(1), lit(EmbDim)),
           i => element_at(col("embedding"), perm(i)))
         val pe = emb(spark, dir).select(col("vec_id"), pv.as("pv"))
         val pc = pe.filter(col("vec_id") < 8)
@@ -2701,7 +2532,7 @@ object Similarity {
               / col("n_vectors").cast(DoubleType) / 1000000.0, 6).as("mean_r"))
       }
       layoutDist("identity", i => i)
-        .unionAll(layoutDist("stride17", i => ((i * 17 - 17) % 64) + 1))
+        .unionAll(layoutDist("stride17", i => ((i * 17 - 17) % EmbDim) + 1))
         .orderBy("layout")
     }
   }
@@ -2798,11 +2629,9 @@ object Similarity {
     * vector in any shuffle anywhere. */
   val simOpqLearned: QueryDef = {
     def layoutBlock(l: String): String = {
-      val sq = s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> (CAST(s.sv[i] AS DOUBLE) - b.cv[i]) * (CAST(s.sv[i] AS DOUBLE) - b.cv[i])),
-           (x, y) -> x + y)"""
+      val sq = sqSubSql("s.sv", "b.cv")
       s"""${l}_pe AS (
-        SELECT e.vec_id, list_transform(range(1, 65), i -> e.embedding[p.pm[i]]) AS pv
+        SELECT e.vec_id, list_transform(range(1, ${EmbDim + 1}), i -> e.embedding[p.pm[i]]) AS pv
         FROM embeddings e, ${l}_perm p),
       ${l}_sub AS (
         SELECT pe.vec_id, ms.m,
@@ -2834,12 +2663,12 @@ object Similarity {
     QueryDef(
       "sim_opq_learned",
       Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      WITH $msSql,
       ${varqAllocSql("embedding", "embeddings", "learned_map")}
-      identity_map AS (SELECT unnest(range(1, 65)) AS pos, unnest(range(0, 64)) AS dim0),
+      identity_map AS (SELECT unnest(range(1, ${EmbDim + 1})) AS pos, unnest(range(0, $EmbDim)) AS dim0),
       stride17_map AS (
-        SELECT unnest(range(1, 65)) AS pos,
-               unnest(list_transform(range(1, 65), i -> (i * 17 - 17) % 64)) AS dim0),
+        SELECT unnest(range(1, ${EmbDim + 1})) AS pos,
+               unnest(list_transform(range(1, ${EmbDim + 1}), i -> (i * 17 - 17) % $EmbDim)) AS dim0),
       identity_perm AS (SELECT list(dim0 + 1 ORDER BY pos) AS pm FROM identity_map),
       stride17_perm AS (SELECT list(dim0 + 1 ORDER BY pos) AS pm FROM stride17_map),
       learned_perm AS (SELECT list(dim0 + 1 ORDER BY pos) AS pm FROM learned_map),
@@ -2857,20 +2686,14 @@ object Similarity {
       val varq = dimVarianceQ(spark, dir)
       val varqMap = varq.toMap
       val learned = opqGreedyPerm(varq)
-      val identity = (1 to 64).toSeq
-      val stride17 = (1 to 64).map(i => ((i * 17 - 17) % 64) + 1)
+      val identity = (1 to EmbDim).toSeq
+      val stride17 = (1 to EmbDim).map(i => ((i * 17 - 17) % EmbDim) + 1)
       val n = emb(spark, dir).count()
       def eval(label: String, perm: Seq[Int]): (String, Long, Long, Long) = {
         val pe = emb(spark, dir).select(col("vec_id"),
           array(perm.map(p => col("embedding")(p - 1)): _*).as("pv"))
-        val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-          slice(col("pv"), m * PqSub + 1, PqSub).as("sv")))
-        val sub = pe.select(col("vec_id"), explode(array(subs: _*)).as("x"))
-          .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-        val seed = pe.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("code"), explode(array(subs: _*)).as("x"))
-          .select(col("x.m").as("m"), col("code").cast(LongType).as("code"),
-            col("x.sv").cast(ArrayType(DoubleType)).as("cv"))
+        val sub = pqSplit(pe, "pv")
+        val seed = pqSeedBook(pe.filter(col("vec_id") < 8), "pv")
         // all three layout rungs train their own 8-code book under a
         // layout-scoped memo key: the round-13 reuse of convergedRawBook
         // for the identity rung became invalid when the served book
@@ -2917,7 +2740,7 @@ object Similarity {
     * order, bit-identical on both engines. */
   private def opqMixed(spark: SparkSession, dir: String): DataFrame = {
     val e = col("embedding")
-    val cols = (0 until 64).map { p =>
+    val cols = (0 until EmbDim).map { p =>
       if (p < 32)
         (lit(3.0) * e(p).cast(DoubleType) + e(p + 32).cast(DoubleType)) / lit(4.0)
       else
@@ -3079,9 +2902,7 @@ object Similarity {
         'o': c.o,
         'cn': (1000000 * (c.q * c.q - c.p * c.p)) // (c.q * c.q + c.p * c.p),
         'sn': (1000000 * 2 * c.p * c.q) // (c.q * c.q + c.p * c.p)}))"""
-    val sq = s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> (CAST(s.sv[i] AS DOUBLE) - b.cv[i]) * (CAST(s.sv[i] AS DOUBLE) - b.cv[i])),
-           (x, y) -> x + y)"""
+    val sq = sqSubSql("s.sv", "b.cv")
     def rungBlock(l: String, label: String, src: String): String =
       s"""${l}_sub AS (
         SELECT pe.vec_id, ms.m, list_slice(pe.pv, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
@@ -3102,9 +2923,9 @@ object Similarity {
     QueryDef(
       "sim_opq_rotation",
       Some(s"""
-      WITH RECURSIVE ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      WITH RECURSIVE $msSql,
       mx AS MATERIALIZED (
-        SELECT vec_id, list_transform(range(1, 65), i ->
+        SELECT vec_id, list_transform(range(1, ${EmbDim + 1}), i ->
           CASE WHEN i <= 32
                THEN (3 * CAST(embedding[i] AS DOUBLE) + CAST(embedding[i + 32] AS DOUBLE)) / 4
                ELSE (CAST(embedding[i - 32] AS DOUBLE) + 3 * CAST(embedding[i] AS DOUBLE)) / 4 END) AS pv
@@ -3140,14 +2961,14 @@ object Similarity {
       jfin AS MATERIALIZED (SELECT cl, rl FROM jac ORDER BY it DESC LIMIT 1),
       rot AS MATERIALIZED (
         SELECT q.vec_id,
-               list_transform(range(0, 64), p ->
-                 CAST(list_reduce(list_transform(range(1, 65), d -> f.rl[p * 64 + d] * q.q[d]),
+               list_transform(range(0, $EmbDim), p ->
+                 CAST(list_reduce(list_transform(range(1, ${EmbDim + 1}), d -> f.rl[p * 64 + d] * q.q[d]),
                         (a, b) -> a + b) AS DOUBLE) / 1000000000.0) AS pv
         FROM qz q, jfin f),
       ${varqAllocSql("pv", "mx", "perm_map")}
       permlist AS (SELECT list(dim0 + 1 ORDER BY pos) AS pm FROM perm_map),
       mxp AS MATERIALIZED (
-        SELECT m.vec_id, list_transform(range(1, 65), i -> m.pv[p.pm[i]]) AS pv
+        SELECT m.vec_id, list_transform(range(1, ${EmbDim + 1}), i -> m.pv[p.pm[i]]) AS pv
         FROM mx m, permlist p),
       ${rungBlock("rid", "identity", "mx")},
       ${rungBlock("rpm", "permuted", "mxp")},
@@ -3240,18 +3061,13 @@ object Similarity {
       // (the r19 What's-wrong #1 load-elasticity fix).
       val rungs = Seq(("identity", mixed, 0), ("permuted", permuted, 1),
         ("rotated", rotated, 2))
-      def subsOf(rung: Int) = (0 until PqM).map(m =>
-        struct(lit(rung * PqM + m).as("m"),
-          slice(col("pv"), m * PqSub + 1, PqSub).as("sv")))
+      def rungM(df: DataFrame, rung: Int): DataFrame =
+        df.withColumn("m", col("m") + lit(rung * PqM))
       val subAll = rungs.map { case (_, pv, r) =>
-        pv.select(col("vec_id"), explode(array(subsOf(r): _*)).as("x"))
-          .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
+        rungM(pqSplit(pv.select("vec_id", "pv"), "pv"), r)
       }.reduce(_.union(_)).localCheckpoint(true)
       val seedAll = rungs.map { case (_, pv, r) =>
-        pv.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("code"), explode(array(subsOf(r): _*)).as("x"))
-          .select(col("x.m").as("m"), col("code").cast(LongType).as("code"),
-            col("x.sv").cast(ArrayType(DoubleType)).as("cv"))
+        rungM(pqSeedBook(pv.filter(col("vec_id") < 8), "pv"), r)
       }.reduce(_.union(_))
       val recs = memoBook(spark, dir, "oprot_joint") {
         trainSubspaceBook(spark, subAll, seedAll)
@@ -3302,9 +3118,6 @@ object Similarity {
     * scalars shuffled, books broadcast — the k*·M·16 codeword frame is
     * still counter-scale at k* = 256), one corpus ADC pass per size. */
   val simPqCodebookSize: QueryDef = {
-    val sqss = (a: String, b: String) => s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> (CAST($a[i] AS DOUBLE) - $b[i]) * (CAST($a[i] AS DOUBLE) - $b[i])),
-           (x, y) -> x + y)"""
     def kblock(l: String, k: Int): String =
       s"""${l}_s0 AS (
         SELECT ms.m, CAST(e.vec_id AS BIGINT) AS code,
@@ -3314,29 +3127,19 @@ object Similarity {
       ${pqRoundsSql(l, "sub", s"${l}_s0")},
       ${l}_seedd AS (
         SELECT CAST(sum(micro) AS BIGINT) AS seed_micro FROM (
-          SELECT s.vec_id, CAST(floor(min(${sqss("s.sv", "b.cv")} + 1e-12 * b.code) * 1000000.0) AS BIGINT) AS micro
+          SELECT s.vec_id, CAST(floor(min(${sqSubSql("s.sv", "b.cv")} + 1e-12 * b.code) * 1000000.0) AS BIGINT) AS micro
           FROM sub s JOIN ${l}_s0 b ON s.m = b.m
           GROUP BY s.vec_id, s.m, s.sv) x),
       ${l}_traind AS (
         SELECT CAST(sum(micro) AS BIGINT) AS trained_micro FROM (
-          SELECT s.vec_id, CAST(floor(min(${sqss("s.sv", "b.cv")} + 1e-12 * b.code) * 1000000.0) AS BIGINT) AS micro
+          SELECT s.vec_id, CAST(floor(min(${sqSubSql("s.sv", "b.cv")} + 1e-12 * b.code) * 1000000.0) AS BIGINT) AS micro
           FROM sub s JOIN ${l}b$PqTrainRounds b ON s.m = b.m
           GROUP BY s.vec_id, s.m, s.sv) x),
-      ${l}_enc AS MATERIALIZED (
-        SELECT vec_id,
-               max(CASE WHEN m = 0 THEN code END) AS code0,
-               max(CASE WHEN m = 1 THEN code END) AS code1,
-               max(CASE WHEN m = 2 THEN code END) AS code2,
-               max(CASE WHEN m = 3 THEN code END) AS code3
-        FROM (
-          SELECT s.vec_id, s.m,
-                 arg_min(b.code, ${sqss("s.sv", "b.cv")} + 1e-12 * b.code) AS code
-          FROM sub s JOIN ${l}b$PqTrainRounds b ON s.m = b.m
-          GROUP BY s.vec_id, s.m, s.sv)
-        GROUP BY vec_id),
+      ${l}_enc AS MATERIALIZED (${encWideSql("sub", s"${l}b$PqTrainRounds",
+        sqSubSql("s.sv", "b.cv"))}),
       ${l}_lut AS MATERIALIZED (
         SELECT q.qid, b.m, b.code,
-               ${sqss(s"list_slice(q.qv, b.m * $PqSub + 1, b.m * $PqSub + $PqSub)", "b.cv")} AS qd
+               ${sqSubSql(s"list_slice(q.qv, b.m * $PqSub + 1, b.m * $PqSub + $PqSub)", "b.cv")} AS qd
         FROM qs q, ${l}b$PqTrainRounds b),
       ${l}_beam AS (
         SELECT qid, vec_id FROM (
@@ -3356,15 +3159,8 @@ object Similarity {
     QueryDef(
       "sim_pq_codebook_size",
       Some(s"""
-      WITH ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
-      qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id >= $QLo AND vec_id < $QHi),
-      ex AS MATERIALIZED (
-        SELECT qid, vec_id FROM (
-          SELECT q.qid, e.vec_id,
-                 row_number() OVER (PARTITION BY q.qid
-                   ORDER BY ${dotSql("e.embedding", "q.qv")} DESC, e.vec_id) AS rn
-          FROM embeddings e, qs q)
-        WHERE rn <= 10),
+      WITH $msSql,
+      $qsExSql,
       sub AS MATERIALIZED (
         SELECT e.vec_id, ms.m,
                list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
@@ -3384,28 +3180,19 @@ object Similarity {
       import s2.implicits._
       import org.apache.spark.sql.expressions.Window
       val wq = Window.partitionBy("qid")
+      val n = emb(spark, dir).count()
+      val qs = heldOutQueries(emb(spark, dir), n)
       // one (vec_id, m, sv) stream feeds every seed/train/encode/distortion
       // pass across all three sizes — checkpoint once
       val sub = rawSub(spark, dir).localCheckpoint(true)
-      val n = emb(spark, dir).count()
-      val qs = emb(spark, dir).filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val ex = serveExqMart(spark, dir)
         .select(col("xq"), col("xt").as("xv"))
-      val qsub = qs.select(col("qid"), explode(array((0 until PqM).map(m =>
-          struct(lit(m).as("m"), slice(col("qv"), m * PqSub + 1, PqSub).as("qsv"))): _*)).as("x"))
-        .select(col("qid"), col("x.m").as("m"), col("x.qsv").as("qsv"))
       // the three codebook sizes are independent given the shared sub
       // stream and the memoized books (training runs outside the memo
       // lock) — run them concurrently so the per-rung action chains
       // back-fill the executors (guide §2.6)
       def rung(k: Int): (Long, Long, Long, Long) = {
-        val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-          slice(col("embedding"), m * PqSub + 1, PqSub).as("sv")))
-        val seed = emb(spark, dir).filter(col("vec_id") < k)
-          .select(col("vec_id").as("code"), explode(array(subs: _*)).as("x"))
-          .select(col("x.m").as("m"), col("code").cast(LongType).as("code"),
-            col("x.sv").cast(ArrayType(DoubleType)).as("cv"))
+        val seed = pqSeedBook(emb(spark, dir).filter(col("vec_id") < k), "embedding")
         val recs =
           if (k == PqK) convergedRawBook(spark, dir) // value-identical seeds: the SERVED book
           else memoBook(spark, dir, s"booksize_$k") {
@@ -3414,30 +3201,9 @@ object Similarity {
         val book = bookDf(spark, recs)
         val seedMicro = bookDistortionMicro(spark, sub, seed)
         val trainedMicro = bookDistortionMicro(spark, sub, book)
-        val enc = sub.crossJoin(broadcast(pqBookRow(book)))
-          .select(col("vec_id"), col("m"), pqBookBest("code").as("code"))
-          .groupBy("vec_id")
-          .agg((0 until PqM).map(m =>
-            max(when(col("m") === m, col("code"))).as(s"code$m")).head,
-            (1 until PqM).map(m =>
-              max(when(col("m") === m, col("code"))).as(s"code$m")): _*)
-        val lut = qsub.join(book, Seq("m"))
-          .select(col("qid"), col("m"), col("code"),
-            aggregate(zip_with(col("qsv"), col("cv"),
-              (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-              lit(0.0), (acc, v) => acc + v).as("qd"))
-        val scored = (0 until PqM).foldLeft(
-            qs.select(col("qid").as("bq")).crossJoin(enc)) { (df, m) =>
-          val l = lut.filter(col("m") === m)
-            .select(col("qid").as(s"qid_$m"), col("code").as(s"lcode$m"),
-              col("qd").as(s"qd$m"))
-          df.join(broadcast(l),
-            col("bq") === col(s"qid_$m") && col(s"code$m") === col(s"lcode$m"))
-        }
-        val hits = scored
-          .select(col("bq").as("qid"), col("vec_id"),
-            (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _).as("adc"))
-          .withColumn("rk", row_number().over(wq.orderBy(col("adc"), col("vec_id"))))
+        val hits = adcSum(qs.select("qid").crossJoin(pqEncode(sub, book)), pqLut(qs, book),
+            Seq("qid", "m", "code"))
+          .withColumn("rk", row_number().over(wq.orderBy(col("score"), col("vec_id"))))
           .filter(col("rk") <= 200)
           .join(broadcast(ex), col("qid") === col("xq") && col("vec_id") === col("xv"))
           .count()
@@ -3555,9 +3321,7 @@ object Similarity {
   private val serveHarnessDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_serve_qsc", Nil, mart = true) { (s, d, _) =>
       val e0 = emb(s, d).select(col("vec_id"), col("embedding"))
-      val qs0 = e0.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      e0.crossJoin(broadcast(qs0))
+      e0.crossJoin(broadcast(heldOutWindow(e0)))
         .select(col("qid"), col("vec_id").as("t"),
           dot(col("embedding"), col("qv")).as("score"))
     },
@@ -3581,22 +3345,31 @@ object Similarity {
     graft.pipeline.MartCache.read(spark, dir, serveHarnessDag, "svh_marts",
       "graft_svh_", Seq("embeddings"), "mart_serve_exq").head
 
+  /** The held-out query frame (qid, qv, `extra`…) of a corpus frame
+    * `e`(vec_id, embedding, …): rows vec_id ∈ [[[QLo]], [[QHi]]). */
+  private def heldOutWindow(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
+      .select(Seq(col("vec_id").as("qid"), col("embedding").as("qv")) ++ extra: _*)
+
+  /** [[heldOutWindow]] behind THE held-out guard, given the caller's
+    * corpus count `n`: every recall gate hardcodes the window and its
+    * 10·|Q| denominators, so a corpus of fewer than [[QHi]] vectors would
+    * emit a silently meaningless (or empty-query) metric — it fails here
+    * instead, with one message for every gate. */
+  private def heldOutQueries(e: DataFrame, n: Long, extra: Column*): DataFrame = {
+    require(n >= QHi,
+      s"the recall harness needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
+    heldOutWindow(e, extra: _*)
+  }
+
   /** Shared Spark frames for the recall harness: checkpointed corpus,
-    * held-out queries, and the EXACT top-10 as (xq, xt) — the referee
-    * now read from the standing [[serveHarnessDag]] mart instead of
-    * being rebuilt per gate. Guards n ≥ 24: the harness
-    * hardcodes the [[QLo]]..[[QHi]]-1 window and fixed recall denominators, and a
-    * smaller corpus would emit a silently meaningless (or empty-query)
-    * metric (the [[simGraphServe]] guard convention). */
+    * guarded held-out queries ([[heldOutQueries]]), and the EXACT top-10
+    * as (xq, xt) — the referee read from the standing
+    * [[serveHarnessDag]] mart instead of being rebuilt per gate. */
   private def heldOutHarness(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, Long) = {
     val e = emb(spark, dir).select(col("vec_id"), col("embedding")).localCheckpoint(true)
     val n = e.count()
-    require(n >= QHi,
-      s"the recall harness needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
-    val qs = e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val ex = serveExqMart(spark, dir)
-    (e, qs, ex, n)
+    (e, heldOutQueries(e, n), serveExqMart(spark, dir), n)
   }
 
   /** THE held-out audit stat: a (qid, vec_id) pool's row count and how
@@ -3676,13 +3449,14 @@ object Similarity {
                arg_min(c.cent_id, ${dotSql("c.cv", "c.cv")} - 2 * ${dotSql("e.embedding", "c.cv")} + 1e-12 * c.cent_id) AS cell
         FROM $src e, $cents c GROUP BY e.vec_id, e.embedding"""
 
-  /** Per-query derived-beam widths of a (qid, …) pool: (qid, cq, bw1) —
-    * the Spark twin of [[bwAggSql]], ONE definition for every
-    * beam-carrying gate. */
-  private def beamWidths(cand: DataFrame): DataFrame =
-    cand.groupBy("qid").agg(count(lit(1)).as("cq"))
-      .select(col("qid"), col("cq"), greatest(lit(RerankBeamFloor.toLong),
-        lit(RerankK.toLong) * length(bin(col("cq")))).as("bw1"))
+  /** Derived-beam widths of a pool per `part` group (the query by
+    * default): (part…, cq, bw1) — the Spark twin of [[bwAggSql]], ONE
+    * definition for every beam-carrying gate; the operative width is
+    * least(cq, mult·bw1). */
+  private def beamWidths(cand: DataFrame, part: Seq[String] = Seq("qid")): DataFrame =
+    cand.groupBy(part.map(col): _*).agg(count(lit(1)).as("cq"))
+      .select(part.map(col) ++ Seq(col("cq"), greatest(lit(RerankBeamFloor.toLong),
+        lit(RerankK.toLong) * length(bin(col("cq")))).as("bw1")): _*)
 
   /** The ADC-ranked derived beam: rank `adc`(qid, vec_id, score)
     * ascending per query, keep rk ≤ min(cq, mult·bw1) against the
@@ -3700,14 +3474,8 @@ object Similarity {
     * code), cell carried so serve-side LUT joins need no second
     * assignment lookup. ONE definition for the two persisted code-table
     * builders and [[simBookAppend]]'s re-encode arm. */
-  private def resCodes(res: DataFrame, book: DataFrame): DataFrame = {
-    val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-      slice(col("rv"), m * PqSub + 1, PqSub).as("sv")))
-    res.select(col("vec_id"), col("cell"), explode(array(subs: _*)).as("x"))
-      .select(col("vec_id"), col("cell"), col("x.m").as("m"), col("x.sv").as("sv"))
-      .crossJoin(broadcast(pqBookRow(book)))
-      .select(col("vec_id"), col("cell"), col("m"), pqBookBest("code").as("code"))
-  }
+  private def resCodes(res: DataFrame, book: DataFrame): DataFrame =
+    pqEncode(pqSplit(res.select("vec_id", "cell", "rv"), "rv"), book)
 
   /** Converged residual-vs-coarse book records: the subvector stream and
     * seeds come from [[res32Frame]]'s residuals against the CALLER's
@@ -3726,15 +3494,8 @@ object Similarity {
       coarseTag: String): Seq[(Int, Long, Seq[Double], Long, Long)] =
     memoBook(spark, dir, s"res32:$coarseTag") {
       val res = res32Frame(spark, dir, cents, assign).localCheckpoint(true)
-      val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-        slice(col("rv"), m * PqSub + 1, PqSub).as("sv")))
-      val rsub = res.select(col("vec_id"), explode(array(subs: _*)).as("x"))
-        .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-      val seed = res.filter(col("vec_id") < PqK)
-        .select(col("vec_id").cast(LongType).as("code"),
-          explode(array(subs: _*)).as("x"))
-        .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv"))
-      val out = trainSubspaceBook(spark, rsub, seed)
+      val out = trainSubspaceBook(spark, pqSplit(res.select("vec_id", "rv"), "rv"),
+        pqSeedBook(res.filter(col("vec_id") < PqK), "rv"))
       core.release(res)
       out
     }
@@ -3783,10 +3544,7 @@ object Similarity {
     graft.pipeline.ModelDef("mart_ann_codes64", Seq("mart_ann_book64"),
         mart = true) { (s, d, built) =>
       // the corpus encode under the served book — the index's code table
-      rawSub(s, d)
-        .crossJoin(broadcast(pqBookRow(
-          built("mart_ann_book64").select(col("m"), col("code"), col("cv")))))
-        .select(col("vec_id"), col("m"), pqBookBest("code").as("code"))
+      pqEncode(rawSub(s, d), built("mart_ann_book64").select(col("m"), col("code"), col("cv")))
     },
     graft.pipeline.ModelDef("mart_ann_book64r",
         Seq("mart_ann_cents32", "mart_ann_assign32"), mart = true) { (s, d, built) =>
@@ -3824,14 +3582,6 @@ object Similarity {
     (annIndexMart(spark, dir, "mart_ann_assign32"),
       cellRankOf(annIndexMart(spark, dir, "mart_ann_cents32"), qs))
 
-  /** Squared L2 over [[PqSub]]-long list slices (CAST-to-double on the
-    * left leg, no-op on double inputs) — the oracle fragment every
-    * ADC/encode CTE shares. */
-  private def sqSubSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(range(1, ${PqSub + 1}),
-           i -> (CAST($a[i] AS DOUBLE) - $b[i]) * (CAST($a[i] AS DOUBLE) - $b[i])),
-           (x, y) -> x + y)"""
-
   /** Shared oracle fragment — ONE residual book chain under prefix `p`:
     * residual stream `${p}res` (vs the `cents`/`av` coarse pair),
     * subvector stream `${p}rsub`, training stream `${p}rtsub` (rows
@@ -3844,7 +3594,7 @@ object Similarity {
   private def resChainSql(p: String, av: String, cents: String,
       trainWhere: String, seedWhere: String, seedCode: String): String = s"""${p}res AS MATERIALIZED (
         SELECT e.vec_id, a.cell,
-               list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) - c.cv[i]) AS rv
+               list_transform(range(1, ${EmbDim + 1}), i -> CAST(e.embedding[i] AS DOUBLE) - c.cv[i]) AS rv
         FROM embeddings e JOIN $av a ON a.vec_id = e.vec_id
         JOIN $cents c ON c.cent_id = a.cell),
       ${p}rsub AS (
@@ -3875,7 +3625,7 @@ object Similarity {
     }
     s"""$qresName AS (
         SELECT q.qid, t.cent_id AS cell,
-               list_transform(range(1, 65), i -> CAST(q.qv[$idx] AS DOUBLE) - t.cv[$idx]) AS rqv
+               list_transform(range(1, ${EmbDim + 1}), i -> CAST(q.qv[$idx] AS DOUBLE) - t.cv[$idx]) AS rqv
         FROM qs q, $cents t$fromPerm),
       $lutName AS MATERIALIZED (
         SELECT r.qid, r.cell, b.m, b.code,
@@ -3893,10 +3643,20 @@ object Similarity {
     resChainSql("", "t32av", s"t32c$CellRounds", "1 = 1",
       s"r.vec_id < $PqK", "r.vec_id")
 
-  /** Per-(qid, cell) residual-ADC LUT rows off the served residual book —
-    * the Spark twin of [[res32ChainSql]]'s `rlut`: (qid, cell, m, code,
-    * qd), counter-scale (|Q| · 32 cells · M · [[PqK]] rows), always
-    * broadcast by consumers. */
+  /** THE query LUT: per (…, m, code) the squared L2 ([[pqSq]]) between
+    * the query's subspace-m slice ([[pqSplit]]) and the codeword. `qs`
+    * carries (…, qv) — its other columns key the rows; `book` is (m, code,
+    * cv). Counter-scale (|Q| · M · k* rows), always broadcast by
+    * consumers. */
+  private[graft] def pqLut(qs: DataFrame, book: DataFrame): DataFrame = {
+    val keys = qs.columns.toSeq.filterNot(_ == "qv").map(col)
+    pqSplit(qs, "qv", "qsv").join(book, Seq("m"))
+      .select(keys ++ Seq(col("m"), col("code"), pqSq(col("qsv"), col("cv")).as("qd")): _*)
+  }
+
+  /** The residual-ADC LUT: [[pqLut]] over each query's residual against
+    * every `cents`(cent_id, cv) centroid — (qid, cell, m, code, qd), the
+    * Spark twin of [[res32ChainSql]]'s `rlut`. */
   private def resLut(qs: DataFrame, cents: DataFrame, book: DataFrame,
       perm: Option[Seq[Int]] = None): DataFrame = {
     // optional OPQ layout: the query residual is permuted AFTER the
@@ -3908,29 +3668,20 @@ object Similarity {
         cents.select(col("cent_id").as("cell"), col("cv").as("ccv"))))
       .withColumn("rq0",
         zip_with(col("qv"), col("ccv"), (x, y) => x.cast(DoubleType) - y))
-      .select(col("qid"), col("cell"), layout(col("rq0")).as("rqv"))
-    val qsub = qres.select(col("qid"), col("cell"),
-        explode(array((0 until PqM).map(m => struct(lit(m).as("m"),
-          slice(col("rqv"), m * PqSub + 1, PqSub).as("qsv"))): _*)).as("x"))
-      .select(col("qid"), col("cell"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-    qsub.join(book, Seq("m"))
-      .select(col("qid"), col("cell"), col("m"), col("code"),
-        aggregate(zip_with(col("qsv"), col("cv"),
-          (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-          lit(0.0), (acc, v) => acc + v).as("qd"))
+      .select(col("qid"), col("cell"), layout(col("rq0")).as("qv"))
+    pqLut(qres, book)
   }
 
-  /** ADC score per (qid, vec_id) — the per-subspace LUT lookups summed in
-    * fixed order (the max-per-m pivot both engines replay): `enc` carries
-    * (qid, vec_id, m, code [, cell]), `lut` is joined broadcast on
-    * `joinKey` (must include m and code). */
-  private def adcSum(enc: DataFrame, lut: DataFrame, joinKey: Seq[String]): DataFrame = {
-    val aggs = (0 until PqM).map(m => max(when(col("m") === m, col("qd"))).as(s"qd$m"))
-    enc.join(broadcast(lut), joinKey)
-      .groupBy("qid", "vec_id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("qid"), col("vec_id"),
-        (0 until PqM).map(m => col(s"qd$m")).reduce(_ + _).as("score"))
+  /** THE ADC scorer: per (…) group the per-subspace LUT lookups summed in
+    * fixed order, qd0 + … + qd(M−1) ([[pqWide]] + [[pqTotal]], the
+    * max-per-m pivot both engines replay). `enc` carries (…, m, code),
+    * `lut` (…, m, code, qd) is joined broadcast on `joinKey` (which must
+    * include m and code); every other column of the join keys the score
+    * — (…, score). */
+  private[graft] def adcSum(enc: DataFrame, lut: DataFrame, joinKey: Seq[String]): DataFrame = {
+    val joined = enc.join(broadcast(lut), joinKey)
+    val keys = joined.columns.toSeq.filterNot(Set("m", "code", "qd")).map(col)
+    pqWide(joined, keys, col("qd") -> "qd").select(keys :+ pqTotal("qd").as("score"): _*)
   }
 
   /** Converged residual book of the FROZEN BASE index ([[memoBook]]
@@ -3947,15 +3698,9 @@ object Similarity {
       require(PqK % 4 == 0, s"the closed-form base seed window needs 4 | PqK: $PqK")
       val res = res32Frame(spark, dir, cents, assign)
         .filter(col("vec_id") % 5 < 4).localCheckpoint(true)
-      val subs = (0 until PqM).map(m => struct(lit(m).as("m"),
-        slice(col("rv"), m * PqSub + 1, PqSub).as("sv")))
-      val rsub = res.select(col("vec_id"), explode(array(subs: _*)).as("x"))
-        .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-      val seed = res.filter(col("vec_id") < PqK / 4 * 5)
-        .select(expr("(vec_id div 5) * 4 + vec_id % 5").cast(LongType).as("code"),
-          explode(array(subs: _*)).as("x"))
-        .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv"))
-      val out = trainSubspaceBook(spark, rsub, seed)
+      val out = trainSubspaceBook(spark, pqSplit(res.select("vec_id", "rv"), "rv"),
+        pqSeedBook(res.filter(col("vec_id") < PqK / 4 * 5), "rv",
+          expr("(vec_id div 5) * 4 + vec_id % 5")))
       core.release(res)
       out
     }
@@ -4049,11 +3794,7 @@ object Similarity {
       // the served seeded-8 layout: the IVF family's own assignment + probe
       val s8a = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
         .localCheckpoint(true)
-      val s8r = qs.crossJoin(broadcast(ivfCentroids(spark, dir)))
-        .select(col("qid"), col("qv"), explode(col("cents")).as("c"))
-        .select(col("qid"), col("c.cent_id").as("cell"),
-          (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("sc"))
-        .withColumn("rn", row_number().over(wq.orderBy(col("sc").desc)))
+      val s8r = seededCellRank(spark, dir, qs)
       // scanned + hits in ONE aggregation job per sweep point
       // ([[refereeHits]]), and the six independent points run concurrently
       // over the shared checkpointed assignments (guide §2.6). The k=8
@@ -4123,7 +3864,7 @@ object Similarity {
       ${trainedChainSql("t32", 32)},
       cand AS MATERIALIZED (
         SELECT r.qid, a.vec_id, a.cell FROM t32av a JOIN t32rk r ON a.cell = r.cell AND r.rn <= 4),
-      ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      $msSql,
       ${res32ChainSql},
       enc AS MATERIALIZED (
         SELECT c.qid, c.vec_id, c.cell, s.m,
@@ -4258,17 +3999,8 @@ object Similarity {
       ${trainedChainSql("t32", 32)},
       cand AS MATERIALIZED (
         SELECT r.qid, a.vec_id, a.cell FROM t32av a JOIN t32rk r ON a.cell = r.cell AND r.rn <= 4),
-      ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
-      sub AS (
-        SELECT e.vec_id, ms.m,
-               list_slice(e.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub) AS sv
-        FROM embeddings e, ms),
-      pb0 AS (
-        SELECT ms.m, CAST(c.vec_id AS BIGINT) AS code,
-               list_transform(list_slice(c.embedding, ms.m * $PqSub + 1, ms.m * $PqSub + $PqSub),
-                 x -> CAST(x AS DOUBLE)) AS cv
-        FROM embeddings c, ms WHERE c.vec_id < $PqK),
-      ${pqRoundsSql("p", "sub", "pb0")},
+      $msSql,
+      $rawBookChainSql,
       book AS (SELECT m, code, cv FROM pb$PqTrainRounds),
       ${res32ChainSql},
       enc AS MATERIALIZED (
@@ -4293,7 +4025,7 @@ object Similarity {
       ${varqAllocSql("rv", "res", "opq_map")}
       opq_perm AS (SELECT list(dim0 + 1 ORDER BY pos) AS pm FROM opq_map),
       ores AS MATERIALIZED (
-        SELECT r.vec_id, list_transform(range(1, 65), i -> r.rv[p.pm[i]]) AS pv
+        SELECT r.vec_id, list_transform(range(1, ${EmbDim + 1}), i -> r.rv[p.pm[i]]) AS pv
         FROM res r, opq_perm p),
       osub AS (
         SELECT o.vec_id, ms.m,
@@ -4368,14 +4100,7 @@ object Similarity {
     val book = annIndexMart(spark, dir, "mart_ann_book64").select("m", "code", "cv")
     val encRaw = cand.join(annIndexMart(spark, dir, "mart_ann_codes64"), Seq("vec_id"))
       .select(col("qid"), col("vec_id"), col("m"), col("code"))
-    val qsub = qs.select(col("qid"), explode(array((0 until PqM).map(m =>
-        struct(lit(m).as("m"), slice(col("qv"), m * PqSub + 1, PqSub).as("qsv"))): _*)).as("x"))
-      .select(col("qid"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-    val lutRaw = qsub.join(book, Seq("m"))
-      .select(col("qid"), col("m"), col("code"),
-        aggregate(zip_with(col("qsv"), col("cv"),
-          (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
-          lit(0.0), (acc, v) => acc + v).as("qd"))
+    val lutRaw = pqLut(qs, book)
     // lazily checkpointed: beamStat reads the SAME raw ranking at both
     // beam widths — without it each width re-runs the encode-join-LUT-
     // window pipeline from scratch (round-16 review)
@@ -4399,23 +4124,13 @@ object Similarity {
       resm.select(posexplode(col("rv")).as(Seq("dim", "v")))))
     def permute(c: Column): Column = array(operm.map(p => c(p - 1)): _*)
     val opv = resm.select(col("vec_id"), permute(col("rv")).as("pv"))
-    val osubs = (0 until PqM).map(m => struct(lit(m).as("m"),
-      slice(col("pv"), m * PqSub + 1, PqSub).as("sv")))
-    val osub = opv.select(col("vec_id"), explode(array(osubs: _*)).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
+    val osub = pqSplit(opv, "pv")
     val obook = bookDf(spark, memoBook(spark, dir, "opqres32:t32") {
-      trainSubspaceBook(spark, osub,
-        opv.filter(col("vec_id") < PqK)
-          .select(col("vec_id").cast(LongType).as("code"),
-            explode(array(osubs: _*)).as("x"))
-          .select(col("x.m").as("m"), col("code"), col("x.sv").as("cv")))
+      trainSubspaceBook(spark, osub, pqSeedBook(opv.filter(col("vec_id") < PqK), "pv"))
     }).select("m", "code", "cv")
-    val encOpq = cand
+    val encOpq = pqEncode(cand
       .join(annIndexMart(spark, dir, "mart_ann_assign32"), Seq("vec_id"))
-      .join(osub, Seq("vec_id"))
-      .crossJoin(broadcast(pqBookRow(obook)))
-      .select(col("qid"), col("vec_id"), col("cell"), col("m"),
-        pqBookBest("code").as("code"))
+      .join(osub, Seq("vec_id")), obook)
     val lutOpq = resLut(qs, cents32, obook, Some(operm))
     val adcOpq = adcSum(encOpq, lutOpq, Seq("qid", "cell", "m", "code"))
       .localCheckpoint(false)
@@ -4481,7 +4196,7 @@ object Similarity {
       Some(s"""
       WITH $qsExSql,
       ${trainedChainSql("t32", 32)},
-      ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      $msSql,
       ${res32ChainSql},
       candw AS MATERIALIZED (
         SELECT r.qid, a.vec_id, a.cell, r.rn AS crn
@@ -4673,11 +4388,7 @@ object Similarity {
       val wq = Window.partitionBy("qid")
       val e = emb(spark, dir).select(col("vec_id"), col("embedding"), col("label"))
         .localCheckpoint(true)
-      val n = e.count()
-      require(n >= QHi,
-        s"the recall harness needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
-      val qs = e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("label").as("qlbl"))
+      val qs = heldOutQueries(e, e.count(), col("label").as("qlbl"))
       // filtered ground truth: exact top-10 within the query's label class
       val fx = e.join(broadcast(qs), col("label") === col("qlbl"))
         .select(col("qid"), col("vec_id"), dot(col("embedding"), col("qv")).as("s"))
@@ -5328,11 +5039,8 @@ object Similarity {
     * [[serveHarnessDag]] marts (r21 — five gates were each re-paying the
     * same cross-join + window + two checkpoints). */
   private def nnServeHarness(spark: SparkSession, dir: String,
-      e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val qs = e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    (qs, serveQscMart(spark, dir), serveExqMart(spark, dir))
-  }
+      e: DataFrame, n: Long): (DataFrame, DataFrame, DataFrame) =
+    (heldOutQueries(e, n), serveQscMart(spark, dir), serveExqMart(spark, dir))
 
   /** Top-10 of a visited/candidate set per `part` by audit score. */
   private def topVisited(qsc: DataFrame, st: DataFrame, part: Seq[String]): DataFrame = {
@@ -5424,16 +5132,11 @@ object Similarity {
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
-      // the gate hardcodes the held-out query window [QLo, QHi) and a recall
-      // denominator of 80 — a smaller corpus would pass nnEmb's dense-id
-      // guard yet emit a silently meaningless (or empty-query) metric
-      require(n >= QHi,
-        s"sim_graph_serve needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
+      val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
       // the pruned SERVE core: each node's best NndServeDeg of the final
       // round's kept-NndK edges (build-wide/serve-narrow, see NndServeDeg)
       val gcore = serveCore(spark, dir)
       val graph = gcore.select(col("s").as("gs"), col("t").as("gt"))
-      val (qs, qsc, exq) = nnServeHarness(spark, dir, e)
       val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
       // per-cell MEDOID: the member nearest its own centroid (tie → lower
       // id via the suite's 1e-12 bias) — the entry table is 8 rows
@@ -5447,14 +5150,9 @@ object Similarity {
         .withColumn("rn", row_number().over(
           Window.partitionBy("cell").orderBy(col("msc").desc)))
         .filter(col("rn") === 1).select(col("cell"), col("vec_id").as("mid"))
-      // the query's coarse cells ranked (the probeQuery geometry, kept as
-      // a rank so every entry count P reads one frame)
-      val qrank2 = qs.crossJoin(broadcast(ivfCentroids(spark, dir)))
-        .select(col("qid"), col("qv"), explode(col("cents")).as("c"))
-        .select(col("qid"), col("c.cent_id").as("cell"),
-          (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("sc"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("sc").desc)))
+      // the query's coarse cells ranked, so every entry count P reads one
+      // frame
+      val qrank2 = seededCellRank(spark, dir, qs)
       // multi-entry v0: medoids of the query's top-P cells, one variant
       // dimension p riding the whole walk (r14 verdict queue #7)
       val vis = greedyWalk(qsc, graph,
@@ -5568,11 +5266,9 @@ object Similarity {
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
-      require(n >= QHi,
-        s"sim_graph_hier needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
+      val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
       val gcore = serveCore(spark, dir)
       val graph = gcore.select(col("s").as("gs"), col("t").as("gt"))
-      val (qs, qsc, exq) = nnServeHarness(spark, dir, e)
       // layer 2: exact kNN over the 1/16 subsample — (n/16)² pairs, the
       // geometrically-shrunk upper layer, broadcast-joined (shared
       // builder with simGraphDeployed)
@@ -5674,7 +5370,7 @@ object Similarity {
       base AS (SELECT * FROM embeddings WHERE vec_id % 5 < 4),
       ${trainedChainSql("b", 32, "base", "vec_id < 40 AND vec_id % 5 < 4")},
       aav AS MATERIALIZED (${assignSql("embeddings", s"bc$CellRounds")}),
-      ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      $msSql,
       ${trainedChainSql("t32", 32)},
       ${res32ChainSql},
       ${resChainSql("f", "aav", s"bc$CellRounds", "vec_id % 5 < 4",
@@ -7051,9 +6747,7 @@ object Similarity {
   val simServeFreshness: QueryDef = {
     QueryDef("sim_serve_freshness", Some(serveFreshnessSql(NndRounds, NndServeSteps))) { (spark, dir) =>
       val (e, n) = nnEmb(spark, dir)
-      require(n >= QHi,
-        s"sim_serve_freshness needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
-      val (qs, qsc, exq) = nnServeHarness(spark, dir, e)
+      val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
       val (y1, y2, _) = nnFoldMarts(spark, dir)
       val reb = nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
         .select("s", "t", "rk")
@@ -7131,9 +6825,7 @@ object Similarity {
   val simServePolicy: QueryDef = {
     QueryDef("sim_serve_policy", Some(servePolicySql(NndRounds, NndServeSteps))) { (spark, dir) =>
       val (e, n) = nnEmb(spark, dir)
-      require(n >= QHi,
-        s"sim_serve_policy needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
-      val (qs, qsc, exq) = nnServeHarness(spark, dir, e)
+      val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
       val (f2, c2, f3) = nnPolicyMarts(spark, dir)
       val reb = nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
         .select("s", "t", "rk")
@@ -7296,7 +6988,7 @@ object Similarity {
     * hits by the re-rank lemma. */
   private def graphDeployedSql(rounds: Int, steps: Int): String = {
     val head = s""",
-      ms AS (SELECT unnest([0, 1, 2, 3]) AS m),
+      $msSql,
       ${trainedChainSql("t32", 32)},
       ${res32ChainSql},
       renc AS MATERIALIZED (
@@ -7386,11 +7078,9 @@ object Similarity {
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
-      require(n >= QHi,
-        s"sim_graph_deployed needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
+      val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
       val gcore = serveCore(spark, dir)
       val graph = gcore.select(col("s").as("gs"), col("t").as("gt"))
-      val (qs, qsc, exq) = nnServeHarness(spark, dir, e)
       // the served residual-ADC score table off the persisted index
       // marts, NEGATED so the shared DESC-ordered walk machinery ranks
       // best-first (8 x n rows — the evaluation's price at 8 queries; a
@@ -7419,15 +7109,11 @@ object Similarity {
       val vh = greedyWalk(aq, graph, v0, Seq("ev", "qid"))
       // derived re-rank beam per (ev, qid) off the ADC ranks — the ONLY
       // true-vector touches; hits by the re-rank lemma against exq
-      val bwc = vh.groupBy("ev", "qid").agg(count(lit(1)).as("c"))
-        .select(col("ev"), col("qid"), least(col("c"),
-          greatest(lit(RerankBeamFloor.toLong),
-            lit(RerankK.toLong) * length(bin(col("c"))))).as("bw"))
       val bf = vh.join(aq, Seq("qid", "t"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("ev", "qid").orderBy(col("score").desc, col("t"))))
-        .join(broadcast(bwc), Seq("ev", "qid"))
-        .filter(col("rn") <= col("bw"))
+        .join(broadcast(beamWidths(vh, Seq("ev", "qid"))), Seq("ev", "qid"))
+        .filter(col("rn") <= least(col("cq"), col("bw1")))
         .select(col("ev"), col("qid"), col("t")).localCheckpoint(true)
       val rows = vh.groupBy("ev").agg(count(lit(1)).as("l1"))
         .join(bf.groupBy("ev").agg(count(lit(1)).as("beam_rows")), Seq("ev"))
@@ -7697,10 +7383,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir).select(col("vec_id"), col("embedding"), col("label"))
     val n = e.count()
-    require(n >= QHi,
-      s"sim_hard_negatives needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
-    val qs = e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("label").as("ql"))
+    val qs = heldOutQueries(e, n, col("label").as("ql"))
     // one scored pass feeds both the positive and negative top-ks
     val sc = e.crossJoin(broadcast(qs)).filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("ql"), col("vec_id"), col("label"),
@@ -7823,10 +7506,7 @@ object Similarity {
     val e = emb(spark, dir).select(col("vec_id"), col("embedding"), col("label"))
       .localCheckpoint(true)
     val n = e.count()
-    require(n >= QHi,
-      s"sim_ann_negatives needs vec_id $QLo..${QHi - 1} as held-out queries (n=$n < $QHi)")
-    val qs = e.filter(col("vec_id") >= QLo && col("vec_id") < QHi)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("label").as("ql"))
+    val qs = heldOutQueries(e, n, col("label").as("ql"))
     // the deployed coarse read path off the standing index marts
     val (av, rk) = servedCellRank32(spark, dir, qs)
     val cand = av.join(broadcast(rk.filter(col("rn") <= 4)
