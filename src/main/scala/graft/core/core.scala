@@ -273,10 +273,12 @@ object core {
     * the RDD itself. Any other frame goes through `Dataset.unpersist`,
     * which only drops a `cache()`/`persist()` entry. A checkpoint has no
     * lineage: reading one after its release fails the job, so release
-    * only what nothing will read again. */
+    * only what nothing will read again. RDDs are dropped through
+    * [[org.apache.spark.graft.RddRelease]], which skips `RDD.unpersist`'s
+    * per-call "lineage has been truncated" warning. */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case ckpt: org.apache.spark.sql.execution.LogicalRDD =>
-      ckpt.rdd.unpersist(blocking = false)
+      org.apache.spark.graft.RddRelease(ckpt.rdd)
     case _ => df.unpersist(false)
   }
 
@@ -291,6 +293,6 @@ object core {
   def releaseSessionState(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(org.apache.spark.graft.RddRelease(_))
   }
 }

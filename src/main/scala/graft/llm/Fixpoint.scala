@@ -7,8 +7,10 @@ import org.apache.spark.sql.types.LongType
 /** The round loop of every iterative kernel: Lloyd, PQ and IVF-split
   * training, the NN-descent builds, the greedy walk, connected components
   * and star contraction. A round body decides what it materializes and
-  * when; the driver owns the round cap, the stop test and the release of
-  * each superseded state, so the loop policy is written once.
+  * when (the walk runs this loop inside a task, once per key, on an
+  * in-memory visited set); the driver owns the round cap, the stop test
+  * and the release of each superseded state, so the loop policy is
+  * written once.
   *
   * Early exit equals the pinned unroll the oracles replay because every
   * round is a deterministic function of its input state: once a round

@@ -5016,21 +5016,22 @@ object Similarity {
     * where the r14 single-entry walk on
     * the K=10 graph managed 0.625; the gate re-measures on the real
     * engines and LlmOpsSpec asserts the dominance margin per entry
-    * count. Shape at 100 TB: serving state is (p, qid, visited-id)
-    * rows — beam_k = top-10(visited_k), proved in [[graphServeSql]]'s
-    * doc, so no per-step beam bookkeeping — and each step touches
-    * beam×deg graph edges per (variant, query) plus one bounded score
-    * fetch; the corpus appears only through the graph (built once, n·K
-    * rows) and the per-candidate vector fetch. The per-query audit
-    * table (8×n) prices the EVALUATION, not the serve. */
+    * count. Shape at 100 TB: serving state is one (p, qid) key's
+    * visited set inside its task — beam_k = top-10(visited_k), proved in
+    * [[graphServeSql]]'s doc — and each step touches beam×deg graph
+    * edges plus their scores; the corpus appears only through the graph
+    * (built once, n·K rows, broadcast like any sharded serving RAM) and
+    * the per-candidate vector fetch. The per-query audit table (8×n)
+    * prices the EVALUATION, not the serve. */
   /** The pruned serve core off the NN-descent mart (rk ≤
-    * [[NndServeDeg]] of round [[NndRounds]]), checkpointed — the Spark
-    * twin of [[nnServeCoreSql]], ONE definition for [[simGraphServe]],
-    * [[simGraphHier]] and [[simGraphCentrality]]. */
+    * [[NndServeDeg]] of round [[NndRounds]]) — the Spark twin of
+    * [[nnServeCoreSql]], ONE definition for [[simGraphServe]],
+    * [[simGraphHier]], [[simGraphDeployed]] and [[simGraphCentrality]].
+    * Lazy: a walk collects it once. */
   private def serveCore(spark: SparkSession, dir: String): DataFrame =
     nnRoundsMart(spark, dir)
       .filter(col("round") === NndRounds && col("rk") <= NndServeDeg)
-      .select(col("s"), col("t")).localCheckpoint(true)
+      .select(col("s"), col("t"))
 
   /** Shared Spark serve-harness over the NN-descent corpus (the
     * [[nnServeCommonSql]] twin — ONE definition for [[simGraphServe]]
@@ -5042,88 +5043,107 @@ object Similarity {
       e: DataFrame, n: Long): (DataFrame, DataFrame, DataFrame) =
     (heldOutQueries(e, n), serveQscMart(spark, dir), serveExqMart(spark, dir))
 
-  /** Top-10 of a visited/candidate set per `part` by audit score. */
-  private def topVisited(qsc: DataFrame, st: DataFrame, part: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    st.join(qsc, Seq("qid", "t"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(part.map(col): _*).orderBy(col("score").desc, col("t"))))
-      .filter(col("rn") <= 10).select(part :+ "t" map col: _*)
+  /** THE walk audit: per `by` group of a ranked pool (…, qid, t, rn),
+    * the rows scanned and the hits — rows `inBeam` (rn ≤ 10 unless the
+    * caller says otherwise) that the key-unique referee `ex`(qid, t, …)
+    * holds — plus the caller's `extra` aggregates, in ONE aggregation.
+    * A left join on a key-unique referee cannot multiply pool rows. */
+  private[graft] def beamAudit(pool: DataFrame, ex: DataFrame, by: String,
+      inBeam: Column = col("rn") <= 10, extra: Seq[Column] = Nil): DataFrame =
+    pool.join(broadcast(ex.withColumn("hit", lit(1L))), ex.columns.toSeq, "left")
+      .groupBy(by).agg(count(lit(1)).as("scanned"),
+        sum(when(inBeam, coalesce(col("hit"), lit(0L))).otherwise(0L)).as("hits") +: extra: _*)
+
+  /** Catalyst's `score DESC, t` on (t, score) pairs: scores compare as
+    * Spark SQL compares doubles (−0.0 = 0.0, NaN above every number, a
+    * NULL last under DESC), ties go to the lower t. */
+  private val walkOrder: Ordering[(Long, java.lang.Double)] = { (a, b) =>
+    val bySc = (a._2, b._2) match {
+      case (null, null) => 0
+      case (null, _) => 1
+      case (_, null) => -1
+      case (x, y) => org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(y.doubleValue, x.doubleValue)
+    }
+    if (bySc != 0) bySc else java.lang.Long.compare(a._1, b._1)
   }
 
-  /** The greedy visited-fixpoint walk shared by [[simGraphServe]],
-    * [[simGraphHier]], and [[simServeFreshness]]: expand the per-`part`
-    * top-10 beam's neighbors in graph `g`(gs, gt), union, stop once a
-    * step adds nothing (monotone visited sets: count equality == set
-    * equality, so the oracle's remaining unrolled steps are no-ops by
-    * the empty-frontier argument). `gKeys` names partition columns that
-    * ALSO key the graph (the freshness gate's vintage tag, carried in
-    * `g` as the "g"-prefixed twin) so one walk can ride a variant
-    * dimension — the sets never interact because the graph join is
-    * constrained per key. Returns the checkpointed visited set.
+  /** One key's walk from its entry nodes: returns the visited set as
+    * (t, score) in [[walkOrder]]. A step adds every neighbour of the
+    * beam (the first 10 in that order) that is not yet visited. */
+  private[graft] def walkKey(qid: Long, entries: Seq[Long], steps: Int,
+      out: Long => Array[Long], score: ((Long, Long)) => java.lang.Double)
+      : Seq[(Long, java.lang.Double)] = {
+    def scored(t: Long) = t -> score((qid, t))
+    Fixpoint.run(entries.map(scored).toMap, steps, (_: Map[Long, java.lang.Double]) => ()) {
+      (vis, _) =>
+        val beam = vis.toSeq.sorted(walkOrder).take(10)
+        val next = vis ++ beam.flatMap(b => out(b._1)).filterNot(vis.contains).map(scored)
+        (next, Fixpoint.Changed(next.size - vis.size))
+    }.state.toSeq.sorted(walkOrder)
+  }
+
+  /** The greedy visited-fixpoint walk of [[simGraphServe]],
+    * [[simGraphHier]], [[serveVintages]] and [[simGraphDeployed]]. Each
+    * `part` key (qid among them) enters at its `v0`(part…, t) nodes; a
+    * step expands the key's beam — the top 10 of its visited set by
+    * score DESC, t ASC — over graph `g`(gs, gt) and adds every node it
+    * reaches. A key stops at its first step that adds nothing, and after
+    * `steps` expansions at most. `gKeys` names part columns that also key
+    * the graph (carried in `g` as "g"-prefixed twins), so one walk can
+    * ride a variant dimension whose graphs never interact.
     *
-    * PRECONDITION (r21 ADVICE): the score table `qsc` must cover EVERY
-    * (qid, t) pair the walk can visit — entry nodes and all graph
-    * neighbors — because visited rows are built by INNER-joining the
-    * frontier to it; a partial score table (e.g. candidate-only ADC
-    * scores) would silently shrink the visited set and the scanned
-    * counts. Every current caller passes a full 8×n table (the exact
-    * audit scores or the full-corpus ADC table), which satisfies this by
-    * construction. */
-  private def greedyWalk(qsc: DataFrame, g: DataFrame, v0: DataFrame,
+    * The whole walk is one pass of tasks: the graph and the (qid, t) →
+    * score table `qsc` are collected and broadcast once, the entry frame
+    * is hash-partitioned by `part`, and each key's walk runs on
+    * [[Fixpoint.run]] inside its task. Returns the visited set,
+    * checkpointed once, as (part…, t, score, rn) with rn the rank
+    * `row_number() OVER (PARTITION BY part ORDER BY score DESC, t)`
+    * gives, so the final beam is `rn <= 10`.
+    *
+    * Every entry node and every node a beam reaches must have a score
+    * row; the walk fails naming the first (qid, t) that has none. */
+  private[graft] def greedyWalk(qsc: DataFrame, g: DataFrame, v0: DataFrame,
       part: Seq[String], steps: Int = NndServeSteps,
       gKeys: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cond = gKeys.foldLeft(col("t") === col("gs")) { (c, k) =>
-      c && col(k) === col("g" + k)
-    }
-    val pcols = part.map(col)
-    // Visited rows CARRY their audit score AND their beam rank (both
-    // functions of the deduped set, so duplicates agree): only the
-    // step's NEW frontier — beam × serve-degree rows — fetches scores,
-    // and each step pays exactly ONE exchange. A localCheckpoint scan
-    // reports UnknownPartitioning (measured, plans/r21), so anything
-    // ranked AFTER the checkpoint would re-exchange; annotating the rank
-    // BEFORE the checkpoint lets the window reuse the dedup
-    // repartition's hash(part) clustering (partitionBy(part) ⊆ the
-    // exchange keys) and the next step's beam is a plain filter. The
-    // graph and the score table ride BROADCAST joins: g is the bounded
-    // serve core (n×serve-degree id pairs; sharded serving RAM at
-    // 100 TB), the score table is the 8-query evaluation artifact (the
-    // [[simGraphServe]] pricing convention).
-    // both broadcast sides ride the session cache for the walk's duration
-    // (r22, guide §5/§6): every step's action rebuilds its broadcast
-    // relations, and without the persist each rebuild re-scanned the
-    // parquet mart / checkpoint lineage — now it reads executor memory
-    val scores = qsc.select(col("qid"), col("t"), col("score")).persist()
-    val gp = g.persist()
-    def ranked(df: DataFrame): DataFrame = df
-      .repartition(pcols: _*).dropDuplicates(part :+ "t")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(pcols: _*).orderBy(col("score").desc, col("t"))))
-    // NOTE (r22, measured): unrolling TWO steps per checkpoint action was
-    // tried and REVERTED — the visited set appears twice per unrolled
-    // step (beam + union), so the pair plan re-runs the inner window and
-    // adds a no-op step at odd-step fixpoints; the walk-gate subset
-    // measured 35.4 s paired vs 25.4 s single-step (baseline 27.8 s —
-    // the win kept below is the persisted broadcast sides).
-    // Round 0 ranks the entry set; round r expands step r.
-    val entry = v0.join(broadcast(scores), Seq("qid", "t"))
-      .select(pcols :+ col("t") :+ col("score"): _*)
-    val vis = Fixpoint.run(entry, steps + 1, core.release) { (cur, r) =>
-      val grown = if (r == 0) cur else {
-        val fresh = cur.filter(col("rn") <= 10).join(broadcast(gp), cond)
-          .select(pcols :+ col("gt").as("t"): _*)
-          .join(broadcast(scores), Seq("qid", "t"))
-          .select(pcols :+ col("t") :+ col("score"): _*)
-        cur.select(pcols :+ col("t") :+ col("score"): _*).unionByName(fresh)
-      }
-      val nv = ranked(grown).localCheckpoint(true)
-      (nv, Fixpoint.Sig(nv.count()))
-    }.state
-    scores.unpersist(false)
-    gp.unpersist(false)
-    vis.select(pcols :+ col("t"): _*)
+    require(part.contains("qid") && gKeys.forall(part.contains),
+      s"the walk scores per query and keys its graph by part columns: part $part, graph keys $gKeys")
+    val sc = v0.sparkSession.sparkContext
+    val nk = gKeys.size
+    val adj = sc.broadcast(g
+      .select(gKeys.map(k => col("g" + k)) ++ Seq(col("gs").cast(LongType),
+        col("gt").cast(LongType)): _*)
+      .collect().groupMap(r => (gKeys.indices.map(r.get): Seq[Any], r.getLong(nk)))(_.getLong(nk + 1)))
+    val scoreRows = qsc.select(col("qid").cast(LongType), col("t").cast(LongType),
+      col("score").cast(DoubleType)).collect()
+    val scores = sc.broadcast(scoreRows.map { r =>
+      (r.getLong(0), r.getLong(1)) -> (if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)))
+    }.toMap)
+    require(scores.value.size == scoreRows.length, "the walk's score table repeats a (qid, t) key")
+    val np = part.size
+    val qi = part.indexOf("qid")
+    val gi = gKeys.map(part.indexOf)
+    val schema = StructType(v0.select(part.map(col): _*).schema.fields ++ Seq(
+      StructField("t", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = true),
+      StructField("rn", IntegerType, nullable = false)))
+    v0.select(part.map(col) :+ col("t").cast(LongType): _*)
+      .repartition(part.map(col): _*)
+      .mapPartitions { rows =>
+        val (a, s) = (adj.value, scores.value)
+        rows.toSeq.groupMap(r => (0 until np).map(r.get))(_.getLong(np)).iterator.flatMap {
+          case (key, entries) =>
+            val qid = key(qi).asInstanceOf[Number].longValue
+            val gk = gi.map(key)
+            walkKey(qid, entries, steps, t => a.getOrElse((gk, t), Array.emptyLongArray),
+              k => s.getOrElse(k, throw new IllegalArgumentException(
+                s"greedy walk: no score row for (qid, t) = (${k._1}, ${k._2})")))
+              .iterator.zipWithIndex.map { case ((t, v), i) =>
+                org.apache.spark.sql.Row.fromSeq(key ++ Seq[Any](t, v, i + 1))
+              }
+        }
+      }(org.apache.spark.sql.Encoders.row(schema))
+      .localCheckpoint(true)
   }
 
   val simGraphServe: QueryDef = {
@@ -5135,49 +5155,43 @@ object Similarity {
       val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
       // the pruned SERVE core: each node's best NndServeDeg of the final
       // round's kept-NndK edges (build-wide/serve-narrow, see NndServeDeg)
-      val gcore = serveCore(spark, dir)
-      val graph = gcore.select(col("s").as("gs"), col("t").as("gt"))
-      val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
-      // per-cell MEDOID: the member nearest its own centroid (tie → lower
-      // id via the suite's 1e-12 bias) — the entry table is 8 rows
-      val med = ivfAssigned(spark, dir)
-        .join(broadcast(ivfCentroids(spark, dir)
-          .select(explode(col("cents")).as("c"))
-          .select(col("c.cent_id").as("mcell"), col("c.cv").as("mcv"))),
+      val graph = serveCore(spark, dir).select(col("s").as("gs"), col("t").as("gt"))
+      // ONE IVF assignment pass: every vector's cell and its score against
+      // its own centroid (tie → lower id via the suite's 1e-12 bias), read
+      // by the medoid entries and both sides of the probe-1 baseline
+      val cells = ivfAssigned(spark, dir)
+        .join(broadcast(seededCents(spark, dir).toDF("mcell", "mcv")),
           col("cell") === col("mcell"))
-        .select(col("cell"), col("vec_id"),
+        .select(col("vec_id"), col("cell"),
           (dot(col("embedding"), col("mcv")) - lit(1e-12) * col("vec_id")).as("msc"))
+        .localCheckpoint(true)
+      val cellOf = cells.select(col("vec_id"), col("cell"))
+      // per-cell MEDOID: the member nearest its own centroid — the entry
+      // table is 8 rows
+      val med = cells
         .withColumn("rn", row_number().over(
           Window.partitionBy("cell").orderBy(col("msc").desc)))
         .filter(col("rn") === 1).select(col("cell"), col("vec_id").as("mid"))
-      // the query's coarse cells ranked, so every entry count P reads one
-      // frame
-      val qrank2 = seededCellRank(spark, dir, qs)
-      // multi-entry v0: medoids of the query's top-P cells, one variant
-      // dimension p riding the whole walk (r14 verdict queue #7)
+      // multi-entry v0: medoids of the query's top-P cells (one ranked
+      // frame serves every entry count P), one variant dimension p riding
+      // the whole walk (r14 verdict queue #7)
       val vis = greedyWalk(qsc, graph,
         NndEntryPs.toDF("p")
-          .join(qrank2, col("rn") <= col("p"))
+          .join(seededCellRank(spark, dir, qs), col("rn") <= col("p"))
           .join(broadcast(med), Seq("cell"))
           .select(col("p"), col("qid"), col("mid").as("t")),
         Seq("p", "qid"))
-      val gscan = vis.groupBy("p").agg(count(lit(1)).as("scanned"))
-      val ghit2 = topVisited(qsc, vis, Seq("p", "qid"))
-        .join(broadcast(exq), col("qid") === col("xq") && col("t") === col("xt"))
-        .groupBy("p").agg(count(lit(1)).as("hits"))
-      val grows = gscan.join(ghit2, Seq("p"), "left")
-        .select(concat(lit("graph_m"), col("p").cast(StringType)).as("variant"),
-          col("scanned"), coalesce(col("hits"), lit(0L)).as("hits"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      // the probe-1 baseline: the query's own cell, ranked by audit score
       val pcell = qs.select("qid")
-        .join(cellOf.toDF("qv2", "qcell"), col("qid") === col("qv2"))
+        .join(broadcast(cellOf.toDF("qv2", "qcell")), col("qid") === col("qv2"))
         .join(cellOf.toDF("t", "tcell"), col("qcell") === col("tcell"))
-        .select("qid", "t").localCheckpoint(true)
-      val scannedP = pcell.count()
-      val hitsP = topVisited(qsc, pcell, Seq("qid"))
-        .join(broadcast(exq), col("qid") === col("xq") && col("t") === col("xt")).count()
-      (grows :+ (("probe1", scannedP, hitsP)))
-        .toDF("variant", "scanned", "hits")
+        .join(qsc, Seq("qid", "t"), "left")
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("qid").orderBy(col("score").desc, col("t"))))
+      val pool = vis.select(concat(lit("graph_m"), col("p").cast(StringType)).as("variant"),
+          col("qid"), col("t"), col("rn"))
+        .unionByName(pcell.select(lit("probe1").as("variant"), col("qid"), col("t"), col("rn")))
+      beamAudit(pool, exq.toDF("qid", "t"), "variant")
         .select(col("variant"), col("scanned"), col("hits"),
           round(col("hits").cast(DoubleType) / lit(80.0), 6).as("recall_r"))
         .orderBy("variant")
@@ -5262,51 +5276,45 @@ object Similarity {
     * EVALUATION, not the serve (the [[simGraphServe]] convention). */
   val simGraphHier: QueryDef = {
     QueryDef("sim_graph_hier", Some(graphHierSql(NndRounds, NndServeSteps))) { (spark, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
       val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
-      val gcore = serveCore(spark, dir)
-      val graph = gcore.select(col("s").as("gs"), col("t").as("gt"))
+      val graph = serveCore(spark, dir).select(col("s").as("gs"), col("t").as("gt"))
       // layer 2: exact kNN over the 1/16 subsample — (n/16)² pairs, the
-      // geometrically-shrunk upper layer, broadcast-joined (shared
-      // builder with simGraphDeployed)
-      val sub = e.filter(col("vec_id") % 16 === 0)
-      val g2c = layer2Graph(spark, dir)
-      val w = greedyWalk(qsc, g2c, qs.select(col("qid"), entryNode0.as("t")), Seq("qid"))
-      // law: the layer-2 walk never leaves the subsample
-      val wn = w.count()
-      val win = w.join(sub.select(col("vec_id").as("t")), Seq("t")).count()
-      require(win == wn, s"layer-2 walk escaped the subsample: $win of $wn rows in-sample")
-      // entry handoff: the best E layer-2 finishers per query
-      val ent = w.join(qsc, Seq("qid", "t"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("score").desc, col("t"))))
-      // the flat single-entry baseline rides the SAME walk as ev = 0
-      // (entry at node 0, no hierarchy) — one variant frame, one walk,
-      // instead of a second full walk for the baseline
+      // geometrically-shrunk upper layer (shared builder with
+      // simGraphDeployed)
+      val w = greedyWalk(qsc, layer2Graph(spark, dir),
+        qs.select(col("qid"), entryNode0.as("t")), Seq("qid"))
+      val wn = layer2Visited(w)
+      // entry handoff: the best E layer-2 finishers per query; the flat
+      // single-entry baseline rides the SAME walk as ev = 0 (entry at
+      // node 0, no hierarchy) — one variant frame, one walk, instead of a
+      // second full walk for the baseline
       val v0h = Seq(1, 2, 4).toDF("ev")
-        .join(ent, col("rn") <= col("ev"))
+        .join(w, col("rn") <= col("ev"))
         .select(col("ev"), col("qid"), col("t"))
         .unionByName(qs.select(lit(0).as("ev"), col("qid"), entryNode0.as("t")))
       val vh = greedyWalk(qsc, graph, v0h, Seq("ev", "qid"))
-      val rows = vh.groupBy("ev").agg(count(lit(1)).as("l1"))
-        .join(topVisited(qsc, vh, Seq("ev", "qid"))
-          .join(broadcast(exq), col("qid") === col("xq") && col("t") === col("xt"))
-          .groupBy("ev").agg(count(lit(1)).as("hits")), Seq("ev"), "left")
+      beamAudit(vh, exq.toDF("qid", "t"), "ev")
         .select(
           when(col("ev") === 0, lit("flat_single"))
             .otherwise(concat(lit("hier_e"), col("ev").cast(StringType))).as("variant"),
-          (col("l1") + when(col("ev") === 0, lit(0L)).otherwise(lit(wn))).as("scanned"),
-          coalesce(col("hits"), lit(0L)).as("hits"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      rows
-        .toDF("variant", "scanned", "hits")
-        .select(col("variant"), col("scanned"), col("hits"),
+          (col("scanned") + when(col("ev") === 0, lit(0L)).otherwise(lit(wn))).as("scanned"),
+          col("hits"),
           round(col("hits").cast(DoubleType) / lit(80.0), 6).as("recall_r"))
         .orderBy("variant")
     }
+  }
+
+  /** A layer-2 walk's visited-row count, after its law: the walk never
+    * leaves the 1/16 subsample (every visited t is ≡ 0 mod 16). One
+    * aggregation. */
+  private def layer2Visited(w: DataFrame): Long = {
+    val r = w.agg(count(lit(1)), sum(when(col("t") % 16 === 0, 1L).otherwise(0L))).head()
+    val (wn, win) = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    require(win == wn, s"layer-2 walk escaped the subsample: $win of $wn rows in-sample")
+    wn
   }
 
   /** sim — CODEBOOK FRESHNESS (round 16 — completing the append story
@@ -6684,14 +6692,15 @@ object Similarity {
     * riding as a partition dimension (the graphServeSql
     * variant-dimension discipline — separate per-vintage walks measured
     * 16 s of driver-sequential job overhead; the folded walk computes
-    * the same per-vintage visited sets in one job pair per step because
-    * the graph join is constrained by the vintage tag and the sets never
-    * interact), audit each event against its referee — `midFolds` (the
+    * the same per-vintage visited sets because the graph is keyed by the
+    * vintage tag and the sets never interact), audit each event against
+    * its referee — `midFolds` (the
     * partial vintages) against the exact top-10 among the members
     * `midPred` says were PRESENT, the rest against the full exq — and
     * emit (variant, scanned, hits, total, recall_r). The escape law is
     * asserted for every partial vintage: its walk can only reach members
-    * present at its event (edges reach members by graph construction). */
+    * present at its event (edges reach members by graph construction);
+    * it rides the audit's one aggregation. */
   private def serveVintages(spark: SparkSession, gate: String,
       qs: DataFrame, qsc: DataFrame, exq: DataFrame,
       graphs: Seq[(String, DataFrame)], midFolds: Seq[String],
@@ -6706,38 +6715,31 @@ object Similarity {
     val exm = qsc.filter(midPred)
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("score").desc, col("t"))))
-      .filter(col("rn") <= 10)
-      .select(col("qid").as("xq"), col("t").as("xt")).localCheckpoint(true)
+      .filter(col("rn") <= 10).select(col("qid"), col("t"))
     val gAll = graphs
       .map { case (nm, g) => core(g).select(lit(nm).as("gfold"), col("gs"), col("gt")) }
-      .reduce(_ unionByName _).localCheckpoint(true)
+      .reduce(_ unionByName _)
     val folds = graphs.map(_._1)
     val v0 = folds.toDF("fold").crossJoin(qs.select(col("qid")))
       .select(col("fold"), col("qid"), entryNode0.as("t"))
     val vis = greedyWalk(qsc, gAll, v0, Seq("fold", "qid"),
       gKeys = Seq("fold"))
-    require(vis.filter(col("fold").isin(midFolds: _*) && !midPred).count() == 0L,
+    val refs = midFolds.toDF("fold").crossJoin(exm)
+      .unionByName(folds.filterNot(midFolds.contains).toDF("fold")
+        .crossJoin(exq.toDF("qid", "t")))
+    val rows = beamAudit(vis, refs, "fold", extra = Seq(
+        sum(when(col("fold").isin(midFolds: _*) && !midPred, 1L).otherwise(0L)).as("escaped")))
+      .select(col("fold"), col("scanned"), col("hits"), col("escaped"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    require(rows.forall(_._4 == 0L),
       s"$gate: a partial-vintage walk escaped the members present at its event")
-    val refs = midFolds.toDF("rf").crossJoin(exm)
-      .select(col("rf"), col("xq"), col("xt"))
-      .unionByName(folds.filterNot(midFolds.contains).toDF("rf")
-        .crossJoin(exq).select(col("rf"), col("xq"), col("xt")))
-    val scannedBy = vis.groupBy("fold").agg(count(lit(1)).as("scanned"))
-    val hitsBy = topVisited(qsc, vis, Seq("fold", "qid"))
-      .join(broadcast(refs),
-        col("fold") === col("rf") && col("qid") === col("xq")
-          && col("t") === col("xt"))
-      .groupBy("fold").agg(count(lit(1)).as("hits"))
-    val rows = scannedBy.join(hitsBy, Seq("fold"), "left")
-      .select(col("fold"), col("scanned"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     require(rows.size == folds.size,
       s"$gate: expected ${folds.size} vintages, got ${rows.map(_._1)}")
-    rows.foreach { case (v, sc, h) =>
+    rows.foreach { case (v, sc, h, _) =>
       require(h <= 80, s"$v hits above the denominator: $h > 80")
       require(sc >= 8, s"$v walk lost its entries: scanned $sc < 8 queries")
     }
-    rows.toDF("variant", "scanned", "hits")
+    rows.map(r => (r._1, r._2, r._3)).toDF("variant", "scanned", "hits")
       .select(col("variant"), col("scanned"), col("hits"),
         lit(80L).as("total"),
         round(col("hits").cast(DoubleType) / lit(80.0), 6).as("recall_r"))
@@ -7074,13 +7076,11 @@ object Similarity {
     * exact audit, the [[simGraphServe]] convention). */
   val simGraphDeployed: QueryDef = {
     QueryDef("sim_graph_deployed", Some(graphDeployedSql(NndRounds, NndServeSteps))) { (spark, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
       val (qs, qsc, exq) = nnServeHarness(spark, dir, e, n)
-      val gcore = serveCore(spark, dir)
-      val graph = gcore.select(col("s").as("gs"), col("t").as("gt"))
+      val graph = serveCore(spark, dir).select(col("s").as("gs"), col("t").as("gt"))
       // the served residual-ADC score table off the persisted index
       // marts, NEGATED so the shared DESC-ordered walk machinery ranks
       // best-first (8 x n rows — the evaluation's price at 8 queries; a
@@ -7092,36 +7092,22 @@ object Similarity {
         .select(col("qid"), col("vec_id").as("t"), negate(col("score")).as("score"))
         .localCheckpoint(true)
       // layer 2: the exact subsample graph (the shared simGraphHier layer)
-      val sub = e.filter(col("vec_id") % 16 === 0)
-      val g2c = layer2Graph(spark, dir)
-      val w = greedyWalk(aq, g2c, qs.select(col("qid"), entryNode0.as("t")), Seq("qid"))
-      val wn = w.count()
-      // law: the layer-2 walk never leaves the subsample
-      val win = w.join(sub.select(col("vec_id").as("t")), Seq("t")).count()
-      require(win == wn, s"layer-2 walk escaped the subsample: $win of $wn rows in-sample")
+      val w = greedyWalk(aq, layer2Graph(spark, dir),
+        qs.select(col("qid"), entryNode0.as("t")), Seq("qid"))
+      val wn = layer2Visited(w)
       // entry handoff by ADC, E riding the layer-1 walk as the variant dim
-      val ent = w.join(aq, Seq("qid", "t"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("score").desc, col("t"))))
       val v0 = Seq(1, 2).toDF("ev")
-        .join(ent, col("rn") <= col("ev"))
+        .join(w, col("rn") <= col("ev"))
         .select(col("ev"), col("qid"), col("t"))
       val vh = greedyWalk(aq, graph, v0, Seq("ev", "qid"))
-      // derived re-rank beam per (ev, qid) off the ADC ranks — the ONLY
-      // true-vector touches; hits by the re-rank lemma against exq
-      val bf = vh.join(aq, Seq("qid", "t"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("ev", "qid").orderBy(col("score").desc, col("t"))))
-        .join(broadcast(beamWidths(vh, Seq("ev", "qid"))), Seq("ev", "qid"))
-        .filter(col("rn") <= least(col("cq"), col("bw1")))
-        .select(col("ev"), col("qid"), col("t")).localCheckpoint(true)
-      val rows = vh.groupBy("ev").agg(count(lit(1)).as("l1"))
-        .join(bf.groupBy("ev").agg(count(lit(1)).as("beam_rows")), Seq("ev"))
-        .join(bf.join(broadcast(exq), col("qid") === col("xq") && col("t") === col("xt"))
-          .groupBy("ev").agg(count(lit(1)).as("hits")), Seq("ev"), "left")
+      // derived re-rank beam per (ev, qid) off the walk's ADC ranks — the
+      // ONLY true-vector touches; hits by the re-rank lemma against exq
+      val inBeam = col("rn") <= least(col("cq"), col("bw1"))
+      val rows = beamAudit(vh.join(broadcast(beamWidths(vh, Seq("ev", "qid"))), Seq("ev", "qid")),
+          exq.toDF("qid", "t"), "ev", inBeam,
+          Seq(sum(when(inBeam, 1L).otherwise(0L)).as("beam_rows")))
         .select(concat(lit("hier_e"), col("ev").cast(StringType)).as("variant"),
-          (col("l1") + lit(wn)).as("scanned"), col("beam_rows"),
-          coalesce(col("hits"), lit(0L)).as("hits"))
+          (col("scanned") + lit(wn)).as("scanned"), col("beam_rows"), col("hits"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       // laws: the beam (vector touches) never exceeds the code scan, and
       // hits respect the 80-row denominator contract
@@ -7276,7 +7262,7 @@ object Similarity {
     * triples, vectors never touched; state is one (v, mass) frame. */
   val simGraphCentrality: QueryDef = {
     QueryDef("sim_graph_centrality", Some(graphCentralitySql(NndRounds))) { (spark, dir) =>
-      val graph = serveCore(spark, dir)
+      val graph = serveCore(spark, dir).localCheckpoint(true)
       val nodes = graph.select(col("s").as("v")).distinct().localCheckpoint(true)
       val deg = graph.groupBy("s").agg(count(lit(1)).as("d"))
       val gd = graph.join(deg, Seq("s")).localCheckpoint(true)

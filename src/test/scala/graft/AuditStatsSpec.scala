@@ -27,4 +27,16 @@ class AuditStatsSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Long, Int)].toDF("s", "t", "rk")
     assert(Similarity.graphRecall(empty, referee) == ((0L, 0L, 0L)))
   }
+
+  test("beamAudit counts each group's rows and the beam rows the referee holds") {
+    val s2 = spark
+    import s2.implicits._
+    val ex = Seq((1L, 10L), (1L, 11L), (2L, 20L)).toDF("qid", "t")
+    // (1, 11) is in the referee but ranked 11th: outside the beam
+    val pool = Seq(("a", 1L, 10L, 1), ("a", 1L, 11L, 11), ("a", 2L, 21L, 1),
+      ("b", 2L, 20L, 2)).toDF("v", "qid", "t", "rn")
+    val got = Similarity.beamAudit(pool, ex, "v").orderBy("v")
+      .select("v", "scanned", "hits").as[(String, Long, Long)].collect().toSeq
+    assert(got == Seq(("a", 3L, 1L), ("b", 1L, 1L)))
+  }
 }

@@ -60,4 +60,35 @@ class FixpointSpec extends SparkSpec {
     core.release(capped.state)
     assert(added.isEmpty)
   }
+
+  test("core.release frees a local checkpoint without Spark's lineage warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("release-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(capture)
+    def lineageWarnings = seen.toArray.count(_.toString.contains("lineage has been truncated"))
+    try {
+      val sc = spark.sparkContext
+      val a = spark.range(3).toDF("id").localCheckpoint(true)
+      val b = spark.range(3).toDF("id").localCheckpoint(true)
+      val rddOf = (df: DataFrame) =>
+        df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+      // the control: Spark's own RDD.unpersist warns, so the capture works
+      rddOf(a).unpersist()
+      assert(lineageWarnings == 1)
+      core.release(b)
+      assert(!sc.getPersistentRDDs.contains(rddOf(b).id))
+      assert(lineageWarnings == 1, seen)
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
 }
