@@ -167,26 +167,32 @@ object Similarity {
     * struct(cent_id, cv): every IVF pass (assignment, probe-cell selection)
     * is then a map-side higher-order scan per vector — no shuffle ever
     * carries an embedding, which is the whole point of IVF. */
-  private def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir).filter(col("vec_id") < 8)
+  private def ivfCentroids(corpus: DataFrame): DataFrame =
+    corpus.filter(col("vec_id") < 8)
       .agg(collect_list(struct(col("vec_id").as("cent_id"), col("embedding").as("cv")))
         .as("cents"))
 
   /** The 8 seeded coarse centroids as (cent_id, cv) rows — vec_id < 8. */
-  private def seededCents(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir).filter(col("vec_id") < 8)
+  private def seededCents(corpus: DataFrame): DataFrame =
+    corpus.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
 
-  /** Every vector tagged with its IVF cell (argmax dot over the broadcast
-    * centroids, ties toward the lower cent_id via the 1e-12 bias the oracle
-    * replays) — shared by [[simIvfProbe]] and [[simIvfMultiprobe]]. */
-  private def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
+  /** Every vector of a corpus frame (vec_id, embedding, …) tagged with
+    * its IVF cell (argmax dot over the broadcast centroids, ties toward the
+    * lower cent_id via the 1e-12 bias the oracle replays): the corpus
+    * columns plus `cell`. The corpus is read once for both sides. */
+  private def ivfAssigned(corpus: DataFrame): DataFrame = {
     val best = array_max(transform(col("cents"), c => struct(
       (dot(col("embedding"), c("cv")) - lit(1e-12) * c("cent_id")).as("score"),
       c("cent_id").as("cent_id"))))
-    emb(spark, dir).crossJoin(broadcast(ivfCentroids(spark, dir)))
-      .select(col("vec_id"), col("label"), col("embedding"), best("cent_id").as("cell"))
+    corpus.crossJoin(broadcast(ivfCentroids(corpus)))
+      .withColumn("cell", best("cent_id")).drop("cents")
   }
+
+  /** [[ivfAssigned]] over the embeddings table: (vec_id, label, embedding,
+    * cell) — shared by [[simIvfProbe]] and [[simIvfMultiprobe]]. */
+  private def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
+    ivfAssigned(emb(spark, dir).select("vec_id", "label", "embedding"))
 
   /** sim3 — IVF-style search: coarse-quantize every vector to its nearest
     * of 8 deterministic centroids (argmax dot, ties by centroid id), then
@@ -228,9 +234,9 @@ object Similarity {
     * 1e-12·cent_id (the bias [[ivfAssigned]] uses, so ties go to the
     * lower cell), rn by sc descending. Every seeded-layout probe in the
     * file reads its top-P cells from here. */
-  private def seededCellRank(spark: SparkSession, dir: String, qs: DataFrame): DataFrame = {
+  private def seededCellRank(corpus: DataFrame, qs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    qs.crossJoin(broadcast(ivfCentroids(spark, dir)))
+    qs.crossJoin(broadcast(ivfCentroids(corpus)))
       .select(col("qid"), col("qv"), explode(col("cents")).as("c"))
       .select(col("qid"), col("c.cent_id").as("cell"),
         (dot(col("qv"), col("c.cv")) - lit(1e-12) * col("c.cent_id")).as("sc"))
@@ -243,7 +249,7 @@ object Similarity {
     * at most P/K of the corpus per query. */
   private def seededProbe(spark: SparkSession, dir: String, assigned: DataFrame,
       qs: DataFrame, nProbe: Int): DataFrame =
-    assigned.join(broadcast(seededCellRank(spark, dir, qs).filter(col("rn") <= nProbe)
+    assigned.join(broadcast(seededCellRank(emb(spark, dir), qs).filter(col("rn") <= nProbe)
         .join(qs, "qid").select(col("qid"), col("qv"), col("cell").as("pcell"))),
       col("cell") === col("pcell"))
 
@@ -755,7 +761,7 @@ object Similarity {
     val ownCv = element_at(
       filter(col("cents"), c => c("cent_id") === col("cell")), 1)("cv")
     val planted = assigned.filter(col("vec_id") % 5 === 1)
-      .crossJoin(broadcast(ivfCentroids(spark, dir)))
+      .crossJoin(broadcast(ivfCentroids(emb(spark, dir))))
       .select((col("vec_id") + 500000L).as("vec_id"), col("cell"),
         zip_with(col("embedding"), ownCv,
           (x, y) => lit(0.8) * x.cast(DoubleType) + lit(0.2) * y.cast(DoubleType))
@@ -1664,7 +1670,7 @@ object Similarity {
     * subtraction per element), so both engines hold identical values. */
   private def ivfResiduals(spark: SparkSession, dir: String): DataFrame =
     ivfAssigned(spark, dir)
-      .join(broadcast(seededCents(spark, dir)
+      .join(broadcast(seededCents(emb(spark, dir))
         .select(col("cent_id").as("rc_id"), col("cv").as("ccv"))),
         col("cell") === col("rc_id"))
       .select(col("vec_id"), col("label"), col("cell"),
@@ -1766,7 +1772,7 @@ object Similarity {
       val q = q1Frame(spark, dir)
       // the query's residual against each cell → the (cell, m, code) LUT;
       // only the probed cells' members ever meet it
-      val lut = resLut(q, seededCents(spark, dir), book)
+      val lut = resLut(q, seededCents(emb(spark, dir)), book)
       val cand = pqSplit(seededProbe(spark, dir, ivfResiduals(spark, dir), q, 3)
         .select("vec_id", "label", "cell", "rv"), "rv")
       adcSum(pqEncode(cand, book), lut, Seq("cell", "m", "code"))
@@ -2077,7 +2083,7 @@ object Similarity {
         .filter(col("rr2") <= 10).select("qid", "vec_id")
       val encRes = pqEncode(pqSplit(ivfResiduals(spark, dir).select("vec_id", "rv"), "rv"),
         resBook)
-      val rrTop = adcRanked(candR, encRes, resLut(qs, seededCents(spark, dir), resBook),
+      val rrTop = adcRanked(candR, encRes, resLut(qs, seededCents(emb(spark, dir)), resBook),
           Seq("qid", "cell"))
         .filter(col("rr") <= 10).select("qid", "vec_id")
       Seq("ivf_probe1" -> probedTop(1), "ivf_probe3" -> probedTop(3), "ivfadc_raw" -> ar,
@@ -2196,7 +2202,7 @@ object Similarity {
       // every (qid, vec) pair with the vector's cell RANK for that query —
       // the probes-8 row makes this the full corpus ×8, deliberately
       val sc0 = ivfAssigned(spark, dir)
-        .join(broadcast(seededCellRank(spark, dir, qs)
+        .join(broadcast(seededCellRank(emb(spark, dir), qs)
           .select(col("qid"), col("cell").as("pcell"), col("rn").as("crank"))),
           col("cell") === col("pcell"))
         .select(col("qid"), col("vec_id"), col("crank"))
@@ -3794,7 +3800,7 @@ object Similarity {
       // the served seeded-8 layout: the IVF family's own assignment + probe
       val s8a = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
         .localCheckpoint(true)
-      val s8r = seededCellRank(spark, dir, qs)
+      val s8r = seededCellRank(emb(spark, dir), qs)
       // scanned + hits in ONE aggregation job per sweep point
       // ([[refereeHits]]), and the six independent points run concurrently
       // over the shared checkpointed assignments (guide §2.6). The k=8
@@ -5159,8 +5165,8 @@ object Similarity {
       // ONE IVF assignment pass: every vector's cell and its score against
       // its own centroid (tie → lower id via the suite's 1e-12 bias), read
       // by the medoid entries and both sides of the probe-1 baseline
-      val cells = ivfAssigned(spark, dir)
-        .join(broadcast(seededCents(spark, dir).toDF("mcell", "mcv")),
+      val cells = ivfAssigned(e)
+        .join(broadcast(seededCents(e).toDF("mcell", "mcv")),
           col("cell") === col("mcell"))
         .select(col("vec_id"), col("cell"),
           (dot(col("embedding"), col("mcv")) - lit(1e-12) * col("vec_id")).as("msc"))
@@ -5177,7 +5183,7 @@ object Similarity {
       // the whole walk (r14 verdict queue #7)
       val vis = greedyWalk(qsc, graph,
         NndEntryPs.toDF("p")
-          .join(seededCellRank(spark, dir, qs), col("rn") <= col("p"))
+          .join(seededCellRank(e, qs), col("rn") <= col("p"))
           .join(broadcast(med), Seq("cell"))
           .select(col("p"), col("qid"), col("mid").as("t")),
         Seq("p", "qid"))
