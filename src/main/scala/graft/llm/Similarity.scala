@@ -163,7 +163,8 @@ object Similarity {
       .orderBy("a_id")
   }
 
-  /** Coarse-quantizer centroid set folded into ONE broadcast row of
+  /** The coarse-quantizer centroids of a corpus frame (vec_id,
+    * embedding, …) — vec_id < 8 — folded into ONE broadcast row of
     * struct(cent_id, cv): every IVF pass (assignment, probe-cell selection)
     * is then a map-side higher-order scan per vector — no shuffle ever
     * carries an embedding, which is the whole point of IVF. */
