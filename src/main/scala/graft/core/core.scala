@@ -44,9 +44,13 @@ object core {
 
   /** Read one driver-generated parquet table. Plain parquet scan: Catalyst
     * pushes filters + prunes columns into the scan, so callers should never
-    * pre-materialize. */
-  def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    * pre-materialize. The schema is inferred once per (session, table
+    * snapshot) and pinned, so later reads run no footer-inference job. */
+  def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val pinned = snapshotMemo(spark, s"schema:$name", dir, name)(spark.read.parquet(path).schema)
+    spark.read.schema(pinned).parquet(path)
+  }
 
   /** Bind `c` to a lambda VARIABLE for the scope of `f`, evaluating it
     * exactly once per row. Higher-order functions run interpreted with no
@@ -90,17 +94,50 @@ object core {
   /** JVM-wide ledger of one-time build costs (r20 verdict #1 / r21 verdict
     * #2: materialize-once marts, memos and staged landings are paid in
     * pass 1 only, so the bench's interleaved min-of-2 erases them from
-    * every reported number). Every builder that runs at most once per
-    * (corpus snapshot, JVM) records its wall seconds here under a stable
-    * key; Bench dumps the ledger into `target/bench_detail.json` as
-    * `build` rows, so the artifact separates steady-state consumer cost
-    * (the timed samples) from cold-build cost — WITHOUT changing what the
-    * timed samples measure (comparability with prior rounds holds). */
-  private val buildLedgerM = scala.collection.mutable.LinkedHashMap[String, Double]()
+    * every reported number). Every build records its wall seconds here as
+    * one (key, seconds) entry, in the order builds finish; Bench dumps the
+    * per-key sums into `target/bench_detail.json` as `build` rows, so the
+    * artifact separates steady-state consumer cost (the timed samples)
+    * from cold-build cost — WITHOUT changing what the timed samples
+    * measure (comparability with prior rounds holds). */
+  private val buildLedgerM = scala.collection.mutable.ArrayBuffer[(String, Double)]()
   def recordBuild(key: String, sec: Double): Unit =
-    buildLedgerM.synchronized { buildLedgerM(key) = buildLedgerM.getOrElse(key, 0.0) + sec }
+    buildLedgerM.synchronized { buildLedgerM += key -> sec }
   def buildLedger: Seq[(String, Double)] =
     buildLedgerM.synchronized { buildLedgerM.toSeq }
+
+  /** Values remembered by [[snapshotMemo]], per session. */
+  private val snapshotValues = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[(String, String, String), Any]]()
+
+  /** THE way to remember a result for one corpus snapshot: `compute`'s
+    * value is kept per (session, `label`, `dir`, [[sourceSig]] of
+    * `tables`), so a table regenerated in place misses and recomputes
+    * instead of serving the dead snapshot's value. A miss computes under
+    * [[withLock]] of its key: callers of the same key wait for the first
+    * one and reuse its value, callers of other keys run side by side, and
+    * a compute that throws stores nothing. Each miss adds one `label`
+    * entry with its wall seconds to [[buildLedger]]. Sessions are held
+    * weakly, but a value that references its session (a DataFrame) keeps
+    * that session reachable for the life of the JVM. Values are
+    * driver-side results and plans over immutable files, never cached
+    * blocks, so [[releaseSessionState]] has nothing here to evict.
+    * `label` names one value type: a result is cast back to `T`. */
+  def snapshotMemo[T](spark: SparkSession, label: String, dir: String, tables: String*)(
+      compute: => T): T = {
+    val key = (label, dir, sourceSig(spark, dir, tables: _*))
+    def values = snapshotValues.computeIfAbsent(spark, _ => scala.collection.mutable.Map())
+    def stored = snapshotValues.synchronized(values.get(key))
+    stored.getOrElse(withLock(s"memo:$key") {
+      stored.getOrElse {
+        val t0 = System.nanoTime()
+        val v = compute
+        recordBuild(label, (System.nanoTime() - t0) / 1e9)
+        snapshotValues.synchronized(values(key) = v)
+        v
+      }
+    }).asInstanceOf[T]
+  }
 
   /** Driver-side overlap pool for independent Spark actions (guide §2.6).
     * A cached DAEMON pool never starves on blocked threads: a driver

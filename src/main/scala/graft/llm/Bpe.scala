@@ -102,41 +102,17 @@ object Bpe {
           lit(">")).as("syms"),
         col("wcount"))
 
-  /** Train-once memo: all four gates (and any later consumer — a packing or
-    * budget stage measuring in BPE tokens) replay the SAME learned table, so
-    * training is paid once per (session, corpus snapshot) — the
-    * [[Cluster.clusterLabels]] mart posture, scaled down: the artifact here
-    * is a handful of driver-side string pairs, so the memo holds the value
-    * itself rather than a parquet pointer. WEAK-keyed by session (dead
-    * sessions fall out with GC); `core.releaseSessionState` has nothing to
-    * evict — no DataFrame, no blocks. The map key includes
-    * [[core.sourceSig]] of the documents table, so a corpus REGENERATED IN
-    * PLACE (the driver does this between rounds — same path, new bytes)
-    * trains fresh merges instead of replaying the dead corpus' vocabulary
-    * while the oracle retrains on the new data. */
-  private val mergeMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Seq[(Int, String, String, Long)]]]()
-
   /** Learned merges with each merge's ROUND retained — (round, pa, pb,
-    * weighted pair count) in application order, memoized per (session,
-    * dir-at-snapshot). The train gate emits the round so the batch
-    * structure is auditable (and BpeSpec can assert the within-round count
-    * monotonicity that survives batching). */
-  private[graft] def trainMergesR(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] = {
-    val key = s"$dir@${core.sourceSig(spark, dir, "documents")}"
-    // train OUTSIDE the memo lock (the Similarity.memoBook discipline):
-    // a lost race retrains the same deterministic table and keeps the first
-    def map = mergeMemo.computeIfAbsent(spark, _ => scala.collection.mutable.Map())
-    mergeMemo.synchronized(map.get(key)) match {
-      case Some(v) => v
-      case None =>
-        val t0 = System.nanoTime()
-        val v = trainMergesBatched(spark, dir, BpeRounds, BpeBatch)
-        // one-time memo-miss cost into the build ledger (r21 verdict #2)
-        core.recordBuild("memo:bpe_merges", (System.nanoTime() - t0) / 1e9)
-        mergeMemo.synchronized(map.getOrElseUpdate(key, v))
-    }
-  }
+    * weighted pair count) in application order. The train gate emits the
+    * round so the batch structure is auditable (and BpeSpec can assert the
+    * within-round count monotonicity that survives batching). All four
+    * gates (and any later consumer — a packing or budget stage measuring
+    * in BPE tokens) replay the SAME learned table, so training is paid
+    * once per (session, documents snapshot); the artifact is a handful of
+    * driver-side string pairs, so the memo holds the value itself. */
+  private[graft] def trainMergesR(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
+    core.snapshotMemo(spark, "memo:bpe_merges", dir, "documents")(
+      trainMergesBatched(spark, dir, BpeRounds, BpeBatch))
 
   /** [[trainMergesR]] without the round tag — the shape every merge-chain
     * CONSUMER (tokenize, pack, vocab) folds over. */

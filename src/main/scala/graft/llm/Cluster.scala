@@ -302,12 +302,9 @@ object Cluster {
       (_, _, ref) => components(ref("stg_dup_edges"))
     }))
 
-  /** Materialize-once accessor for the labels mart — the
-    * [[graft.pipeline.MartCache]] discipline (one shared implementation
-    * of the marker/staleness/locking rules; see its Scaladoc). CC is the
-    * expensive step, its output is tiny (two bigints per clustered doc),
-    * so it is paid once per corpus snapshot, never once per consumer;
-    * every call returns a fresh parquet scan of the mart. */
+  /** Materialize-once accessor for the labels mart. CC is the expensive
+    * step, its output is tiny (two bigints per clustered doc), so it is
+    * paid once per corpus snapshot, never once per consumer. */
   private[graft] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, clusterDag, "cluster_marts",
       "graft_cluster_", Seq("documents"), "mart_cluster_labels").head

@@ -169,9 +169,7 @@ object LangModel {
         ref("mart_lm_model").groupBy("w1").agg(sum(col("n_bg")).as("n_ctx"))
     }))
 
-  /** Materialize-once accessor for the (model, ctx) marts — the
-    * [[graft.pipeline.MartCache]] discipline (one shared implementation
-    * of the marker/staleness/locking rules; see its Scaladoc). */
+  /** Materialize-once accessor for the (model, ctx) marts. */
   private[graft] def lmMarts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val Seq(model, ctx) = graft.pipeline.MartCache.read(spark, dir, lmDag,
       "lm_marts", "graft_lm_", Seq("documents"), "mart_lm_model", "mart_lm_ctx")
@@ -725,9 +723,7 @@ object LangModel {
       lmBucketLabelsInline(s, d)
     }))
 
-  /** Materialize-once accessor for the (doc_id, k, bucket) label mart —
-    * the prefix carries the corpus snapshot signature so regenerated
-    * documents retrain (the index-mart convention). */
+  /** Materialize-once accessor for the (doc_id, k, bucket) label mart. */
   private[graft] def lmBucketLabels(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, lmLabelDag, "lml_marts",
       "graft_lml_", Seq("documents"), "mart_lm_labels").head

@@ -1340,35 +1340,14 @@ object Similarity {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  /** Memoized CONVERGED books (raw + residual variants), value-memoed like
-    * [[Bpe.trainMergesR]]'s merge table: the artifact is ≤ M·[[PqK]] codewords of
-    * [[PqSub]] doubles plus two scalars each, so the memo holds the VALUE
-    * and consumers re-inject it as a literal local relation — plans stay
-    * tiny, `releaseSessionState` has nothing to evict, and training runs
-    * once per (session, corpus snapshot, variant). Snapshot-keyed via
-    * [[core.sourceSig]] so a regenerated corpus retrains. */
-  private val bookMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Seq[(Int, Long, Seq[Double], Long, Long)]]]()
-
-  /** Training runs OUTSIDE the memo lock (round-13 review): holding the
-    * global monitor through a multi-round Spark job would serialize every
-    * concurrent variant behind whichever got the lock first. A lost race
-    * just trains the same deterministic book twice and keeps the first —
-    * idempotent, so no per-key latch is needed. */
+  /** Memoized CONVERGED books (raw + residual variants): the artifact is
+    * ≤ M·[[PqK]] codewords of [[PqSub]] doubles plus two scalars each, so
+    * the memo holds the VALUE and consumers re-inject it as a literal
+    * local relation — plans stay tiny and training runs once per
+    * (session, embeddings snapshot, variant). */
   private def memoBook(spark: SparkSession, dir: String, variant: String)(
-      train: => Seq[(Int, Long, Seq[Double], Long, Long)]): Seq[(Int, Long, Seq[Double], Long, Long)] = {
-    val key = s"$variant:$dir@${core.sourceSig(spark, dir, "embeddings")}"
-    def map = bookMemo.computeIfAbsent(spark, _ => scala.collection.mutable.Map())
-    bookMemo.synchronized(map.get(key)) match {
-      case Some(v) => v
-      case None =>
-        val t0 = System.nanoTime()
-        val v = train
-        // one-time memo-miss cost into the build ledger (r21 verdict #2)
-        core.recordBuild(s"memo:book_$variant", (System.nanoTime() - t0) / 1e9)
-        bookMemo.synchronized(map.getOrElseUpdate(key, v))
-    }
-  }
+      train: => Seq[(Int, Long, Seq[Double], Long, Long)]): Seq[(Int, Long, Seq[Double], Long, Long)] =
+    core.snapshotMemo(spark, s"memo:book_$variant", dir, "embeddings")(train)
 
   /** The (vec_id, m, sv) subvector stream of the raw corpus. */
   private[graft] def rawSub(spark: SparkSession, dir: String): DataFrame =
@@ -3512,9 +3491,8 @@ object Similarity {
     * artifact served by many reads, so the trained-32 coarse quantizer
     * (centroids + corpus assignment) and the SERVED k* = [[PqK]] codebook
     * with its full-corpus codes are materialized ONCE per corpus snapshot
-    * as [[graft.pipeline.MartCache]] marts (the [[nnRoundsMart]]
-    * discipline) and every read-path gate — [[simIvfCells]],
-    * [[simAnnDeployed]], [[simAnnFiltered]], [[simIndexAppend]]'s
+    * as [[graft.pipeline.MartCache]] marts and every read-path gate —
+    * [[simIvfCells]], [[simAnnDeployed]], [[simAnnFiltered]], [[simIndexAppend]]'s
     * retrained arm — reads the tables back instead of re-training the
     * same index inline. The marts hold EXACTLY what the inline code
     * computed before (fixed-point integer training is bit-identical at
@@ -3572,9 +3550,7 @@ object Similarity {
         built("mart_ann_book64r").select(col("m"), col("code"), col("cv")))
     }))
 
-  /** Materialize-once accessor for one trained-index mart table; the
-    * prefix carries the corpus snapshot signature so a regenerated
-    * dataset retrains (the [[nnRoundsMart]] convention). */
+  /** Materialize-once accessor for one trained-index mart table. */
   private def annIndexMart(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, annDag, "ann_marts", "graft_ann_",
       Seq("embeddings"), name).head
@@ -4781,8 +4757,7 @@ object Similarity {
       .localCheckpoint(true)
   }
 
-  /** One NN-descent BUILD per corpus snapshot, the
-    * [[graft.pipeline.MartCache]] discipline: the mart holds every
+  /** One NN-descent BUILD per corpus snapshot: the mart holds every
     * round's kept list tagged with that round's candidate volume —
     * (round, s, t, cand_pairs) — with round 0 being the TRIMMED init
     * (the list the trajectory audits; the chain itself grows off the
@@ -4829,9 +4804,7 @@ object Similarity {
       mat
     }))
 
-  /** Materialize-once accessor for the per-round NN-descent mart; every
-    * call returns a fresh parquet scan. The prefix carries the corpus
-    * snapshot signature so a regenerated dataset rebuilds the graph. */
+  /** Materialize-once accessor for the per-round NN-descent mart. */
   private def nnRoundsMart(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, nnDag, "nn_marts", "graft_nn_",
       Seq("embeddings"), "mart_nn_rounds").head

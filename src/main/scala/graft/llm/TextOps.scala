@@ -1785,33 +1785,14 @@ object TextOps {
     * with and the ranks the distillation exports from cannot
     * desynchronize on a tie-break edit.
     *
-    * Memoized per (session, corpus snapshot) — the [[Bpe]] merge-memo
-    * posture (r20 verdict #2): the head is a 20-tuple driver value whose
-    * candidate generation + CE scoring was being re-paid by the second
-    * consumer every pass; at 100 TB the head is the per-query artifact a
-    * serving tier caches after the re-rank stage. `core.sourceSig` keys
-    * the memo to the snapshot so a corpus regenerated in place rescores. */
-  private val ceHeadMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Seq[(Long, Long, Long, Long)]]]()
-
+    * Memoized per (session, corpus snapshot): the head is a 20-tuple
+    * driver value whose candidate generation + CE scoring was being
+    * re-paid by the second consumer every pass; at 100 TB the head is the
+    * per-query artifact a serving tier caches after the re-rank stage. */
   private def ceScoredHead(spark: SparkSession, dir: String,
-      gate: String): Seq[(Long, Long, Long, Long)] = {
-    val key = s"$dir@${core.sourceSig(spark, dir, "documents", "embeddings")}"
-    // compute OUTSIDE the memo lock (the Bpe.trainMergesR discipline): a
-    // lost race rescores the same deterministic head and keeps the first
-    def map = ceHeadMemo.computeIfAbsent(spark,
-      _ => scala.collection.mutable.Map())
-    ceHeadMemo.synchronized(map.get(key)) match {
-      case Some(v) => v
-      case None =>
-        val t0 = System.nanoTime()
-        val v = ceScoredHeadCompute(spark, dir, gate)
-        // one-time memo-miss cost into the build ledger (r21 verdict #2:
-        // the CE compute exists in every run but appeared in no number)
-        core.recordBuild("memo:ce_head", (System.nanoTime() - t0) / 1e9)
-        ceHeadMemo.synchronized(map.getOrElseUpdate(key, v))
-    }
-  }
+      gate: String): Seq[(Long, Long, Long, Long)] =
+    core.snapshotMemo(spark, "memo:ce_head", dir, "documents", "embeddings")(
+      ceScoredHeadCompute(spark, dir, gate))
 
   private def ceScoredHeadCompute(spark: SparkSession, dir: String,
       gate: String): Seq[(Long, Long, Long, Long)] = {

@@ -129,16 +129,12 @@ object Ingest {
     * fixed `1 << 22` bound lands every key above it in the last partition
     * at large scale factors — bounds shape the read strides only, never
     * filter, so this is a balance fix, not a correctness one): one max
-    * over the parquet original's key column, MEMOIZED per (dir, table,
-    * key, content signature) so the many per-gate partitioned reads
-    * share one scan instead of re-running it. */
-  private val keyBoundMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    * over the parquet original's key column, memoized per table snapshot
+    * so the many per-gate partitioned reads share one scan. */
   private def keyUpperBound(spark: SparkSession, dir: String,
       table: String, key: String): Long =
-    keyBoundMemo.computeIfAbsent(
-      s"$dir/$table/$key/${sourceSig(spark, dir, table)}",
-      _ => tbl(spark, dir, table).agg(max(col(key))).head().getLong(0) + 1L)
+    snapshotMemo(spark, s"memo:key_bound_$table.$key", dir, table)(
+      tbl(spark, dir, table).agg(max(col(key))).head().getLong(0) + 1L)
 
   /** The one partitioned key-strided Derby read every live-source gate
     * uses: 8 key-range partitions extracting in parallel, bounds derived

@@ -5,8 +5,9 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one runner for concurrent driver actions, and the source rule that
-  * keeps it the only one. No SparkSession needed. */
+/** The one runner for concurrent driver actions, and the source rules
+  * that keep it and the one per-snapshot memo the only ones. No
+  * SparkSession needed. */
 class CoreSpec extends AnyFunSuite {
 
   test("concurrently overlaps its legs and returns results in input order") {
@@ -37,10 +38,11 @@ class CoreSpec extends AnyFunSuite {
     assert(err.getSuppressed.map(_.getMessage).toSeq == Seq("second failure"))
   }
 
-  test("no source outside core runs its own concurrent driver actions") {
+  /** `file:line: text` of every `src/main` line outside core/core.scala
+    * that matches `banned`. */
+  private def offendersOutsideCore(banned: scala.util.matching.Regex): Seq[String] = {
     val root = java.nio.file.Paths.get(s"${sys.props("user.dir")}/src/main/scala")
     val own = root.resolve("graft/core/core.scala")
-    val banned = """scala\.concurrent|\bAwait\b|\bactionEc\b""".r
     val files = java.nio.file.Files.walk(root).iterator()
     var offenders = Seq.empty[String]
     while (files.hasNext) {
@@ -53,7 +55,18 @@ class CoreSpec extends AnyFunSuite {
         }
       }
     }
+    offenders
+  }
+
+  test("no source outside core runs its own concurrent driver actions") {
+    val offenders = offendersOutsideCore("""scala\.concurrent|\bAwait\b|\bactionEc\b""".r)
     assert(offenders.isEmpty,
       s"use core.concurrently instead:\n${offenders.mkString("\n")}")
+  }
+
+  test("no source outside core keeps its own memo map") {
+    val offenders = offendersOutsideCore("""\bWeakHashMap\b|\bConcurrentHashMap\b""".r)
+    assert(offenders.isEmpty,
+      s"remember per-snapshot results through core.snapshotMemo instead:\n${offenders.mkString("\n")}")
   }
 }
