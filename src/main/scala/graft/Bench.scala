@@ -31,13 +31,13 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Spark warns "No Partition Defined for Window operation" once per
-    // partition-less window it runs: 140 warnings in 12 gates at sf0.01
-    // (ROADMAP.md direction H). The sites read so far are bounded
-    // (surrogate-offset rows, the LM histogram, day/month series, the BPE
-    // alphabet), but each bound lives only in a comment, and no test checks
-    // plans for an unpartitioned window. Until direction H enforces the
-    // bounds in code, this harness silences that logger pair so the
-    // artifact tail stays readable.
+    // partition-less window it runs: 102 warnings in 7 gates at sf0.01
+    // (ROADMAP.md direction H). The sites read so far are bounded (the LM
+    // histogram, day/month series, the BPE alphabet), but each bound
+    // lives only in a comment, and no test checks plans for an
+    // unpartitioned window. Until direction H enforces the bounds in code,
+    // this harness silences that logger pair so the artifact tail stays
+    // readable.
     for (n <- Seq("org.apache.spark.sql.execution.window.WindowExec",
                   "org.apache.spark.sql.execution.window.WindowExecBase"))
       org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -1037,13 +1037,13 @@ object TextOps {
     * streams. Position = rank in `md5(seed | doc_id)` order (a new seed =
     * a fresh epoch-level reshuffle); the md5 key is suffixed with the
     * doc_id so keys stay unique even under digest collision — the
-    * uniqueness the two-pass numbering needs at range boundaries. Rank is
-    * computed with the same scalable machinery as W8 surrogate keys
-    * (range-partition by key → 32-row offset table → per-partition
-    * row_number): no global single-partition window, so it holds at any
-    * corpus size, and the range partitioning IS the export layout (each
-    * output partition is a contiguous, internally-sorted slice of the
-    * shuffle order). */
+    * uniqueness W8 surrogate keys require (a repeated key fails the
+    * numbering). Rank is computed by that same one sorted pass (sort by
+    * key → `zipWithIndex` in partition order): no global
+    * single-partition window, so it holds at any corpus size, and the
+    * sort's range partitioning IS the export layout (each output
+    * partition is a contiguous, internally-sorted slice of the shuffle
+    * order). */
   val tShuffleExport: QueryDef = QueryDef(
     "t_shuffle_export",
     Some("""

@@ -72,43 +72,38 @@ object Warehouse {
       .orderBy("date_key")
   }
 
-  /** W8 — surrogate-key assignment. The oracle semantic is
-    * `ROW_NUMBER() OVER (ORDER BY businessKey)` (reference
-    * `dim_customers.sql:5`), but a global-window row_number funnels all rows
-    * through ONE partition — fine for dims, fatal at 100 TB. This
-    * implementation is the scalable two-pass equivalent, DataFrame-only:
-    * range-partition by the key (pinned once with `localCheckpoint` so the
-    * sampled range boundaries can't drift between passes), aggregate a
-    * 32-row per-partition count table, turn it into exclusive prefix-sum
-    * offsets with a window over those 32 rows, and broadcast-join the offset
-    * back so each partition numbers itself with a `__pid`-partitioned
-    * row_number. Output is identical to the global ROW_NUMBER whenever the
-    * key is unique (ties could straddle range boundaries otherwise — callers
-    * must pass a unique business key), and every pass is partition-parallel:
-    * no single-partition window, no RDD API, no codegen break. */
-  def withSurrogateKey(df: DataFrame, keyCol: String, outCol: String,
-      numPartitions: Int = 32): DataFrame = {
-    val cols = df.columns
-    // localCheckpoint materializes the range shuffle eagerly: both the count
-    // pass and the numbering pass read the SAME partitioning (range sampling
-    // is only run once), and the lineage is evaluated exactly once.
-    val sorted = df
-      .repartitionByRange(numPartitions, col(keyCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted
-      .groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(
-          sum(col("__cnt")).over(
-            Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select("__pid", "__offset")
-    val within = Window.partitionBy("__pid").orderBy(keyCol)
-    sorted
-      .join(broadcast(offsets), "__pid")
-      .withColumn(outCol, row_number().over(within).cast(LongType) + col("__offset"))
-      .select((outCol +: cols.toSeq).map(col): _*)
+  /** W8 — surrogate-key assignment: dense 1..N in `keyCol` order, the
+    * oracle's `ROW_NUMBER() OVER (ORDER BY businessKey)` (reference
+    * `dim_customers.sql:5`) without a global window, which would funnel
+    * every row through one task. One sorted pass: Spark's sort
+    * range-partitions by the key over the session's shuffle partitions
+    * (AQE may coalesce them) and sorts each partition, and `zipWithIndex`
+    * numbers the rows in partition order — one job counts each partition,
+    * the next reads the same shuffle output and numbers from the counts'
+    * prefix sums. The key must be unique: range partitioning sends equal
+    * keys to one partition and the sort makes them adjacent, so the
+    * numbering pass fails on a repeated key, naming it, at no extra job.
+    * At scale a sort-then-count is one shuffle of the rows plus a second
+    * read of the sorted partitions, each task holding one partition's
+    * slice, one count per partition on the driver, and each row converted
+    * to a `Row` and back once (the RDD step leaves whole-stage codegen). */
+  def withSurrogateKey(df: DataFrame, keyCol: String, outCol: String): DataFrame = {
+    val k = df.schema.fieldIndex(keyCol)
+    val numbered = df.sort(keyCol).rdd
+      .mapPartitions { rows =>
+        var prev: Option[Any] = None
+        rows.map { r =>
+          val key = r.get(k)
+          require(!prev.contains(key),
+            s"withSurrogateKey: $keyCol = $key repeats; the business key must be unique")
+          prev = Some(key)
+          r
+        }
+      }
+      .zipWithIndex()
+      .map { case (r, i) => Row.fromSeq((i + 1) +: r.toSeq) }
+    df.sparkSession.createDataFrame(numbered,
+      StructType(StructField(outCol, LongType, nullable = false) +: df.schema.fields))
   }
 
   /** W8 gate: scalable surrogate keys hash-match the ROW_NUMBER oracle. */

@@ -223,13 +223,12 @@ object Aggregates {
     * The exact yardstick deliberately avoids Spark's `percentile` aggregate,
     * which buffers every value in executor/driver memory (a 100 TB
     * non-starter and the slow path even at sf0.1). Instead: range-partition
-    * the column and locate target ranks via per-partition counts — the same
-    * two-pass prefix-sum pattern as [[graft.model.Warehouse.withSurrogateKey]]
-    * — then read the two values straddling rank q·(n−1) with one
+    * the column and locate target ranks via per-partition counts and their
+    * prefix sums, then read the two values straddling rank q·(n−1) with one
     * partition-local sort, and interpolate. Every pass partition-parallel,
-    * driver state = a 32-row count table plus a handful of scalars. Ties
-    * across range boundaries are harmless here: equal values make any rank
-    * among them read the same value. */
+    * driver state = one count per shuffle partition plus a handful of
+    * scalars. Ties across range boundaries are harmless here: equal values
+    * make any rank among them read the same value. */
   val aApproxPercentile: QueryDef = QueryDef(
     "a_approx_percentile",
     Some("""
@@ -240,7 +239,7 @@ object Aggregates {
     """)) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
     // Pass 1: range-partition the column (cached — ~8 bytes/row), collect
-    // the 32-row per-partition count table; driver derives n and, for each
+    // the per-partition count table; driver derives n and, for each
     // target global rank, which partition holds it at which local rank.
     val parts = tbl(spark, dir, "lineitem")
       .select(col("l_extendedprice").cast(DoubleType).as("v"))

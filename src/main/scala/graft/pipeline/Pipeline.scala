@@ -19,7 +19,7 @@ import java.time.LocalDate
   *
   * Scale posture: the fact table flows through exactly one shuffle (the
   * daily rollup); both dimension joins are broadcast; the surrogate-key
-  * pass is the two-pass partition-parallel assignment (no global window);
+  * pass is one partition-parallel sorted pass (no global window);
   * and the scalar run-accounting aggregates are map-side-combined counts
   * cross-joined into a single row — no collect() anywhere.
   */
@@ -32,7 +32,7 @@ object Pipeline {
     *
     * Per-model scale posture is unchanged from the hand-built lineage:
     * validation is a broadcast semi join (the fact side never shuffles),
-    * surrogate keys are the two-pass partition-parallel assignment, both
+    * surrogate keys are one partition-parallel sorted pass, both
     * fact joins broadcast their dimension, and the daily rollup is the
     * fact's single shuffle. */
   val dailyDag: ModelRegistry = new ModelRegistry(Seq(
@@ -59,7 +59,7 @@ object Pipeline {
       Cleaning.integrityFilter(ref("stg_src"),
         ref("stg_customer").select(col("c_custkey").as("o_custkey")), "o_custkey")
     },
-    // -- dimensions (W8 two-pass surrogate keys, S10 date dim) ------------
+    // -- dimensions (W8 sorted-pass surrogate keys, S10 date dim) ---------
     ModelDef("dim_customer", Seq("stg_customer"), mart = true) { (_, _, ref) =>
       Warehouse.withSurrogateKey(
         ref("stg_customer").select("c_custkey"), "c_custkey", "customer_key")

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 /** The contract of `core.snapshotMemo`, the one per-snapshot memo: one
   * compute per key however many callers, a lock per key rather than one
   * global lock, nothing stored by a failed compute, no value shared
-  * between sessions, and one ledger entry per miss. */
+  * between sessions, and one ledger entry per miss holding its self time. */
 class SnapshotMemoSpec extends SparkSpec {
 
   /** A label no other test (or earlier run of this one) has used. */
@@ -78,6 +78,19 @@ class SnapshotMemoSpec extends SparkSpec {
     assert(core.snapshotMemo(spark, label, sfDir, "region")("first") == "first")
     assert(core.snapshotMemo(other, label, sfDir, "region")("second") == "second")
     assert(core.snapshotMemo(spark, label, sfDir, "region")("third") == "first")
+  }
+
+  test("a miss nested in another miss is counted once: the outer entry is its self time") {
+    val (outer, inner) = (fresh("outer"), fresh("inner"))
+    core.snapshotMemo(spark, outer, sfDir, "region") {
+      Thread.sleep(50)
+      core.snapshotMemo(spark, inner, sfDir, "region") { Thread.sleep(300); 1 }
+    }
+    val Seq(outerSec) = core.buildLedger.collect { case (`outer`, s) => s }
+    val Seq(innerSec) = core.buildLedger.collect { case (`inner`, s) => s }
+    assert(innerSec >= 0.3)
+    assert(outerSec >= 0.05 && outerSec < innerSec,
+      s"outer $outerSec s, inner $innerSec s: the outer entry still holds the inner miss")
   }
 
   test("each miss adds exactly one ledger entry under its label") {

@@ -31,6 +31,15 @@ abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
 
+  /** `body` run with AQE's partition coalescing off, so a small sort keeps
+    * the session's 4 shuffle partitions instead of being merged into one. */
+  def uncoalesced[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** `body`'s value and the number of Spark jobs it started, counted by a
     * listener on a job group of its own (broadcast jobs inherit the
     * group). AQE is off while `body` runs: its re-planning makes the count

@@ -50,15 +50,35 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("surrogate keys are dense 1..N in business-key order and deterministic (W8)") {
-    val dim = (1 to 500).map(i => (i * 7 % 501, s"name_$i")).toDF("bk", "name")
-    val keyed = Warehouse.withSurrogateKey(dim, "bk", "sk", numPartitions = 8)
-    val pairs = keyed.select("sk", "bk").as[(Long, Int)].collect().sortBy(_._1)
-    assert(pairs.map(_._1).toSeq === (1L to 500L)) // dense, no gaps
-    assert(pairs.map(_._2).toSeq === pairs.map(_._2).sorted.toSeq) // sk order == bk order
-    // run twice → identical assignment (no nondeterministic ids)
-    val again = Warehouse.withSurrogateKey(dim, "bk", "sk", numPartitions = 8)
-      .select("sk", "bk").as[(Long, Int)].collect().sortBy(_._1)
-    assert(again.toSeq === pairs.toSeq)
+    uncoalesced {
+      val dim = (1 to 500).map(i => (i * 7 % 501, s"name_$i")).toDF("bk", "name")
+      val keyed = Warehouse.withSurrogateKey(dim, "bk", "sk")
+      assert(keyed.rdd.getNumPartitions === 4)
+      val pairs = keyed.select("sk", "bk").as[(Long, Int)].collect().sortBy(_._1)
+      assert(pairs.map(_._1).toSeq === (1L to 500L)) // dense, no gaps
+      assert(pairs.map(_._2).toSeq === pairs.map(_._2).sorted.toSeq) // sk order == bk order
+      // run twice → identical assignment (no nondeterministic ids)
+      val again = Warehouse.withSurrogateKey(dim, "bk", "sk")
+        .select("sk", "bk").as[(Long, Int)].collect().sortBy(_._1)
+      assert(again.toSeq === pairs.toSeq)
+    }
+  }
+
+  test("surrogate keys fail on a repeated business key, naming the column and the key") {
+    uncoalesced {
+      val dim = ((1 to 200) :+ 137).map(i => (i, s"name_$i")).toDF("bk", "name")
+      val err = intercept[org.apache.spark.SparkException] {
+        Warehouse.withSurrogateKey(dim, "bk", "sk").collect()
+      }
+      assert(err.getMessage.contains("withSurrogateKey: bk = 137 repeats"), err.getMessage)
+    }
+  }
+
+  test("one surrogate-key build runs 3 jobs: range sample, partition counts, numbering") {
+    val dim = (1 to 500).map(i => (i, s"name_$i")).toDF("bk", "name")
+    val (rows, jobs) = jobsOf(Warehouse.withSurrogateKey(dim, "bk", "sk").collect())
+    assert(rows.length === 500)
+    assert(jobs === 3)
   }
 
   test("upsert: incoming replaces existing on key, others survive (S8)") {
