@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** One engine capability exposed to the driver's correctness gate.
   *
@@ -141,8 +144,11 @@ object core {
     * weakly, but a value that references its session (a DataFrame) keeps
     * that session reachable for the life of the JVM. Values are
     * driver-side results and plans over immutable files, never cached
-    * blocks, so [[releaseSessionState]] has nothing here to evict.
-    * `label` names one value type: a result is cast back to `T`. */
+    * blocks, so [[releaseSessionState]] has nothing here to evict: a miss
+    * whose value holds a frame that reads a local checkpoint (on its own,
+    * or inside a `Map`, a `Seq` or a tuple) fails, naming `label`, and
+    * stores nothing. `label` names one value type: a result is cast back
+    * to `T`. */
   def snapshotMemo[T](spark: SparkSession, label: String, dir: String, tables: String*)(
       compute: => T): T = {
     val key = (label, dir, sourceSig(spark, dir, tables: _*))
@@ -150,12 +156,38 @@ object core {
     def stored = snapshotValues.synchronized(values.get(key))
     stored.getOrElse(withLock(s"memo:$key") {
       stored.getOrElse {
-        val v = timedBuild(label)(compute)
+        val v = timedBuild(label) {
+          val v = compute
+          val held = framesIn(v).flatMap(checkpointsOf).map(_.id).toSeq.distinct
+          if (held.nonEmpty) throw new IllegalStateException(
+            s"snapshotMemo($label): the value reads local checkpoints (RDDs ${held.mkString(", ")}), " +
+              "which releaseSessionState drops while the memo still serves it")
+          v
+        }
         snapshotValues.synchronized(values(key) = v)
         v
       }
     }).asInstanceOf[T]
   }
+
+  /** Every frame in a memo value: the value itself, or those inside a
+    * collection (a `Map`'s entries, a `Seq`) or a tuple, at any depth. */
+  private def framesIn(v: Any): Iterator[Dataset[_]] = v match {
+    case ds: Dataset[_] => Iterator(ds)
+    case it: Iterable[_] => it.iterator.flatMap(framesIn)
+    case p: Product => p.productIterator.flatMap(framesIn)
+    case _ => Iterator.empty
+  }
+
+  /** The local checkpoints `ds` reads: the LogicalRDD leaves of its
+    * analyzed plan, subqueries included, whose RDD has a storage level (a
+    * frame made by `createDataFrame` over an unpersisted RDD is not one).
+    * A walk of the plan on the driver: it runs no job. A released
+    * checkpoint keeps its storage level, so it is still listed. */
+  def checkpointsOf(ds: Dataset[_]): Seq[RDD[_]] =
+    ds.queryExecution.analyzed.collectWithSubqueries {
+      case r: LogicalRDD if r.rdd.getStorageLevel != StorageLevel.NONE => r.rdd
+    }.distinctBy(_.id)
 
   /** Driver-side overlap pool for independent Spark actions (guide §2.6).
     * A cached DAEMON pool never starves on blocked threads: a driver

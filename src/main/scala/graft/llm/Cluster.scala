@@ -294,7 +294,7 @@ object Cluster {
     * real pipeline materializes labels ONCE and every consumer (canonical
     * mapping, survivor selection, the drop-list export) reads the table
     * instead of re-running edge generation + CC rounds. */
-  private val clusterDag = new graft.pipeline.ModelRegistry(Seq(
+  private[graft] val clusterDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("stg_dup_edges", Nil, mart = false) {
       (s, d, _) => dupEdges(s, d)
     },

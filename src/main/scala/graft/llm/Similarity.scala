@@ -1282,12 +1282,12 @@ object Similarity {
       a => fixedMean(fixedSums(a, "sv", "m", "cell"), "m", "cell")
         .select(col("m"), col("cell").as("code"), col("cv")))
     val fin = finA
-      .select(col("m"), col("cell"),
+      .select(col("m"), col("cell").as("code"),
         floor(col("d") * 10000000.0).cast(LongType).as("dist_q"))
-      .groupBy("m", "cell")
+      .groupBy("m", "code")
       .agg(count(lit(1)).as("n_members"), sum(col("dist_q")).as("inertia_q"))
-    val out = book.join(fin, book("m") === fin("m") && col("code") === col("cell"), "left")
-      .select(book("m").as("bm"), col("code"), col("cv"),
+    val out = book.join(fin, Seq("m", "code"), "left")
+      .select(col("m").as("bm"), col("code"), col("cv"),
         coalesce(col("n_members"), lit(0L)).as("n_members"),
         coalesce(col("inertia_q"), lit(0L)).as("inertia_q"))
       .collect()
@@ -3507,12 +3507,9 @@ object Similarity {
     graft.pipeline.ModelDef("mart_ann_cents32", Nil, mart = true) { (s, d, _) =>
       val e = emb(s, d).select(col("vec_id"), col("embedding")).localCheckpoint(true)
       val cents = lloydCells(e, 32, CellRounds)
-      // 32 rows — collect to a driver value so every training checkpoint
-      // is released BEFORE the registry's write (no leaked blocks)
-      val rows = cents.collect()
-      val schema = cents.schema
-      Seq(cents, e).foreach(core.release)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      // the centroids are a checkpoint of their own: nothing reads e now
+      core.release(e)
+      cents
     },
     graft.pipeline.ModelDef("mart_ann_assign32", Seq("mart_ann_cents32"),
         mart = true) { (s, d, built) =>
@@ -3704,10 +3701,8 @@ object Similarity {
       val e = emb(s, d).select(col("vec_id"), col("embedding")).localCheckpoint(true)
       val cents = lloydCells(e.filter(col("vec_id") % 5 < 4), 32, CellRounds,
         col("vec_id") < 40)
-      val rows = cents.collect()
-      val schema = cents.schema
-      Seq(cents, e).foreach(core.release)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      core.release(e)
+      cents
     },
     graft.pipeline.ModelDef("mart_annb_assign", Seq("mart_annb_cents32"),
         mart = true) { (s, d, built) =>
@@ -4765,11 +4760,10 @@ object Similarity {
     * expensive step and its output is (rounds+1)·n·K long triples, so it
     * is paid once and BOTH consumers — the [[simNnDescent]] trajectory
     * audit and the [[simGraphServe]] walk — read the table back; a
-    * deployment's "graph built once" story is literal here. Every
-    * per-round checkpoint is released before the builder returns (the
-    * union is first eagerly materialized so the truncated lineages are
-    * never recomputed); the one frame that outlives the builder is that
-    * union, released like every mart artifact by releaseSessionState. */
+    * deployment's "graph built once" story is literal here. The builder
+    * returns the lazy union of the rounds' lists; every kept-list
+    * checkpoint it reads (and `e`, `init` behind round 0) is freed by the
+    * registry once the mart is written. */
   private val nnDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nn_rounds", Nil, mart = true) { (s, d, _) =>
       val (e, n) = nnEmb(s, d)
@@ -4783,25 +4777,21 @@ object Similarity {
       // candidates are a function of the list (c_{r+1} = f(l_r) =
       // f(l_{r-1}) = c_r), so the remaining mart rows replicate this
       // round's list and candidate count bit-for-bit instead of re-running
-      // the join. State: (kept list, its candidate count, mart rows so far,
-      // every kept checkpoint). Superseded lists stay cached — the mart
-      // rows read them — until the union is materialized.
+      // the join. State: (kept list, its candidate count, mart rows so
+      // far). Superseded lists stay cached: the mart rows read them.
       val res = Fixpoint.run(
-          (init, 0L, tagged(nnTopK(e, NndK)(init), 0, 0L), List.empty[DataFrame]),
-          NndRounds, (_: (DataFrame, Long, DataFrame, List[DataFrame])) => ()) {
-        case ((cur, _, out, kept), r) =>
+          (init, 0L, tagged(nnTopK(e, NndK)(init), 0, 0L)),
+          NndRounds, (_: (DataFrame, Long, DataFrame)) => ()) {
+        case ((cur, _, out), r) =>
           val (cand, candBacking, next) = nnStep(e, cur)
           val nc = cand.count()
           core.release(candBacking)
-          ((next, nc, out.unionByName(tagged(next, r + 1, nc)), next :: kept),
+          ((next, nc, out.unionByName(tagged(next, r + 1, nc))),
             Fixpoint.frameSig(next, "s", "t"))
       }
-      val (last, nc, rows, kept) = res.state
-      val mat = (res.rounds + 1 to NndRounds)
+      val (last, nc, rows) = res.state
+      (res.rounds + 1 to NndRounds)
         .foldLeft(rows)((out, r) => out.unionByName(tagged(last, r, nc)))
-        .localCheckpoint(true)
-      (init :: e :: kept).foreach(core.release)
-      mat
     }))
 
   /** Materialize-once accessor for the per-round NN-descent mart. */
@@ -5472,11 +5462,10 @@ object Similarity {
         val next = nnStepNext(eB, cur)
         (next, Fixpoint.frameSig(next, "s", "t"))
       }.state
-      // mat is materialized BEFORE the last kept list releases (truncated
-      // lineage can't recompute)
-      val mat = last.select("s", "t", "rk").localCheckpoint(true)
-      Seq(last, init, e).foreach(core.release)
-      mat
+      // the last kept list is a checkpoint of its own: nothing reads the
+      // init or e now
+      Seq(init, e).foreach(core.release)
+      last.select("s", "t", "rk")
     }))
 
   /** Materialize-once accessor for the frozen-base graph mart. */
@@ -5484,19 +5473,13 @@ object Similarity {
     graft.pipeline.MartCache.read(spark, dir, nnBaseDag, "nnb_marts", "graft_nnb_",
       Seq("embeddings"), "mart_nn_base").head
 
-  /** Cell-blocked arrival seeds for the batch `vec_id % 10 = residue`
-    * against the CURRENT member set — the fold-seed recipe shared by the
-    * streamed append sink, the policy gate, and the fold-mart builders.
-    * Seeds are a function of (member set, frozen cell assignment) only —
-    * never of the graph — which is why a consolidated and an
-    * unconsolidated trajectory may reuse the same seed artifact. */
-  private def foldSeed(spark: SparkSession, dir: String, e: DataFrame,
-      residue: Long, members: DataFrame): DataFrame =
-    foldSeedBy(spark, dir, e, col("vec_id") % 10 === residue, members)
-
-  /** Predicate-shaped twin of [[foldSeed]] for batches that are not a
-    * single `%10` residue class (the policy feed's batch 2 is
-    * `%20=9 ∪ %40=19`); same cell-blocked top-10 recipe. */
+  /** Cell-blocked arrival seeds for the batch `fresh` (a `%10` residue
+    * class, or the policy feed's batch 2 `%20=9 ∪ %40=19`) against the
+    * CURRENT member set — the fold-seed recipe shared by the streamed
+    * append sink, the policy gate, and the fold-mart builders. Seeds are a
+    * function of (member set, frozen cell assignment) only — never of the
+    * graph — which is why a consolidated and an unconsolidated trajectory
+    * may reuse the same seed artifact. */
   private def foldSeedBy(spark: SparkSession, dir: String, e: DataFrame,
       fresh: Column, members: DataFrame): DataFrame = {
     val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
@@ -5525,10 +5508,8 @@ object Similarity {
   private val nnFoldDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nn_seed1", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      val out = foldSeed(s, d, e, 4L,
-        e.select("vec_id").filter(col("vec_id") % 5 < 4)).localCheckpoint(true)
-      core.release(e)
-      out
+      foldSeedBy(s, d, e, col("vec_id") % 10 === 4L,
+        e.select("vec_id").filter(col("vec_id") % 5 < 4))
     },
     graft.pipeline.ModelDef("mart_nn_fold1", Seq("mart_nn_seed1"), mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
@@ -5539,12 +5520,9 @@ object Similarity {
     },
     graft.pipeline.ModelDef("mart_nn_seed2", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      val out = foldSeed(s, d, e, 9L,
+      foldSeedBy(s, d, e, col("vec_id") % 10 === 9L,
         e.select("vec_id")
           .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
-        .localCheckpoint(true)
-      core.release(e)
-      out
     },
     graft.pipeline.ModelDef("mart_nn_fold2", Seq("mart_nn_fold1", "mart_nn_seed2"),
       mart = true) { (s, d, res) =>
@@ -5569,8 +5547,8 @@ object Similarity {
 
   /** [[NndAppendRounds]] NN-descent rounds off a fold snapshot,
     * releasing each intermediate kept list once the next one is
-    * checkpointed (the nnDag builder's discipline: dropping the reference
-    * alone pins round 1's n·K rows until garbage collection). ONE
+    * checkpointed (dropping the reference alone pins round 1's n·K rows
+    * until garbage collection). ONE
     * definition for the consolidation-mart builders in [[nnFoldDag]] and
     * [[nnPolicyDag]] (r20 review). */
   private def consolidateRounds(e: DataFrame, start: DataFrame): DataFrame =
@@ -5609,13 +5587,10 @@ object Similarity {
   private val nnPolicyDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nnp_seed2", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      val out = foldSeedBy(s, d, e,
+      foldSeedBy(s, d, e,
         col("vec_id") % 20 === 9 || col("vec_id") % 40 === 19,
         e.select("vec_id")
           .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
-        .localCheckpoint(true)
-      core.release(e)
-      out
     },
     graft.pipeline.ModelDef("mart_nnp_fold2", Seq("mart_nnp_seed2"), mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
@@ -5635,12 +5610,9 @@ object Similarity {
     },
     graft.pipeline.ModelDef("mart_nnp_seed3", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      val out = foldSeedBy(s, d, e,
+      foldSeedBy(s, d, e,
         col("vec_id") % 40 === 39,
         e.select("vec_id").filter(!(col("vec_id") % 40 === 39)))
-        .localCheckpoint(true)
-      core.release(e)
-      out
     },
     graft.pipeline.ModelDef("mart_nnp_fold3", Seq("mart_nnp_consol2", "mart_nnp_seed3"),
       mart = true) { (s, d, res) =>
@@ -5670,48 +5642,23 @@ object Similarity {
     * convention — every ORACLE still prices its referee inline as one n²
     * `sc` table); integer (s, t, rk) triples, so the parquet round-trip
     * is exact. One single-model registry per referee, so a consumer
-    * builds only the member set it audits (r19 review). */
-  private val nnExactKDag = new graft.pipeline.ModelRegistry(Seq(
-    graft.pipeline.ModelDef("mart_nn_exactk", Nil, mart = true) { (s, d, _) =>
-      val (e, _) = nnEmb(s, d)
-      val out = nnTopK(e, 10)(
-        e.select(col("vec_id").as("s"))
-          .crossJoin(broadcast(e.select(col("vec_id").as("t"))))
-          .filter(col("s") =!= col("t"))).localCheckpoint(true)
-      core.release(e)
-      out
-    }))
+    * builds only the member set it audits (r19 review); `apply` reads
+    * the referee as (s, t) pairs ready for the hit joins. */
+  private final class NnExactReferee(mart: String, tag: String, member: Column) {
+    private val dag = new graft.pipeline.ModelRegistry(Seq(
+      graft.pipeline.ModelDef(mart, Nil, mart = true) { (s, d, _) =>
+        val (e, _) = nnEmb(s, d)
+        val ids = e.select("vec_id").filter(member)
+        nnTopK(e, 10)(
+          ids.select(col("vec_id").as("s"))
+            .crossJoin(broadcast(ids.select(col("vec_id").as("t"))))
+            .filter(col("s") =!= col("t")))
+      }))
 
-  private val nnExactM1Dag = new graft.pipeline.ModelRegistry(Seq(
-    graft.pipeline.ModelDef("mart_nn_exact_m1", Nil, mart = true) { (s, d, _) =>
-      val (e, _) = nnEmb(s, d)
-      val m1 = e.select("vec_id")
-        .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4)
-        .localCheckpoint(true)
-      val out = nnTopK(e, 10)(
-        m1.select(col("vec_id").as("s"))
-          .crossJoin(broadcast(m1.select(col("vec_id").as("t"))))
-          .filter(col("s") =!= col("t"))).localCheckpoint(true)
-      Seq(m1, e).foreach(core.release)
-      out
-    }))
-
-  private val nnExactPm2Dag = new graft.pipeline.ModelRegistry(Seq(
-    graft.pipeline.ModelDef("mart_nn_exact_pm2", Nil, mart = true) { (s, d, _) =>
-      val (e, _) = nnEmb(s, d)
-      // the streamed-policy feed's post-batch-2 member set: base ∪ batch 1
-      // (%10=4) ∪ batch 2 (%20=9 ∪ %40=19)
-      val pm2 = e.select("vec_id")
-        .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4
-          || col("vec_id") % 20 === 9 || col("vec_id") % 40 === 19)
-        .localCheckpoint(true)
-      val out = nnTopK(e, 10)(
-        pm2.select(col("vec_id").as("s"))
-          .crossJoin(broadcast(pm2.select(col("vec_id").as("t"))))
-          .filter(col("s") =!= col("t"))).localCheckpoint(true)
-      Seq(pm2, e).foreach(core.release)
-      out
-    }))
+    def apply(spark: SparkSession, dir: String): DataFrame =
+      graft.pipeline.MartCache.read(spark, dir, dag, s"${tag}_marts",
+        s"graft_${tag}_", Seq("embeddings"), mart).head.select("s", "t")
+  }
 
   /** THE kNN-graph audit stat: a graph (s, t, rk)'s node count, edge
     * count and recall@10 hits — edges with rk ≤ 10 that the exact top-10
@@ -5727,22 +5674,18 @@ object Similarity {
     (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
   }
 
-  /** Exact top-10 over the full corpus, as (s, t) pairs ready for the
-    * hit joins. */
-  private def nnExactKMart(spark: SparkSession, dir: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, nnExactKDag, "nnek_marts",
-      "graft_nnek_", Seq("embeddings"), "mart_nn_exactk").head.select("s", "t")
+  /** Exact top-10 over the full corpus. */
+  private val nnExactKMart = new NnExactReferee("mart_nn_exactk", "nnek", lit(true))
 
-  /** Exact top-10 among the mid-feed member set, as (s, t) pairs. */
-  private def nnExactM1Mart(spark: SparkSession, dir: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, nnExactM1Dag, "nnem1_marts",
-      "graft_nnem1_", Seq("embeddings"), "mart_nn_exact_m1").head.select("s", "t")
+  /** Exact top-10 among the mid-feed member set. */
+  private val nnExactM1Mart = new NnExactReferee("mart_nn_exact_m1", "nnem1",
+    col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4)
 
   /** Exact top-10 among the streamed-policy feed's post-batch-2 member
-    * set, as (s, t) pairs. */
-  private def nnExactPm2Mart(spark: SparkSession, dir: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, nnExactPm2Dag, "nnep2_marts",
-      "graft_nnep2_", Seq("embeddings"), "mart_nn_exact_pm2").head.select("s", "t")
+    * set: base ∪ batch 1 (%10=4) ∪ batch 2 (%20=9 ∪ %40=19). */
+  private val nnExactPm2Mart = new NnExactReferee("mart_nn_exact_pm2", "nnep2",
+    col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4
+      || col("vec_id") % 20 === 9 || col("vec_id") % 40 === 19)
 
   /** Prefixed NN-descent round CTEs over a shared `sc` score table —
     * the [[nnBuildCtes]] round shape factored so the append oracle can

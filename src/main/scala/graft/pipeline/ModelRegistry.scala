@@ -40,7 +40,9 @@ final case class ModelDef(
   * `<prefixTag>_<sourceSig>` in scratch, and every later call returns the
   * same read-back frames. This is the pipeline posture at 100 TB:
   * training is the expensive step, its output is tiny, so it is paid once
-  * per corpus snapshot, never once per consumer. */
+  * per corpus snapshot, never once per consumer. Only the mart frames are
+  * remembered: they read files, and the local checkpoints their builders
+  * made were freed by [[ModelRegistry.run]] after each write. */
 object MartCache {
   def read(spark: SparkSession, dir: String, dag: ModelRegistry,
       prefixTag: String, viewPrefix: String, sigSources: Seq[String],
@@ -52,6 +54,7 @@ object MartCache {
     val built = snapshotMemo(spark, s"mart:$prefixTag", dir, sigSources: _*) {
       dag.run(spark, dir, viewPrefix = viewPrefix,
         martPrefix = s"${prefixTag}_${sourceSig(spark, dir, sigSources: _*)}")
+        .filter { case (name, _) => dag.marts(name) }
     }
     names.map(built)
   }
@@ -67,6 +70,9 @@ final class ModelRegistry(models: Seq[ModelDef]) {
 
   /** Whether any model appends to its table on every run. */
   val hasAppend: Boolean = models.exists(_.append)
+
+  /** The names of the models written as tables. */
+  val marts: Set[String] = models.filter(_.mart).map(_.name).toSet
   locally {
     val missing = for (m <- models; d <- m.deps if !byName.contains(d))
       yield s"${m.name} -> $d"
@@ -105,7 +111,15 @@ final class ModelRegistry(models: Seq[ModelDef]) {
     * accumulate across runs; the read-back below always reflects the
     * whole table, so downstream models see the accumulated state). A mart
     * is read back with the schema of the frame just written, so no
-    * footer-inference job runs. */
+    * footer-inference job runs.
+    *
+    * After a mart's write, the registry frees every local checkpoint the
+    * written frame reads ([[graft.core.checkpointsOf]]), except those an
+    * earlier model's frame reads: a staging frame stays lazy and is
+    * returned, so its checkpoints wait for `releaseSessionState`. A
+    * builder therefore returns its result lazily and releases only what
+    * that result no longer reads (a checkpoint behind another
+    * checkpoint). */
   def run(spark: SparkSession, dir: String, viewPrefix: String = "graft_mdl_",
       martPrefix: String = "marts"): Map[String, DataFrame] =
     topoOrder.foldLeft(Map.empty[String, DataFrame]) { (built, name) =>
@@ -115,6 +129,9 @@ final class ModelRegistry(models: Seq[ModelDef]) {
         if (m.mart) {
           val loc = scratch(dir, s"$martPrefix/$name")
           df.write.mode(if (m.append) "append" else "overwrite").parquet(loc)
+          val kept = built.values.flatMap(checkpointsOf).map(_.id).toSet
+          checkpointsOf(df).filterNot(r => kept(r.id))
+            .foreach(org.apache.spark.graft.RddRelease(_))
           spark.read.schema(df.schema).parquet(loc)
         } else {
           df.createOrReplaceTempView(s"$viewPrefix$name")

@@ -119,4 +119,14 @@ class ClusterSpec extends SparkSpec {
     val edges = (chain ++ extra).toDF("a_id", "b_id")
     assert(jobsOf(Cluster.starContraction(edges))._2 === 31)
   }
+
+  // The labels checkpoint that components returns is freed by the
+  // registry after the mart's write; while builders kept their checkpoints
+  // this run left 2 RDDs behind (the edges and the labels).
+  test("the cluster-labels DAG leaves only its staging edges' checkpoint behind") {
+    val (built, left) = persistsOf(Cluster.clusterDag.run(spark, sfDir,
+      viewPrefix = "graft_cluster_spec_", martPrefix = "cluster_spec_marts"))
+    assert(left == core.checkpointsOf(built("stg_dup_edges")).map(_.id).toSet, s"left behind $left")
+    assert(built("mart_cluster_labels").count() > 0)
+  }
 }

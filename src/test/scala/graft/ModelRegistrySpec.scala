@@ -55,6 +55,44 @@ class ModelRegistrySpec extends SparkSpec {
     assert(built("mart_probe").head().getLong(0) === 5L)
   }
 
+  test("after a mart's write the registry frees the checkpoints it read, not a staging dependency's") {
+    var build = Seq.empty[Int]
+    var staged = Seq.empty[Int]
+    val reg = new ModelRegistry(Seq(
+      ModelDef("stg_ckpt", Nil, mart = false) { (s, _, _) =>
+        val stg = s.range(6).toDF("k").localCheckpoint(true)
+        staged = core.checkpointsOf(stg).map(_.id)
+        stg
+      },
+      ModelDef("mart_ckpt", Seq("stg_ckpt"), mart = true) { (s, _, ref) =>
+        val a = s.range(3).toDF("k").localCheckpoint(true)
+        val b = s.range(3, 5).toDF("k").localCheckpoint(true)
+        build = Seq(a, b).flatMap(core.checkpointsOf).map(_.id)
+        a.unionByName(b).unionByName(ref("stg_ckpt"))
+      }))
+    val (built, left) = persistsOf(
+      reg.run(spark, sfDir, viewPrefix = "graft_ckpt_probe_", martPrefix = "ckpt_probe"))
+    assert(build.size == 2 && staged.size == 1)
+    assert(left == staged.toSet, s"left behind $left; build checkpoints $build, staging $staged")
+    assert(built("mart_ckpt").count() === 11L)
+    assert(built("stg_ckpt").count() === 6L)
+  }
+
+  test("an append mart's build checkpoints are freed after every write") {
+    var build = Seq.empty[Int]
+    val reg = new ModelRegistry(Seq(
+      ModelDef("mart_ckpt_append", Nil, mart = true, append = true) { (s, _, _) =>
+        val a = s.range(4).toDF("k").localCheckpoint(true)
+        build ++= core.checkpointsOf(a).map(_.id)
+        a
+      }))
+    val prefix = s"ckpt_append_${System.nanoTime()}"
+    val (rows, left) = persistsOf(Seq.fill(2)(
+      reg.run(spark, sfDir, martPrefix = prefix)("mart_ckpt_append").count()))
+    assert(rows === Seq(4L, 8L))
+    assert(build.size == 2 && left.isEmpty, s"left behind $left; build checkpoints $build")
+  }
+
   test("MartCache.read rejects a registry holding an append mart") {
     val reg = new ModelRegistry(Seq(
       ModelDef("mart_appended", Nil, mart = true, append = true) { (s, _, _) =>

@@ -6,7 +6,8 @@ import java.util.concurrent.atomic.AtomicInteger
 /** The contract of `core.snapshotMemo`, the one per-snapshot memo: one
   * compute per key however many callers, a lock per key rather than one
   * global lock, nothing stored by a failed compute, no value shared
-  * between sessions, and one ledger entry per miss holding its self time. */
+  * between sessions, one ledger entry per miss holding its self time, and
+  * no value that reads a local checkpoint. */
 class SnapshotMemoSpec extends SparkSpec {
 
   /** A label no other test (or earlier run of this one) has used. */
@@ -104,5 +105,36 @@ class SnapshotMemoSpec extends SparkSpec {
     assert(ledgerEntries(label) == 2)
     core.snapshotMemo(spark.newSession(), label, sfDir, "region")(4) // another session: a miss
     assert(ledgerEntries(label) == 3)
+  }
+
+  test("a value that reads a local checkpoint fails the miss, naming the label, and stores nothing") {
+    val label = fresh("checkpoint")
+    val ckpt = spark.range(3).toDF("k").localCheckpoint(true)
+    try {
+      for (v <- Seq[Any](ckpt.filter("k > 0"), Map("m" -> ckpt), Seq(1, ckpt), ("t", Seq(ckpt)))) {
+        val err = intercept[IllegalStateException](core.snapshotMemo(spark, label, sfDir, "region")(v))
+        assert(err.getMessage.contains(label), err.getMessage)
+      }
+      assert(ledgerEntries(label) == 0)
+      assert(core.snapshotMemo(spark, label, sfDir, "region")("value") == "value")
+    } finally core.release(ckpt)
+  }
+
+  test("a mart read-back is stored: only the marts are kept, not a staging frame over a checkpoint") {
+    import org.apache.spark.sql.functions.col
+    val reg = new pipeline.ModelRegistry(Seq(
+      pipeline.ModelDef("stg_memo_ckpt", Nil, mart = false) { (s, _, _) =>
+        s.range(5).toDF("k").localCheckpoint(true)
+      },
+      pipeline.ModelDef("mart_memo_probe", Seq("stg_memo_ckpt"), mart = true) { (_, _, ref) =>
+        ref("stg_memo_ckpt").filter(col("k") > 1)
+      }))
+    val tag = fresh("mart").replaceAll("[^A-Za-z0-9]", "_")
+    def read = pipeline.MartCache.read(spark, sfDir, reg, tag, s"graft_${tag}_",
+      Seq("region"), "mart_memo_probe").head
+    val first = read
+    assert(core.checkpointsOf(first).isEmpty)
+    assert(first.count() === 3L)
+    assert(read eq first, "the second read built the marts again")
   }
 }

@@ -40,6 +40,16 @@ abstract class SparkSpec extends AnyFunSuite {
     try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** `body`'s value and the ids of the persistent RDDs it left behind:
+    * cached or checkpointed RDDs registered after it ran that were not
+    * registered before. */
+  def persistsOf[T](body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   /** `body`'s value and the number of Spark jobs it started, counted by a
     * listener on a job group of its own (broadcast jobs inherit the
     * group). AQE is off while `body` runs: its re-planning makes the count
