@@ -189,23 +189,24 @@ object Bpe {
     * vocabulary explode+shuffle into one filtered explode over the
     * touched words (typically a small fraction once the common pairs are
     * merged) plus the selection aggregate over the maintained
-    * pair table. Each superseded checkpoint is released as soon as its
-    * successor is materialized, the last ones before returning. */
+    * pair table. The rounds run on [[Fixpoint.run]] for exactly `rounds`
+    * rounds (every round merges at least one pair); each superseded
+    * checkpoint is released once its successor is materialized, the
+    * initial and the last ones before returning. */
   private[graft] def trainMergesBatched(spark: SparkSession, dir: String,
       rounds: Int, batch: Int, auditMaintenance: Boolean = false): Seq[(Int, String, String, Long)] = {
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var vocab = bpeVocab0(spark, dir).localCheckpoint(true)
-    var pairCounts = pairCountsOf(vocab).localCheckpoint(true)
-    var round = 0
-    while (round < rounds) {
+    // (vocab, its maintained pair counts, the merges so far)
+    type St = (DataFrame, DataFrame, Vector[(Int, String, String, Long)])
+    def release(st: St): Unit = Seq(st._1, st._2).foreach(core.release)
+    val vocab0 = bpeVocab0(spark, dir).localCheckpoint(true)
+    val init: St = (vocab0, pairCountsOf(vocab0).localCheckpoint(true), Vector.empty)
+    val last = Fixpoint.run(init, rounds, release) { case ((vocab, pairCounts, merges), round) =>
       val sel = selectBatch(pairCounts, batch)
       // the fixture corpus has far more than the budget's distinct adjacent
       // pairs; an exhausted vocabulary would silently desync the unrolled
       // oracle, so fail loudly instead (the global top-1 is always a local
       // maximum, so sel is empty only when NO pairs remain)
       require(sel.nonEmpty, s"BPE corpus exhausted at round ${round + 1}/$rounds")
-      val batchMerges = sel.map { case (pa, pb, cnt) => (round + 1, pa, pb, cnt) }
-      merges ++= batchMerges
       // only words holding a selected pattern change their pair multiset —
       // the incremental-maintenance footprint
       val touched = sel.map { case (pa, pb, _) =>
@@ -241,24 +242,23 @@ object Bpe {
         require(diff == 0L,
           s"incremental pair counts diverged from recount at round ${round + 1}: $diff keys")
       }
-      Seq(vocab, pairCounts).foreach(core.release)
-      vocab = next
-      pairCounts = nextPairs
-      round += 1
-    }
-    Seq(vocab, pairCounts).foreach(core.release)
-    merges.result()
+      ((next, nextPairs, merges ++ sel.map { case (pa, pb, cnt) => (round + 1, pa, pb, cnt) }),
+        Fixpoint.Changed(sel.size))
+    }.state
+    Seq(init, last).foreach(release)
+    last._3
   }
 
   /** The original one-pair-per-round trainer, retained as the equivalence
     * baseline for BpeSpec's batched-M=1 property test (an INDEPENDENT
-    * implementation, not the batched code path with batch = 1). */
+    * implementation, not the batched code path with batch = 1); only its
+    * loop is shared, [[Fixpoint.run]] for exactly `rounds` rounds. */
   private[graft] def trainMergesSequential(spark: SparkSession, dir: String,
       rounds: Int): Seq[(String, String, Long)] = {
-    val merges = Seq.newBuilder[(String, String, Long)]
-    var vocab = bpeVocab0(spark, dir).localCheckpoint(true)
-    var round = 0
-    while (round < rounds) {
+    type St = (DataFrame, Vector[(String, String, Long)]) // (vocab, merges)
+    val init: St = (bpeVocab0(spark, dir).localCheckpoint(true), Vector.empty)
+    def release(st: St): Unit = core.release(st._1)
+    val last = Fixpoint.run(init, rounds, release) { case ((vocab, merges), round) =>
       val withL = vocab.select(col("wcount"),
         split(col("syms").substr(lit(2), length(col("syms")) - 2), "><").as("l"))
       val pairs = withL.select(col("wcount"), explode(
@@ -273,16 +273,13 @@ object Bpe {
         .limit(1).collect()
       require(top.nonEmpty, s"BPE corpus exhausted at round ${round + 1}/$rounds")
       val (pa, pb, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-      merges += ((pa, pb, cnt))
       val next = vocab.withColumn("syms",
         replace(col("syms"), lit(s"<$pa><$pb>"), lit(s"<$pa$pb>")))
         .localCheckpoint(true)
-      core.release(vocab)
-      vocab = next
-      round += 1
-    }
-    core.release(vocab)
-    merges.result()
+      ((next, merges :+ ((pa, pb, cnt))), Fixpoint.Changed(1))
+    }.state
+    Seq(init, last).foreach(release)
+    last._2
   }
 
   /** Oracle CTE bundle shared by all four gates: wf (weighted vocabulary),

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** The round loop of every iterative kernel: Lloyd, PQ and IVF-split
-  * training, the NN-descent builds, the greedy walk, connected components
-  * and star contraction. A round body decides what it materializes and
+  * training, the NN-descent builds, the greedy walk, connected components,
+  * star contraction and the two BPE trainers. A round body decides what it materializes and
   * when (the walk runs this loop inside a task, once per key, on an
   * in-memory visited set); the driver owns the round cap, the stop test
   * and the release of each superseded state, so the loop policy is

@@ -760,10 +760,11 @@ object LangModel {
       FROM lmb CROSS JOIN tot
       GROUP BY bucket, tot.n_total ORDER BY bucket
     """)) { (spark, dir) =>
-    // the labeling arc lives in [[lmBucketLabels]]; a lazy checkpoint lets
-    // the rollup and the share denominator read one materialization
+    // the labeling arc lives in [[lmBucketLabels]]; the share denominator's
+    // count materializes its lazy checkpoint, so the rollup reads those
+    // blocks instead of racing a second compute of the same partitions
     val lab = lmBucketLabels(spark, dir).localCheckpoint(false)
-    val tot = lab.agg(count(lit(1)).as("n_total"))
+    val nTotal = lab.count()
     lab.groupBy("bucket")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -771,9 +772,8 @@ object LangModel {
         max(col("k")).as("k_max"),
         sum(col("doc_id").cast(DecimalType(38, 0))).cast(DecimalType(38, 0))
           .cast(DoubleType).as("doc_sum"))
-      .crossJoin(broadcast(tot))
       .select(col("bucket"), col("n_docs"), col("k_min"), col("k_max"),
-        round(col("n_docs").cast(DoubleType) / col("n_total").cast(DoubleType), 6)
+        round(col("n_docs").cast(DoubleType) / lit(nTotal.toDouble), 6)
           .as("share_r"),
         col("doc_sum"))
       .orderBy("bucket")

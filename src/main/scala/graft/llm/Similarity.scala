@@ -4638,27 +4638,27 @@ object Similarity {
     * quantizer with the graph build the way a production kNN-graph job
     * (semantic dedup, graph clustering, diversity sampling) actually
     * would. */
-  /** Checkpointed (vec_id, embedding) plus n, with the dense-id guard the
-    * ring init depends on. */
-  private def nnEmb(spark: SparkSession, dir: String): (DataFrame, Long) = {
-    val e = emb(spark, dir).select("vec_id", "embedding").localCheckpoint(true)
-    val nsRow = e.agg(count(lit(1)).as("n"), max("vec_id").as("mx")).head()
-    val n = nsRow.getLong(0)
-    val mx = nsRow.getLong(1)
-    require(mx == n - 1 && n > 10,
-      s"NN-descent ring init needs dense ids 0..n-1 (n=$n, max=$mx)")
-    (e, n)
-  }
-
-  /** `n` with the dense-id guard and NO vector checkpoint — for gates
-    * that need only the count (their referees and graphs are marts). */
-  private def nnCount(spark: SparkSession, dir: String): Long = {
-    val r = emb(spark, dir).agg(count(lit(1)).as("n"), max("vec_id").as("mx")).head()
+  /** `n` of a (vec_id, …) frame, failing unless its ids are dense
+    * 0..n-1 with n > 10 — the dense-id guard the ring init depends on,
+    * one aggregation job. */
+  private def nnDenseCount(e: DataFrame): Long = {
+    val r = e.agg(count(lit(1)).as("n"), max("vec_id").as("mx")).head()
     val (n, mx) = (r.getLong(0), r.getLong(1))
     require(mx == n - 1 && n > 10,
       s"NN-descent ring init needs dense ids 0..n-1 (n=$n, max=$mx)")
     n
   }
+
+  /** Checkpointed (vec_id, embedding) plus its guarded n. */
+  private def nnEmb(spark: SparkSession, dir: String): (DataFrame, Long) = {
+    val e = emb(spark, dir).select("vec_id", "embedding").localCheckpoint(true)
+    (e, nnDenseCount(e))
+  }
+
+  /** Every vector's (vec_id, cell) under the frozen IVF assignment — the
+    * blocking of the init's in-cell edges and of every fold seed. */
+  private def nnCells(spark: SparkSession, dir: String): DataFrame =
+    ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
 
   /** Score candidate (s, t) pairs against `e` and keep each node's best
     * `k` with their rank — the ONLY place the build touches vectors: a
@@ -4680,76 +4680,73 @@ object Similarity {
       .filter(col("rk") <= k).select("s", "t", "rk")
   }
 
-  /** The seeded init l0 (untrimmed: best-10-in-cell ∪ 3 ring edges),
-    * eagerly checkpointed. */
-  private def nnInit(spark: SparkSession, dir: String, e: DataFrame, n: Long): DataFrame = {
-    val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
+  /** The seeded init l0 of an NN-descent build over the member frame `e`
+    * (n members, `cells` their (vec_id, cell)): each member's best 10 in
+    * its own cell ∪ 3 ring edges, untrimmed and eagerly checkpointed. The
+    * ring runs over the members' id lattice — `rank` maps an id to its
+    * dense position 0..n-1 and `unrank` back, so edge j of s is
+    * unrank((rank(s) + j) mod n): the identity on dense ids, and closed-form
+    * integer arithmetic on the frozen base's `%5<4` ids (no global window
+    * even at 100 TB). */
+  private def nnInit(e: DataFrame, cells: DataFrame, n: Long,
+      rank: Column => Column = c => c, unrank: Column => Column = c => c): DataFrame = {
     val incell = nnTopK(e, 10)(
-      cellOf.select(col("vec_id").as("s"), col("cell"))
-        .join(cellOf.select(col("vec_id").as("t"), col("cell").as("tc")),
+      cells.select(col("vec_id").as("s"), col("cell"))
+        .join(cells.select(col("vec_id").as("t"), col("cell").as("tc")),
           col("cell") === col("tc") && col("s") =!= col("t"))
         .select("s", "t")).select("s", "t")
     val ring = e.select(col("vec_id").as("s"),
-        explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select(col("s"), ((col("s") + col("j")) % n).as("t"))
+        explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
+      .select(col("s"), unrank((rank(col("s")) + col("j")) % n).as("t"))
     incell.unionByName(ring).distinct().localCheckpoint(true)
   }
 
-  /** One NN-descent round: symmetrize, propose every
-    * neighbor-of-a-common-neighbor, keep the best [[NndK]]. Returns
-    * (distinct-candidates view, its checkpointed backing frame, next
-    * list) — the one caller (the [[nnDag]] mart builder) counts the
-    * candidates, then releases the backing frame and keeps `next`. */
-  private def nnStep(e: DataFrame, cur: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  /** THE NN-descent round's candidate table off the kept list `cur`,
+    * lazy: (s, t, is_cand) over the list's own pairs ∪ every
+    * neighbor-of-a-common-neighbor of the symmetrized list, is_cand = 1
+    * on a proposal (one already in the list included — a max over the
+    * union, not an anti-join), so the distinct candidate volume is a
+    * filter away. `cur` is a leaf (a checkpoint or a mart read-back), so
+    * the symmetrize+distinct plan is shallow, and its (s, t)-hash exchange is an identical subtree
+    * on both sides of the co-neighbor self-join — ReuseExchange computes
+    * it once. The raw proposals (with co-neighbor multiplicity) flow into
+    * ONE hash(s) exchange shared by the (s, t) dedup (clustering on s
+    * covers grouping on (s, t)) and [[nnKeep]]'s per-s window. */
+  private def nnCandidates(cur: DataFrame): DataFrame = {
     val pairs = cur.select("s", "t")
-    // lazy und — see [[nnStepNext]]: cur is a checkpoint leaf and the
-    // distinct's exchange is shared across the self-join via ReuseExchange
     val und = pairs.unionByName(pairs.select(col("t").as("s"), col("s").as("t")))
       .distinct()
     val und2 = und.toDF("u2", "q")
-    // candidates flow RAW (with co-neighbor multiplicity) into ONE
-    // hash(s) exchange that serves three consumers at once: the (s, t)
-    // dedup (clustering on s covers grouping on (s, t)), the distinct
-    // candidate-volume count (`is_cand` survives the dedup as a max), and
-    // nnTopK's per-s window (same clustering — no second exchange).
     val cand = und.join(und2, col("s") === col("u2") && col("t") =!= col("q"))
       .select(col("t").as("s"), col("q").as("t"))
-    val tagged = pairs.select(col("s"), col("t"), lit(0).as("is_cand"))
+    pairs.select(col("s"), col("t"), lit(0).as("is_cand"))
       .unionByName(cand.select(col("s"), col("t"), lit(1).as("is_cand")))
       .repartition(col("s"))
       .groupBy("s", "t").agg(max("is_cand").as("is_cand"))
-      .localCheckpoint(true)
-    // distinct candidate pairs (a proposal already in the kept list still
-    // counts: is_cand is a max over the union, not an anti-join)
-    val candDistinct = tagged.filter(col("is_cand") === 1).select("s", "t")
-    val next = nnTopK(e, NndK)(tagged.select("s", "t")).localCheckpoint(true)
-    (candDistinct, tagged, next)
   }
 
-  /** [[nnStep]] for consumers that never COUNT the candidate set (the
-    * append folds, consolidation rounds, and fold-mart builders — only
-    * the round-mart builders price `cand_pairs`): identical values, but
-    * the candidate table flows straight into the kept-list scoring
-    * instead of being eagerly checkpointed first — one full
-    * materialize-and-write pass of the Σ deg² table saved per round,
-    * which is the dominant per-round cost everywhere the referee tables
-    * are already marted. Returns the checkpointed next kept list. */
-  private def nnStepNext(e: DataFrame, cur: DataFrame): DataFrame = {
-    val pairs = cur.select("s", "t")
-    // und stays LAZY: `cur` is already a checkpointed leaf, so the
-    // symmetrize+distinct plan is shallow, and its (s, t)-hash exchange is
-    // an identical subtree on both sides of the co-neighbor self-join —
-    // ReuseExchange computes it once, inside the round's one action.
-    val und = pairs.unionByName(pairs.select(col("t").as("s"), col("s").as("t")))
-      .distinct()
-    val und2 = und.toDF("u2", "q")
-    // raw candidates into ONE hash(s) exchange shared by the (s, t) dedup
-    // and nnTopK's per-s window (see [[nnStep]] — the counting variant)
-    val cand = und.join(und2, col("s") === col("u2") && col("t") =!= col("q"))
-      .select(col("t").as("s"), col("q").as("t"))
-    nnTopK(e, NndK)(
-      pairs.unionByName(cand).repartition(col("s")).dropDuplicates("s", "t"))
-      .localCheckpoint(true)
+  /** THE kept-list step on a candidate table: each node's best [[NndK]]
+    * by (dot DESC, t), as (s, t, rk). Lazy: each loop materializes its
+    * lists the way its state needs. */
+  private def nnKeep(e: DataFrame, cand: DataFrame): DataFrame =
+    nnTopK(e, NndK)(cand.select("s", "t"))
+
+  /** One whole NN-descent round off the kept list `cur`, lazy. */
+  private def nnRound(e: DataFrame, cur: DataFrame): DataFrame =
+    nnKeep(e, nnCandidates(cur))
+
+  /** One round of the [[nnDag]] build, which prices each round's
+    * candidate volume: (next kept list, distinct candidate pairs, stop
+    * signature) in two actions. The count materializes a lazy checkpoint
+    * of the candidate table, the signature one of the kept list; the
+    * candidate table is released once the list no longer reads it. */
+  private[graft] def nnCountedRound(e: DataFrame, cur: DataFrame): (DataFrame, Long, Fixpoint.Sig) = {
+    val cand = nnCandidates(cur).localCheckpoint(false)
+    val nc = cand.filter(col("is_cand") === 1).count()
+    val next = nnKeep(e, cand).localCheckpoint(false)
+    val sig = Fixpoint.frameSig(next, "s", "t")
+    core.release(cand)
+    (next, nc, sig)
   }
 
   /** One NN-descent BUILD per corpus snapshot: the mart holds every
@@ -4767,7 +4764,7 @@ object Similarity {
   private val nnDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nn_rounds", Nil, mart = true) { (s, d, _) =>
       val (e, n) = nnEmb(s, d)
-      val init = nnInit(s, d, e, n)
+      val init = nnInit(e, nnCells(s, d), n)
       def tagged(list: DataFrame, round: Int, nc: Long): DataFrame =
         list.select(lit(round.toLong).as("round"), col("s"), col("t"), col("rk"),
           lit(nc).as("cand_pairs"))
@@ -4778,16 +4775,14 @@ object Similarity {
       // f(l_{r-1}) = c_r), so the remaining mart rows replicate this
       // round's list and candidate count bit-for-bit instead of re-running
       // the join. State: (kept list, its candidate count, mart rows so
-      // far). Superseded lists stay cached: the mart rows read them.
+      // far); a round is two actions ([[nnCountedRound]]). Superseded
+      // lists stay cached: the mart rows read them.
       val res = Fixpoint.run(
-          (init, 0L, tagged(nnTopK(e, NndK)(init), 0, 0L)),
+          (init, 0L, tagged(nnKeep(e, init), 0, 0L)),
           NndRounds, (_: (DataFrame, Long, DataFrame)) => ()) {
         case ((cur, _, out), r) =>
-          val (cand, candBacking, next) = nnStep(e, cur)
-          val nc = cand.count()
-          core.release(candBacking)
-          ((next, nc, out.unionByName(tagged(next, r + 1, nc))),
-            Fixpoint.frameSig(next, "s", "t"))
+          val (next, nc, sig) = nnCountedRound(e, cur)
+          ((next, nc, out.unionByName(tagged(next, r + 1, nc))), sig)
       }
       val (last, nc, rows) = res.state
       (res.rounds + 1 to NndRounds)
@@ -4801,7 +4796,7 @@ object Similarity {
 
   val simNnDescent: QueryDef = {
     QueryDef("sim_nndescent", Some(nnDescentSql(NndRounds))) { (spark, dir) =>
-      val n = nnCount(spark, dir)
+      val n = nnDenseCount(emb(spark, dir))
       // exact top-K: the n² EVALUATION baseline (audit-only; a standing
       // corpus artifact read from the eval mart — see its scaladoc)
       val exactK = nnExactKMart(spark, dir)
@@ -4992,7 +4987,10 @@ object Similarity {
     * edges plus their scores; the corpus appears only through the graph
     * (built once, n·K rows, broadcast like any sharded serving RAM) and
     * the per-candidate vector fetch. The per-query audit table (8×n)
-    * prices the EVALUATION, not the serve. */
+    * prices the EVALUATION, not the serve. The probe-1 baseline rides
+    * the same walk as keys with no graph edges entering at every member
+    * of the query's cell: such a walk stops at once and ranks its
+    * entries as the oracle's window does. */
   /** The pruned serve core off the NN-descent mart (rk ≤
     * [[NndServeDeg]] of round [[NndRounds]]) — the Spark twin of
     * [[nnServeCoreSql]], ONE definition for [[simGraphServe]],
@@ -5061,7 +5059,8 @@ object Similarity {
     * reaches. A key stops at its first step that adds nothing, and after
     * `steps` expansions at most. `gKeys` names part columns that also key
     * the graph (carried in `g` as "g"-prefixed twins), so one walk can
-    * ride a variant dimension whose graphs never interact.
+    * ride a variant dimension whose graphs never interact; a key whose
+    * graph has no rows stops after one step with its entries ranked.
     *
     * The whole walk is one pass of tasks: the graph and the (qid, t) →
     * score table `qsc` are collected and broadcast once, the entry frame
@@ -5128,7 +5127,7 @@ object Similarity {
       val graph = serveCore(spark, dir).select(col("s").as("gs"), col("t").as("gt"))
       // ONE IVF assignment pass: every vector's cell and its score against
       // its own centroid (tie → lower id via the suite's 1e-12 bias), read
-      // by the medoid entries and both sides of the probe-1 baseline
+      // by the medoid entries and the probe-1 baseline's entries
       val cells = ivfAssigned(e)
         .join(broadcast(seededCents(e).toDF("mcell", "mcv")),
           col("cell") === col("mcell"))
@@ -5145,22 +5144,24 @@ object Similarity {
       // multi-entry v0: medoids of the query's top-P cells (one ranked
       // frame serves every entry count P), one variant dimension p riding
       // the whole walk (r14 verdict queue #7)
-      val vis = greedyWalk(qsc, graph,
-        NndEntryPs.toDF("p")
-          .join(seededCellRank(e, qs), col("rn") <= col("p"))
-          .join(broadcast(med), Seq("cell"))
-          .select(col("p"), col("qid"), col("mid").as("t")),
-        Seq("p", "qid"))
-      // the probe-1 baseline: the query's own cell, ranked by audit score
-      val pcell = qs.select("qid")
+      val medoids = NndEntryPs.toDF("p")
+        .join(seededCellRank(e, qs), col("rn") <= col("p"))
+        .join(broadcast(med), Seq("cell"))
+        .select(lit(true).as("hop"), col("p"), col("qid"), col("mid").as("t"))
+      // the probe-1 baseline rides the same walk: it enters at every
+      // member of the query's own cell over no graph (hop = false keys
+      // have no edges), so it stops at once and ranks its entries by
+      // audit score
+      val probe1 = qs.select("qid")
         .join(broadcast(cellOf.toDF("qv2", "qcell")), col("qid") === col("qv2"))
         .join(cellOf.toDF("t", "tcell"), col("qcell") === col("tcell"))
-        .join(qsc, Seq("qid", "t"), "left")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("score").desc, col("t"))))
-      val pool = vis.select(concat(lit("graph_m"), col("p").cast(StringType)).as("variant"),
+        .select(lit(false).as("hop"), lit(0).as("p"), col("qid"), col("t"))
+      val vis = greedyWalk(qsc, graph.withColumn("ghop", lit(true)),
+        medoids.unionByName(probe1), Seq("hop", "p", "qid"), gKeys = Seq("hop"))
+      val pool = vis.select(
+          when(col("hop"), concat(lit("graph_m"), col("p").cast(StringType)))
+            .otherwise(lit("probe1")).as("variant"),
           col("qid"), col("t"), col("rn"))
-        .unionByName(pcell.select(lit("probe1").as("variant"), col("qid"), col("t"), col("rn")))
       beamAudit(pool, exq.toDF("qid", "t"), "variant")
         .select(col("variant"), col("scanned"), col("hits"),
           round(col("hits").cast(DoubleType) / lit(80.0), 6).as("recall_r"))
@@ -5437,29 +5438,20 @@ object Similarity {
     * is not a bench convenience — the premise of [[simGraphAppend]] is
     * that the pre-batch graph is a standing snapshot artifact, so it IS
     * persisted, exactly like the full graph's [[nnRoundsMart]]. Init =
-    * in-cell-among-base top-10 plus closed-form rank-ring edges over the
-    * base id lattice (rank(v) = (v÷5)·4 + v mod 5 — exact integer
-    * arithmetic, no global window even at 100 TB). */
+    * in-cell-among-base top-10 plus ring edges over the base id lattice
+    * (rank(v) = (v div 5)·4 + v mod 5, see [[nnInit]]). */
   private val nnBaseDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nn_base", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      val eB = e.filter(col("vec_id") % 5 < 4)
-      val cellB = ivfAssigned(s, d).select(col("vec_id"), col("cell"))
-        .filter(col("vec_id") % 5 < 4)
-      val nb = eB.count()
-      val bincell = nnTopK(eB, 10)(
-        cellB.select(col("vec_id").as("s"), col("cell"))
-          .join(cellB.select(col("vec_id").as("t"), col("cell").as("tc")),
-            col("cell") === col("tc") && col("s") =!= col("t"))
-          .select("s", "t")).select("s", "t")
-      val bring = eB.select(col("vec_id").as("s"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
-        .select(col("s"), ((expr("s div 5") * 4 + col("s") % 5 + col("j")) % nb).as("r"))
-        .select(col("s"), (expr("r div 4") * 5 + col("r") % 4).as("t"))
-      val init = bincell.unionByName(bring).distinct().localCheckpoint(true)
-      // pinned budget + fixpoint exit (the nnDag loop)
+      val base = col("vec_id") % 5 < 4
+      val eB = e.filter(base)
+      val init = nnInit(eB, nnCells(s, d).filter(base), eB.count(),
+        v => call_function("div", v, lit(5)) * 4 + v % 5,
+        r => call_function("div", r, lit(4)) * 5 + r % 4)
+      // pinned budget + fixpoint exit (the nnDag loop): the signature
+      // materializes each round's lazily checkpointed list
       val last = Fixpoint.run(init, NndRounds, core.release) { (cur, _) =>
-        val next = nnStepNext(eB, cur)
+        val next = nnRound(eB, cur).localCheckpoint(false)
         (next, Fixpoint.frameSig(next, "s", "t"))
       }.state
       // the last kept list is a checkpoint of its own: nothing reads the
@@ -5473,24 +5465,21 @@ object Similarity {
     graft.pipeline.MartCache.read(spark, dir, nnBaseDag, "nnb_marts", "graft_nnb_",
       Seq("embeddings"), "mart_nn_base").head
 
-  /** Cell-blocked arrival seeds for the batch `fresh` (a `%10` residue
-    * class, or the policy feed's batch 2 `%20=9 ∪ %40=19`) against the
-    * CURRENT member set — the fold-seed recipe shared by the streamed
-    * append sink, the policy gate, and the fold-mart builders. Seeds are a
-    * function of (member set, frozen cell assignment) only — never of the
-    * graph — which is why a consolidated and an unconsolidated trajectory
-    * may reuse the same seed artifact. */
-  private def foldSeedBy(spark: SparkSession, dir: String, e: DataFrame,
-      fresh: Column, members: DataFrame): DataFrame = {
-    val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
+  /** THE fold-seed recipe: cell-blocked arrival seeds (s, t) — each
+    * `fresh`(vec_id) node's best 10 among the `members`(vec_id) of its own
+    * cell under `cells`(vec_id, cell). One definition for the fold-mart
+    * builders, the append gate's fresh seeds and both streamed sinks'
+    * per-batch folds. Seeds are a function of (member set, frozen cell
+    * assignment) only — never of the graph — which is why a consolidated
+    * and an unconsolidated trajectory may reuse the same seed artifact. */
+  private def foldSeedBy(e: DataFrame, cells: DataFrame, fresh: DataFrame,
+      members: DataFrame): DataFrame =
     nnTopK(e, 10)(
-      e.filter(fresh)
-        .join(cellOf, Seq("vec_id")).select(col("vec_id").as("s"), col("cell"))
-        .join(members.join(cellOf, Seq("vec_id"))
+      fresh.join(cells, Seq("vec_id")).select(col("vec_id").as("s"), col("cell"))
+        .join(members.join(cells, Seq("vec_id"))
           .select(col("vec_id").as("t"), col("cell").as("tc")),
           col("cell") === col("tc"))
         .select("s", "t")).select("s", "t")
-  }
 
   /** The SHARED two-batch fold snapshots as marts (round 19 — r18 verdict
     * queue #2: the streamed append persisted per-run fold artifacts while
@@ -5508,29 +5497,24 @@ object Similarity {
   private val nnFoldDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nn_seed1", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      foldSeedBy(s, d, e, col("vec_id") % 10 === 4L,
-        e.select("vec_id").filter(col("vec_id") % 5 < 4))
+      val ids = e.select("vec_id")
+      foldSeedBy(e, nnCells(s, d), ids.filter(col("vec_id") % 10 === 4L),
+        ids.filter(col("vec_id") % 5 < 4))
     },
     graft.pipeline.ModelDef("mart_nn_fold1", Seq("mart_nn_seed1"), mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
-      val next = nnStepNext(e,
-        nnBaseMart(s, d).select("s", "t").unionByName(res("mart_nn_seed1")))
-      core.release(e)
-      next.select("s", "t", "rk")
+      nnRound(e, nnBaseMart(s, d).select("s", "t").unionByName(res("mart_nn_seed1")))
     },
     graft.pipeline.ModelDef("mart_nn_seed2", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      foldSeedBy(s, d, e, col("vec_id") % 10 === 9L,
-        e.select("vec_id")
-          .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
+      val ids = e.select("vec_id")
+      foldSeedBy(e, nnCells(s, d), ids.filter(col("vec_id") % 10 === 9L),
+        ids.filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
     },
     graft.pipeline.ModelDef("mart_nn_fold2", Seq("mart_nn_fold1", "mart_nn_seed2"),
       mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
-      val next = nnStepNext(e,
-        res("mart_nn_fold1").select("s", "t").unionByName(res("mart_nn_seed2")))
-      core.release(e)
-      next.select("s", "t", "rk")
+      nnRound(e, res("mart_nn_fold1").select("s", "t").unionByName(res("mart_nn_seed2")))
     },
     // the θ=20 policy's DEPLOYED index artifact: the consolidated graph a
     // deployment persists once the trigger fires ([[NndAppendRounds]]
@@ -5545,15 +5529,15 @@ object Similarity {
       out
     }))
 
-  /** [[NndAppendRounds]] NN-descent rounds off a fold snapshot,
-    * releasing each intermediate kept list once the next one is
-    * checkpointed (dropping the reference alone pins round 1's n·K rows
-    * until garbage collection). ONE
-    * definition for the consolidation-mart builders in [[nnFoldDag]] and
-    * [[nnPolicyDag]] (r20 review). */
+  /** [[NndAppendRounds]] NN-descent rounds off a fold snapshot, each
+    * kept list eagerly checkpointed, releasing each intermediate one once
+    * the next is (dropping the reference alone pins round 1's n·K rows
+    * until garbage collection). ONE definition for the consolidation-mart
+    * builders in [[nnFoldDag]] and [[nnPolicyDag]], [[simIndexPolicy]]'s
+    * policy arms and [[streamIndexPolicy]]'s in-stream consolidation. */
   private def consolidateRounds(e: DataFrame, start: DataFrame): DataFrame =
     (1 to NndAppendRounds).foldLeft(start) { (cur, _) =>
-      val next = nnStepNext(e, cur.select("s", "t"))
+      val next = nnRound(e, cur.select("s", "t")).localCheckpoint(true)
       if (cur ne start) core.release(cur) // the snapshot is the caller's
       next
     }.select("s", "t", "rk")
@@ -5587,18 +5571,15 @@ object Similarity {
   private val nnPolicyDag = new graft.pipeline.ModelRegistry(Seq(
     graft.pipeline.ModelDef("mart_nnp_seed2", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      foldSeedBy(s, d, e,
-        col("vec_id") % 20 === 9 || col("vec_id") % 40 === 19,
-        e.select("vec_id")
-          .filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
+      val ids = e.select("vec_id")
+      foldSeedBy(e, nnCells(s, d),
+        ids.filter(col("vec_id") % 20 === 9 || col("vec_id") % 40 === 19),
+        ids.filter(col("vec_id") % 5 < 4 || col("vec_id") % 10 === 4))
     },
     graft.pipeline.ModelDef("mart_nnp_fold2", Seq("mart_nnp_seed2"), mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
       val (f1, _, _) = nnFoldMarts(s, d)
-      val next = nnStepNext(e,
-        f1.select("s", "t").unionByName(res("mart_nnp_seed2")))
-      core.release(e)
-      next.select("s", "t", "rk")
+      nnRound(e, f1.select("s", "t").unionByName(res("mart_nnp_seed2")))
     },
     // the θ=20 trigger fires after batch 2 (the sink's proven schedule):
     // NndAppendRounds consolidation rounds off the fold-2 state
@@ -5610,17 +5591,14 @@ object Similarity {
     },
     graft.pipeline.ModelDef("mart_nnp_seed3", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
-      foldSeedBy(s, d, e,
-        col("vec_id") % 40 === 39,
-        e.select("vec_id").filter(!(col("vec_id") % 40 === 39)))
+      val ids = e.select("vec_id")
+      foldSeedBy(e, nnCells(s, d), ids.filter(col("vec_id") % 40 === 39),
+        ids.filter(!(col("vec_id") % 40 === 39)))
     },
     graft.pipeline.ModelDef("mart_nnp_fold3", Seq("mart_nnp_consol2", "mart_nnp_seed3"),
       mart = true) { (s, d, res) =>
       val (e, _) = nnEmb(s, d)
-      val next = nnStepNext(e,
-        res("mart_nnp_consol2").select("s", "t").unionByName(res("mart_nnp_seed3")))
-      core.release(e)
-      next.select("s", "t", "rk")
+      nnRound(e, res("mart_nnp_consol2").select("s", "t").unionByName(res("mart_nnp_seed3")))
     }))
 
   /** Materialize-once accessor for the policy-event marts:
@@ -5806,17 +5784,13 @@ object Similarity {
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
-      val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
-      val cellB = cellOf.filter(col("vec_id") % 5 < 4)
       // the frozen base graph IS a persisted snapshot artifact (the
       // nnBaseMart — built once per corpus snapshot, read back here)
       val baseG = nnBaseMart(spark, dir).select("s", "t")
       // fresh seeds: top-10 among the base members of the node's own cell
-      val fseed = nnTopK(e, 10)(
-        cellOf.filter(col("vec_id") % 5 === 4).select(col("vec_id").as("s"), col("cell"))
-          .join(cellB.select(col("vec_id").as("t"), col("cell").as("tc")),
-            col("cell") === col("tc"))
-          .select("s", "t")).select("s", "t")
+      val ids = e.select("vec_id")
+      val fseed = foldSeedBy(e, nnCells(spark, dir), ids.filter(col("vec_id") % 5 === 4),
+        ids.filter(col("vec_id") % 5 < 4))
       // the n² audit (evaluation pricing, the simNnDescent convention),
       // read from the standing eval mart
       val exactK = nnExactKMart(spark, dir)
@@ -5832,7 +5806,8 @@ object Similarity {
         () => {
           // warm-start append rounds over the union, one stat row per round
           val lists = (1 to NndAppendRounds)
-            .scanLeft(baseG.unionByName(fseed))((cur, _) => nnStepNext(e, cur)).tail
+            .scanLeft(baseG.unionByName(fseed))((cur, _) =>
+              nnRound(e, cur).localCheckpoint(true)).tail
           concurrently(lists.zipWithIndex.map { case (g, i) =>
             stat(s"appended_r${i + 1}", g) }).flatten
         },
@@ -5980,8 +5955,7 @@ object Similarity {
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
-      val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
-        .localCheckpoint(true)
+      val cellOf = nnCells(spark, dir).localCheckpoint(true)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // stage the feed ONCE per corpus snapshot: two single-file batches,
@@ -6033,16 +6007,9 @@ object Similarity {
           .option("maxFilesPerTrigger", 1).parquet(landing)
           .writeStream
           .foreachBatch { (batch: DataFrame, bid: Long) =>
-            val fresh = batch.select("vec_id").distinct()
-            val members = curG.select(col("s").as("vec_id")).distinct()
-            val fseed = nnTopK(e, 10)(
-              fresh.join(cellOf, Seq("vec_id"))
-                .select(col("vec_id").as("s"), col("cell"))
-                .join(members.join(cellOf, Seq("vec_id"))
-                  .select(col("vec_id").as("t"), col("cell").as("tc")),
-                  col("cell") === col("tc"))
-                .select("s", "t")).select("s", "t")
-            val next = nnStepNext(e, curG.unionByName(fseed))
+            val fseed = foldSeedBy(e, cellOf, batch.select("vec_id").distinct(),
+              curG.select(col("s").as("vec_id")).distinct())
+            val next = nnRound(e, curG.unionByName(fseed)).localCheckpoint(true)
             // the fold's persisted index snapshot — what a serve would read
             next.write.mode("overwrite").parquet(s"$stateDir/fold_$bid")
             curG = next.select("s", "t")
@@ -6216,8 +6183,8 @@ object Similarity {
           // θ=10: consolidate after batch 1, re-fold batch 2 off the
           // consolidated graph (the marted seed2 — seeds depend only on
           // the member set, which consolidation never changes), consolidate
-          val next = nnStepNext(e,
-            consolidateRounds(e, y1).select("s", "t").unionByName(seed2))
+          val next = nnRound(e,
+            consolidateRounds(e, y1).select("s", "t").unionByName(seed2)).localCheckpoint(true)
           consolidateRounds(e, next)
         }))
       val exactK = nnExactKMart(spark, dir)
@@ -6369,8 +6336,7 @@ object Similarity {
       val s2 = spark
       import s2.implicits._
       val (e, n) = nnEmb(spark, dir)
-      val cellOf = ivfAssigned(spark, dir).select(col("vec_id"), col("cell"))
-        .localCheckpoint(true)
+      val cellOf = nnCells(spark, dir).localCheckpoint(true)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val preds = Seq(
@@ -6436,7 +6402,6 @@ object Similarity {
         .option("maxFilesPerTrigger", 1).parquet(landing)
         .writeStream
         .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val fresh = batch.select("vec_id").distinct()
           // the batch size is already known EXACTLY (r22, §2.4): the
           // landing pins batch i = preds(i) (mtime-ordered single files,
           // asserted at staging) and `cnt` counted every residue class up
@@ -6445,15 +6410,9 @@ object Similarity {
           // conservation audits (k1/k2/n member counts) still verify the
           // fold saw exactly these rows
           val bsize = batchSizes(bid.toInt)
-          val cur = curG.select(col("s").as("vec_id")).distinct()
-          val fseed = nnTopK(e, 10)(
-            fresh.join(cellOf, Seq("vec_id"))
-              .select(col("vec_id").as("s"), col("cell"))
-              .join(cur.join(cellOf, Seq("vec_id"))
-                .select(col("vec_id").as("t"), col("cell").as("tc")),
-                col("cell") === col("tc"))
-              .select("s", "t")).select("s", "t")
-          val next = nnStepNext(e, curG.unionByName(fseed))
+          val fseed = foldSeedBy(e, cellOf, batch.select("vec_id").distinct(),
+            curG.select(col("s").as("vec_id")).distinct())
+          val next = nnRound(e, curG.unionByName(fseed)).localCheckpoint(true)
           events += (s"fold_${bid + 1}" -> next)
           curG = next.select("s", "t")
           // the DEPLOYED policy: consolidate at ≥20% growth, in-stream
@@ -6464,9 +6423,7 @@ object Similarity {
           if (fire) {
             membersAtConsol = members
             growth = 0L
-            val consolidated = (1 to NndAppendRounds).foldLeft(next) { (g, _) =>
-              nnStepNext(e, g.select("s", "t"))
-            }
+            val consolidated = consolidateRounds(e, next)
             events += (s"consolidate_${bid + 1}" -> consolidated)
             curG = consolidated.select("s", "t")
           }
@@ -7543,7 +7500,7 @@ object Similarity {
       ORDER BY sh.shard
     """)) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val n = nnCount(spark, dir)
+    val n = nnDenseCount(emb(spark, dir))
     val g = nnRoundsMart(spark, dir).filter(col("round") === NndRounds)
       .select("s", "t", "rk").localCheckpoint(true)
     val ev = emb(spark, dir).select(col("vec_id"), col("embedding"))

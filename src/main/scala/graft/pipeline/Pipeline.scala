@@ -211,7 +211,7 @@ object Pipeline {
         col("fact_rows_total"), col("total_revenue"),
         to_timestamp(lit(wmFinal.toString)).as("final_watermark"),
         // self-checking status: idempotent re-run AND append accounting
-        when(lit(r3.extracted) === 0L &&
+        when(lit(r3.extracted == 0L) &&
           col("fact_rows_total") === lit(r1.loaded + r2.loaded),
           "INCREMENTAL_OK").otherwise("INCREMENTAL_MISMATCH").as("run_status"))
   }

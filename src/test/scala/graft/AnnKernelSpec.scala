@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** The shared PQ/ADC kernels of the `sim_*` gates on hand-built frames
   * (query LUT, ADC sum order, encode tie-break), the held-out guard every
-  * window-reading gate shares, and the source rule that keeps the
-  * subspace split and the per-subspace pivot in their kernels. */
+  * window-reading gate shares, the source rules that keep the subspace
+  * split, the per-subspace pivot and the NN-descent pair scoring and
+  * consolidation in their kernels, and the job count of one NN-descent
+  * build round. */
 class AnnKernelSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
@@ -75,29 +77,70 @@ class AnnKernelSpec extends SparkSpec {
     }
   }
 
-  test("the subspace split and the per-subspace pivot live only in their kernels") {
+  test("an NN-descent build round counts its candidates and signs its list in two actions") {
+    val n = 60L
+    val e = core.tbl(spark, sfDir, "embeddings").filter(col("vec_id") < n)
+      .select("vec_id", "embedding").localCheckpoint(true)
+    // the ring s -> s+1..s+3 (mod n) as the current kept list
+    val ring = for (s <- 0L until n; j <- 1L to 3L) yield (s, (s + j) % n)
+    val cur = ring.toDF("s", "t").localCheckpoint(true)
+    val (((next, nc, sig), jobs), left) =
+      persistsOf(jobsOf(Similarity.nnCountedRound(e, cur)))
+    // the distinct co-neighbor proposals of the symmetrized ring
+    val nbrs = (ring ++ ring.map(_.swap)).toSet[(Long, Long)].groupMap(_._1)(_._2)
+    val cand = (for (ns <- nbrs.values; t <- ns; q <- ns if t != q) yield (t, q)).toSet
+    assert(nc === cand.size.toLong)
+    // every node has 12 candidates, fewer than the kept-list cap, so the
+    // next list is the whole candidate table
+    assert(next.select("s", "t").as[(Long, Long)].collect().toSet === cand ++ ring)
+    assert(sig === graft.llm.Fixpoint.frameSig(next, "s", "t"))
+    // two actions — the count and the signature — plus the static plan's
+    // two broadcast builds; only the kept list's checkpoint is left behind
+    assert(jobs === 4)
+    assert(left === core.checkpointsOf(next).map(_.id).toSet)
+  }
+
+  /** Source lines of `src/main/scala` matching a rule's pattern outside
+    * the rule's kernels, as "file:line: text". A line's owner is the
+    * nearest `def` or `class` above it. */
+  private def offenders(rules: Seq[(scala.util.matching.Regex, Set[String])]): Seq[String] = {
     val root = java.nio.file.Paths.get(s"${sys.props("user.dir")}/src/main/scala")
-    val rules = Seq(
-      """(?<![\w.])slice\(.*PqSub""".r -> "pqSub",
-      """max\(when\(col\("m"\)""".r -> "pqWide")
-    val defLine = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
+    val ownerLine =
+      """^\s*(?:private(?:\[\w+\])?\s+)?(?:final\s+)?(?:def|class)\s+(\w+)""".r.unanchored
     val files = java.nio.file.Files.walk(root).iterator()
-    var offenders = Seq.empty[String]
+    var out = Seq.empty[String]
     while (files.hasNext) {
       val f = files.next()
       if (f.toString.endsWith(".scala")) {
         val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8").linesIterator.toVector
-        for ((line, i) <- lines.zipWithIndex; (pat, kernel) <- rules
+        for ((line, i) <- lines.zipWithIndex; (pat, kernels) <- rules
              if pat.findFirstIn(line).isDefined) {
           val owner = (i to 0 by -1).iterator.map(lines).collectFirst {
-            case defLine(name) => name
+            case ownerLine(name) => name
           }
-          if (!owner.contains(kernel))
-            offenders :+= s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+          if (!owner.exists(kernels))
+            out :+= s"${root.relativize(f)}:${i + 1}: ${line.trim}"
         }
       }
     }
-    assert(offenders.isEmpty,
-      s"use Similarity.pqSplit / pqWide instead:\n${offenders.mkString("\n")}")
+    out
+  }
+
+  test("the subspace split and the per-subspace pivot live only in their kernels") {
+    val found = offenders(Seq(
+      """(?<![\w.])slice\(.*PqSub""".r -> Set("pqSub"),
+      """max\(when\(col\("m"\)""".r -> Set("pqWide")))
+    assert(found.isEmpty, s"use Similarity.pqSplit / pqWide instead:\n${found.mkString("\n")}")
+  }
+
+  test("NN-descent scoring and consolidation live only in their kernels") {
+    // a pair scoring (nnTopK) belongs to the init, the fold seed, the
+    // kept-list step or the exact referee; an append-round loop belongs to
+    // consolidateRounds
+    val found = offenders(Seq(
+      """nnTopK\(""".r -> Set("nnTopK", "nnInit", "foldSeedBy", "nnKeep", "NnExactReferee"),
+      """NndAppendRounds\)\.foldLeft""".r -> Set("consolidateRounds")))
+    assert(found.isEmpty,
+      s"use Similarity.nnInit / foldSeedBy / nnRound / consolidateRounds instead:\n${found.mkString("\n")}")
   }
 }

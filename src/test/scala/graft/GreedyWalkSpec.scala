@@ -78,6 +78,22 @@ class GreedyWalkSpec extends SparkSpec {
     assert(vis.filter(_._1 == "b").map(_._2).toSet == Set(0L, 2L, 4L))
   }
 
+  test("keys with no graph rows return their entries ranked as Spark's row_number") {
+    // key "b" has no edges: its walk stops at once, with every entry
+    // visited — more of them than one beam holds, scores tied in threes
+    val g = Seq(("a", 0L, 1L)).toDF("gfold", "gs", "gt")
+    val sc = scores((0L to 13L).map(i => (i, (i % 3).toDouble)): _*)
+    val v0 = ((0L to 13L).map(t => ("b", 1L, t)) :+ (("a", 1L, 0L))).toDF("fold", "qid", "t")
+    val vis = Similarity.greedyWalk(sc, g, v0, Seq("fold", "qid"), gKeys = Seq("fold"))
+    val rn = vis.filter(col("fold") === "b").select("t", "rn").as[(Long, Int)].collect().toMap
+    val spark_rn = v0.filter(col("fold") === "b").join(sc, Seq("qid", "t"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("fold", "qid").orderBy(col("score").desc, col("t"))))
+      .select("t", "rn").as[(Long, Int)].collect().toMap
+    assert(rn.size === 14 && rn === spark_rn)
+    assert(visited(vis.filter(col("fold") === "a")) === Set(0L, 1L))
+  }
+
   test("an entry or frontier node without a score row fails naming its (qid, t)") {
     val g = graph((0L, 1L), (1L, 2L))
     val frontier = intercept[Exception] {
