@@ -232,6 +232,17 @@ object core {
     s"$base/${dirTag(dir)}/$name"
   }
 
+  /** Writes `v` to `f` through a temp file and an ATOMIC_MOVE, so a
+    * concurrent reader sees the old content or the new, never a torn
+    * one. */
+  def writeAtomic(f: java.nio.file.Path, v: String): Unit = {
+    java.nio.file.Files.createDirectories(f.getParent)
+    val tmp = java.nio.file.Files.createTempFile(f.getParent, f.getFileName.toString, ".tmp")
+    java.nio.file.Files.writeString(tmp, v)
+    java.nio.file.Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
   /** Cheap content signature of one or more source parquet tables (file
     * names + sizes + mtimes, hashed): used to key derived layouts (landing
     * zones, bucketed tables) so regenerated source data can never be served

@@ -294,7 +294,7 @@ object Cluster {
     * real pipeline materializes labels ONCE and every consumer (canonical
     * mapping, survivor selection, the drop-list export) reads the table
     * instead of re-running edge generation + CC rounds. */
-  private[graft] val clusterDag = new graft.pipeline.ModelRegistry(Seq(
+  private[graft] val clusterDag = new graft.pipeline.ModelRegistry(Seq("documents"), Seq(
     graft.pipeline.ModelDef("stg_dup_edges", Nil, mart = false) {
       (s, d, _) => dupEdges(s, d)
     },
@@ -307,7 +307,7 @@ object Cluster {
     * paid once per corpus snapshot, never once per consumer. */
   private[graft] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, clusterDag, "cluster_marts",
-      "graft_cluster_", Seq("documents"), "mart_cluster_labels").head
+      "graft_cluster_", "mart_cluster_labels").head
 
   /** dd5 — dup-cluster resolution: near-dup edges → connected components →
     * (doc, canonical, cluster size). The planted chains make base and v2

@@ -156,7 +156,7 @@ object LangModel {
     * verdict's missing #3; the ctx mart builds FROM the model mart's
     * parquet, so numerator and denominator stay consistent by
     * construction even across snapshots). */
-  private val lmDag = new graft.pipeline.ModelRegistry(Seq(
+  private val lmDag = new graft.pipeline.ModelRegistry(Seq("documents"), Seq(
     graft.pipeline.ModelDef("stg_lm_bigrams", Nil, mart = false) {
       (s, d, _) => bigrams(s, d).filter(col("lang") === "en")
     },
@@ -172,7 +172,7 @@ object LangModel {
   /** Materialize-once accessor for the (model, ctx) marts. */
   private[graft] def lmMarts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val Seq(model, ctx) = graft.pipeline.MartCache.read(spark, dir, lmDag,
-      "lm_marts", "graft_lm_", Seq("documents"), "mart_lm_model", "mart_lm_ctx")
+      "lm_marts", "graft_lm_", "mart_lm_model", "mart_lm_ctx")
     (model, ctx)
   }
 
@@ -337,7 +337,7 @@ object LangModel {
     * trigram counts and their context rollup, materialized once per
     * (session, corpus snapshot) under their own prefix so the bigram-only
     * gates never pay for trigram training. */
-  private val lmTriDag = new graft.pipeline.ModelRegistry(Seq(
+  private val lmTriDag = new graft.pipeline.ModelRegistry(Seq("documents"), Seq(
     graft.pipeline.ModelDef("stg_lm_trigrams", Nil, mart = false) {
       (s, d, _) => trigrams(s, d).filter(col("lang") === "en")
     },
@@ -353,7 +353,7 @@ object LangModel {
 
   private def lmTriMarts(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val Seq(tri, ctx) = graft.pipeline.MartCache.read(spark, dir, lmTriDag,
-      "lm3_marts", "graft_lm3_", Seq("documents"), "mart_lm_tri", "mart_lm_tri_ctx")
+      "lm3_marts", "graft_lm3_", "mart_lm_tri", "mart_lm_tri_ctx")
     (tri, ctx)
   }
 
@@ -718,7 +718,7 @@ object LangModel {
   }
 
   /** The persisted label artifact's one-model DAG. */
-  private val lmLabelDag = new graft.pipeline.ModelRegistry(Seq(
+  private val lmLabelDag = new graft.pipeline.ModelRegistry(Seq("documents"), Seq(
     graft.pipeline.ModelDef("mart_lm_labels", Nil, mart = true) { (s, d, _) =>
       lmBucketLabelsInline(s, d)
     }))
@@ -726,7 +726,7 @@ object LangModel {
   /** Materialize-once accessor for the (doc_id, k, bucket) label mart. */
   private[graft] def lmBucketLabels(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, lmLabelDag, "lml_marts",
-      "graft_lml_", Seq("documents"), "mart_lm_labels").head
+      "graft_lml_", "mart_lm_labels").head
 
   /** lm6 — HEAD/MIDDLE/TAIL perplexity bucketing (the CCNet release
     * layout: Wenzek et al. 2020 §4.3 ship each language in three buckets

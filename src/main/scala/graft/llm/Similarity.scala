@@ -3304,7 +3304,7 @@ object Similarity {
     * At 100 TB these are the evaluation tier's standing tables — the
     * 8×n table prices the EVALUATION, not the serve (the
     * [[simGraphServe]] convention, unchanged). */
-  private val serveHarnessDag = new graft.pipeline.ModelRegistry(Seq(
+  private val serveHarnessDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_serve_qsc", Nil, mart = true) { (s, d, _) =>
       val e0 = emb(s, d).select(col("vec_id"), col("embedding"))
       e0.crossJoin(broadcast(heldOutWindow(e0)))
@@ -3324,12 +3324,12 @@ object Similarity {
   /** The standing (qid, t, score) audit-score table. */
   private def serveQscMart(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, serveHarnessDag, "svh_marts",
-      "graft_svh_", Seq("embeddings"), "mart_serve_qsc").head
+      "graft_svh_", "mart_serve_qsc").head
 
   /** The standing (xq, xt) exact top-10 referee. */
   private def serveExqMart(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, serveHarnessDag, "svh_marts",
-      "graft_svh_", Seq("embeddings"), "mart_serve_exq").head
+      "graft_svh_", "mart_serve_exq").head
 
   /** The held-out query frame (qid, qv, `extra`…) of a corpus frame
     * `e`(vec_id, embedding, …): rows vec_id ∈ [[[QLo]], [[QHi]]). */
@@ -3503,7 +3503,7 @@ object Similarity {
     * serve). Artifact sizes: 32 centroid rows, n assignment rows,
     * M·[[PqK]] codeword rows, M·n code rows — one training run + one
     * encode pass at snapshot time; every read is a parquet scan. */
-  private val annDag = new graft.pipeline.ModelRegistry(Seq(
+  private val annDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_ann_cents32", Nil, mart = true) { (s, d, _) =>
       val e = emb(s, d).select(col("vec_id"), col("embedding")).localCheckpoint(true)
       val cents = lloydCells(e, 32, CellRounds)
@@ -3549,8 +3549,7 @@ object Similarity {
 
   /** Materialize-once accessor for one trained-index mart table. */
   private def annIndexMart(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, annDag, "ann_marts", "graft_ann_",
-      Seq("embeddings"), name).head
+    graft.pipeline.MartCache.read(spark, dir, annDag, "ann_marts", "graft_ann_", name).head
 
   /** The SERVED trained-32 coarse read path off the index marts —
     * (corpus assignment, per-query cell ranks), the mart-backed twin of
@@ -3696,7 +3695,7 @@ object Similarity {
     * base-residual book, and the appended residual code table. A SECOND
     * registry (the nnBaseDag pattern) so the served-index gates never
     * pay the frozen build. */
-  private val annBaseDag = new graft.pipeline.ModelRegistry(Seq(
+  private val annBaseDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_annb_cents32", Nil, mart = true) { (s, d, _) =>
       val e = emb(s, d).select(col("vec_id"), col("embedding")).localCheckpoint(true)
       val cents = lloydCells(e.filter(col("vec_id") % 5 < 4), 32, CellRounds,
@@ -3725,8 +3724,7 @@ object Similarity {
 
   /** Materialize-once accessor for one frozen-base index mart table. */
   private def annBaseMart(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, annBaseDag, "annb_marts", "graft_annb_",
-      Seq("embeddings"), name).head
+    graft.pipeline.MartCache.read(spark, dir, annBaseDag, "annb_marts", "graft_annb_", name).head
 
   val simIvfCells: QueryDef = {
     val variants = Seq(
@@ -4761,7 +4759,7 @@ object Similarity {
     * returns the lazy union of the rounds' lists; every kept-list
     * checkpoint it reads (and `e`, `init` behind round 0) is freed by the
     * registry once the mart is written. */
-  private val nnDag = new graft.pipeline.ModelRegistry(Seq(
+  private val nnDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_nn_rounds", Nil, mart = true) { (s, d, _) =>
       val (e, n) = nnEmb(s, d)
       val init = nnInit(e, nnCells(s, d), n)
@@ -4791,8 +4789,7 @@ object Similarity {
 
   /** Materialize-once accessor for the per-round NN-descent mart. */
   private def nnRoundsMart(spark: SparkSession, dir: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, nnDag, "nn_marts", "graft_nn_",
-      Seq("embeddings"), "mart_nn_rounds").head
+    graft.pipeline.MartCache.read(spark, dir, nnDag, "nn_marts", "graft_nn_", "mart_nn_rounds").head
 
   val simNnDescent: QueryDef = {
     QueryDef("sim_nndescent", Some(nnDescentSql(NndRounds))) { (spark, dir) =>
@@ -4892,7 +4889,7 @@ object Similarity {
     * the same (n/16)² pass; one build per corpus snapshot now serves
     * both). (gs, gt) id pairs — integers, exact parquet round-trip. The
     * Spark twin of [[layer2Sql]]. */
-  private val layer2Dag = new graft.pipeline.ModelRegistry(Seq(
+  private val layer2Dag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_nn_layer2", Nil, mart = true) { (s, d, _) =>
       import org.apache.spark.sql.expressions.Window
       val sub = emb(s, d).select(col("vec_id"), col("embedding"))
@@ -4909,7 +4906,7 @@ object Similarity {
 
   private def layer2Graph(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, layer2Dag, "nnl2_marts",
-      "graft_nnl2_", Seq("embeddings"), "mart_nn_layer2").head
+      "graft_nnl2_", "mart_nn_layer2").head
 
   private def graphServeSql(rounds: Int, steps: Int): String = {
     val serveHead = s""",
@@ -5440,7 +5437,7 @@ object Similarity {
     * persisted, exactly like the full graph's [[nnRoundsMart]]. Init =
     * in-cell-among-base top-10 plus ring edges over the base id lattice
     * (rank(v) = (v div 5)·4 + v mod 5, see [[nnInit]]). */
-  private val nnBaseDag = new graft.pipeline.ModelRegistry(Seq(
+  private val nnBaseDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_nn_base", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
       val base = col("vec_id") % 5 < 4
@@ -5463,7 +5460,7 @@ object Similarity {
   /** Materialize-once accessor for the frozen-base graph mart. */
   private def nnBaseMart(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, nnBaseDag, "nnb_marts", "graft_nnb_",
-      Seq("embeddings"), "mart_nn_base").head
+      "mart_nn_base").head
 
   /** THE fold-seed recipe: cell-blocked arrival seeds (s, t) — each
     * `fresh`(vec_id) node's best 10 among the `members`(vec_id) of its own
@@ -5494,7 +5491,7 @@ object Similarity {
     * drift in these artifacts breaks the hash gate; the streamed gate
     * also keeps computing its folds live (the stream IS its op) and its
     * results are asserted against the same oracle text. */
-  private val nnFoldDag = new graft.pipeline.ModelRegistry(Seq(
+  private val nnFoldDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_nn_seed1", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
       val ids = e.select("vec_id")
@@ -5545,14 +5542,13 @@ object Similarity {
   /** Materialize-once accessor for the θ=20 consolidated-index mart. */
   private def nnConsolMart(spark: SparkSession, dir: String): DataFrame =
     graft.pipeline.MartCache.read(spark, dir, nnFoldDag, "nnf_marts",
-      "graft_nnf_", Seq("embeddings"), "mart_nn_consol").head
+      "graft_nnf_", "mart_nn_consol").head
 
   /** Materialize-once accessor for the batch-fold marts:
     * (fold1, fold2, seed2) — seed1 is consumed only inside the dag. */
   private def nnFoldMarts(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val Seq(f1, f2, s2) = graft.pipeline.MartCache.read(spark, dir, nnFoldDag,
-      "nnf_marts", "graft_nnf_", Seq("embeddings"),
-      "mart_nn_fold1", "mart_nn_fold2", "mart_nn_seed2")
+      "nnf_marts", "graft_nnf_", "mart_nn_fold1", "mart_nn_fold2", "mart_nn_seed2")
     (f1, f2, s2)
   }
 
@@ -5568,7 +5564,7 @@ object Similarity {
     * batch 1 (`%10=4` over the frozen base) is the SAME event as the fold
     * dag's batch 1, so fold_1 is read from [[nnFoldMarts]], not
     * duplicated here. */
-  private val nnPolicyDag = new graft.pipeline.ModelRegistry(Seq(
+  private val nnPolicyDag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
     graft.pipeline.ModelDef("mart_nnp_seed2", Nil, mart = true) { (s, d, _) =>
       val (e, _) = nnEmb(s, d)
       val ids = e.select("vec_id")
@@ -5605,8 +5601,7 @@ object Similarity {
     * (fold2, consol2, fold3). */
   private def nnPolicyMarts(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val Seq(f2, c2, f3) = graft.pipeline.MartCache.read(spark, dir, nnPolicyDag,
-      "nnp_marts", "graft_nnp_", Seq("embeddings"),
-      "mart_nnp_fold2", "mart_nnp_consol2", "mart_nnp_fold3")
+      "nnp_marts", "graft_nnp_", "mart_nnp_fold2", "mart_nnp_consol2", "mart_nnp_fold3")
     (f2, c2, f3)
   }
 
@@ -5623,7 +5618,7 @@ object Similarity {
     * builds only the member set it audits (r19 review); `apply` reads
     * the referee as (s, t) pairs ready for the hit joins. */
   private final class NnExactReferee(mart: String, tag: String, member: Column) {
-    private val dag = new graft.pipeline.ModelRegistry(Seq(
+    private val dag = new graft.pipeline.ModelRegistry(Seq("embeddings"), Seq(
       graft.pipeline.ModelDef(mart, Nil, mart = true) { (s, d, _) =>
         val (e, _) = nnEmb(s, d)
         val ids = e.select("vec_id").filter(member)
@@ -5635,7 +5630,7 @@ object Similarity {
 
     def apply(spark: SparkSession, dir: String): DataFrame =
       graft.pipeline.MartCache.read(spark, dir, dag, s"${tag}_marts",
-        s"graft_${tag}_", Seq("embeddings"), mart).head.select("s", "t")
+        s"graft_${tag}_", mart).head.select("s", "t")
   }
 
   /** THE kNN-graph audit stat: a graph (s, t, rk)'s node count, edge

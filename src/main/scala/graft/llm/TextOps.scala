@@ -1385,7 +1385,7 @@ object TextOps {
     * Long count the tokenize emits). The ORACLE keeps replaying the
     * tokenize inline ([[bm25CorpusCtesSql]] — the referee convention), so
     * any artifact drift breaks the hash gate. */
-  private val bm25Dag = new graft.pipeline.ModelRegistry(Seq(
+  private val bm25Dag = new graft.pipeline.ModelRegistry(Seq("documents"), Seq(
     graft.pipeline.ModelDef("mart_bm25_tf", Nil, mart = true) { (s, d, _) =>
       tbl(s, d, "documents")
         // single-file source → spread the token explode across cores
@@ -1403,8 +1403,7 @@ object TextOps {
   private def bm25Streams(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val Seq(tf, dl) = graft.pipeline.MartCache.read(spark, dir, bm25Dag,
-      "bm25_marts", "graft_bm25_", Seq("documents"),
-      "mart_bm25_tf", "mart_bm25_dl")
+      "bm25_marts", "graft_bm25_", "mart_bm25_tf", "mart_bm25_dl")
     val stats = dl.agg(
       (sum(col("dl")).cast(DoubleType) / count(lit(1)).cast(DoubleType)).as("avgdl"),
       count(lit(1)).cast(DoubleType).as("n"))

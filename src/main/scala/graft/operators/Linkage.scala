@@ -442,7 +442,7 @@ object Linkage {
     * pair ever re-scored. At 100 TB this is the deployment's standing
     * match-pair table: Σ|block|² Levenshtein evaluations paid once per
     * snapshot, key-joined thereafter. */
-  private val erDag = new graft.pipeline.ModelRegistry(Seq(
+  private val erDag = new graft.pipeline.ModelRegistry(Seq("customer"), Seq(
     graft.pipeline.ModelDef("mart_er_pairs", Nil, mart = true) { (s, d, _) =>
       fuzzyPairs(custKeyed(s, d))
     }))
@@ -450,8 +450,7 @@ object Linkage {
   /** Materialize-once accessor for the match-pair mart; snapshot-signed
     * so a regenerated customer dimension re-scores. */
   private def erPairsMart(spark: SparkSession, dir: String): DataFrame =
-    graft.pipeline.MartCache.read(spark, dir, erDag, "er_marts", "graft_er_",
-      Seq("customer"), "mart_er_pairs").head
+    graft.pipeline.MartCache.read(spark, dir, erDag, "er_marts", "graft_er_", "mart_er_pairs").head
 
   /** (id, label) for EVERY row of `c`: matched entities carry their
     * connected-component label, unmatched ones their own key (the r13

@@ -5,7 +5,7 @@ import graft.core._
 import graft.model.Warehouse
 import graft.sources.Watermark
 import graft.transform.Cleaning
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.time.LocalDate
@@ -15,13 +15,14 @@ import java.time.LocalDate
   * transform/validate → load dims → load facts → quality → audit) collapsed
   * into ONE Spark lineage (SURVEY.md §3.1). Airflow's process boundaries and
   * per-task parquet handoffs become Spark stage boundaries; the XCom count
-  * bookkeeping becomes the aggregate summary row this query emits.
+  * bookkeeping becomes the registry's run log, whose counts and control
+  * totals are observed on the passes that write the marts.
   *
   * Scale posture: the fact table flows through exactly one shuffle (the
   * daily rollup); both dimension joins are broadcast; the surrogate-key
-  * pass is one partition-parallel sorted pass (no global window);
-  * and the scalar run-accounting aggregates are map-side-combined counts
-  * cross-joined into a single row — no collect() anywhere.
+  * pass is one partition-parallel sorted pass (no global window); and the
+  * run accounting costs no pass of its own: the audit row is built on the
+  * driver from the run log.
   */
 object Pipeline {
 
@@ -35,7 +36,7 @@ object Pipeline {
     * surrogate keys are one partition-parallel sorted pass, both
     * fact joins broadcast their dimension, and the daily rollup is the
     * fact's single shuffle. */
-  val dailyDag: ModelRegistry = new ModelRegistry(Seq(
+  val dailyDag: ModelRegistry = new ModelRegistry(Seq("orders", "customer"), Seq(
     // -- extract (S1/S3) --------------------------------------------------
     ModelDef("stg_orders", Nil, mart = false) { (spark, dir, _) =>
       tbl(spark, dir, "orders")
@@ -46,7 +47,8 @@ object Pipeline {
     },
     // orphan injection (o_orderkey % 11 → shifted keys) exercises the
     // validate → reject path end-to-end
-    ModelDef("stg_src", Seq("stg_orders"), mart = false) { (_, _, ref) =>
+    ModelDef("stg_src", Seq("stg_orders"), mart = false,
+        metrics = Seq(count(lit(1)).as("n"))) { (_, _, ref) =>
       val orders = ref("stg_orders")
       orders.unionAll(
         orders.filter(col("o_orderkey") % 11 === 0)
@@ -55,7 +57,8 @@ object Pipeline {
             col("o_orderdate"), col("o_totalprice")))
     },
     // -- transform & validate (D4/J6) -------------------------------------
-    ModelDef("stg_valid", Seq("stg_src", "stg_customer"), mart = false) { (_, _, ref) =>
+    ModelDef("stg_valid", Seq("stg_src", "stg_customer"), mart = false,
+        metrics = Seq(count(lit(1)).as("n"))) { (_, _, ref) =>
       Cleaning.integrityFilter(ref("stg_src"),
         ref("stg_customer").select(col("c_custkey").as("o_custkey")), "o_custkey")
     },
@@ -69,8 +72,8 @@ object Pipeline {
     },
     // -- facts (J4 SK resolution + J5 date-expression join, broadcast dims;
     //    the mart parquet IS the reference's stage handoff) ----------------
-    ModelDef("fact_orders",
-      Seq("stg_valid", "dim_customer", "dim_date"), mart = true) { (_, _, ref) =>
+    ModelDef("fact_orders", Seq("stg_valid", "dim_customer", "dim_date"), mart = true,
+        metrics = Seq(moneySumD(col("total_amount")).as("revenue"))) { (_, _, ref) =>
       val valid = ref("stg_valid")
       val dimCustomer = ref("dim_customer")
       val dimDate = ref("dim_date")
@@ -100,21 +103,23 @@ object Pipeline {
     * time, so each [[runIncremental]] call binds the current checkpoint
     * as a pushed-down scan predicate. */
   def incrementalDag(ctx: RunContext, seed: LocalDate): ModelRegistry =
-    new ModelRegistry(Seq(
-      ModelDef("inc_orders", Nil, mart = false) { (spark, dir, _) =>
-        val wm = Watermark.read(spark, dir, "orders", seed, tag = "dag")
-        tbl(spark, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-          .filter(col("o_orderdate") > lit(wm.toString).cast(DateType) &&
-            col("o_orderdate") <= ctx.asOfCol)
+    new ModelRegistry(Seq("orders", "customer"), Seq(
+      ModelDef("inc_orders", Nil, mart = false,
+          metrics = Seq(count(lit(1)).as("n"), max(col("o_orderdate")).as("mx"))) {
+        (spark, dir, _) =>
+          val wm = Watermark.read(spark, dir, "orders", seed, tag = "dag")
+          tbl(spark, dir, "orders")
+            .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
+            .filter(col("o_orderdate") > lit(wm.toString).cast(DateType) &&
+              col("o_orderdate") <= ctx.asOfCol)
       },
       ModelDef("stg_customer", Nil, mart = false) { (spark, dir, _) =>
         tbl(spark, dir, "customer")
       },
-      ModelDef("inc_valid", Seq("inc_orders", "stg_customer"), mart = false) {
-        (_, _, ref) =>
-          Cleaning.integrityFilter(ref("inc_orders"),
-            ref("stg_customer").select(col("c_custkey").as("o_custkey")), "o_custkey")
+      ModelDef("inc_valid", Seq("inc_orders", "stg_customer"), mart = false,
+          metrics = Seq(count(lit(1)).as("n"))) { (_, _, ref) =>
+        Cleaning.integrityFilter(ref("inc_orders"),
+          ref("stg_customer").select(col("c_custkey").as("o_custkey")), "o_custkey")
       },
       ModelDef("dim_customer", Seq("stg_customer"), mart = true) { (_, _, ref) =>
         Warehouse.withSurrogateKey(
@@ -131,31 +136,23 @@ object Pipeline {
             dec2(col("o_totalprice")).as("total_amount"))
       }))
 
-  private final case class IncRun(extracted: Long, loaded: Long,
-      built: Map[String, DataFrame])
+  private final case class IncRun(extracted: Long, loaded: Long, built: DagRun)
 
   /** One incremental daily run: build the DAG (fact batch appended to the
-    * mart inside), then advance the checkpoint to the batch max. Only the
-    * batch-accounting scalars cross to the driver. */
+    * mart inside), then advance the checkpoint to the batch max. The batch
+    * accounting (extracted count and max date, valid count) is read from
+    * the run log, observed on the fact append itself, so the watermark
+    * moves only after the append has committed and no pass re-reads the
+    * batch. */
   private def runIncremental(spark: SparkSession, dir: String,
       ctx: RunContext, seed: LocalDate): IncRun = {
     val built = incrementalDag(ctx, seed)
       .run(spark, dir, viewPrefix = "graft_inc_", martPrefix = "marts_inc")
-    // ONE aggregation for the batch accounting (r22, guide §2.4 — was two
-    // sequential driver actions): count + max-date over the batch, plus
-    // the valid count via a left join against the UNIQUE customer keys —
-    // count(k) equals the semi-join count `inc_valid` would report
-    // because the distinct key side cannot multiply rows
-    val keys = built("stg_customer").select(col("c_custkey").as("k")).distinct()
-    val incRow = built("inc_orders")
-      .join(keys, col("o_custkey") === col("k"), "left")
-      .agg(count(lit(1)).as("n"), max(col("o_orderdate")).as("mx"),
-        count(col("k")).as("nv")).head()
-    val extracted = incRow.getAs[Long]("n")
+    val extracted = built.metric[Long]("inc_orders", "n")
     if (extracted > 0)
       Watermark.advance(spark, dir, "orders",
-        Watermark.asLocalDate(incRow.getAs[Any]("mx")), tag = "dag")
-    IncRun(extracted, incRow.getAs[Long]("nv"), built)
+        Watermark.asLocalDate(built.metric[Any]("inc_orders", "mx")), tag = "dag")
+    IncRun(extracted, built.metric[Long]("inc_valid", "n"), built)
   }
 
   /** Gate — three incremental daily runs against one persisted checkpoint:
@@ -218,7 +215,10 @@ object Pipeline {
 
   /** The whole DAG, gated by one auditable summary row (the reference's
     * `etl_run_log` shape). Orphans are injected (o_orderkey % 11 → shifted
-    * keys) so the validate → reject path is exercised end-to-end. */
+    * keys) so the validate → reject path is exercised end-to-end. The row
+    * is built on the driver from the run's log: every count and the
+    * revenue total were observed while the marts were written, so the gate
+    * runs no Spark job after its last mart write. */
   val pipelineE2e: QueryDef = QueryDef(
     "pipeline_e2e",
     Some(s"""
@@ -257,31 +257,24 @@ object Pipeline {
     // order is derived from the declared deps, staging models stay lazy
     // views, dim/fact marts materialize as parquet tables (the reference's
     // staging=view / marts=table split).
-    val built = dailyDag.run(spark, dir)
-    val src = built("stg_src")
-    val valid = built("stg_valid")
-    val dimCustomer = built("dim_customer")
-    val dimDate = built("dim_date")
-    val factOrders = built("fact_orders")
-    val factDaily = built("fact_daily")
-
-    // -- quality + audit (Q8/S11): scalar aggregates → one summary row ----
-    val eAgg = src.agg(count(lit(1)).as("records_extracted"))
-    val lAgg = valid.agg(count(lit(1)).as("records_loaded"))
-    val dcAgg = dimCustomer.agg(count(lit(1)).as("dim_customer_rows"))
-    val ddAgg = dimDate.agg(count(lit(1)).as("dim_date_rows"))
-    val foAgg = factOrders.agg(count(lit(1)).as("fact_rows"),
-      moneySumD(col("total_amount")).as("total_revenue"))
-    val fdAgg = factDaily.agg(count(lit(1)).as("fact_daily_rows"))
-    eAgg.crossJoin(lAgg).crossJoin(dcAgg).crossJoin(ddAgg).crossJoin(foAgg).crossJoin(fdAgg)
-      .select(
-        col("records_extracted"), col("records_loaded"),
-        (col("records_extracted") - col("records_loaded")).as("records_rejected"),
-        col("dim_customer_rows"), col("dim_date_rows"),
-        col("fact_rows"), col("fact_daily_rows"), col("total_revenue"),
-        when(col("records_extracted") - col("records_loaded") > 0, "SUCCESS_WITH_REJECTS")
-          .otherwise("SUCCESS").as("run_status"))
+    val run = dailyDag.run(spark, dir)
+    val extracted = run.metric[Long]("stg_src", "n")
+    val loaded = run.metric[Long]("stg_valid", "n")
+    def rows(model: String) = run.metric[Long](model, "rows")
+    val audit = Row(extracted, loaded, extracted - loaded,
+      rows("dim_customer"), rows("dim_date"), rows("fact_orders"), rows("fact_daily"),
+      run.metric[Any]("fact_orders", "revenue"),
+      if (extracted - loaded > 0) "SUCCESS_WITH_REJECTS" else "SUCCESS")
+    spark.createDataFrame(java.util.List.of(audit), auditSchema)
   }
+
+  /** The columns of `pipeline_e2e`'s audit row. */
+  private val auditSchema: StructType = StructType(
+    Seq("records_extracted", "records_loaded", "records_rejected", "dim_customer_rows",
+      "dim_date_rows", "fact_rows", "fact_daily_rows")
+      .map(StructField(_, LongType, nullable = false)) ++ Seq(
+      StructField("total_revenue", DoubleType),
+      StructField("run_status", StringType, nullable = false)))
 
   // -- corpus curation DAG (the LLM-side twin of the warehouse dailyDag) --
 
@@ -341,7 +334,7 @@ object Pipeline {
           (max(col("last_block")) + 1).as("n_blocks"))
     })
 
-  val corpusDag: ModelRegistry = new ModelRegistry(corpusDefs)
+  val corpusDag: ModelRegistry = new ModelRegistry(Seq("documents"), corpusDefs)
 
   /** The corpus DAG EXTENDED with the trigram-LM quality stage (round-13
     * queue #5): `mart_corpus_lm` labels every deduped corpus doc with its
@@ -353,7 +346,7 @@ object Pipeline {
     * filter). A SEPARATE registry, sharing every stage definition with
     * [[corpusDag]], so the three stageless corpus gates keep their cost
     * while `pipeline_corpus_lm` prices the LM pass it adds. */
-  val corpusLmDag: ModelRegistry = new ModelRegistry(corpusDefs :+
+  val corpusLmDag: ModelRegistry = new ModelRegistry(Seq("documents"), corpusDefs :+
     ModelDef("mart_corpus_lm", Seq("mart_corpus"), mart = true) { (spark, dir, ref) =>
       ref("mart_corpus").join(
         graft.llm.LangModel.lmBucketLabels(spark, dir).select("doc_id", "bucket"),
@@ -495,7 +488,7 @@ object Pipeline {
     val chk = lm.agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("nd"),
       sum(when(col("lm_bucket").isin("head", "middle", "tail", "unscored"), 0)
         .otherwise(1)).as("bad")).head()
-    val nCorpus = outs("mart_corpus").count()
+    val nCorpus = outs.metric[Long]("mart_corpus", "rows")
     require(chk.getAs[Long]("n") == nCorpus && chk.getAs[Long]("nd") == nCorpus,
       s"LM labeling not total/1:1: ${chk.getAs[Long]("n")} labeled rows, " +
         s"${chk.getAs[Long]("nd")} distinct ids, $nCorpus corpus docs")

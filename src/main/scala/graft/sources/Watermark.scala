@@ -35,18 +35,6 @@ object Watermark {
   private def readRaw(f: Path): Option[String] =
     if (Files.exists(f)) Some(Files.readString(f).trim) else None
 
-  /** Temp file + ATOMIC_MOVE so a concurrent reader can never observe a
-    * torn value (the read-compare-write itself is last-writer-wins;
-    * serialize runs externally if two drivers may advance the same
-    * checkpoint). */
-  private def writeAtomic(f: Path, v: String): Unit = {
-    Files.createDirectories(f.getParent)
-    val tmp = Files.createTempFile(f.getParent, f.getFileName.toString, ".tmp")
-    Files.writeString(tmp, v)
-    Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Stored watermark, or `default` when none has been persisted for this
     * (dir, source, content) yet. */
   def read(spark: SparkSession, dir: String, source: String,
@@ -55,7 +43,10 @@ object Watermark {
 
   /** Advance the stored watermark to `to` — MONOTONIC: a lagging caller
     * (a re-run of an old batch) can never move the checkpoint backwards.
-    * Returns the effective stored value. */
+    * Returns the effective stored value. The value is written with
+    * [[graft.core.writeAtomic]]; the read-compare-write itself is
+    * last-writer-wins (serialize runs externally if two drivers may
+    * advance the same checkpoint). */
   def advance(spark: SparkSession, dir: String, source: String,
       to: LocalDate, tag: String = ""): LocalDate = {
     val f = file(spark, dir, source, tag)

@@ -118,4 +118,33 @@ class QualitySpec extends SparkSpec {
       assert(r.getAs[Boolean]("passed"))
     }
   }
+
+  test("after a failed run drops the daily DAG's commit record, the mart audit rebuilds and matches its golden") {
+    import pipeline.{ModelDef, ModelRegistry}
+    val daily = pipeline.Pipeline.dailyDag
+    daily.run(spark, sfDir)
+    assert(daily.committed(spark, sfDir).isDefined)
+    // a run under the daily DAG's mart prefix whose later model throws
+    val failing = new ModelRegistry(Nil, Seq(
+      ModelDef("mart_fail_early", Nil, mart = true) { (s, _, _) => s.range(3).toDF("k") },
+      ModelDef("mart_fail_late", Seq("mart_fail_early"), mart = true) { (_, _, _) =>
+        throw new IllegalStateException("late model failed")
+      }))
+    intercept[IllegalStateException](failing.run(spark, sfDir))
+    assert(daily.committed(spark, sfDir).isEmpty)
+    assert(Golden.fingerprint(Quality.qMartQuality.run(spark, sfDir)) ===
+      Golden.load()("q_mart_quality"))
+    assert(daily.committed(spark, sfDir).isDefined, "the audit's own run was not committed")
+  }
+
+  test("the mart audit over a committed daily run reads each mart once") {
+    pipeline.Pipeline.dailyDag.run(spark, sfDir)
+    val (rows, jobs) = jobsOf(Quality.qMartQuality.run(spark, sfDir).collect())
+    assert(rows.map(r => (r.getAs[String]("table_name"), r.getAs[String]("check_name"))).toSeq ===
+      Seq("dim_customer" -> "unique_not_null_sk", "fact_daily" -> "nonempty",
+        "fact_orders" -> "date_key_validity", "fact_orders" -> "no_negative_amounts",
+        "fact_orders" -> "nonempty_null_sk"))
+    assert(rows.forall(_.getAs[Boolean]("passed")))
+    assert(jobs === 1, s"$jobs jobs")
+  }
 }

@@ -123,7 +123,7 @@ class SchemaContractSpec extends SparkSpec {
 
   test("a ModelRegistry mart read-back runs no schema-inference job") {
     def frame = spark.range(3).select(col("id").cast(IntegerType).as("k"))
-    val reg = new ModelRegistry(Seq(
+    val reg = new ModelRegistry(Nil, Seq(
       ModelDef("mart_pin_probe", Nil, mart = true) { (_, _, _) => frame }))
     val (_, writeJobs) = jobsOf(frame.write.mode("overwrite")
       .parquet(core.scratch(sfDir, "pin_probe_bare/mart_pin_probe")))
@@ -136,7 +136,7 @@ class SchemaContractSpec extends SparkSpec {
   test("an append mart run twice reads back both batches with the built frame's schema") {
     def batch(s: org.apache.spark.sql.SparkSession) =
       s.range(3).select(col("id").cast(ShortType).as("k"), lit("x").as("tag"))
-    val reg = new ModelRegistry(Seq(
+    val reg = new ModelRegistry(Nil, Seq(
       ModelDef("mart_pin_append", Nil, mart = true, append = true) { (s, _, _) => batch(s) }))
     deleteTree(core.scratch(sfDir, "pin_append_marts"))
     reg.run(spark, sfDir, martPrefix = "pin_append_marts")

@@ -122,7 +122,7 @@ class SnapshotMemoSpec extends SparkSpec {
 
   test("a mart read-back is stored: only the marts are kept, not a staging frame over a checkpoint") {
     import org.apache.spark.sql.functions.col
-    val reg = new pipeline.ModelRegistry(Seq(
+    val reg = new pipeline.ModelRegistry(Seq("region"), Seq(
       pipeline.ModelDef("stg_memo_ckpt", Nil, mart = false) { (s, _, _) =>
         s.range(5).toDF("k").localCheckpoint(true)
       },
@@ -131,7 +131,7 @@ class SnapshotMemoSpec extends SparkSpec {
       }))
     val tag = fresh("mart").replaceAll("[^A-Za-z0-9]", "_")
     def read = pipeline.MartCache.read(spark, sfDir, reg, tag, s"graft_${tag}_",
-      Seq("region"), "mart_memo_probe").head
+      "mart_memo_probe").head
     val first = read
     assert(core.checkpointsOf(first).isEmpty)
     assert(first.count() === 3L)
