@@ -152,25 +152,64 @@ object Ingest {
       .option("numPartitions", "8")
       .load()
 
+  /** The scratch directory and embedded-Derby JDBC URL of database `name`
+    * at the current snapshot of `table`: a regenerated source gets a fresh
+    * database (the landing zones' staleness defense). */
+  private def derbyDb(spark: SparkSession, dir: String, name: String,
+      table: String): (String, String) = {
+    derbyQuiet()
+    val dbDir = scratch(dir, s"derby_${name}_${sourceSig(spark, dir, table)}")
+    (dbDir, s"jdbc:derby:$dbDir;create=true")
+  }
+
+  /** The one Derby writer: a partitioned JDBC batch insert that replaces
+    * `table`, with a few writers (an embedded DB serves a few faster than
+    * 32 contending ones). `varchar` pins the customer string columns to
+    * VARCHAR (Spark's Derby default is CLOB, which can't be compared or
+    * sorted). */
+  private def jdbcWrite(df: DataFrame, url: String, table: String,
+      varchar: Boolean = false): Unit = {
+    val w = df.coalesce(4).write.format("jdbc")
+      .option("url", url)
+      .option("dbtable", table)
+      .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+      .option("batchsize", "10000")
+    (if (varchar) w.option("createTableColumnTypes", "full_name VARCHAR(64), segment VARCHAR(16)")
+     else w).mode("overwrite").save()
+  }
+
+  /** The one set-based upsert of staged customer changes into the live
+    * `dim_customers`: the ON CONFLICT twin, with the pinned `updated_at`
+    * bump. Spark's JDBC writer creates QUOTED lowercase column names while
+    * Derby folds unquoted identifiers to uppercase, so every column
+    * reference is quoted to hit the staged schema. Returns the rows it
+    * touched. */
+  private def mergeDimCustomers(url: String): Int = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().executeUpdate("""
+          MERGE INTO dim_customers t
+          USING stage_customers s
+          ON t."customer_id" = s."customer_id"
+          WHEN MATCHED THEN UPDATE SET
+            "full_name" = s."full_name", "balance" = s."balance",
+            "segment" = s."segment", "updated_at" = DATE('2026-02-02')
+          WHEN NOT MATCHED THEN INSERT
+            ("customer_id", "full_name", "balance", "segment", "updated_at")
+            VALUES (s."customer_id", s."full_name", s."balance", s."segment",
+                    DATE('2026-02-02'))""")
+    finally conn.close()
+  }
+
   /** Embedded-Derby JDBC URL for a mirror of the `orders` table, loaded
     * once per source content signature (a regenerated source gets a fresh
     * database — same staleness defense as the landing zones). The load
     * itself is a partitioned JDBC batch insert — the write half of the
     * same wire protocol. */
   private def ordersJdbcUrl(spark: SparkSession, dir: String): String = {
-    derbyQuiet()
-    val dbDir = scratch(dir, s"derby_orders_${sourceSig(spark, dir, "orders")}")
-    val url = s"jdbc:derby:$dbDir;create=true"
+    val (dbDir, url) = derbyDb(spark, dir, "orders", "orders")
     stagedOnce(new java.io.File(dbDir, "_graft_loaded")) {
-      tbl(spark, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-        .coalesce(4) // embedded DB: a few writers beat 32 contending ones
-        .write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "orders_src")
-        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        .option("batchsize", "10000")
-        .mode("overwrite").save()
+      jdbcWrite(tbl(spark, dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"), url, "orders_src")
     }
     url
   }
@@ -210,21 +249,12 @@ object Ingest {
     * content signature; string columns pinned to VARCHAR (Spark's Derby
     * default is CLOB, which can't be compared or sorted). */
   private def customersJdbcUrl(spark: SparkSession, dir: String): String = {
-    derbyQuiet()
-    val dbDir = scratch(dir, s"derby_customers_${sourceSig(spark, dir, "customer")}")
-    val url = s"jdbc:derby:$dbDir;create=true"
+    val (dbDir, url) = derbyDb(spark, dir, "customers", "customer")
     stagedOnce(new java.io.File(dbDir, "_graft_loaded")) {
-      tbl(spark, dir, "customer")
+      jdbcWrite(tbl(spark, dir, "customer")
         .select(col("c_custkey").as("customer_id"), col("c_name").as("full_name"),
-          col("c_acctbal").as("balance"), col("c_mktsegment").as("segment"))
-        .coalesce(4) // embedded DB: a few writers beat 32 contending ones
-        .write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "customers_src")
-        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        .option("createTableColumnTypes", "full_name VARCHAR(64), segment VARCHAR(16)")
-        .option("batchsize", "10000")
-        .mode("overwrite").save()
+          col("c_acctbal").as("balance"), col("c_mktsegment").as("segment")),
+        url, "customers_src", varchar = true)
     }
     url
   }
@@ -297,54 +327,26 @@ object Ingest {
     * audit and the watermark-delta composition gate can read the same
     * maintained state without re-staging it. Returns the database URL. */
   private[graft] def dimCustomersUrl(spark: SparkSession, dir: String): String = {
-    derbyQuiet()
-    val dbDir = scratch(dir, s"derby_dim_${sourceSig(spark, dir, "customer")}")
-    val url = s"jdbc:derby:$dbDir;create=true"
+    val (dbDir, url) = derbyDb(spark, dir, "dim", "customer")
     stagedOnce(new java.io.File(dbDir, "_graft_merged")) {
       val cust = tbl(spark, dir, "customer")
-      def writeJdbc(df: DataFrame, table: String): Unit =
-        df.coalesce(4) // embedded DB: a few writers beat 32 contending ones
-          .write.format("jdbc")
-          .option("url", url)
-          .option("dbtable", table)
-          .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-          .option("createTableColumnTypes",
-            "full_name VARCHAR(64), segment VARCHAR(16)")
-          .option("batchsize", "10000")
-          .mode("overwrite").save()
       // day-1 snapshot into the live dimension
-      writeJdbc(cust.filter(col("c_custkey") % 3 =!= 1)
+      jdbcWrite(cust.filter(col("c_custkey") % 3 =!= 1)
         .select(col("c_custkey").as("customer_id"), col("c_name").as("full_name"),
           col("c_acctbal").as("balance"), col("c_mktsegment").as("segment"),
-          lit("2026-02-01").cast(DateType).as("updated_at")), "dim_customers")
+          lit("2026-02-01").cast(DateType).as("updated_at")), url, "dim_customers", varchar = true)
       // day-2 change batch, bulk-staged over the same wire
       val changes = cust.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey").as("customer_id"),
           upper(col("c_name")).as("full_name"),
           (col("c_acctbal") + lit(100.0)).as("balance"),
           col("c_mktsegment").as("segment"))
-      writeJdbc(changes, "stage_customers")
+      jdbcWrite(changes, url, "stage_customers", varchar = true)
       val nChanges = changes.count()
-      // one set-based merge inside the warehouse — the ON CONFLICT twin
-      val conn = java.sql.DriverManager.getConnection(url)
-      try {
-        // Spark's JDBC writer creates QUOTED lowercase column names while
-        // Derby folds unquoted identifiers to uppercase — the merge must
-        // quote every column reference to hit the staged schema
-        val merged = conn.createStatement().executeUpdate("""
-          MERGE INTO dim_customers t
-          USING stage_customers s
-          ON t."customer_id" = s."customer_id"
-          WHEN MATCHED THEN UPDATE SET
-            "full_name" = s."full_name", "balance" = s."balance",
-            "segment" = s."segment", "updated_at" = DATE('2026-02-02')
-          WHEN NOT MATCHED THEN INSERT
-            ("customer_id", "full_name", "balance", "segment", "updated_at")
-            VALUES (s."customer_id", s."full_name", s."balance", s."segment",
-                    DATE('2026-02-02'))""")
-        require(merged == nChanges,
-          s"MERGE touched $merged rows, the change batch carried $nChanges")
-      } finally conn.close()
+      // one set-based merge inside the warehouse
+      val merged = mergeDimCustomers(url)
+      require(merged == nChanges,
+        s"MERGE touched $merged rows, the change batch carried $nChanges")
     }
     url
   }
@@ -428,60 +430,35 @@ object Ingest {
     * set-based statement inside the warehouse. */
   val sJdbcUpsertIncremental: QueryDef = QueryDef(
     "s_jdbc_upsert_incremental", Some(upsertFinalStateSql)) { (spark, dir) =>
-    derbyQuiet()
     val day1 = java.time.LocalDate.parse("2026-02-01")
-    val dbDir = scratch(dir, s"derby_dimw_${sourceSig(spark, dir, "customer")}")
-    val url = s"jdbc:derby:$dbDir;create=true"
+    val (dbDir, url) = derbyDb(spark, dir, "dimw", "customer")
     stagedOnce(new java.io.File(dbDir, "_graft_merged")) {
       val cust = tbl(spark, dir, "customer")
-      def writeJdbc(df: DataFrame, table: String): Unit =
-        df.coalesce(4) // embedded DB: a few writers beat 32 contending ones
-          .write.format("jdbc")
-          .option("url", url)
-          .option("dbtable", table)
-          .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-          .option("createTableColumnTypes",
-            "full_name VARCHAR(64), segment VARCHAR(16)")
-          .option("batchsize", "10000")
-          .mode("overwrite").save()
       val isChanged = col("c_custkey") % 2 === 0
       // the live source system: every row carries its modification date
-      writeJdbc(cust.select(col("c_custkey").as("customer_id"),
+      jdbcWrite(cust.select(col("c_custkey").as("customer_id"),
         when(isChanged, upper(col("c_name"))).otherwise(col("c_name")).as("full_name"),
         when(isChanged, col("c_acctbal") + lit(100.0)).otherwise(col("c_acctbal")).as("balance"),
         col("c_mktsegment").as("segment"),
         when(isChanged, lit("2026-02-02")).otherwise(lit("2026-02-01"))
-          .cast(DateType).as("mod_date")), "src_customers")
+          .cast(DateType).as("mod_date")), url, "src_customers", varchar = true)
       // the day-1 dimension snapshot: pre-change values, 2 of every 3 keys
-      writeJdbc(cust.filter(col("c_custkey") % 3 =!= 1)
+      jdbcWrite(cust.filter(col("c_custkey") % 3 =!= 1)
         .select(col("c_custkey").as("customer_id"), col("c_name").as("full_name"),
           col("c_acctbal").as("balance"), col("c_mktsegment").as("segment"),
-          lit(day1.toString).cast(DateType).as("updated_at")), "dim_customers")
+          lit(day1.toString).cast(DateType).as("updated_at")), url, "dim_customers", varchar = true)
       // the daily loop, driven by the REAL checkpoint store: extract the
       // delta past the seeded watermark, stage it, merge it, advance
       Watermark.reset(spark, dir, "customer", tag = "dimw")
       val wm0 = Watermark.read(spark, dir, "customer", day1, tag = "dimw")
       val delta = srcCustomersPast(spark, dir, url, wm0)
-      writeJdbc(delta.select("customer_id", "full_name", "balance", "segment"),
-        "stage_customers")
+      jdbcWrite(delta.select("customer_id", "full_name", "balance", "segment"),
+        url, "stage_customers", varchar = true)
       val agg = delta.agg(count(lit(1)), max(col("mod_date"))).head()
       val nDelta = agg.getLong(0)
-      val conn = java.sql.DriverManager.getConnection(url)
-      try {
-        val merged = conn.createStatement().executeUpdate("""
-          MERGE INTO dim_customers t
-          USING stage_customers s
-          ON t."customer_id" = s."customer_id"
-          WHEN MATCHED THEN UPDATE SET
-            "full_name" = s."full_name", "balance" = s."balance",
-            "segment" = s."segment", "updated_at" = DATE('2026-02-02')
-          WHEN NOT MATCHED THEN INSERT
-            ("customer_id", "full_name", "balance", "segment", "updated_at")
-            VALUES (s."customer_id", s."full_name", s."balance", s."segment",
-                    DATE('2026-02-02'))""")
-        require(merged == nDelta,
-          s"MERGE touched $merged rows, the watermark delta carried $nDelta")
-      } finally conn.close()
+      val merged = mergeDimCustomers(url)
+      require(merged == nDelta,
+        s"MERGE touched $merged rows, the watermark delta carried $nDelta")
       Watermark.advance(spark, dir, "customer",
         Watermark.asLocalDate(agg.get(1)), tag = "dimw")
     }

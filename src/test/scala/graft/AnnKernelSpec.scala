@@ -102,8 +102,11 @@ class AnnKernelSpec extends SparkSpec {
 
   /** Source lines of `src/main/scala` matching a rule's pattern outside
     * the rule's kernels, as "file:line: text". A line's owner is the
-    * nearest `def` or `class` above it. */
-  private def offenders(rules: Seq[(scala.util.matching.Regex, Set[String])]): Seq[String] = {
+    * nearest `def` or `class` above it. With `code`, the patterns see
+    * Scala code only: triple-quoted strings (the oracle SQL) are blanked
+    * and comment lines skipped. */
+  private def offenders(rules: Seq[(scala.util.matching.Regex, Set[String])],
+      code: Boolean = false): Seq[String] = {
     val root = java.nio.file.Paths.get(s"${sys.props("user.dir")}/src/main/scala")
     val ownerLine =
       """^\s*(?:private(?:\[\w+\])?\s+)?(?:final\s+)?(?:def|class)\s+(\w+)""".r.unanchored
@@ -112,14 +115,23 @@ class AnnKernelSpec extends SparkSpec {
     while (files.hasNext) {
       val f = files.next()
       if (f.toString.endsWith(".scala")) {
-        val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8").linesIterator.toVector
-        for ((line, i) <- lines.zipWithIndex; (pat, kernels) <- rules
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val lines = text.linesIterator.toVector
+        val scanned = if (!code) lines else {
+          val blanked = "(?s)\"\"\".*?\"\"\"".r.replaceAllIn(text, m =>
+            scala.util.matching.Regex.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
+          blanked.linesIterator.toVector.map { l =>
+            val t = l.trim
+            if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) "" else l
+          }
+        }
+        for ((line, i) <- scanned.zipWithIndex; (pat, kernels) <- rules
              if pat.findFirstIn(line).isDefined) {
           val owner = (i to 0 by -1).iterator.map(lines).collectFirst {
             case ownerLine(name) => name
           }
           if (!owner.exists(kernels))
-            out :+= s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+            out :+= s"${root.relativize(f)}:${i + 1}: ${lines(i).trim}"
         }
       }
     }
@@ -142,5 +154,17 @@ class AnnKernelSpec extends SparkSpec {
       """NndAppendRounds\)\.foldLeft""".r -> Set("consolidateRounds")))
     assert(found.isEmpty,
       s"use Similarity.nnInit / foldSeedBy / nnRound / consolidateRounds instead:\n${found.mkString("\n")}")
+  }
+
+  test("the frozen base, the feed batches and the landing's pinned mtimes live only in the feed declaration") {
+    // a residue predicate of the base or of a feed batch belongs to
+    // IndexFeed.base; the base id lattice to baseRank / baseId; the
+    // pinned batch mtimes to the one landing helper
+    val found = offenders(Seq(
+      """%\s*5\s*(?:<|===)\s*4\b|%\s*(?:10|20|40)\s*===\s*(?:4|9|19|39)\b""".r -> Set("base"),
+      """call_function\("div"|\bdiv\s+5\b""".r -> Set("baseRank", "baseId"),
+      """setTimes\(""".r -> Set("landing")), code = true)
+    assert(found.isEmpty,
+      s"use Similarity.IndexFeed (base / batch / members / baseRank / landing) instead:\n${found.mkString("\n")}")
   }
 }
